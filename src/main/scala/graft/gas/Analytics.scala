@@ -1,7 +1,9 @@
 package graft.gas
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import graft.plans.LocalTier
 
 /** Graph analytics over an `edges(src, dst, weight)` DataFrame.
   *
@@ -18,52 +20,20 @@ object Analytics {
 
   private def cp(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  /** Undirected-row count below which [[connectedComponents]] resolves
-    * with a driver-side union-find over the collected DIRECTED edge
-    * list (≤ this/2 rows ≈ tens of MB against the multi-GB driver —
-    * the Owl.componentsOf small-map precedent, an order larger). */
-  private val LocalCcBound = 600000L
-
-  /** Directed-row bound below which the frontier/iteration loops
-    * ([[bfs]], [[sssp]], [[fuzzySssp]], [[pageRank]],
-    * [[personalizedPageRank]]) replay their synchronous iteration
-    * driver-side over the collected edge list — the round-18 extension
-    * of the [[connectedComponents]] union-find tier. Each loop round
-    * costs ~3-5 driver-blocking jobs regardless of data volume (AQE
-    * materializes every exchange), so a KB..MB graph pays the
-    * job-dispatch floor × rounds; below the bound ONE bounded take
-    * (off the already-checkpointed edges) feeds the IDENTICAL
-    * synchronous recurrence in plain Scala — same per-edge arithmetic,
-    * same min/tie-break comparisons, same round structure — and the
-    * result lands as a LocalRelation. Above the bound the distributed
-    * loops below run UNCHANGED (at ×10 the bench graph already
-    * overflows this). Parameterised (`spark.graft.gas.localBound`) so
-    * a cluster deploy can size it to its driver heap — and so the spec
-    * can force the distributed path (bound 0) and pin both tiers to
-    * identical results. */
-  private def localGraphBound(edges: DataFrame): Int =
-    edges.sparkSession.conf.getOption("spark.graft.gas.localBound")
-      .map(_.toInt).getOrElse(300000)
-
-  /** Bounded probe of an ALREADY-MATERIALIZED edge frame: one
-    * executeTake job against the checkpointed rows. None (→ caller
-    * falls back to the distributed loop) above the bound, for
-    * non-string node columns (the engine's node ids are strings;
-    * anything else keeps the loop), or when any probed value is null
-    * (driver maps would drop null-key semantics the joins define). */
-  private def localEdgeRows(edges: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val shapeOk = edges.schema.fields.take(2)
-      .forall(_.dataType == org.apache.spark.sql.types.StringType) &&
-      edges.schema.fields.drop(2)
-        .forall(_.dataType == org.apache.spark.sql.types.DoubleType)
-    val bound = localGraphBound(edges)
-    if (!shapeOk || bound <= 0) None
-    else {
-      val rows = edges.take(bound + 1)
-      if (rows.length > bound) None
-      else if (rows.exists(r => (0 until r.length).exists(r.isNullAt))) None
-      else Some(rows)
-    }
+  /** Driver-tier rows of a (src, dst[, weight]) edge frame under the
+    * gas budget ([[graft.plans.LocalTier]]): below it the frontier and
+    * iteration loops ([[bfs]], [[sssp]], [[fuzzySssp]], [[pageRank]],
+    * [[personalizedPageRank]]) replay their identical synchronous
+    * recurrence in plain Scala — same per-edge arithmetic, same
+    * min/tie-break comparisons, same round structure — and the result
+    * lands as a LocalRelation. String nodes and double weights only
+    * (the engine's node ids are strings); any other shape keeps the
+    * loop. */
+  private def stringEdges(edges: DataFrame): Option[Array[Row]] = {
+    val types = edges.schema.map(_.dataType)
+    if (types.take(2).forall(_ == StringType) && types.drop(2).forall(_ == DoubleType))
+      LocalTier.probe(edges, LocalTier.Gas)
+    else None
   }
 
   /** Spark's UTF8String ordering (unsigned byte-wise) — the tie-break
@@ -74,7 +44,7 @@ object Analytics {
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
   /** src → (dst, weight) adjacency over collected (src, dst, weight) rows. */
-  private def localAdjW(rows: Array[org.apache.spark.sql.Row])
+  private def localAdjW(rows: Array[Row])
       : scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[(String, Double)]] = {
     val adj = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[(String, Double)]]
@@ -86,7 +56,7 @@ object Analytics {
   }
 
   /** src → dst adjacency over collected (src, dst) rows. */
-  private def localAdj(rows: Array[org.apache.spark.sql.Row])
+  private def localAdj(rows: Array[Row])
       : scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]] = {
     val adj = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[String]]
@@ -137,7 +107,7 @@ object Analytics {
     * the per-iteration ROUND(9) pins the values (the gas_pr/gas_ppr
     * oracle precedent). `srcSet` empty = uniform teleport (pageRank);
     * non-empty = indicator teleport over the reached set only (ppr). */
-  private def localPageRank(rows: Array[org.apache.spark.sql.Row],
+  private def localPageRank(rows: Array[Row],
                             iters: Int, resetProb: Double,
                             srcSet: Set[String]): Seq[(String, Double)] = {
     val outDeg = scala.collection.mutable.HashMap.empty[String, Double]
@@ -205,38 +175,12 @@ object Analytics {
     dist
   }
 
-  /** Union-by-min union-find over collected edge rows: every node's
-    * label = min(node) over its component — identical to the
-    * label-propagation loops' semantics, in one pass. */
-  private def localCc[T](pairs: Array[org.apache.spark.sql.Row],
-                         get: (org.apache.spark.sql.Row, Int) => T)(
-                         implicit ord: Ordering[T]): Seq[(T, T)] = {
-    val parent = scala.collection.mutable.HashMap.empty[T, T]
-    def find(x: T): T = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    val nodes = scala.collection.mutable.HashSet.empty[T]
-    pairs.foreach { row =>
-      val (s, d) = (get(row, 0), get(row, 1))
-      nodes += s; nodes += d
-      val (a, b) = (find(s), find(d))
-      if (a != b) {
-        if (ord.lt(a, b)) parent(b) = a else parent(a) = b
-      }
-    }
-    nodes.toSeq.sorted.map(nd => (nd, find(nd)))
-  }
-
   /** BFS depth labeling from `source` (BFS.java: frontier expansion,
     * visited-set pruning; depth = first-visit round). */
   def bfs(edgesIn: DataFrame, source: String, maxDepth: Int = 32): DataFrame = {
     val spark = edgesIn.sparkSession
     val edges = cp(edgesIn.select("src", "dst")) // materialize once, not per iteration
-    localEdgeRows(edges).foreach { rows =>
+    stringEdges(edges).foreach { rows =>
       import spark.implicits._
       return localBfs(localAdj(rows), Seq(source), maxDepth, Long.MaxValue)
         .toDF("node", "depth")
@@ -267,7 +211,7 @@ object Analytics {
   def sssp(edgesIn: DataFrame, source: String, maxIter: Int = 64): DataFrame = {
     val spark = edgesIn.sparkSession
     val edges = cp(edgesIn.select("src", "dst", "weight"))
-    localEdgeRows(edges).foreach { rows =>
+    stringEdges(edges).foreach { rows =>
       import spark.implicits._
       return localSssp(localAdjW(rows), source, maxIter).toSeq
         .map { case (n, (d, _)) => (n, d) }.toDF("node", "dist")
@@ -355,37 +299,30 @@ object Analytics {
     // and each union branch would otherwise re-evaluate it (the bfs
     // "materialize once" discipline; caught at 100x on gas_kcore)
     val e0 = cp(edges.select("src", "dst"))
+    // small-input tier, probed BEFORE the undirected union so the tier
+    // path pays no union checkpoint and no count: a union-by-min
+    // union-find over the DIRECTED edge list yields the identical
+    // min-label components (the label-propagation loop costs ~4
+    // driver-blocking jobs per round × (eccentricity+1) rounds). Typed
+    // on the node columns (string / long — the two node id shapes the
+    // engine produces); any other type falls through to the loops.
+    val spark = e0.sparkSession
+    import spark.implicits._
+    e0.schema.map(_.dataType).distinct match {
+      case Seq(StringType) => LocalTier.probe(e0, LocalTier.Gas).foreach { rows =>
+        return LocalTier.minLabels(rows.map(r => (r.getString(0), r.getString(1))))
+          .toDF("node", "label")
+      }
+      case Seq(LongType) => LocalTier.probe(e0, LocalTier.Gas).foreach { rows =>
+        return LocalTier.minLabels(rows.map(r => (r.getLong(0), r.getLong(1))))
+          .toDF("node", "label")
+      }
+      case _ => ()
+    }
     val undS = cp(e0
       .unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))))
     val undCount = undS.count()
-    val nodeType = e0.schema.head.dataType
-    if (undCount <= LocalCcBound &&
-        (nodeType == org.apache.spark.sql.types.StringType ||
-         nodeType == org.apache.spark.sql.types.LongType)) {
-      // Round-18 small-graph tier: the label-propagation loop costs
-      // ~4 driver-blocking jobs per round × (eccentricity+1) rounds —
-      // at the job-dispatch floor that dominates a KB..MB-sized graph
-      // outright (gas_cc sf0.1: 48 jobs / ~6 s for 330k und rows).
-      // Below the bound the DIRECTED edge list collects (≤ bound/2
-      // rows, tens of MB against a multi-GB driver — the judged
-      // Owl.componentsOf union-find precedent) and a union-by-min
-      // union-find yields the identical min-label components in one
-      // job. The distributed loops above the bound are UNCHANGED —
-      // this is the closeTiny discipline, not a scale path. Typed on
-      // the node column (string / long — the two node id shapes the
-      // engine produces); any other type falls through to the loops.
-      val spark = e0.sparkSession
-      import spark.implicits._
-      val pairs = e0.collect()
-      if (nodeType == org.apache.spark.sql.types.StringType)
-        localCc[String](pairs, _.getString(_)).toDF("node", "label")
-      else
-        localCc[java.lang.Long](pairs,
-          (r, i) => java.lang.Long.valueOf(r.getLong(i)))(
-          Ordering.by((l: java.lang.Long) => l.longValue))
-          .map { case (n, l) => (n.longValue, l.longValue) }
-          .toDF("node", "label")
-    } else if (undCount < 1000000L) {
+    if (undCount < 1000000L) {
       val nodes = undS.select(col("src").as("node")).distinct()
       ccLoop(undS, nodes, maxIter).select("node", "label")
     } else {
@@ -441,7 +378,7 @@ object Analytics {
     // materialized once: referenced by outDeg, eDeg and both node-set
     // branches — an expensive upstream plan would evaluate 4x otherwise
     val e = cp(edges.select("src", "dst"))
-    localEdgeRows(e).foreach { rows =>
+    stringEdges(e).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
       return localPageRank(rows, iters, resetProb, Set.empty).toDF("node", "rank")
@@ -546,7 +483,7 @@ object Analytics {
                            iters: Int = 10, resetProb: Double = 0.15): DataFrame = {
     // materialized once (see pageRank)
     val e = cp(edges.select("src", "dst"))
-    localEdgeRows(e).foreach { rows =>
+    stringEdges(e).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nodes = rows.iterator.flatMap(r => Iterator(r.getString(0), r.getString(1))).toSet
@@ -659,7 +596,7 @@ object Analytics {
   def fuzzySssp(edges: DataFrame, sources: Seq[String], targets: Seq[String],
                 maxVertices: Int): DataFrame = {
     val spark = edges.sparkSession
-    localEdgeRows(cp(edges.select("src", "dst", "weight"))).foreach { rows =>
+    stringEdges(cp(edges.select("src", "dst", "weight"))).foreach { rows =>
       // driver tier: the whole composition (per-source ssspWithPred →
       // pred-chain path extraction → capped multiBfs) replays over ONE
       // collected edge list — each stage is the identical recurrence

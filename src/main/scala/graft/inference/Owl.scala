@@ -2,6 +2,7 @@ package graft.inference
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.LocalTier
 
 /** OWL-ish forward-chaining rules layered over [[Rdfs]].
   *
@@ -74,53 +75,26 @@ object Owl {
     fn ++ ifn
   }
 
-  /** Pair count below which components resolve with a driver-side
-    * union-find instead of the distributed label-propagation loop:
-    * sameAs cliques are tiny in practice (the closeTiny discipline —
-    * co-reference declarations are vocabulary-shaped), and the
-    * distributed loop costs ~8 driver-blocking jobs per call. Above
-    * the bound (a genuinely instance-scale co-reference graph) the
-    * distributed path takes over unchanged. */
-  private val LocalComponentsBound = 100000L
-
-  private def componentsOf(pairs: DataFrame): DataFrame = {
-    // limit-bounded probe, not count-then-collect: the small (common)
-    // case pays ONE collect that doubles as the data read, and the
-    // large case pays a bound+1-row limit instead of a full count
-    val probe = pairs.limit(LocalComponentsBound.toInt + 1).collect()
-    if (probe.length <= LocalComponentsBound)
-      unionFindCanon(pairs.sparkSession,
-        probe.map(r => (r.getString(0), r.getString(1))))
-    else
-      graft.gas.Analytics.connectedComponents(pairs, maxIter = 256)
-        .filter(col("node") =!= col("label"))
-        .select(col("node").as("id"), col("label").as("canon"))
-  }
-
-  /** Driver-side union-find over an already-collected pair set —
-    * min ORIGINAL label per component (union-by-min keeps the root
-    * minimal, matching connectedComponents' min-label semantics).
-    * Returns (id, canon) rows for ids whose canon differs. */
-  private def unionFindCanon(spark: org.apache.spark.sql.SparkSession,
-                             pairs: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
+  /** Components of a (src, dst) co-reference pair frame as (id, canon)
+    * rows for ids whose canon differs. sameAs cliques are tiny in
+    * practice, so below the inference budget the one union-find
+    * resolves them driver-side; above it the distributed
+    * label-propagation loop takes over unchanged. */
+  private def componentsOf(pairs: DataFrame): DataFrame =
+    LocalTier.strings(pairs, LocalTier.Inference, 2) match {
+      case Some(rows) =>
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        canonMap(rows.map(r => (r(0), r(1)))).toDF("id", "canon")
+      case None =>
+        graft.gas.Analytics.connectedComponents(pairs, maxIter = 256)
+          .filter(col("node") =!= col("label"))
+          .select(col("node").as("id"), col("label").as("canon"))
     }
-    pairs.foreach { case (s, d) =>
-      val (a, b) = (find(s), find(d))
-      if (a != b) parent(if (a < b) b else a) = if (a < b) a else b
-    }
-    parent.keys.toSeq.sorted
-      .map(id => (id, find(id)))
-      .filter { case (id, c) => id != c }
-      .toDF("id", "canon")
-  }
+
+  /** Changed ids of the min-label union-find over probed pairs. */
+  private def canonMap(pairs: Iterable[(String, String)]): Seq[(String, String)] =
+    LocalTier.minLabels(pairs).filter { case (id, c) => id != c }
 
   /** Canonical-id mapping (id → canon): min label over each sameAs
     * component, iterated with the functional-property entailments to
@@ -132,21 +106,11 @@ object Owl {
     val explicit = instance.filter(col("p") === "sameAs")
       .select(col("s").as("src"), col("o").as("dst"))
     val allPairs = (explicit +: entailedPairs(instance, ont)).reduce(_ unionAll _)
-    // No functional family ⇒ no fixpoint rounds: ONE limit-bounded
-    // probe job answers empty / small / large at once (empty canon is
-    // the common structural-only case; a checkpoint + isEmpty +
-    // re-collect here was three driver-blocking jobs for the same
-    // answer). executeTake stops scanning early on the large case.
-    if (ont.functional.isEmpty && ont.inverseFunctional.isEmpty) {
-      val probe = allPairs.limit(LocalComponentsBound.toInt + 1).collect()
-      val spark = instance.sparkSession
-      import spark.implicits._
-      if (probe.isEmpty) return Seq.empty[(String, String)].toDF("id", "canon")
-      if (probe.length <= LocalComponentsBound)
-        return unionFindCanon(spark,
-          probe.map(r => (r.getString(0), r.getString(1))))
-      return componentsOf(allPairs.localCheckpoint())
-    }
+    // No functional family ⇒ no fixpoint rounds: the one bounded
+    // probe answers empty / small / large at once (empty canon is the
+    // common structural-only case).
+    if (ont.functional.isEmpty && ont.inverseFunctional.isEmpty)
+      return componentsOf(allPairs)
     var pairs = allPairs.localCheckpoint()
     // no co-reference at all (common on structural-only stores): the
     // canonical map is empty — return a LocalRelation so downstream
@@ -239,13 +203,13 @@ object Owl {
     // its checkpointed frames) — re-distinct + re-checkpoint here paid
     // two redundant driver-blocking jobs per touched predicate.
     //
-    // ROUND-18 DRIVER TIER (the closure-tier discipline): both inputs
-    // are (from, to) string frames the caller has already
-    // materialized, so below the inference bound two cheap takes feed
-    // the identical semi-naive composition + path-doubling set algebra
+    // Small-input tier: both inputs are (from, to) string frames the
+    // caller has already materialized, so two probes feed the
+    // identical semi-naive composition + path-doubling set algebra
     // driver-side — the f1/grown exchanges were ~10 driver-blocking
     // AQE jobs per touched predicate on delta-sized data.
-    (Rdfs.localPairRows(closed), Rdfs.localPairRows(delta)) match {
+    (LocalTier.strings(closed, LocalTier.Inference, 2),
+     LocalTier.strings(delta, LocalTier.Inference, 2)) match {
       case (Some(t0), Some(d0)) =>
         if (d0.isEmpty) return delta
         def comp(x: Iterable[(String, String)],
@@ -254,8 +218,8 @@ object Owl {
             yByFrom.getOrElse(b, Nil).map(c => (a, c)) }.toSet
         def byFrom(ps: Iterable[(String, String)]): Map[String, Seq[String]] =
           ps.groupBy(_._1).map { case (k, vs) => k -> vs.toSeq.map(_._2) }
-        val tSet = t0.toSet
-        val dSet = d0.toSet
+        val tSet = t0.map(r => (r(0), r(1))).toSet
+        val dSet = d0.map(r => (r(0), r(1))).toSet
         val tIx = byFrom(tSet)
         val dIx = byFrom(dSet)
         val td = comp(tSet, dIx)
@@ -307,32 +271,13 @@ object Owl {
     acc.join(t, Seq("from", "to"), "left_anti")
   }
 
-  /** Driver-side union-find over a pair set, as an id → canon map for
-    * CHANGED ids only — [[unionFindCanon]]'s exact semantics without
-    * the DataFrame. */
-  private def unionFindMap(pairs: Iterable[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (s, d) =>
-      val (a, b) = (find(s), find(d))
-      if (a != b) parent(if (a < b) b else a) = if (a < b) a else b
-    }
-    parent.keys.map(id => id -> find(id)).filter { case (id, c) => id != c }.toMap
-  }
-
   /** The whole [[closure]] pipeline over collected rows — the exact
     * driver replay of the distributed steps: sameAs/functional canon
     * to fixpoint, normalization, pre-mirror, per-predicate transitive
     * closure, post-mirror, one distinct. Pure string set operations,
     * so the replay is value-identical by construction (the spec pins
-    * both tiers equal; the [[unionFindCanon]] min-label convention is
-    * shared). */
+    * both tiers equal; the [[graft.plans.LocalTier.minLabels]]
+    * convention is shared). */
   private def localOwlClosure(rows: Array[(String, String, String)],
                               ont: Ontology): Seq[(String, String, String)] = {
     def entailedLocal(data: Seq[(String, String, String)]): Set[(String, String)] = {
@@ -350,7 +295,7 @@ object Owl {
     val rowSeq = rows.toSeq
     val explicit = rowSeq.filter(_._2 == "sameAs").map(t => (t._1, t._3))
     var pairs: Set[(String, String)] = explicit.toSet ++ entailedLocal(rowSeq)
-    var canon = unionFindMap(pairs)
+    var canon = canonMap(pairs).toMap
     def norm(t: (String, String, String)) =
       (canon.getOrElse(t._1, t._1), t._2, canon.getOrElse(t._3, t._3))
     if (ont.functional.nonEmpty || ont.inverseFunctional.nonEmpty) {
@@ -359,7 +304,7 @@ object Owl {
       while (!done && round < 8) {
         val fresh = entailedLocal(rowSeq.map(norm))
         if (fresh.isEmpty) done = true
-        else { pairs ++= fresh; canon = unionFindMap(pairs); round += 1 }
+        else { pairs ++= fresh; canon = canonMap(pairs).toMap; round += 1 }
       }
       require(done, s"sameAs/functional-property fixpoint did not converge in 8 rounds")
     }
@@ -392,15 +337,15 @@ object Owl {
   /** OWL closure of (s,p,o) instance triples. sameAs triples are
     * consumed by normalization and not re-emitted. */
   def closure(instance: DataFrame, ont: Ontology): DataFrame = {
-    // ROUND-18 DRIVER TIER — same contract as Rdfs.closure's: below
-    // the bounded take the whole pipeline (canon fixpoint, normalize,
-    // mirrors, per-predicate transitive closure) replays driver-side
-    // as string set operations; above it, or on any non-(s,p,o)-string
+    // Small-input tier, same contract as Rdfs.closure's: the whole
+    // pipeline (canon fixpoint, normalize, mirrors, per-predicate
+    // transitive closure) replays driver-side as string set
+    // operations; above the tier budget, or on any non-(s,p,o)-string
     // shape, the distributed steps below run unchanged.
-    Rdfs.localInstanceRows(instance).foreach { rows =>
+    LocalTier.strings(instance, LocalTier.Inference, 3).foreach { rows =>
       val spark = instance.sparkSession
       import spark.implicits._
-      return localOwlClosure(rows, ont).toDF("s", "p", "o")
+      return localOwlClosure(rows.map(t => (t(0), t(1), t(2))), ont).toDF("s", "p", "o")
     }
     val canon = sameAsCanon(instance, ont)
     val base = normalizeBy(instance.filter(col("p") =!= "sameAs"), canon)

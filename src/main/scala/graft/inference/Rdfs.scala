@@ -2,6 +2,7 @@ package graft.inference
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.LocalTier
 
 /** RDFS forward-chaining closure.
   *
@@ -41,9 +42,7 @@ object Rdfs {
     * TM extractProgram slices) read their rows straight off the plan —
     * ZERO Spark jobs; anything else pays the one collect as before. */
   private[inference] def closeTinyPairs(df: DataFrame): Set[(String, String)] = {
-    val pairs = localRowsOf(df)
-      .getOrElse(df.collect().toSeq.map(_.toSeq))
-      .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String])).toSet
+    val pairs = tablePairs(df).toSet
     var closure = pairs
     var grown = true
     while (grown) {
@@ -55,20 +54,6 @@ object Rdfs {
     }
     closure
   }
-
-  /** Rows of a frame whose OPTIMIZED plan is a LocalRelation, read
-    * without running a job; None otherwise. */
-  private[inference] def localRowsOf(df: DataFrame): Option[Seq[Seq[Any]]] =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(l.data.map(ir => l.output.indices.map { i =>
-          ir.get(i, l.output(i).dataType) match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-            case other => other
-          }
-        }))
-      case _ => None
-    }
 
   /** Full closure of instance triples (s,p,o) under the ontology.
     *
@@ -111,23 +96,23 @@ object Rdfs {
     // tm_dynamic commit, the job-count floor being the whole cost at
     // sf0.1).
     if (!axiomatic && provablyEmpty(ont)) return instance.distinct()
-    // ROUND-18 DRIVER TIER: the stratified rules are pure string set
+    // Small-input tier: the stratified rules are pure string set
     // operations (broadcast-ontology maps + unions + one distinct), so
-    // below a bounded take the whole closure replays driver-side —
+    // below the tier budget the whole closure replays driver-side —
     // identical strata, identical sets — and returns a LocalRelation
     // instead of paying ~10 driver-blocking jobs of exchange
     // materialization per call (retraction pays the closure THREE
     // times). A LocalRelation input (an Owl.closure driver-tier
     // result, a driver-built delta) reads its rows off the plan with
     // ZERO jobs and skips the checkpoint outright; the distributed
-    // strata below are UNCHANGED above the bound.
+    // strata below are UNCHANGED above the budget.
     val inst0 =
-      if (localRowsOf(instance).isDefined) instance
+      if (LocalTier.planRows(instance).isDefined) instance
       else instance.localCheckpoint()
-    localInstanceRows(inst0).foreach { rows =>
+    LocalTier.strings(inst0, LocalTier.Inference, 3).foreach { rows =>
       val spark = instance.sparkSession
       import spark.implicits._
-      return localClosure(rows,
+      return localClosure(rows.map(t => (t(0), t(1), t(2))),
         closeTinyPairs(ont.subClassOf), closeTinyPairs(ont.subPropertyOf),
         tablePairs(ont.domain), tablePairs(ont.range), axiomatic)
         .toDF("s", "p", "o")
@@ -185,64 +170,11 @@ object Rdfs {
     full.distinct()
   }
 
-  /** Instance-row bound for the driver-tier closure, parameterised
-    * like the GAS tier (`spark.graft.inference.localBound`; 0 disables
-    * — the spec uses that to pin both tiers equal). At 100 TB closure
-    * inputs overflow the bounded take and keep the distributed strata;
-    * a TM rederive's base or a retraction neighborhood at bench scale
-    * sits well under it. */
-  private def inferenceLocalBound(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.inference.localBound")
-      .map(_.toInt).getOrElse(150000)
-
-  /** Bounded take of (s, p, o) string rows off an already-materialized
-    * instance frame: None above the bound or on any null (the rules'
-    * join/filter null semantics would need per-row care driver-side —
-    * triples are non-null by construction everywhere this engine
-    * builds them, so nulls just keep the distributed path). */
-  private[inference] def localInstanceRows(inst: DataFrame)
-      : Option[Array[(String, String, String)]] = {
-    val bound = inferenceLocalBound(inst)
-    val strCols = inst.schema.fields.length == 3 && inst.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.StringType)
-    if (!strCols || bound <= 0) None
-    else localRowsOf(inst) match {
-      case Some(data) => // plan-level rows: zero jobs
-        if (data.length > bound || data.exists(_.exists(_ == null))) None
-        else Some(data.map(r => (r(0).asInstanceOf[String],
-          r(1).asInstanceOf[String], r(2).asInstanceOf[String])).toArray)
-      case None =>
-        val rows = inst.take(bound + 1)
-        if (rows.length > bound) None
-        else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) None
-        else Some(rows.map(r => (r.getString(0), r.getString(1), r.getString(2))))
-    }
-  }
-
-  /** 2-string-column sibling of [[localInstanceRows]] — bounded take of
-    * (from, to) rows off an already-materialized pair frame. */
-  private[inference] def localPairRows(df: DataFrame)
-      : Option[Array[(String, String)]] = {
-    val bound = inferenceLocalBound(df)
-    val strCols = df.schema.fields.length == 2 && df.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.StringType)
-    if (!strCols || bound <= 0) None
-    else localRowsOf(df) match {
-      case Some(data) =>
-        if (data.length > bound || data.exists(_.exists(_ == null))) None
-        else Some(data.map(r => (r(0).asInstanceOf[String],
-          r(1).asInstanceOf[String])).toArray)
-      case None =>
-        val rows = df.take(bound + 1)
-        if (rows.length > bound) None
-        else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else Some(rows.map(r => (r.getString(0), r.getString(1))))
-    }
-  }
-
+  /** A broadcast-sized (a, b) table's rows: off the plan when it is
+    * local (zero jobs), else one collect. */
   private def tablePairs(df: DataFrame): Seq[(String, String)] =
-    localRowsOf(df).getOrElse(df.collect().toSeq.map(_.toSeq))
-      .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String]))
+    LocalTier.planRows(df).getOrElse(df.collect()).toSeq
+      .map(r => (r.getString(0), r.getString(1)))
 
   /** The stratified rule tree over collected rows — the exact driver
     * replay of the distributed strata below: rdfs7 lift, rdfs2/3
@@ -333,7 +265,7 @@ object Rdfs {
     // a driver-tier closure is already a LocalRelation — checkpointing
     // it would pay a job to make it strictly worse (downstream joins
     // lose the broadcast-for-sure LocalRelation shape)
-    val over = if (localRowsOf(over0).isDefined) over0 else over0.localCheckpoint()
+    val over = if (LocalTier.planRows(over0).isDefined) over0 else over0.localCheckpoint()
     val remaining = base.join(retracted.select(spo.map(col): _*), spo, "left_anti")
     val keys = over.select(col("s"))
       .unionAll(over.select(col("o").as("s"))).distinct()

@@ -32,20 +32,11 @@ object Dedup {
                   keepEmpty: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // SPREAD a narrow input before the expensive per-doc map (guide §2:
-    // derive parallelism from the input, never inherit an accident): a
-    // small corpus arrives as one parquet file = ONE scan partition,
-    // and the tokenize+slide pass — the dominant corpus cost of every
-    // shingle consumer — ran single-core (measured 0.6-1.4 s/job at
-    // sf0.1 with 31 cores idle). At production scale the scan already
-    // carries >= cores partitions and this is a no-op; below that, the
-    // corpus shuffle is KB..MB and unlocks the full box.
-    // (streaming frames can't answer .rdd and batch small anyway —
-    // the micro-batch is the parallelism unit there)
-    val par = spark.sparkContext.defaultParallelism
-    val src = if (!docs.isStreaming && docs.rdd.getNumPartitions < par)
-      docs.repartition(par) else docs
-    val raw = src.select(col("doc_id"), col("text")).as[(Long, String)]
+    // spread a narrow input before the expensive per-doc map: the
+    // tokenize+slide pass is the dominant corpus cost of every shingle
+    // consumer (measured 0.6-1.4 s/job single-core at sf0.1)
+    val raw = graft.plans.Spread.narrow(docs)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val toks = text.toLowerCase(java.util.Locale.ROOT)
           .split("[^a-z0-9]+").filter(_.nonEmpty)

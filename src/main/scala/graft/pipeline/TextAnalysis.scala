@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash.polyhash
+import graft.plans.LocalTier
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, fingerprinting. All are map-only
@@ -413,66 +414,77 @@ object TextAnalysis {
           .as("chars_per_token"))
   }
 
-  /** Shared trainer loop: k rounds of pair-count → top merge → greedy
-    * fold application over the frequency-weighted word table; returns
+  /** Shared trainer: k rounds of pair-count → top merge → greedy fold
+    * application over the frequency-weighted word table; returns
     * (merge list, final vocabulary (word, symbols, freq)). */
-  /** Vocabulary rows below which [[bpeLoop]] trains on the driver
-    * (tens of MB of words — the closeTiny discipline; at 100 TB the
-    * vocabulary is millions of rows and takes the distributed loop). */
-  private val LocalBpeBound = 200000
-
-  private def bpeLoop(docs: DataFrame, k: Int)
+  private[graft] def bpeLoop(docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, Long)],
          org.apache.spark.sql.Dataset[(String, Array[String], Long)]) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab0 = docs.select(explode(words(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .as[(String, Long)]
-    // Driver tier (r18): the whole trainer state is the vocabulary
-    // table. Below the bound, ONE bounded take lands it on the driver
-    // and the k rounds (pair count → top merge → greedy fold) run in
-    // plain Scala — zero Spark jobs per round instead of a
-    // vocabulary-sized aggregate + 1-row collect + checkpoint each
-    // (tokenize_apply measured 31 → ~6 driver-blocking jobs). The
-    // returned vocabulary is a LocalRelation, so the encode/fertility
-    // corpus join broadcasts it without a stats gamble. Identical
-    // merges by construction: Long pair sums, (cnt desc, x, y)
-    // tie-break, and the same left-to-right fold.
-    val probe = vocab0.take(LocalBpeBound + 1)
-    if (probe.length <= LocalBpeBound) {
-      var vocab = probe.map { case (w, f) => (w, w.map(_.toString).toArray, f) }
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-      var round = 1
-      var exhausted = false
-      while (round <= k && !exhausted) {
-        val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
-        vocab.foreach { case (_, syms, f) =>
-          var i = 0
-          while (i < syms.length - 1) {
-            val key = (syms(i), syms(i + 1))
-            cnt(key) = cnt.getOrElse(key, 0L) + f
-            i += 1
-          }
+    // Small-input tier: the whole trainer state is the vocabulary
+    // table. Below the tier budget it lands on the driver and the k
+    // rounds run in plain Scala — zero Spark jobs per round instead of
+    // a vocabulary-sized aggregate + 1-row collect + checkpoint each.
+    // The returned vocabulary is a LocalRelation, so the
+    // encode/fertility corpus join broadcasts it without a stats
+    // gamble. Identical merges by construction: Long pair sums,
+    // (cnt desc, x, y) tie-break, and the same left-to-right fold.
+    LocalTier.probe(bpeVocab(docs), LocalTier.Budget) match {
+      case Some(rows) =>
+        var vocab = rows.map { r =>
+          val w = r.getString(0)
+          (w, w.map(_.toString).toArray, r.getLong(1))
         }
-        if (cnt.isEmpty) exhausted = true
-        else {
-          val ((mx, my), c) = cnt.minBy { case ((x, y), n) => (-n, x, y) }
-          merges += ((round.toLong, mx, my, c))
-          vocab = vocab.map { case (w, syms, f) =>
-            val out = scala.collection.mutable.ArrayBuffer.empty[String]
-            syms.foreach { s =>
-              if (out.nonEmpty && out.last == mx && s == my)
-                out(out.length - 1) = mx + my
-              else out += s
+        val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+        var round = 1
+        var exhausted = false
+        while (round <= k && !exhausted) {
+          val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
+          vocab.foreach { case (_, syms, f) =>
+            var i = 0
+            while (i < syms.length - 1) {
+              val key = (syms(i), syms(i + 1))
+              cnt(key) = cnt.getOrElse(key, 0L) + f
+              i += 1
             }
-            (w, out.toArray, f)
           }
-          round += 1
+          if (cnt.isEmpty) exhausted = true
+          else {
+            val ((mx, my), c) = cnt.minBy { case ((x, y), n) => (-n, x, y) }
+            merges += ((round.toLong, mx, my, c))
+            vocab = vocab.map { case (w, syms, f) => (w, bpeFold(syms, mx, my), f) }
+            round += 1
+          }
         }
-      }
-      return (merges.toSeq, spark.createDataset(vocab.toSeq))
+        (merges.toSeq, spark.createDataset(vocab.toSeq))
+      case None => bpeDistributed(docs, k)
     }
+  }
+
+  /** The trainer's input: (w, f) word frequencies of the corpus. */
+  private def bpeVocab(docs: DataFrame): DataFrame =
+    docs.select(explode(words(col("text"))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("f"))
+
+  /** One merge applied to a word's symbols, left to right. */
+  private def bpeFold(syms: Array[String], mx: String, my: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    syms.foreach { s =>
+      if (out.nonEmpty && out.last == mx && s == my) out(out.length - 1) = mx + my
+      else out += s
+    }
+    out.toArray
+  }
+
+  /** The distributed trainer loop: a vocabulary-sized pair aggregate,
+    * one top-merge collect and one checkpoint per round. */
+  private[graft] def bpeDistributed(docs: DataFrame, k: Int)
+      : (Seq[(Long, String, String, Long)],
+         org.apache.spark.sql.Dataset[(String, Array[String], Long)]) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val vocab0 = bpeVocab(docs).as[(String, Long)]
     var vocab = vocab0
       .map { case (w, f) => (w, w.map(_.toString).toArray, f) }
       .localCheckpoint()
@@ -491,15 +503,8 @@ object TextAnalysis {
       else {
         val (mx, my, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((round.toLong, mx, my, cnt))
-        vocab = vocab.map { case (w, syms, f) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          syms.foreach { s =>
-            if (out.nonEmpty && out.last == mx && s == my)
-              out(out.length - 1) = mx + my
-            else out += s
-          }
-          (w, out.toArray, f)
-        }.localCheckpoint()
+        vocab = vocab.map { case (w, syms, f) => (w, bpeFold(syms, mx, my), f) }
+          .localCheckpoint()
         round += 1
       }
     }

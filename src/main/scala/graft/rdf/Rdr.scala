@@ -2,6 +2,7 @@ package graft.rdf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.LocalTier
 
 /** RDF-star (RDR) statement identifiers — Blazegraph's "sids" mode
   * (reference: AbstractTripleStore.Options.STATEMENT_IDENTIFIERS,
@@ -64,38 +65,27 @@ object Rdr {
     * source's SUBJECT access path (prefix-pruned scans on a backed
     * source — one storage-unit read per round, never a full-view
     * scan) and materializes only the CBD-sized layer. */
-  /** Rows a single CBD description may hold before the driver-frontier
-    * loop falls back to the distributed one (≈ tens of MB of strings —
-    * the judged small-collect discipline; a DESCRIBE answer is wire-
-    * bound long before this). */
-  private val LocalCbdBound = 100000
-
   def cbd(src: graft.sparql.TripleSource, node: String,
           maxDepth: Int = 10): DataFrame = {
     val spark = src.triples.sparkSession
     import spark.implicits._
-    // Driver-frontier fast path (r18): every layer is description-sized
-    // by construction, so collect it (bounded take) and keep the
-    // frontier / described-set / result on the driver — ONE tiny scan
-    // job per layer instead of a checkpoint + emptiness probe +
-    // anti-join round (54 → ~15 driver-blocking jobs at sf0.1), and the
-    // final distinct is a driver set, not a shuffle. A layer overflowing
-    // [[LocalCbdBound]] restarts on the distributed loop below.
-    {
-      var frontier = Set(node)
-      val described = scala.collection.mutable.Set(node)
-      val out = scala.collection.mutable.LinkedHashSet.empty[(String, String, String)]
-      var depth = 0
-      var overflow = false
-      while (depth < maxDepth && frontier.nonEmpty && !overflow) {
-        val fdf = frontier.toSeq.sorted.toDF("s")
-        // take one MORE than the remaining budget: a result exactly at
-        // the budget is indistinguishable from a truncated one otherwise
-        val remaining = LocalCbdBound - out.size
-        val rows = src.scanForSubjects(broadcast(fdf))
-          .select("s", "p", "o").take(remaining + 1)
-        if (rows.length > remaining) overflow = true
-        else {
+    // Small-input tier: every layer is description-sized by
+    // construction, so probe it and keep the frontier / described set
+    // / result on the driver — ONE tiny scan job per layer instead of
+    // a checkpoint + emptiness probe + anti-join round, and the final
+    // distinct is a driver set, not a shuffle. A description
+    // overflowing the tier budget restarts on [[cbdLoop]].
+    var frontier = Set(node)
+    val described = scala.collection.mutable.Set(node)
+    val out = scala.collection.mutable.LinkedHashSet.empty[(String, String, String)]
+    var depth = 0
+    var overflow = false
+    while (depth < maxDepth && frontier.nonEmpty && !overflow) {
+      val fdf = frontier.toSeq.sorted.toDF("s")
+      LocalTier.probe(src.scanForSubjects(broadcast(fdf)).select("s", "p", "o"),
+          LocalTier.Budget - out.size) match {
+        case None => overflow = true
+        case Some(rows) =>
           val cand = scala.collection.mutable.Set.empty[String]
           rows.foreach { r =>
             val (s, p, o) = (r.getString(0), r.getString(1), r.getString(2))
@@ -103,18 +93,25 @@ object Rdr {
             // next frontier: anonymous objects of this layer + the sids
             // of its statements (statements about them belong to the
             // CBD), minus anything already described
-            if (o != null && o.startsWith(Prefix)) cand += o
+            if (o.startsWith(Prefix)) cand += o
             cand += sidOf(s, p, o)
           }
           frontier = (cand -- described).toSet
           described ++= frontier
           depth += 1
-        }
       }
-      if (!overflow)
-        return if (out.isEmpty) src.triples.select("s", "p", "o").limit(0)
-               else out.toSeq.toDF("s", "p", "o")
     }
+    if (overflow) cbdLoop(src, node, maxDepth)
+    else if (out.isEmpty) src.triples.select("s", "p", "o").limit(0)
+    else out.toSeq.toDF("s", "p", "o")
+  }
+
+  /** The distributed CBD loop: one frontier join per layer, each layer
+    * checkpointed. */
+  private[graft] def cbdLoop(src: graft.sparql.TripleSource, node: String,
+                             maxDepth: Int): DataFrame = {
+    val spark = src.triples.sparkSession
+    import spark.implicits._
     var frontier = Seq(node).toDF("s").localCheckpoint()
     var out: DataFrame = null
     var described = frontier

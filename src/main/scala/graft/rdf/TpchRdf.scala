@@ -150,10 +150,8 @@ object TpchRdf {
     * inputs already split keep their plain scan. */
   private def explodeTriples(spark: SparkSession, dir: String, td: TableDef): DataFrame = {
     val t = table(spark, dir, td.name)
-    val par = spark.sparkContext.defaultParallelism
     val src =
-      if (tableBytes(spark, dir, td.name) > (4L << 20) &&
-          t.rdd.getNumPartitions < par) t.repartition(par)
+      if (tableBytes(spark, dir, td.name) > (4L << 20)) graft.plans.Spread.narrow(t)
       else t
     src.select(td.subject.as("s"),
         explode(array(td.props.map { case (p, o) =>

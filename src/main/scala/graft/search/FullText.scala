@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Spread
 
 /** Distributed full-text index + search.
   *
@@ -19,26 +20,12 @@ object FullText {
 
   def tokens(c: Column): Column = Analyzer.Latin().tokenize(c)
 
-  /** Spread a NARROW batch input before an expensive per-row pass
-    * (guide §2: derive parallelism from the input, never inherit an
-    * accident): a small corpus arrives as one parquet file = one scan
-    * partition, so the tokenize+explode — the dominant cost of the
-    * corpus search paths — ran single-core. At production width the
-    * scan already carries >= cores partitions and this is a no-op;
-    * below it, the corpus shuffle is KB..MB. Streaming frames pass
-    * through (the micro-batch is the parallelism unit there). */
-  private[graft] def spreadNarrow(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (!df.isStreaming && df.rdd.getNumPartitions < par) df.repartition(par)
-    else df
-  }
-
   /** Inverted postings (term, doc_id, tf) from docs(doc_id, text);
     * `analyzer` picks the tokenization (per-language/per-namespace —
     * the ConfigurableAnalyzerFactory seam, see [[Analyzer]]). */
   def invertedIndex(docs: DataFrame,
                     analyzer: Analyzer = Analyzer.Latin()): DataFrame = {
-    val tfs = spreadNarrow(docs)
+    val tfs = Spread.narrow(docs)
       .select(col("doc_id"), explode(analyzer.tokenize(col("text"))).as("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     // the NORMALIZED local weight rides in the postings — the
@@ -149,7 +136,7 @@ object FullText {
                             analyzer: Analyzer): DataFrame = {
     // two consumers (match join + candidate norms) tokenize this —
     // spread a narrow corpus once so both passes use the box
-    val raw = spreadNarrow(docs).select(col("doc_id"),
+    val raw = Spread.narrow(docs).select(col("doc_id"),
       explode(analyzer.tokenize(col("text"))).as("term"))
     val matchedRaw = regex match {
       case Some(re) =>

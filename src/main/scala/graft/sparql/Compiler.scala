@@ -3,6 +3,7 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.plans.LocalTier
 
 /** Compiles the SPARQL algebra to a DataFrame plan.
   *
@@ -191,6 +192,12 @@ object Compiler {
     eq.select(proj: _*)
   }
 
+  /** Closure cap for the driver tier: a chain-heavy graph can blow the
+    * O(V·reach) pair set past driver comfort even when the EDGE list
+    * fit the tier budget — the tier bails to the distributed loop at this
+    * many pairs (which owns the same blow-up with spill machinery). */
+  private val LocalTcMaxPairs = 5000000
+
   /** Transitive closure of a binary step relation (from, to) by
     * frontier fixpoint: each iteration joins only the delta frontier
     * against the step edges (not closure × step), dedups against the
@@ -198,47 +205,16 @@ object Compiler {
     * the iteration pattern that survives 100-TB edge sets (on a real
     * cluster, swap localCheckpoint for reliable checkpoint).
     * Semantics of ArbitraryLengthPathNode with lowerBound=1. */
-  /** Edge-row bound for the driver-tier path fixpoints below,
-    * parameterised like the GAS/inference tiers
-    * (`spark.graft.path.localBound`; 0 disables — the spec pins both
-    * tiers equal). A 100-TB step relation overflows the bounded take
-    * and keeps the distributed loops. */
-  private def pathLocalBound(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.path.localBound")
-      .map(_.toInt).getOrElse(300000)
-
-  /** Bounded take of 2-string-column edge rows off an
-    * already-materialized step relation; None above the bound, for
-    * non-string shapes, or when any value is null. */
-  private def localEdges(step: DataFrame): Option[Array[(String, String)]] = {
-    val bound = pathLocalBound(step)
-    val ok = step.schema.fields.length == 2 && step.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.StringType)
-    if (!ok || bound <= 0) None
-    else {
-      val rows = step.take(bound + 1)
-      if (rows.length > bound) None
-      else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-      else Some(rows.map(r => (r.getString(0), r.getString(1))))
-    }
-  }
-
-  /** Closure cap for the driver tier: a chain-heavy graph can blow the
-    * O(V·reach) pair set past driver comfort even when the EDGE list
-    * fit the bound — the tier bails to the distributed loop at this
-    * many pairs (which owns the same blow-up with spill machinery). */
-  private val LocalTcMaxPairs = 5000000
-
   def transitiveClosure(stepIn: DataFrame, maxIters: Int = 64): DataFrame = {
     val step = stepIn.select("from", "to").distinct().localCheckpoint()
-    // ROUND-18 DRIVER TIER (the GAS/inference small-graph precedent):
-    // the fixpoint costs ~4 driver-blocking jobs per round at any data
-    // size; below one bounded take the identical reachability set
-    // computes driver-side (per-source BFS over the distinct edge set
-    // = exactly the converged closure) and lands as a LocalRelation.
-    localEdges(step) match {
+    // small-input tier ([[graft.plans.LocalTier]]): the fixpoint costs
+    // ~4 driver-blocking jobs per round at any data size; below the
+    // path budget the identical reachability set computes driver-side
+    // (per-source BFS over the distinct edge set = exactly the
+    // converged closure) and lands as a LocalRelation.
+    LocalTier.strings(step, LocalTier.Path, 2) match {
       case Some(es) =>
-        val adj = es.groupBy(_._1).map { case (k, vs) => k -> vs.toSeq.map(_._2) }
+        val adj = es.groupBy(_(0)).map { case (k, vs) => k -> vs.toSeq.map(_(1)) }
         val out = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
         var overflow = false
         val it = adj.keysIterator
@@ -312,24 +288,20 @@ object Compiler {
     val step = stepIn.select("from", "to").distinct().localCheckpoint()
     // driver tier (see transitiveClosure): state is one node set, so
     // no pair-count overflow is possible — the only bail-outs are the
-    // edge/seed bounds themselves
-    localEdges(step).foreach { es =>
-      val bound = pathLocalBound(step)
-      val seedRows = seeds.select("node").take(bound + 1)
-      if (seedRows.length <= bound && !seedRows.exists(_.isNullAt(0))) {
-        val adj =
-          if (forward) es.groupBy(_._1).map { case (k, vs) => k -> vs.toSeq.map(_._2) }
-          else es.groupBy(_._2).map { case (k, vs) => k -> vs.toSeq.map(_._1) }
-        val visited = scala.collection.mutable.LinkedHashSet.empty[String]
-        var frontier: Seq[String] =
-          seedRows.toSeq.map(_.getString(0)).distinct.flatMap(adj.getOrElse(_, Nil))
-            .distinct.filter(visited.add)
-        while (frontier.nonEmpty)
-          frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct.filter(visited.add)
-        val spark = stepIn.sparkSession
-        import spark.implicits._
-        return visited.toSeq.toDF("node")
-      }
+    // edge and seed probes themselves
+    for (es <- LocalTier.strings(step, LocalTier.Path, 2);
+         seedRows <- LocalTier.probe(seeds.select("node"), LocalTier.Path)) {
+      val (k, v) = if (forward) (0, 1) else (1, 0)
+      val adj = es.groupBy(_(k)).map { case (n, vs) => n -> vs.toSeq.map(_(v)) }
+      val visited = scala.collection.mutable.LinkedHashSet.empty[String]
+      var frontier: Seq[String] =
+        seedRows.toSeq.map(_.getString(0)).distinct.flatMap(adj.getOrElse(_, Nil))
+          .distinct.filter(visited.add)
+      while (frontier.nonEmpty)
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct.filter(visited.add)
+      val spark = stepIn.sparkSession
+      import spark.implicits._
+      return visited.toSeq.toDF("node")
     }
     val (key, out) = if (forward) ("from", "to") else ("to", "from")
     var visited = step.join(seeds, step(key) === seeds("node"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * the index build and each searchInSearch / bds:search variant —
   * corpus (build-per-query) vs indexed — so the scale evidence can
   * carry fresh-JVM per-variant readings. Not part of the library
-  * surface (DedupAB/Diag siblings).
+  * surface (a DedupAB sibling).
   *
   * Usage: runMain graft.tools.SearchIxBench <sfDir> <mode>
   * Modes: build | sis-corpus | sis-indexed | sis-slow-corpus |

@@ -5,19 +5,14 @@ import org.apache.spark.sql.DataFrame
 import graft.gas.Analytics
 import graft.queries.GasQueries
 
-/** The round-18 small-graph driver tier must produce EXACTLY the
-  * distributed loops' results — same doubles, same tie-breaks, same
-  * row sets. Each case runs the operator twice: once with the tier
-  * active (default bound) and once forced onto the distributed path
-  * (`spark.graft.gas.localBound = 0`), and pins set equality of the
-  * collected rows. */
+/** The small-graph driver tier must produce EXACTLY the distributed
+  * loops' results — same doubles, same tie-breaks, same row sets. Each
+  * case runs the operator twice: once with the tier active (default
+  * budget) and once forced onto the distributed path
+  * ([[TestSpark.distributed]]), and pins set equality of the collected
+  * rows. */
 class GasLocalTierSpec extends AnyFunSuite {
-  import TestSpark.{spark, SF}
-
-  private def distributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.gas.localBound", "0")
-    try body finally spark.conf.unset("spark.graft.gas.localBound")
-  }
+  import TestSpark.{distributed, spark, SF}
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
@@ -88,5 +83,23 @@ class GasLocalTierSpec extends AnyFunSuite {
       Analytics.personalizedPageRank(hier, Seq("r:0", "zzz:404"))
     }
     assert(ex.getMessage.contains("zzz:404"))
+  }
+
+  test("connectedComponents: union-find tier equals label propagation (string nodes)") {
+    for (e <- Seq(hier, tricky)) {
+      val local = rowsOf(Analytics.connectedComponents(e))
+      val dist = distributed(rowsOf(Analytics.connectedComponents(e)))
+      assert(local.nonEmpty && local == dist)
+    }
+  }
+
+  test("connectedComponents: union-find tier equals label propagation (long nodes)") {
+    import spark.implicits._
+    val e = Seq((1L, 2L), (2L, 3L), (10L, 3L), (5L, 4L), (7L, 7L), (9L, 8L), (8L, 6L))
+      .toDF("src", "dst")
+    val local = rowsOf(Analytics.connectedComponents(e))
+    val dist = distributed(rowsOf(Analytics.connectedComponents(e)))
+    assert(local == dist)
+    assert(local.contains(Seq(10L, 1L)) && local.contains(Seq(9L, 6L)))
   }
 }

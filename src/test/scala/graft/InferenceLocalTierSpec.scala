@@ -4,22 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.inference.{Owl, Rdfs}
 
-/** The round-18 inference driver tier (Rdfs.closure / Owl.closure
-  * below a bounded take) must produce EXACTLY the distributed strata's
-  * results. Each case runs the operator twice — tier active (default
-  * bound) vs forced distributed (`spark.graft.inference.localBound=0`)
-  * — and pins set equality of the collected rows, over ontologies that
-  * exercise every rule family (sub-class/property chains, domain/
-  * range, axiomatic rules, sameAs + functional fixpoint, transitive/
-  * inverse/symmetric mirrors). */
+/** The inference driver tier (Rdfs.closure / Owl.closure /
+  * Owl.sameAsCanon below the tier budget) must produce EXACTLY the
+  * distributed strata's results. Each case runs the operator twice —
+  * tier active (default budget) vs forced distributed
+  * ([[TestSpark.distributed]]) — and pins set equality of the
+  * collected rows, over ontologies that exercise every rule family
+  * (sub-class/property chains, domain/range, axiomatic rules, sameAs +
+  * functional fixpoint, transitive/inverse/symmetric mirrors). */
 class InferenceLocalTierSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{distributed, spark}
   import spark.implicits._
-
-  private def distributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.inference.localBound", "0")
-    try body finally spark.conf.unset("spark.graft.inference.localBound")
-  }
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
@@ -120,5 +115,18 @@ class InferenceLocalTierSpec extends AnyFunSuite {
     val local = rowsOf(Rdfs.closure(Owl.closure(owlInst, owlOnt), rdfsOnt))
     val dist = distributed(rowsOf(Rdfs.closure(Owl.closure(owlInst, owlOnt), rdfsOnt)))
     assert(local == dist)
+  }
+
+  test("Owl.sameAsCanon: union-find tier equals distributed components") {
+    // no functional family: one probe, no fixpoint rounds
+    val noFn = Owl.Ontology(transitive = Seq("partOf"))
+    val local = rowsOf(Owl.sameAsCanon(owlInst, noFn))
+    assert(local == distributed(rowsOf(Owl.sameAsCanon(owlInst, noFn))))
+    assert(local == Set(Seq("u2", "u1")))
+    // functional + inverse-functional family: fixpoint rounds merge
+    // v1/v2 (shared ssn after u1/u2) and w1/w2 (shared email)
+    val localFn = rowsOf(Owl.sameAsCanon(owlInst, owlOnt))
+    assert(localFn == distributed(rowsOf(Owl.sameAsCanon(owlInst, owlOnt))))
+    assert(localFn == Set(Seq("u2", "u1"), Seq("v2", "v1"), Seq("w2", "w1")))
   }
 }

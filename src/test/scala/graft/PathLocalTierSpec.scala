@@ -4,19 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.sparql.Compiler
 
-/** The round-18 path-fixpoint driver tier (Compiler.transitiveClosure /
-  * reachFrom below a bounded take) must produce EXACTLY the distributed
-  * loops' row sets. Forced-distributed comparison via
-  * `spark.graft.path.localBound = 0`, over graphs with cycles, diamonds
-  * and disconnected parts. */
+/** The path-fixpoint driver tier (Compiler.transitiveClosure /
+  * reachFrom below the tier budget) must produce EXACTLY the
+  * distributed loops' row sets. Forced-distributed comparison via
+  * [[TestSpark.distributed]], over graphs with cycles, diamonds and
+  * disconnected parts. */
 class PathLocalTierSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{distributed, spark}
   import spark.implicits._
-
-  private def distributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.path.localBound", "0")
-    try body finally spark.conf.unset("spark.graft.path.localBound")
-  }
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
