@@ -1,7 +1,7 @@
 #!/bin/bash
 # Round-14 x100 evidence: top-20-by-sf10-cost subset + owl_maintained
 # at /root/scale/x100, per-query JSON to BENCH_r14_sf100.json.
-# Search-family x100 figures live in SearchIxBench evidence runs.
+# Search-family x100 figures live in BENCH_r13_evidence.json.
 set -x
 cd /root/repo
 export SPARK_GRAFT_SF_DIR=/root/scale/x100

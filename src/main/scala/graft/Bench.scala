@@ -1,27 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JIT / parquet footer caches before timing — every table,
-    // so the alphabetically-first query doesn't absorb the cold reads
-    try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-        .foreach(t => try spark.read.parquet(s"$sfDir/$t.parquet").count()
-                      catch { case _: Throwable => () })
-      SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // iteration aid: SPARK_GRAFT_ONLY=q1,q2 times a subset in isolation
     val only: Set[String] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty)
@@ -90,19 +72,10 @@ object Bench {
     // outlier sees the isolated number next to it instead of having to
     // re-run the protocol by hand. Skipped when SPARK_GRAFT_ONLY is
     // set (that run IS the isolation protocol).
-    // the re-time set: the top-5 slowest PLUS every query that drifted
-    // past 2x its best prior recorded time (so describe_sym-class
-    // drifters close themselves without judge inference), capped at 25
-    // so a globally-slow session cannot become a second full run
-    val drifters = results.collect {
-      case (name, t) if priorBest.get(name).exists(b => t > 2 * b) => name
-    }.toSet
-    val retime = (results.toSeq.sortBy(-_._2).take(5).map(_._1) ++ drifters)
-      .distinct.take(25)
+    val retime = results.toSeq.sortBy(-_._2).take(5).map(_._1)
     val isolated: Map[String, Double] =
-      // priorBest is sf0.1 evidence — at a derived larger SF every
-      // query reads as a "drifter" and the re-time pass would double
-      // the run for a baseline that doesn't apply
+      // only an sf0.1 run re-times: at the derived larger SFs the top-5
+      // are the longest queries of an already hours-long run
       if (only.nonEmpty || !sfDir.contains("sf0.1")) Map.empty
       else retime.map { name =>
         val times = (1 to 2).map { _ =>
@@ -146,102 +119,4 @@ object Bench {
       s""""slowest":$slowest,"isolated":$iso,"sf":"$sfDir","full_queries_file":"$outFile"}""")
     spark.stop()
   }
-
-  /** Best recorded sf0.1 wall-time per query across the BENCH_r01-r07
-    * artifacts (including round-7's isolated re-times)
-    * (full coverage: every driver query has a record) — the drift
-    * baseline for the re-time protocol. */
-  private val priorBest: Map[String, Double] = Map(
-    "agg_distinct_count" -> 0.87, "agg_group_concat" -> 0.21,
-    "ann_bruteforce" -> 0.39, "ann_ivf" -> 0.56,
-    "ann_lsh" -> 0.44, "ask_query" -> 0.49,
-    "bgp_chain_join" -> 0.61, "bgp_star_join" -> 0.55,
-    "bind_extend" -> 0.2, "blueprints_traversal" -> 1.36,
-    "construct_triples" -> 1.21, "dedup_cluster" -> 3.48,
-    "dedup_exact" -> 0.37,
-    "dedup_minhash_lsh" -> 1.62, "dedup_ngram_jaccard" -> 2.89,
-    "dedup_simhash" -> 1.68, "describe_cbd" -> 2.15,
-    "describe_node" -> 0.12, "describe_sym" -> 0.81,
-    "describe_where" -> 0.74, "distinct_op" -> 0.14,
-    "events_sessionize" -> 1.07, "exists_semijoin" -> 0.63,
-    "export_roundtrip" -> 1.14, "filter_expr" -> 0.27,
-    "filter_regex" -> 0.19, "fulltext_matchall" -> 0.65,
-    "fulltext_persisted" -> 2.07, "fulltext_prefix" -> 0.65,
-    "fulltext_rank" -> 0.95, "fulltext_regex" -> 0.79,
-    "fulltext_search" -> 0.53, "fulltext_service" -> 0.54,
-    "gas_bfs" -> 2.42, "gas_cc" -> 5.4,
-    "gas_degree" -> 0.7, "gas_fuzzy_sssp" -> 3.94,
-    "gas_pr" -> 2.99, "gas_service_bfs" -> 1.23,
-    "gas_sssp" -> 2.49, "geo_bbox" -> 0.15,
-    "geo_circle" -> 0.54, "geo_service" -> 0.47,
-    "geo_time" -> 0.6, "geo_zorder" -> 0.42,
-    "graph_management" -> 1.67, "graph_mgmt_text" -> 3.68,
-    "graph_named_pattern" -> 0.12, "graph_quads" -> 1.33,
-    "graph_update" -> 3.12, "graph_var_path" -> 1.26,
-    "graph_var_pattern" -> 0.44, "graph_with_update" -> 1.2,
-    "group_having" -> 0.29, "lexicon_roundtrip" -> 0.79,
-    "load_jsonld" -> 0.82, "load_rdfxml" -> 0.72,
-    "load_turtle" -> 0.63, "minus_op" -> 0.71,
-    "mm_decode" -> 0.29, "mm_features" -> 0.25,
-    "mm_framesample" -> 0.26, "mm_resize" -> 0.18,
-    "not_exists_antijoin" -> 0.54, "optional_join_cond" -> 0.68,
-    "optional_leftjoin" -> 0.44, "order_limit" -> 0.31,
-    "owl_closure" -> 2.02, "owl_equiv" -> 1.08,
-    "path_bounded" -> 1.3, "path_inverse" -> 0.7,
-    "path_negated" -> 0.86, "path_seq" -> 1.14,
-    "path_star" -> 1.21, "path_transitive" -> 2.57,
-    "pipeline_contam" -> 0.7, "pipeline_curate" -> 0.64,
-    "pipeline_mix" -> 0.21, "pipeline_pack" -> 0.11,
-    // round-8 additions, recorded from the round-8b sf0.1 full run
-    "text_pii" -> 0.12, "text_repetition" -> 0.3,
-    "text_entropy" -> 0.13, "pipeline_chunk" -> 0.41,
-    "pipeline_kmeans" -> 1.12, "dedup_substring" -> 0.93,
-    "dedup_incremental" -> 1.14, "dedup_semantic" -> 3.0,
-    "text_classify" -> 0.23, "pipeline_shard" -> 0.11,
-    "emb_quantize" -> 0.22, "ann_pq" -> 2.2,
-    // round-8b continuation additions (isolated sf0.1 readings)
-    "stream_neardup" -> 5.01, "pipeline_dsir" -> 2.70,
-    "tokenize_bpe" -> 0.93, "emb_project" -> 0.68,
-    "text_winnow" -> 0.66, "events_asof" -> 0.57,
-    "events_range" -> 1.24, "gas_triangles" -> 3.92,
-    "sketch_hll" -> 0.70, "sketch_cms" -> 1.00,
-    "stream_hll" -> 6.50, "events_funnel" -> 1.54,
-    "stream_cms" -> 3.66, "text_collocations" -> 1.86,
-    "events_retention" -> 2.31, "pipeline_end2end" -> 4.93,
-    "events_outliers" -> 1.40, "text_ngram_lm" -> 3.88,
-    "events_transitions" -> 2.06, "table_profile" -> 2.06,
-    "gas_clustering" -> 4.0, "pipeline_spans" -> 0.85,
-    "gas_assortativity" -> 4.0, "ann_mips" -> 1.44, "events_heatmap" -> 0.80, "stream_transitions" -> 7.36,
-    "tokenize_bpe2" -> 3.75,
-    "pipeline_sample" -> 0.32, "q1_agg" -> 0.32,
-    "rdfs_closure" -> 1.64, "rdfs_incremental" -> 1.71,
-    "rdfs_retract" -> 3.54, "rdr_annotation" -> 0.81,
-    "results_csv" -> 0.18, "sparql_datefns" -> 0.23,
-    "sparql_from_graph" -> 0.11, "sparql_from_named" -> 0.3,
-    "sparql_functions" -> 0.11, "sparql_hash_fns" -> 0.33,
-    "sparql_hints" -> 1.1, "sparql_lang_fns" -> 0.43,
-    "sparql_named_subquery" -> 0.6, "sparql_parsed" -> 0.13,
-    "sparql_parsed_agg" -> 0.3, "sparql_parsed_ask" -> 0.25,
-    "sparql_parsed_construct" -> 0.25, "sparql_parsed_describe" -> 0.16,
-    "sparql_parsed_exists_expr" -> 0.35, "sparql_parsed_fns" -> 0.13,
-    "sparql_parsed_path" -> 0.91, "sparql_parsed_prefix" -> 0.23,
-    "sparql_parsed_subquery" -> 0.52, "sparql_parsed_sugar" -> 0.21,
-    "sparql_parsed_update" -> 0.85, "sparql_parsed_values" -> 0.46,
-    "sparql_service_federated" -> 0.59, "sparql_term_fns" -> 0.5,
-    "store_journal" -> 2.36, "store_repository" -> 1.88,
-    "stream_dedup" -> 3.23, "stream_enrich" -> 1.11,
-    "stream_sessionize" -> 4.15, "stream_stream_join" -> 2.86,
-    "stream_window" -> 1.29, "subquery_op" -> 0.68,
-    "text_fingerprint" -> 0.1, "text_langid" -> 0.16,
-    "text_logprob" -> 0.54, "text_quality" -> 0.13,
-    "text_tokens" -> 0.11, "union_op" -> 0.3,
-    "update_delete_insert" -> 0.99, "update_using" -> 0.96,
-    "values_inline" -> 0.19,
-    // round-15 additions/updates (sf0.1 full-run readings): the two
-    // new driver queries, and dedup_embed_cosine's new cell-confined
-    // floor (the old 3.03 was the bucket-quadratic plan)
-    "sparql_service_var" -> 0.74, "history_service" -> 0.80,
-    "searchinsearch_indexed" -> 1.65, "dedup_embed_cosine" -> 0.56,
-    // round-16 addition (isolated sf0.1 reading)
-    "tm_dynamic" -> 16.4)
 }

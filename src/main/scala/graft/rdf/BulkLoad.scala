@@ -74,13 +74,7 @@ object BulkLoad {
     }
     require(rest.size >= 2, "usage: BulkLoad [--graph g] [--namespace ns] [--no-compact] <journalDir> <file>...")
     val dir = namespace.fold(rest.head)(ns => s"${rest.head}/$ns")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val (v, n) = run(spark, dir, rest.tail.toSeq, graph, compact)
     println(s"""{"journal":"$dir","version":$v,"statements":$n}""")
     spark.stop()

@@ -17,8 +17,8 @@ import graft.functions.{AnalyzeText, Tokenize}
   * consume(), so the tokenize stage keeps its WholeStageCodegen span
   * (the previous transform/flatten higher-order-function formulation
   * was CodegenFallback: an interpreted lambda tree per row — measured
-  * by `graft.TokenizeBench` on a 10x CJK-heavy index build: HOF
-  * ~1.99 s vs native ~1.36 s, 1.45x, with 0 parity mismatches over
+  * on a 10x CJK-heavy index build, recorded in `BENCH_r10_evidence.json`:
+  * HOF ~1.99 s vs native ~1.36 s, 1.45x, with 0 parity mismatches over
   * 2.66M (doc, term) postings). The SAME
   * JVM tokenizer body serves [[Analyzer.tokenizeLocal]], so index-time
   * and query-time tokenization cannot drift.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Federation vectoring A/B — measures what SERVICE bound-join
@@ -26,10 +25,7 @@ object FedBench {
     // wanted subjects are x:{i*37}; every one must exist remotely or
     // the sanity check on joined rows would fail confusingly
     require(n > (k - 1) * 37, s"need remote n > ${(k - 1) * 37} for k=$k wanted keys")
-    val spark = SparkSession.builder().master("local[8]").appName("fedbench")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     val remoteTriples = spark.range(n.toLong)

@@ -29,13 +29,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <outDir> [factor]")
     val (src, out) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     run(spark, src, out, factor)
     spark.stop()
   }

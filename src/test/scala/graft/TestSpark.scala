@@ -7,18 +7,7 @@ import graft.plans.LocalTier
 object TestSpark {
   val SF = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 
   /** Runs `body` with every small-input tier off (all three
     * `*.localBound` keys at 0), so each operator takes its distributed
