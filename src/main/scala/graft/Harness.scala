@@ -55,7 +55,9 @@ object Harness {
   /** One finished Spark job: completed stages, ended tasks, wall time
     * from submission to end, and its call site — that of the SQL action
     * that ran it (a broadcast or an adaptive query stage runs on a pool
-    * thread), else that of its result stage. */
+    * thread), else that of its result stage. A SQL action reports the
+    * job description in place of its call site, so a
+    * [[graft.plans.Fixpoint]] round's jobs read "gas.bfs round 3". */
   final case class Job(id: Int, stages: Int, tasks: Int, ms: Long, callSite: String)
 
   /** Records every job of `spark`'s context; [[Recorder.record]] returns
@@ -105,7 +107,8 @@ object Harness {
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       def prop(key: String) = Option(js.properties).flatMap(p => Option(p.getProperty(key)))
       prop(MarkerKey) match {
-        case Some(token) => markers(js.jobId) = pending.get(token)
+        case Some(token) => // another recorder's marker is no job of ours either
+          Option(pending.get(token)).foreach(markers(js.jobId) = _)
         case None =>
           js.stageIds.foreach(s => if (!stageJob.contains(s)) stageJob(s) = js.jobId)
           val site = prop("spark.sql.execution.id").flatMap(executions.get)

@@ -3,7 +3,7 @@ package graft.gas
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-import graft.plans.LocalTier
+import graft.plans.{Fixpoint, LocalTier}
 
 /** Graph analytics over an `edges(src, dst, weight)` DataFrame.
   *
@@ -12,7 +12,9 @@ import graft.plans.LocalTier
   * {BFS,SSSP,CC,PR}.java) as frontier-based DataFrame iterations:
   * each round joins only the *active frontier* (the GAS scheduler's
   * vertex set) against the edge list, aggregates messages map-side,
-  * and localCheckpoints to truncate lineage/plan growth. On a cluster
+  * and localCheckpoints to truncate lineage/plan growth — the rounds
+  * run on [[graft.plans.Fixpoint]], whose checkpoint also counts the
+  * round's delta for the convergence test. On a cluster
   * the edge DataFrame should be pre-partitioned by `src` so every
   * frontier join shuffles only the (small) frontier, never the edges.
   */
@@ -43,49 +45,30 @@ object Analytics {
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
-  /** src → (dst, weight) adjacency over collected (src, dst, weight) rows. */
-  private def localAdjW(rows: Array[Row])
-      : scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[(String, Double)]] = {
-    val adj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[(String, Double)]]
-    rows.foreach { r =>
-      adj.getOrElseUpdate(r.getString(0),
-        scala.collection.mutable.ArrayBuffer.empty) += ((r.getString(1), r.getDouble(2)))
-    }
-    adj
-  }
+  /** src → out-edges adjacency over collected edge rows, each edge as
+    * `edge` reads it off its row. */
+  private def localAdj[A](rows: Array[Row])(edge: Row => A): Map[String, Seq[A]] =
+    rows.toSeq.groupMap(_.getString(0))(edge)
 
-  /** src → dst adjacency over collected (src, dst) rows. */
-  private def localAdj(rows: Array[Row])
-      : scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]] = {
-    val adj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-    rows.foreach { r =>
-      adj.getOrElseUpdate(r.getString(0),
-        scala.collection.mutable.ArrayBuffer.empty) += r.getString(1)
-    }
-    adj
-  }
-
-  /** The [[bfs]]/[[multiBfs]] frontier expansion driver-side: identical
-    * rounds (expand → distinct → drop visited), identical stop
-    * conditions (maxDepth, empty frontier, and for multiBfs the
-    * visited-count cap checked BEFORE each expansion). */
-  private def localBfs(adj: scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]],
-                       seeds: Seq[String], maxDepth: Int,
+  /** The [[bfsLoop]] frontier expansion driver-side: identical rounds
+    * (expand → distinct → drop visited), identical stop conditions
+    * (maxDepth, empty frontier, the visited-count cap checked BEFORE
+    * each expansion). */
+  private def localBfs(adj: Map[String, Seq[String]], seeds: Seq[String], maxDepth: Int,
                        maxVertices: Long): Seq[(String, Int)] = {
     val visited = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     seeds.foreach(s => if (!visited.contains(s)) visited(s) = 0)
     var frontier: Seq[String] = visited.keys.toSeq
-    var depth = 0
-    while (depth < maxDepth && visited.size < maxVertices && frontier.nonEmpty) {
-      depth += 1
-      val next = scala.collection.mutable.LinkedHashSet.empty[String]
-      frontier.foreach(u => adj.get(u).foreach(_.foreach { v =>
-        if (!visited.contains(v)) next += v
-      }))
-      next.foreach(v => visited(v) = depth)
-      frontier = next.toSeq
+    Fixpoint.loop("gas.bfs", maxDepth) { depth =>
+      visited.size < maxVertices && frontier.nonEmpty && {
+        val next = scala.collection.mutable.LinkedHashSet.empty[String]
+        frontier.foreach(u => adj.get(u).foreach(_.foreach { v =>
+          if (!visited.contains(v)) next += v
+        }))
+        next.foreach(v => visited(v) = depth)
+        frontier = next.toSeq
+        true
+      }
     }
     visited.toSeq
   }
@@ -147,15 +130,12 @@ object Analytics {
     * add), candidates aggregate per node by min(struct(dist, pred))
     * (dist first, then Spark's UTF8 byte order on pred), and only
     * STRICT dist improvements update/propagate. */
-  private def localSssp(adj: scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[(String, Double)]],
-                        source: String, maxIter: Int)
+  private def localSssp(adj: Map[String, Seq[(String, Double)]], source: String, maxIter: Int)
       : scala.collection.mutable.LinkedHashMap[String, (Double, String)] = {
     val dist = scala.collection.mutable.LinkedHashMap[String, (Double, String)](
       source -> ((0.0, null: String)))
     var frontier: Seq[(String, Double)] = Seq(source -> 0.0)
-    var i = 0
-    while (i < maxIter && frontier.nonEmpty) {
-      i += 1
+    Fixpoint.loop("gas.sssp", maxIter) { _ =>
       val cand = scala.collection.mutable.HashMap.empty[String, (Double, String)]
       frontier.foreach { case (u, du) =>
         adj.get(u).foreach(_.foreach { case (v, w) =>
@@ -171,6 +151,7 @@ object Analytics {
       }
       improved.foreach { case (v, dp) => dist(v) = dp }
       frontier = improved.map { case (v, (d, _)) => (v, d) }
+      frontier.nonEmpty
     }
     dist
   }
@@ -179,28 +160,40 @@ object Analytics {
     * visited-set pruning; depth = first-visit round). */
   def bfs(edgesIn: DataFrame, source: String, maxDepth: Int = 32): DataFrame = {
     val spark = edgesIn.sparkSession
+    import spark.implicits._
     val edges = cp(edgesIn.select("src", "dst")) // materialize once, not per iteration
     stringEdges(edges).foreach { rows =>
-      import spark.implicits._
-      return localBfs(localAdj(rows), Seq(source), maxDepth, Long.MaxValue)
+      return localBfs(localAdj(rows)(_.getString(1)), Seq(source), maxDepth, Long.MaxValue)
         .toDF("node", "depth")
     }
-    var visited = cp(spark.range(1).select(lit(source).as("node"), lit(0).as("depth")))
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = cp(
-        frontier.join(edges, frontier("node") === edges("src"))
-          .select(col("dst").as("node"), lit(depth).as("depth"))
-          .distinct()
-          .join(visited.select("node"), Seq("node"), "left_anti"))
-      // accumulator checkpointed every round: it feeds the anti-join
-      // in every subsequent round, so a lazy union is re-evaluated
-      // immediately (r18 measured the every-2nd-round variant at the
-      // same job count — kept materialized)
-      visited = cp(visited.unionAll(next))
-      frontier = next
+    bfsLoop(edges, Seq((source, 0)).toDF("node", "depth"), 1, maxDepth, Long.MaxValue)
+  }
+
+  /** The [[bfs]] and [[fuzzySssp]] frontier expansion over a
+    * materialized edge frame, from `seeded` distinct depth-0 `seeds`:
+    * stops at an empty frontier, after `maxDepth` rounds, or once
+    * ≥ `maxVertices` nodes are visited (checked before each expansion).
+    * The visited count is the running sum of the observed deltas, which
+    * the anti-join keeps disjoint. */
+  private def bfsLoop(edges: DataFrame, seeds: DataFrame, seeded: Long,
+                      maxDepth: Int, maxVertices: Long): DataFrame = {
+    var visited = seeds
+    var frontier = seeds
+    var seen = seeded
+    Fixpoint.loop("gas.bfs", maxDepth) { depth =>
+      seen < maxVertices && {
+        val (next, n) = Fixpoint.materialize(
+          frontier.join(edges, frontier("node") === edges("src"))
+            .select(col("dst").as("node"), lit(depth).as("depth"))
+            .distinct()
+            .join(visited.select("node"), Seq("node"), "left_anti"))
+        // accumulator checkpointed every round: it feeds the anti-join
+        // in every subsequent round, so a lazy union is re-evaluated
+        // immediately (r18 measured the every-2nd-round variant at the
+        // same job count — kept materialized)
+        if (n > 0) { visited = cp(visited.unionAll(next)); frontier = next; seen += n }
+        n > 0
+      }
     }
     visited
   }
@@ -210,33 +203,46 @@ object Analytics {
     * (Bellman-Ford with delta scheduling). */
   def sssp(edgesIn: DataFrame, source: String, maxIter: Int = 64): DataFrame = {
     val spark = edgesIn.sparkSession
+    import spark.implicits._
     val edges = cp(edgesIn.select("src", "dst", "weight"))
     stringEdges(edges).foreach { rows =>
-      import spark.implicits._
-      return localSssp(localAdjW(rows), source, maxIter).toSeq
+      return localSssp(localAdj(rows)(r => (r.getString(1), r.getDouble(2))), source, maxIter).toSeq
         .map { case (n, (d, _)) => (n, d) }.toDF("node", "dist")
     }
-    var dist = cp(spark.range(1).select(lit(source).as("node"), lit(0.0).as("dist")))
+    ssspWithPred(edges, source, maxIter).select("node", "dist")
+  }
+
+  /** The [[sssp]] loop over a materialized (src, dst, weight) edge
+    * frame, tracking the predecessor on the best path as well (min over
+    * struct(dist, pred) picks the least distance and keeps tie-breaks
+    * deterministic) — [[fuzzySssp]] walks the predecessors. */
+  private def ssspWithPred(edges: DataFrame, source: String, maxIter: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    var dist = Seq((source, 0.0, null: String)).toDF("node", "dist", "pred")
     var frontier = dist
-    var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
-      i += 1
+    Fixpoint.loop("gas.sssp", maxIter) { _ =>
       val cand = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"), (frontier("dist") + edges("weight")).as("dist"))
-        .groupBy("node").agg(min("dist").as("dist"))
+        .select(col("dst").as("node"),
+          struct((frontier("dist") + edges("weight")).as("dist"), edges("src").as("pred")).as("dp"))
+        .groupBy("node").agg(min("dp").as("dp"))
+        .select(col("node"), col("dp.dist").as("dist"), col("dp.pred").as("pred"))
       // keep only strict improvements over the current best
-      val improved = cp(
-        cand.join(dist.withColumnRenamed("dist", "old").withColumnRenamed("node", "n2"),
+      val (improved, n) = Fixpoint.materialize(
+        cand.join(dist.select(col("node").as("n2"), col("dist").as("old")),
                   cand("node") === col("n2"), "left")
           .filter(col("old").isNull || col("dist") < col("old"))
-          .select("node", "dist"))
-      // accumulator checkpointed every round (see bfs: it feeds the
+          .select("node", "dist", "pred"))
+      // accumulator checkpointed every round (see bfsLoop: it feeds the
       // next round's anti-join; the r18 every-2nd-round variant
       // measured slightly MORE jobs, so it stays materialized)
-      dist = cp(
-        dist.join(improved.select(col("node").as("n3")), dist("node") === col("n3"), "left_anti")
+      if (n > 0) {
+        dist = cp(dist
+          .join(improved.select(col("node").as("n3")), dist("node") === col("n3"), "left_anti")
           .unionAll(improved))
-      frontier = improved
+        frontier = improved
+      }
+      n > 0
     }
     dist
   }
@@ -248,10 +254,10 @@ object Analytics {
     * propagate this round — an unchanged vertex's contribution is
     * already reflected in every neighbor's label, so re-sending it is
     * pure waste. The `imp` marker rides in the single per-iteration
-    * materialization (one checkpoint + one cheap scan per round, same
-    * job count as the full version), while the propagate join's left
-    * side shrinks from |V| to |changed| — after the first couple of
-    * rounds that is the far fringe only, and AQE broadcasts it. */
+    * materialization, which also counts the improved labels (the
+    * convergence test), while the propagate join's left side shrinks
+    * from |V| to |changed| — after the first couple of rounds that is
+    * the far fringe only, and AQE broadcasts it. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 64): DataFrame = {
     // NOTE (100×-probe finding): the cost profile here is checkpoint
     // materialization (MemoryStore object writes for |V|-row labels ×
@@ -300,28 +306,27 @@ object Analytics {
     // "materialize once" discipline; caught at 100x on gas_kcore)
     val e0 = cp(edges.select("src", "dst"))
     // small-input tier, probed BEFORE the undirected union so the tier
-    // path pays no union checkpoint and no count: a union-by-min
-    // union-find over the DIRECTED edge list yields the identical
-    // min-label components (the label-propagation loop costs ~4
-    // driver-blocking jobs per round × (eccentricity+1) rounds). Typed
-    // on the node columns (string / long — the two node id shapes the
-    // engine produces); any other type falls through to the loops.
+    // path pays no union checkpoint and no count: the loop's rounds
+    // replay driver-side under the same cap (the label-propagation
+    // loop costs ~3 driver-blocking jobs per round × (eccentricity+1)
+    // rounds). Typed on the node columns (string / long — the two node
+    // id shapes the engine produces); any other type falls through to
+    // the loops.
     val spark = e0.sparkSession
     import spark.implicits._
     e0.schema.map(_.dataType).distinct match {
       case Seq(StringType) => LocalTier.probe(e0, LocalTier.Gas).foreach { rows =>
-        return LocalTier.minLabels(rows.map(r => (r.getString(0), r.getString(1))))
+        return localCc(rows.map(r => (r.getString(0), r.getString(1))), maxIter)
           .toDF("node", "label")
       }
       case Seq(LongType) => LocalTier.probe(e0, LocalTier.Gas).foreach { rows =>
-        return LocalTier.minLabels(rows.map(r => (r.getLong(0), r.getLong(1))))
+        return localCc(rows.map(r => (r.getLong(0), r.getLong(1))), maxIter)
           .toDF("node", "label")
       }
       case _ => ()
     }
-    val undS = cp(e0
+    val (undS, undCount) = Fixpoint.materialize(e0
       .unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))))
-    val undCount = undS.count()
     if (undCount < 1000000L) {
       val nodes = undS.select(col("src").as("node")).distinct()
       ccLoop(undS, nodes, maxIter).select("node", "label")
@@ -350,24 +355,43 @@ object Analytics {
   private def ccLoop(und: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
     // round 0: every vertex "changed" (label = self)
     var labels = cp(nodes.withColumn("label", col("node")).withColumn("imp", lit(true)))
-    var changed = true
-    var i = 0
-    while (changed && i < maxIter) {
-      i += 1
+    Fixpoint.loop("gas.cc", maxIter) { _ =>
       val frontier = labels.filter(col("imp")).select("node", "label")
       val nbrMin = frontier.join(und, frontier("node") === und("src"))
         .groupBy(col("dst").as("node")).agg(min("label").as("nbr"))
-      // fuse label update + change detection into one materialization
-      val next = cp(
+      // label update and change count in one materialization
+      val (next, changed) = Fixpoint.materialize(
         labels.select("node", "label")
           .join(nbrMin.withColumnRenamed("node", "n2"), col("node") === col("n2"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            (coalesce(col("nbr"), col("label")) < col("label")).as("imp")))
-      changed = !next.filter(col("imp")).isEmpty
+            (coalesce(col("nbr"), col("label")) < col("label")).as("imp")),
+        col("imp"))
       labels = next
+      changed > 0
     }
     labels
+  }
+
+  /** The [[ccLoop]] rounds driver-side: every node starts labelled by
+    * itself, and per round each node whose label improved last round
+    * sends it to its undirected neighbours, which keep the minimum.
+    * Stops when no label improves or after `maxIter` rounds, so a
+    * capped run labels exactly as the capped loop does. Sorted by node. */
+  private def localCc[T](pairs: Array[(T, T)], maxIter: Int)
+                        (implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val adj = pairs.toSeq.flatMap { case (s, d) => Seq(s -> d, d -> s) }.groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.HashMap.from(adj.keys.map(n => n -> n))
+    var frontier: Iterable[T] = adj.keys
+    Fixpoint.loop("gas.cc", maxIter) { _ =>
+      val improved = frontier.toSeq.flatMap(u => adj(u).map(_ -> label(u)))
+        .groupMapReduce(_._1)(_._2)(ord.min)
+        .filter { case (v, l) => ord.lt(l, label(v)) }
+      label ++= improved
+      frontier = improved.keys
+      improved.nonEmpty
+    }
+    label.toSeq.sortBy(_._1)
   }
 
   /** PageRank, fixed iteration count, formula of PR.java:284:
@@ -383,26 +407,39 @@ object Analytics {
       import spark.implicits._
       return localPageRank(rows, iters, resetProb, Set.empty).toDF("node", "rank")
     }
+    val (eDeg, nodes) = rankInputs(e)
+    rankLoop("gas.pagerank", eDeg, nodes.withColumn("rank", lit(resetProb)), iters) { contrib =>
+      nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          round(lit(resetProb) + lit(1 - resetProb) * coalesce(col("contrib"), lit(0.0)), 9)
+            .as("rank"))
+    }
+  }
+
+  /** The out-degree-weighted edge list (src, dst, outdeg) and the node
+    * set of a (src, dst) edge frame, both materialized. */
+  private def rankInputs(e: DataFrame): (DataFrame, DataFrame) = {
     val outDeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    val eDeg = cp(e.join(outDeg, "src"))
-    val nodes = cp(e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct())
-    var ranks = nodes.withColumn("rank", lit(resetProb))
-    for (i <- 1 to iters) {
-      val contrib = ranks.join(eDeg, ranks("node") === eDeg("src"))
+    (cp(e.join(outDeg, "src")),
+     cp(e.select(col("src").as("node")).unionAll(e.select(col("dst").as("node"))).distinct()))
+  }
+
+  /** `iters` rank rounds from `start` (node, rank): each round's
+    * contribution aggregate (node, contrib) becomes the next ranks by
+    * `update`. Checkpoints every SECOND iteration: two iterations fuse
+    * into one driver-blocking materialization (plan depth stays bounded
+    * at 2 rounds), halving the job-dispatch floor that dominates at
+    * small per-round volumes; values are identical — checkpoint
+    * placement is not semantic (per-iteration ROUND(9) pins them). */
+  private def rankLoop(label: String, eDeg: DataFrame, start: DataFrame, iters: Int)
+                      (update: DataFrame => DataFrame): DataFrame = {
+    var ranks = start
+    Fixpoint.loop(label, iters) { i =>
+      val next = update(ranks.join(eDeg, ranks("node") === eDeg("src"))
         .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      val next =
-        nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            round(lit(resetProb) + lit(1 - resetProb) * coalesce(col("contrib"), lit(0.0)), 9)
-              .as("rank"))
-      // checkpoint every SECOND iteration: two iterations fuse into
-      // one driver-blocking materialization (plan depth stays bounded
-      // at 2 rounds), halving the job-dispatch floor that dominates at
-      // small per-round volumes; values are identical — checkpoint
-      // placement is not semantic (per-iteration ROUND(9) pins them)
+        .agg(sum(col("rank") / col("outdeg")).as("contrib")))
       ranks = if (i % 2 == 0 || i == iters) cp(next) else next
+      true
     }
     ranks
   }
@@ -422,8 +459,9 @@ object Analytics {
     * CHAIN, not the graph diameter — a path of n vertices at k=2
     * peels one vertex from each end per round, needing ~n/2 rounds. A
     * high-diameter sparse graph at scale can therefore exceed
-    * `maxRounds`, and the operator then fails LOUD (the require
-    * below) rather than returning a partial non-fixpoint core — the
+    * `maxRounds`, and the operator then fails LOUD
+    * ([[graft.plans.Fixpoint.converge]]) rather than returning a
+    * partial non-fixpoint core — the
     * correct behavior, since a non-converged remainder is NOT the
     * k-core. Near-clique graphs (dedup candidates, this engine's use)
     * peel in 1-3 rounds; the DuckDB oracle unrolls 24 rounds, which
@@ -447,22 +485,18 @@ object Analytics {
     val und = cp(e0
       .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    var rem = cp(und.select(col("src").as("node")).distinct())
-    var prevCount = rem.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+    var (rem, prevCount) = Fixpoint.materialize(und.select(col("src").as("node")).distinct())
+    val rounds = Fixpoint.converge("gas.kcore", maxRounds) { _ =>
       val deg = und
         .join(rem.withColumnRenamed("node", "src"), "src")
         .join(rem.withColumnRenamed("node", "dst"), "dst")
         .groupBy("src").agg(count(lit(1)).as("deg"))
-      rem = cp(deg.filter(col("deg") >= k).select(col("src").as("node")))
-      val c = rem.count()
-      converged = c == prevCount
+      val (next, c) = Fixpoint.materialize(deg.filter(col("deg") >= k).select(col("src").as("node")))
+      val changed = c != prevCount
+      rem = next
       prevCount = c
+      changed
     }
-    require(converged, s"k-core did not converge in $maxRounds rounds")
     val core = und
       .join(rem.withColumnRenamed("node", "src"), "src")
       .join(rem.withColumnRenamed("node", "dst"), "dst")
@@ -492,10 +526,7 @@ object Analytics {
         s"personalizedPageRank sources not in the graph: ${missing.sorted.mkString(", ")}")
       return localPageRank(rows, iters, resetProb, sources.toSet).toDF("node", "rank")
     }
-    val outDeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    val eDeg = cp(e.join(outDeg, "src"))
-    val nodes = cp(e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct())
+    val (eDeg, nodes) = rankInputs(e)
     // fail loud on out-of-graph sources: their teleport mass would
     // silently vanish (a typo'd source returns a plausible all-zero
     // frame) and an isolated source would get no output row at all
@@ -517,77 +548,15 @@ object Analytics {
     // Values are bit-identical to the all-nodes formulation: absent
     // rows contribute 0, exactly like 0.0-rank rows did.
     val srcRows = cp(nodes.filter(col("node").isInCollection(sources)))
-    var ranks = srcRows.withColumn("rank", lit(resetProb))
-    for (i <- 1 to iters) {
-      val contrib = ranks.join(eDeg, ranks("node") === eDeg("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      val next =
-        contrib.join(srcRows, Seq("node"), "full")
-          .select(col("node"),
-            round(ind + lit(1 - resetProb) * coalesce(col("contrib"), lit(0.0)), 9)
-              .as("rank"))
-      // every-second-iteration checkpoint — see pageRank: identical
-      // values, half the driver-blocking materializations
-      ranks = if (i % 2 == 0 || i == iters) cp(next) else next
+    val ranks = rankLoop("gas.ppr", eDeg, srcRows.withColumn("rank", lit(resetProb)), iters) {
+      _.join(srcRows, Seq("node"), "full")
+        .select(col("node"),
+          round(ind + lit(1 - resetProb) * coalesce(col("contrib"), lit(0.0)), 9).as("rank"))
     }
     // restore the exact-0.0 rows for unreached nodes (one left join,
     // outside the iteration)
     nodes.join(ranks, Seq("node"), "left")
       .select(col("node"), coalesce(col("rank"), lit(0.0)).as("rank"))
-  }
-
-  /** SSSP that also tracks the predecessor on the best path
-    * (min over struct(dist, pred) keeps tie-breaks deterministic). */
-  def ssspWithPred(edgesIn: DataFrame, source: String, maxIter: Int = 64): DataFrame = {
-    val spark = edgesIn.sparkSession
-    val edges = cp(edgesIn.select("src", "dst", "weight"))
-    var dist = cp(spark.range(1).select(lit(source).as("node"),
-      lit(0.0).as("dist"), lit(null).cast("string").as("pred")))
-    var frontier = dist
-    var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
-      i += 1
-      val cand = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"),
-          struct((frontier("dist") + edges("weight")).as("dist"), edges("src").as("pred")).as("dp"))
-        .groupBy("node").agg(min("dp").as("dp"))
-        .select(col("node"), col("dp.dist").as("dist"), col("dp.pred").as("pred"))
-      val improved = cp(
-        cand.join(dist.select(col("node").as("n2"), col("dist").as("old")),
-                  cand("node") === col("n2"), "left")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select("node", "dist", "pred"))
-      // accumulator checkpointed every round (see sssp)
-      dist = cp(dist
-        .join(improved.select(col("node").as("n3")), dist("node") === col("n3"), "left_anti")
-        .unionAll(improved))
-      frontier = improved
-    }
-    dist
-  }
-
-  /** BFS from a seed SET, stopping once ≥ maxVertices are visited;
-    * result trimmed deterministically by (depth, node). */
-  def multiBfs(edgesIn: DataFrame, seeds: DataFrame, maxVertices: Int,
-               maxDepth: Int = 32): DataFrame = {
-    val edges = cp(edgesIn.select("src", "dst"))
-    var visited = cp(seeds.select(col("node")).distinct().withColumn("depth", lit(0)))
-    var frontier = visited
-    var depth = 0
-    var count = visited.count()
-    while (depth < maxDepth && count < maxVertices && !frontier.isEmpty) {
-      depth += 1
-      val next = cp(
-        frontier.join(edges, frontier("node") === edges("src"))
-          .select(col("dst").as("node"), lit(depth).as("depth"))
-          .distinct()
-          .join(visited.select("node"), Seq("node"), "left_anti"))
-      visited = cp(visited.unionAll(next))
-      frontier = next
-      count = visited.count()
-    }
-    visited.orderBy("depth", "node").limit(maxVertices)
   }
 
   /** Fuzzy shortest-path subgraph (FuzzySSSP.java): per-source SSSP →
@@ -596,52 +565,53 @@ object Analytics {
   def fuzzySssp(edges: DataFrame, sources: Seq[String], targets: Seq[String],
                 maxVertices: Int): DataFrame = {
     val spark = edges.sparkSession
-    stringEdges(cp(edges.select("src", "dst", "weight"))).foreach { rows =>
+    // materialized once: every per-source SSSP and the final BFS read it
+    val e = cp(edges.select("src", "dst", "weight"))
+    stringEdges(e).foreach { rows =>
       // driver tier: the whole composition (per-source ssspWithPred →
-      // pred-chain path extraction → capped multiBfs) replays over ONE
+      // pred-chain path extraction → capped bfsLoop) replays over ONE
       // collected edge list — each stage is the identical recurrence
       // the distributed code below runs, driver-side
       import spark.implicits._
-      val adjW = localAdjW(rows)
+      val adjW = localAdj(rows)(r => (r.getString(1), r.getDouble(2)))
       val pathVerts = scala.collection.mutable.LinkedHashSet.empty[String]
       sources.foreach { src =>
         val d = localSssp(adjW, src, 64)
         val acc = scala.collection.mutable.LinkedHashSet[String](
           targets.filter(d.contains): _*)
         var frontier: Set[String] = acc.toSet
-        var i = 0
-        while (i < 64 && frontier.nonEmpty) {
-          i += 1
+        Fixpoint.loop("gas.fuzzyPath", 64) { _ =>
           frontier = frontier.flatMap(t => Option(d(t)._2)).diff(acc.toSet)
           acc ++= frontier
+          frontier.nonEmpty
         }
         pathVerts ++= acc
       }
       val seeds = (pathVerts ++ sources).toSeq
-      return localBfs(localAdj(rows), seeds, 32, maxVertices.toLong)
+      return localBfs(localAdj(rows)(_.getString(1)), seeds, 32, maxVertices.toLong)
         .toDF("node", "depth")
         .orderBy("depth", "node").limit(maxVertices)
     }
     val pathVerts = sources.map { src =>
-      val d = cp(ssspWithPred(edges, src))
+      val d = ssspWithPred(e, src, 64)
       var acc = d.filter(col("node").isin(targets: _*)).select("node")
       var frontier = acc
-      var i = 0
-      while (i < 64 && !frontier.isEmpty) {
-        i += 1
-        frontier = cp(
+      Fixpoint.loop("gas.fuzzyPath", 64) { _ =>
+        val (next, n) = Fixpoint.materialize(
           d.join(frontier.select(col("node").as("t")), col("node") === col("t"))
             .filter(col("pred").isNotNull)
             .select(col("pred").as("node")).distinct()
             .join(acc, Seq("node"), "left_anti"))
-        acc = acc.unionAll(frontier)
+        if (n > 0) { acc = acc.unionAll(next); frontier = next }
+        n > 0
       }
       acc
     }.reduce(_ unionAll _).distinct()
     // sources are path endpoints by definition, reachable targets or not
     import spark.implicits._
-    val seeds = pathVerts.unionAll(sources.toDF("node")).distinct()
-    multiBfs(edges, seeds, maxVertices)
+    val (seeds, seeded) = Fixpoint.materialize(
+      pathVerts.unionAll(sources.toDF("node")).distinct().withColumn("depth", lit(0)))
+    bfsLoop(e, seeds, seeded, 32, maxVertices).orderBy("depth", "node").limit(maxVertices)
   }
 
   /** Per-vertex triangle counts over the UNDIRECTED graph induced by

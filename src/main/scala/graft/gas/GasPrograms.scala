@@ -17,9 +17,9 @@ import org.apache.spark.sql.DataFrame
   * query's gas:out / gas:outVal variables.
   *
   * Programs should run their iteration through [[Pregel.run]] /
-  * [[Pregel.runDelta]] for the checkpoint/convergence discipline —
-  * that pair is the IGASProgram gather/apply/scatter loop's
-  * Spark-native shape.
+  * [[Pregel.runDelta]] — the IGASProgram gather/apply/scatter loop's
+  * Spark-native shape — or a loop of their own through
+  * [[graft.plans.Fixpoint]], the runner of every engine loop.
   */
 object GasPrograms {
 

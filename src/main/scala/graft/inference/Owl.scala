@@ -2,7 +2,7 @@ package graft.inference
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.LocalTier
+import graft.plans.{Fixpoint, LocalTier}
 
 /** OWL-ish forward-chaining rules layered over [[Rdfs]].
   *
@@ -111,37 +111,30 @@ object Owl {
     // common structural-only case).
     if (ont.functional.isEmpty && ont.inverseFunctional.isEmpty)
       return componentsOf(allPairs)
-    var pairs = allPairs.localCheckpoint()
+    var (pairs, n0) = Fixpoint.materialize(allPairs)
     // no co-reference at all (common on structural-only stores): the
     // canonical map is empty — return a LocalRelation so downstream
     // normalizeBy joins fold away under PropagateEmptyRelation instead
     // of paying the connected-components loop's jobs on nothing
-    if (pairs.isEmpty) {
+    if (n0 == 0) {
       val spark = instance.sparkSession
       import spark.implicits._
       return Seq.empty[(String, String)].toDF("id", "canon")
     }
     var canon = componentsOf(pairs)
-    if (ont.functional.nonEmpty || ont.inverseFunctional.nonEmpty) {
-      var round = 0
-      var done = false
-      while (!done && round < 8) {
-        // derive on CANONICAL ids: two objects already co-referent
-        // normalize to one id and drop out under src < dst, so every
-        // surviving pair is a genuinely new merge
-        val fresh = entailedPairs(normalizeBy(instance, canon), ont)
-          .reduceOption(_ unionAll _)
-          .map(_.localCheckpoint())
-        if (fresh.forall(_.isEmpty)) done = true
-        else {
-          pairs = pairs.unionAll(fresh.get).localCheckpoint()
-          canon = componentsOf(pairs)
-          round += 1
-        }
+    // silent truncation would return an incomplete canonical map —
+    // same hard-fail policy as the Compiler closure guards
+    Fixpoint.converge("owl.sameAs", 8) { _ =>
+      // derive on CANONICAL ids: two objects already co-referent
+      // normalize to one id and drop out under src < dst, so every
+      // surviving pair is a genuinely new merge
+      val (fresh, n) = Fixpoint.materialize(
+        entailedPairs(normalizeBy(instance, canon), ont).reduce(_ unionAll _))
+      if (n > 0) {
+        pairs = pairs.unionAll(fresh).localCheckpoint()
+        canon = componentsOf(pairs)
       }
-      // silent truncation would return an incomplete canonical map —
-      // same hard-fail policy as the Compiler closure guards
-      require(done, s"sameAs/functional-property fixpoint did not converge in 8 rounds")
+      n > 0
     }
     canon
   }
@@ -225,14 +218,11 @@ object Owl {
         val td = comp(tSet, dIx)
         val f1 = dSet ++ td ++ comp(dSet, tIx) ++ comp(td, tIx)
         var acc = f1
-        var rounds = 0
-        var done = false
-        while (!done && rounds < 64) {
+        Fixpoint.converge("owl.incrementalTc", 64) { _ =>
           val grown = comp(acc, byFrom(acc)) -- acc -- tSet
-          if (grown.isEmpty) done = true
-          else { acc = acc ++ grown; rounds += 1 }
+          acc ++= grown
+          grown.nonEmpty
         }
-        require(done, "incremental transitive closure did not converge (doubling, 64 rounds)")
         val spark = delta.sparkSession
         import spark.implicits._
         return (acc -- tSet).toSeq.toDF("from", "to")
@@ -253,21 +243,15 @@ object Owl {
     // prior frontier∘f1 form grew linearly and a >64-edge chain in
     // ONE commit failed loud)
     var acc = f1
-    var rounds = 0
-    var done = false
-    while (!done && rounds < 64) {
-      val grown = comp(acc, acc)
+    Fixpoint.converge("owl.incrementalTc", 64) { _ =>
+      val (grown, n) = Fixpoint.materialize(comp(acc, acc)
         .join(acc, Seq("from", "to"), "left_anti")
         .join(t, Seq("from", "to"), "left_anti")
-        .distinct().localCheckpoint()
-      if (grown.isEmpty) done = true
-      else {
-        // disjoint by grown's anti-join; both sides internally distinct
-        acc = acc.unionAll(grown).localCheckpoint()
-        rounds += 1
-      }
+        .distinct())
+      // disjoint by grown's anti-join; both sides internally distinct
+      if (n > 0) acc = acc.unionAll(grown).localCheckpoint()
+      n > 0
     }
-    require(done, "incremental transitive closure did not converge (doubling, 64 rounds)")
     acc.join(t, Seq("from", "to"), "left_anti")
   }
 
@@ -298,16 +282,12 @@ object Owl {
     var canon = canonMap(pairs).toMap
     def norm(t: (String, String, String)) =
       (canon.getOrElse(t._1, t._1), t._2, canon.getOrElse(t._3, t._3))
-    if (ont.functional.nonEmpty || ont.inverseFunctional.nonEmpty) {
-      var round = 0
-      var done = false
-      while (!done && round < 8) {
+    if (ont.functional.nonEmpty || ont.inverseFunctional.nonEmpty)
+      Fixpoint.converge("owl.sameAs", 8) { _ =>
         val fresh = entailedLocal(rowSeq.map(norm))
-        if (fresh.isEmpty) done = true
-        else { pairs ++= fresh; canon = canonMap(pairs).toMap; round += 1 }
+        if (fresh.nonEmpty) { pairs ++= fresh; canon = canonMap(pairs).toMap }
+        fresh.nonEmpty
       }
-      require(done, s"sameAs/functional-property fixpoint did not converge in 8 rounds")
-    }
     val base = rowSeq.filter(_._2 != "sameAs").map(norm)
     val invPairs = ont.inverses.flatMap { case (p, q) => Seq(p -> q, q -> p) } ++
       ont.symmetric.map(p => p -> p)

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash.polyhash
-import graft.plans.LocalTier
+import graft.plans.{Fixpoint, LocalTier}
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, fingerprinting. All are map-only
@@ -437,9 +437,7 @@ object TextAnalysis {
           (w, w.map(_.toString).toArray, r.getLong(1))
         }
         val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-        var round = 1
-        var exhausted = false
-        while (round <= k && !exhausted) {
+        Fixpoint.loop("text.bpe", k) { round =>
           val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
           vocab.foreach { case (_, syms, f) =>
             var i = 0
@@ -449,13 +447,12 @@ object TextAnalysis {
               i += 1
             }
           }
-          if (cnt.isEmpty) exhausted = true
-          else {
+          if (cnt.nonEmpty) {
             val ((mx, my), c) = cnt.minBy { case ((x, y), n) => (-n, x, y) }
             merges += ((round.toLong, mx, my, c))
             vocab = vocab.map { case (w, syms, f) => (w, bpeFold(syms, mx, my), f) }
-            round += 1
           }
+          cnt.nonEmpty
         }
         (merges.toSeq, spark.createDataset(vocab.toSeq))
       case None => bpeDistributed(docs, k)
@@ -489,9 +486,9 @@ object TextAnalysis {
       .map { case (w, f) => (w, w.map(_.toString).toArray, f) }
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var round = 1
-    var exhausted = false
-    while (round <= k && !exhausted) {
+    // the top-merge collect is the round's data and its stop test: no
+    // pair left means the vocabulary is exhausted
+    Fixpoint.loop("text.bpe", k) { round =>
       val pairs = vocab.toDF("w", "syms", "f")
         .filter(size(col("syms")) >= 2)
         .select(col("f"), explode(expr(
@@ -499,14 +496,13 @@ object TextAnalysis {
             "i -> struct(element_at(syms, i) AS x, element_at(syms, i + 1) AS y))")).as("p"))
         .groupBy(col("p.x").as("x"), col("p.y").as("y")).agg(sum("f").as("cnt"))
       val top = pairs.orderBy(col("cnt").desc, col("x"), col("y")).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (mx, my, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+      top.headOption.foreach { t =>
+        val (mx, my, cnt) = (t.getString(0), t.getString(1), t.getLong(2))
         merges += ((round.toLong, mx, my, cnt))
         vocab = vocab.map { case (w, syms, f) => (w, bpeFold(syms, mx, my), f) }
           .localCheckpoint()
-        round += 1
       }
+      top.nonEmpty
     }
     (merges.toSeq, vocab)
   }

@@ -2,7 +2,7 @@ package graft.rdf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.plans.LocalTier
+import graft.plans.{Fixpoint, LocalTier}
 
 /** RDF-star (RDR) statement identifiers — Blazegraph's "sids" mode
   * (reference: AbstractTripleStore.Options.STATEMENT_IDENTIFIERS,
@@ -57,7 +57,8 @@ object Rdr {
     *
     * Each round is one join of the (tiny) frontier against the store;
     * recursion depth = annotation nesting, bounded and shallow — the
-    * `isEmpty` convergence check is a counter, not a data collect. */
+    * convergence test is the layer's observed row count, not a data
+    * collect. */
   def cbd(triples: DataFrame, node: String): DataFrame =
     cbd(graft.sparql.TripleSource.plain(triples), node)
 
@@ -78,9 +79,8 @@ object Rdr {
     var frontier = Set(node)
     val described = scala.collection.mutable.Set(node)
     val out = scala.collection.mutable.LinkedHashSet.empty[(String, String, String)]
-    var depth = 0
     var overflow = false
-    while (depth < maxDepth && frontier.nonEmpty && !overflow) {
+    Fixpoint.loop("rdr.cbd", maxDepth) { _ =>
       val fdf = frontier.toSeq.sorted.toDF("s")
       LocalTier.probe(src.scanForSubjects(broadcast(fdf)).select("s", "p", "o"),
           LocalTier.Budget - out.size) match {
@@ -98,8 +98,8 @@ object Rdr {
           }
           frontier = (cand -- described).toSet
           described ++= frontier
-          depth += 1
       }
+      frontier.nonEmpty && !overflow
     }
     if (overflow) cbdLoop(src, node, maxDepth)
     else if (out.isEmpty) src.triples.select("s", "p", "o").limit(0)
@@ -107,28 +107,30 @@ object Rdr {
   }
 
   /** The distributed CBD loop: one frontier join per layer, each layer
-    * checkpointed. */
+    * checkpointed; the walk stops at the first empty layer or after
+    * `maxDepth` layers. */
   private[graft] def cbdLoop(src: graft.sparql.TripleSource, node: String,
                              maxDepth: Int): DataFrame = {
     val spark = src.triples.sparkSession
     import spark.implicits._
-    var frontier = Seq(node).toDF("s").localCheckpoint()
+    var frontier = Seq(node).toDF("s")
     var out: DataFrame = null
     var described = frontier
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
+    Fixpoint.loop("rdr.cbd", maxDepth) { _ =>
       // the layer is CBD-sized: materialize it so the candidate
       // computation and the result union never re-run the scan. The
       // frontier is description-sized by construction — broadcast it so
       // the subject lookup is a map-side join, never a store shuffle
-      val layer = src.scanForSubjects(broadcast(frontier)).localCheckpoint()
-      out = if (out == null) layer else out.unionAll(layer)
-      val cand = layer.filter(col("o").startsWith(Prefix)).select(col("o").as("s"))
-        .unionAll(layer.select(sid(col("s"), col("p"), col("o")).as("s")))
-        .distinct()
-      frontier = cand.join(described, Seq("s"), "left_anti").localCheckpoint()
-      described = described.unionAll(frontier)
-      depth += 1
+      val (layer, n) = Fixpoint.materialize(src.scanForSubjects(broadcast(frontier)))
+      if (n > 0) {
+        out = if (out == null) layer else out.unionAll(layer)
+        val cand = layer.filter(col("o").startsWith(Prefix)).select(col("o").as("s"))
+          .unionAll(layer.select(sid(col("s"), col("p"), col("o")).as("s")))
+          .distinct()
+        frontier = cand.join(described, Seq("s"), "left_anti").localCheckpoint()
+        described = described.unionAll(frontier)
+      }
+      n > 0
     }
     if (out == null) src.triples.limit(0) else out.distinct()
   }

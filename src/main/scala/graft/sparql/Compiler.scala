@@ -3,7 +3,7 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.plans.LocalTier
+import graft.plans.{Fixpoint, LocalTier}
 
 /** Compiles the SPARQL algebra to a DataFrame plan.
   *
@@ -238,19 +238,20 @@ object Compiler {
     }
     var closure = step
     var frontier = closure
-    var i = 0
-    var done = false
     // depth ≤ LinearRounds runs the delta-cheap frontier∘step loop
     // (per-round cost keyed by the NEW pairs — the shape that survives
     // wide 100-TB edge sets); a graph still growing past that depth is
     // chain-like, and the loop SWITCHES to path DOUBLING
     // (closure∘closure: reachable path length doubles per round, so a
     // depth-D chain converges in ~log₂D more rounds instead of D —
-    // a deep hierarchy asserted in one batch used to fail the cap)
+    // a deep hierarchy asserted in one batch used to fail the cap).
+    // Silent truncation would return a WRONG (partial) closure — the
+    // semantics of `+`/transitive rules admit no iteration cap — so the
+    // cap fails loudly.
     val LinearRounds = 16
-    while (!done && i < maxIters) {
+    Fixpoint.converge("path.closure", maxIters) { i =>
       val grown =
-        if (i < LinearRounds)
+        if (i <= LinearRounds)
           frontier.join(
               step.withColumnRenamed("from", "_m").withColumnRenamed("to", "_t"),
               frontier("to") === col("_m"))
@@ -258,21 +259,14 @@ object Compiler {
         else
           closure.as("l").join(closure.as("r"), col("l.to") === col("r.from"))
             .select(col("l.from").as("from"), col("r.to").as("to")).distinct()
-      val delta = grown.join(closure, Seq("from", "to"), "left_anti").localCheckpoint()
-      if (delta.isEmpty) done = true
-      else {
-        // accumulator checkpointed every round: it feeds the next
-        // round's anti-join (and doubling rounds read it three times),
-        // so a lazy union is re-evaluated immediately — the r18
-        // every-2nd-round variant measured the same job count
-        closure = closure.unionAll(delta).localCheckpoint()
-        frontier = delta
-        i += 1
-      }
+      val (delta, n) = Fixpoint.materialize(grown.join(closure, Seq("from", "to"), "left_anti"))
+      // accumulator checkpointed every round: it feeds the next
+      // round's anti-join (and doubling rounds read it three times),
+      // so a lazy union is re-evaluated immediately — the r18
+      // every-2nd-round variant measured the same job count
+      if (n > 0) { closure = closure.unionAll(delta).localCheckpoint(); frontier = delta }
+      n > 0
     }
-    // silent truncation would return a WRONG (partial) closure — the
-    // semantics of `+`/transitive rules admit no iteration cap
-    require(done, s"transitive closure did not converge in $maxIters iterations")
     closure
   }
 
@@ -304,23 +298,16 @@ object Compiler {
       return visited.toSeq.toDF("node")
     }
     val (key, out) = if (forward) ("from", "to") else ("to", "from")
-    var visited = step.join(seeds, step(key) === seeds("node"))
-      .select(col(out).as("node")).distinct().localCheckpoint()
+    var (visited, reached) = Fixpoint.materialize(step.join(seeds, step(key) === seeds("node"))
+      .select(col(out).as("node")).distinct())
     var frontier = visited
-    var i = 0
-    var done = frontier.isEmpty
-    while (!done && i < maxIters) {
+    if (reached > 0) Fixpoint.converge("path.reach", maxIters) { _ =>
       val grown = step.join(frontier, step(key) === frontier("node"))
         .select(col(out).as("node")).distinct()
-      val delta = grown.join(visited, Seq("node"), "left_anti").localCheckpoint()
-      if (delta.isEmpty) done = true
-      else {
-        visited = visited.unionAll(delta).localCheckpoint()
-        frontier = delta
-        i += 1
-      }
+      val (delta, n) = Fixpoint.materialize(grown.join(visited, Seq("node"), "left_anti"))
+      if (n > 0) { visited = visited.unionAll(delta).localCheckpoint(); frontier = delta }
+      n > 0
     }
-    require(done, s"seeded reachability did not converge in $maxIters iterations")
     visited
   }
 

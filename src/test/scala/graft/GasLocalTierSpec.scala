@@ -93,6 +93,19 @@ class GasLocalTierSpec extends AnyFunSuite {
     }
   }
 
+  test("connectedComponents: the tier honours the round cap as the loop does") {
+    import spark.implicits._
+    val chain = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
+    for (e <- Seq(chain, hier); cap <- Seq(1, 2, 64)) {
+      val local = rowsOf(Analytics.connectedComponents(e, cap))
+      val dist = distributed(rowsOf(Analytics.connectedComponents(e, cap)))
+      assert(local == dist, s"cap $cap")
+    }
+    // one round: c has heard only from b
+    assert(rowsOf(Analytics.connectedComponents(chain, 1)) ==
+      Set(Seq("a", "a"), Seq("b", "a"), Seq("c", "b")))
+  }
+
   test("connectedComponents: union-find tier equals label propagation (long nodes)") {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (10L, 3L), (5L, 4L), (7L, 7L), (9L, 8L), (8L, 6L))

@@ -7,13 +7,16 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps two mechanisms ONE each. No `src/main` file other than
+/** Keeps three mechanisms ONE each. No `src/main` file other than
   * `graft/plans/LocalTier.scala` may read a `*.localBound` conf key or
   * declare its own `Local*Bound` constant — a new driver-side replay
-  * takes its budget and probe from [[graft.plans.LocalTier]]. And no
+  * takes its budget and probe from [[graft.plans.LocalTier]]. No
   * `src/main` or `src/test` file other than `graft/Harness.scala` may
   * build a Spark session or read the core-count variable — a new
-  * entry point takes its session from [[graft.Harness]]. */
+  * entry point takes its session from [[graft.Harness]]. And no
+  * `src/main` file other than `graft/plans/Fixpoint.scala` may run its
+  * own round loop over DataFrames — a new distributed iteration runs
+  * on [[graft.plans.Fixpoint]]. */
 class LocalTierGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): List[Path] = {
@@ -35,6 +38,86 @@ class LocalTierGuardSpec extends AnyFunSuite {
     val root = Paths.get("src", "main", "scala")
     val found = offenders(scalaFiles(root), root.resolve("graft/plans/LocalTier.scala"),
       """\.localBound\b""".r, """\b(val|var|def)\s+Local\w*Bound\b""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** `src` with comments and string and character literals blanked,
+    * newlines kept, so braces, parens and words inside them are not
+    * code. */
+  private def blank(src: String): String = {
+    val out = new StringBuilder(src)
+    def clear(from: Int, to: Int): Unit =
+      (from until (to min src.length)).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    def upTo(s: String, from: Int): Int = src.indexOf(s, from) match {
+      case -1 => src.length
+      case e => e + s.length
+    }
+    var i = 0
+    while (i < src.length) {
+      val next =
+        if (src.startsWith("//", i)) upTo("\n", i)
+        else if (src.startsWith("/*", i)) upTo("*/", i + 2)
+        else if (src.startsWith("\"\"\"", i)) upTo("\"\"\"", i + 3)
+        else if (src(i) == '"') {
+          var e = i + 1
+          while (e < src.length && src(e) != '"' && src(e) != '\n') e += (if (src(e) == '\\') 2 else 1)
+          e + 1
+        } else if (src(i) == '\'' && src.startsWith("'", i + 2)) i + 3
+        else if (src.startsWith("'\\", i) && src.startsWith("'", i + 3)) i + 4
+        else i + 1
+      if (next > i + 1) clear(i, next)
+      i = next
+    }
+    out.toString
+  }
+
+  /** Index of the bracket closing the one at `open`. */
+  private def closing(code: String, open: Int): Int = {
+    val (o, c) = (code(open), if (code(open) == '(') ')' else '}')
+    var depth = 0
+    var i = open
+    while ({ if (code(i) == o) depth += 1 else if (code(i) == c) depth -= 1; depth > 0 }) i += 1
+    i
+  }
+
+  /** `while` loops in `src` whose condition tests `!<x>.isEmpty`, or
+    * whose body (brace-matched, else the one statement up to the end of
+    * its line) calls `localCheckpoint` or `cp(`, as "line: loop head". */
+  private def dataFrameLoops(src: String): List[String] = {
+    val code = blank(src)
+    """\bwhile\s*\(""".r.findAllMatchIn(code).toList.flatMap { m =>
+      val condEnd = closing(code, m.end - 1)
+      var b = condEnd + 1
+      while (b < code.length && code(b).isWhitespace) b += 1
+      val bodyEnd =
+        if (b < code.length && code(b) == '{') closing(code, b)
+        else code.indexOf('\n', b) match { case -1 => code.length; case e => e }
+      val cond = code.substring(m.end, condEnd)
+      val body = code.substring(b, bodyEnd)
+      val tests = """![^&|;\n]*?\.isEmpty\b""".r.findFirstIn(cond).isDefined
+      val materializes = """\blocalCheckpoint\b|\bcp\s*\(""".r.findFirstIn(body).isDefined
+      if (tests || materializes)
+        Some(s"${code.substring(0, m.start).count(_ == '\n') + 1}: ${code.substring(m.start, condEnd + 1)}")
+      else None
+    }
+  }
+
+  test("only Fixpoint runs a round loop over DataFrames") {
+    // the detector itself: the skeletons it must catch, and the
+    // driver-side replays it must let pass
+    assert(dataFrameLoops("while (i < n && !frontier.isEmpty) {\n  i += 1\n}").nonEmpty)
+    assert(dataFrameLoops("while (!done) {\n  x = cp(y.union(z))\n}").nonEmpty)
+    assert(dataFrameLoops("while (more)\n  acc = acc.localCheckpoint()").nonEmpty)
+    assert(dataFrameLoops(
+      "while (frontier.nonEmpty) { // not: !frontier.isEmpty\n  f = \"cp(\" + '{' }").isEmpty)
+    val root = Paths.get("src", "main", "scala")
+    val owner = root.resolve("graft/plans/Fixpoint.scala")
+    val files = scalaFiles(root)
+    assert(files.contains(owner))
+    val found = for {
+      f <- files if f != owner
+      loop <- dataFrameLoops(new String(Files.readAllBytes(f), "UTF-8"))
+    } yield s"$f:$loop"
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
