@@ -2,6 +2,7 @@ package graft.inference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.LocalTier
 import graft.rdf.Journal
 
 /** Truth maintenance over the PERSISTENT store — the reference wires
@@ -108,7 +109,7 @@ final class MaintainedClosure private (spark: SparkSession,
         col("o").isin(MaintainedClosure.PropertyTypeObjects: _*))).isEmpty
 
   /** The delta's DISTINCT predicate set — predicate-set-sized by
-    * nature (the closeTiny discipline), collected ONCE per assert so
+    * nature (the ontology-table discipline), collected ONCE per assert so
     * the vocabulary probe, the tier decision and the touched-predicate
     * set are all driver-side set tests instead of one driver-blocking
     * isEmpty job each (the r18 job-count finding: these commits are
@@ -213,7 +214,7 @@ final class MaintainedClosure private (spark: SparkSession,
     // identity, so reuse the caller's already-checkpointed delta
     // instead of materializing a projected copy of it
     val dn =
-      if (Rdfs.provablyEmpty(canon)) d
+      if (LocalTier.provablyEmpty(canon)) d
       else Owl.normalizeBy(d, canon).localCheckpoint()
     val invPairs = o.inverses.flatMap { case (p, q) => Seq(p -> q, q -> p) } ++
       o.symmetric.map(p => p -> p)
@@ -545,10 +546,10 @@ object MaintainedClosure {
     * with one more job. Semantically identical to
     * [[ontologyFrom]] + [[owlOntologyFrom]] (spec-pinned) — but those
     * leave the TBox tables as snapshot-filter PLANS, so every
-    * closure's closeTiny re-ran the snapshot resolution (segment
+    * closure's ontology read re-ran the snapshot resolution (segment
     * union + argmax) per commit: 6+ vocabulary jobs per extraction
     * become 2, and [[Rdfs.provablyEmpty]] can see an empty program.
-    * TBox slices are broadcast-sized by definition — closeTiny
+    * TBox slices are broadcast-sized by definition — the closure
     * collects them anyway. */
   private[inference] def extractProgram(spark: SparkSession, statements: DataFrame)
       : (Rdfs.Ontology, Option[Owl.Ontology]) = {

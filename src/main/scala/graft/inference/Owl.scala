@@ -142,8 +142,8 @@ object Owl {
   /** owl:equivalentClass / owl:equivalentProperty
     * (RuleOwlEquivalentClass.java / RuleOwlEquivalentProperty.java):
     * a ≡ b ⇔ a ⊑ b ∧ b ⊑ a, so equivalences fold into the RDFS
-    * ontology as MUTUAL sub-edges — the existing broadcast-sized
-    * closeTiny closures and rdfs7/rdfs9 lifts then entail both
+    * ontology as MUTUAL sub-edges — the existing driver-side
+    * sub-edge closures and rdfs7/rdfs9 lifts then entail both
     * directions with no new rule machinery (and equivalence composes
     * transitively with declared sub-edges for free). */
   def withEquivalences(ont: Rdfs.Ontology,
@@ -295,19 +295,8 @@ object Owl {
       base.filter(_._2 == p).map(t => (t._3, q, t._1)) }
     var acc: Seq[(String, String, String)] = base ++ preMirrored
     ont.transitive.foreach { p =>
-      val step = acc.filter(_._2 == p).map(t => (t._1, t._3)).distinct
-      val adj = step.groupBy(_._1).map { case (k, es) => k -> es.map(_._2) }
-      val tc = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-      adj.keys.toSeq.sorted.foreach { from =>
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        var frontier: Seq[String] = adj(from)
-        while (frontier.nonEmpty) {
-          val fresh = frontier.filter(seen.add)
-          fresh.foreach(t => tc += ((from, t)))
-          frontier = fresh.flatMap(adj.getOrElse(_, Nil))
-        }
-      }
-      acc = acc.filter(_._2 != p) ++ tc.toSeq.map { case (f, t) => (f, p, t) }
+      val tc = LocalTier.closure(acc.filter(_._2 == p).map(t => (t._1, t._3)))
+      acc = acc.filter(_._2 != p) ++ tc.map { case (f, t) => (f, p, t) }.toSeq
     }
     val mirrored = invPairs.flatMap { case (p, q) =>
       acc.filter(_._2 == p).map(t => (t._3, q, t._1)) }

@@ -1,7 +1,7 @@
 package graft.inference
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import graft.plans.LocalTier
 
 /** RDFS forward-chaining closure.
@@ -10,15 +10,17 @@ import graft.plans.LocalTier
   * engine (bigdata-core/bigdata-rdf/src/java/com/bigdata/rdf/rules/
   * RuleRdfs05.java, RuleRdfs07.java, RuleRdfs09.java, RuleRdfs11.java,
   * RuleRdfs02.java, RuleRdfs03.java + InferenceEngine). The rule set is
-  * stratified, so instead of a generic semi-naive datalog loop we:
-  *   1. close subClassOf / subPropertyOf transitively (rdfs11 / rdfs5)
-  *      — tiny ontology tables, frontier fixpoint;
-  *   2. lift properties along subPropertyOf (rdfs7);
-  *   3. apply domain/range typing (rdfs2 / rdfs3);
-  *   4. lift types along subClassOf (rdfs9).
-  * Each step is a broadcast join of the instance data against the
-  * (closed, tiny) ontology — no instance-side shuffle at all, which is
-  * the right plan at 100 TB: the ontology is always broadcast-sized.
+  * stratified, and every rule has ONE instance-data antecedent — its
+  * other antecedents are ontology statements:
+  *   1. subClassOf / subPropertyOf close transitively (rdfs11 / rdfs5)
+  *      on the driver — the ontology is broadcast-sized by definition;
+  *   2. [[Rules.derive]] then maps one instance triple to everything it
+  *      entails: its rdfs7 lifts along subPropertyOf, the rdfs2/3
+  *      domain/range types of those, their rdfs9 lifts along
+  *      subClassOf, and optionally the axiomatic rules.
+  * So the closure is distinct(flatMap(derive)): one map-side pass and
+  * one shuffle at any size, or the same function over probed rows on
+  * the driver below the tier limit.
   */
 object Rdfs {
 
@@ -27,194 +29,110 @@ object Rdfs {
                       domain: DataFrame,        // (p, cls)
                       range: DataFrame)         // (p, cls)
 
-  /** Transitive closure of a (sub, sup) ontology table, computed on the
-    * driver: ontologies are broadcast-sized by definition (unlike the
-    * instance data), so a Spark fixpoint would spend more on job
-    * scheduling than on work. */
-  private def closeTiny(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    closeTinyPairs(df).toSeq.sorted.toDF("from", "to")
-  }
-
-  /** The closeTiny transitive fixpoint as a driver set. Ontology
-    * tables that optimize to a LocalRelation (driver-built Seqs, the
-    * TM extractProgram slices) read their rows straight off the plan —
-    * ZERO Spark jobs; anything else pays the one collect as before. */
-  private[inference] def closeTinyPairs(df: DataFrame): Set[(String, String)] = {
-    val pairs = tablePairs(df).toSet
-    var closure = pairs
-    var grown = true
-    while (grown) {
-      val next = closure ++ (for {
-        (a, b) <- closure; (c, d) <- pairs if b == c
-      } yield (a, d))
-      grown = next.size > closure.size
-      closure = next
-    }
-    closure
-  }
-
-  /** Full closure of instance triples (s,p,o) under the ontology.
-    *
-    * The instance slice is materialized ONCE (localCheckpoint; a
-    * cluster run would persist/checkpoint reliably): the stratified
-    * rule tree references it from 8 subtrees, and without the
-    * materialization every subtree re-scans the source — the same
-    * read-amplification a load-time closure materialization avoids in
-    * the reference's InferenceEngine.
-    *
-    * `axiomatic` additionally emits the RDF/RDFS axiomatic-rule
-    * entailments rdf1, rdfs4a/4b, rdfs6, rdfs8, rdfs10, rdfs12, rdfs13
-    * (reference: rules/RuleRdf01.java, RuleRdfs04a.java and siblings —
-    * Blazegraph ships them behind its axioms/forwardChain options,
-    * commonly OFF because they type every term as Resource/Property;
-    * same default here). All are map-side projections/distincts of the
-    * instance slice — no joins. */
-  /** Provably-empty check WITHOUT running a job: true only when the
-    * optimized plan is an empty LocalRelation (Seq.empty.toDF, or the
-    * localized dynamic-mode ontologies [[MaintainedClosure]] builds).
-    * A false negative just takes the general path. */
-  private[inference] def provablyEmpty(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
-
-  private[inference] def provablyEmpty(ont: Ontology): Boolean =
-    Seq(ont.subClassOf, ont.subPropertyOf, ont.domain, ont.range)
-      .forall(provablyEmpty)
-
-  def closure(instance: DataFrame, ont: Ontology, axiomatic: Boolean = false): DataFrame = {
-    // EMPTY program (all four ontology tables provably empty, no
-    // axiomatic rules): every rule is a no-op and the closure is the
-    // instance set itself — skip the two materializations (inst,
-    // lifted), the two closeTiny collects and the 8-subtree union
-    // plan. The truth-maintenance fast tiers hit this on every commit
-    // of an RDFS-empty store (measured: ~50 driver-blocking jobs per
-    // tm_dynamic commit, the job-count floor being the whole cost at
-    // sf0.1).
-    if (!axiomatic && provablyEmpty(ont)) return instance.distinct()
-    // Small-input tier: the stratified rules are pure string set
-    // operations (broadcast-ontology maps + unions + one distinct), so
-    // below the tier budget the whole closure replays driver-side —
-    // identical strata, identical sets — and returns a LocalRelation
-    // instead of paying ~10 driver-blocking jobs of exchange
-    // materialization per call (retraction pays the closure THREE
-    // times). A LocalRelation input (an Owl.closure driver-tier
-    // result, a driver-built delta) reads its rows off the plan with
-    // ZERO jobs and skips the checkpoint outright; the distributed
-    // strata below are UNCHANGED above the budget.
-    val inst0 =
-      if (LocalTier.planRows(instance).isDefined) instance
-      else instance.localCheckpoint()
-    LocalTier.strings(inst0, LocalTier.Inference, 3).foreach { rows =>
-      val spark = instance.sparkSession
-      import spark.implicits._
-      return localClosure(rows.map(t => (t(0), t(1), t(2))),
-        closeTinyPairs(ont.subClassOf), closeTinyPairs(ont.subPropertyOf),
-        tablePairs(ont.domain), tablePairs(ont.range), axiomatic)
-        .toDF("s", "p", "o")
-    }
-    val subC = closeTiny(ont.subClassOf)
-    val subP = closeTiny(ont.subPropertyOf)
-    val inst = inst0
-
-    // rdfs7: (s p o) & p ⊑* q → (s q o)  (4 downstream consumers →
-    // materialized too)
-    val lifted = inst.unionAll(
-      inst.join(broadcast(subP), inst("p") === subP("from"))
-        .select(col("s"), col("to").as("p"), col("o")))
-      .localCheckpoint()
-
-    // rdfs2/3: domain & range typing (applied post-lift)
-    val domTypes = lifted.join(broadcast(ont.domain), lifted("p") === ont.domain("p"))
-      .select(col("s"), lit("type").as("p"), col("cls").as("o"))
-    val rngTypes = lifted.join(broadcast(ont.range), lifted("p") === ont.range("p"))
-      .select(col("o").as("s"), lit("type").as("p"), col("cls").as("o"))
-
-    val types0 = lifted.filter(col("p") === "type")
-      .unionAll(domTypes).unionAll(rngTypes)
-
-    // rdfs9: (s type c) & c ⊑* c' → (s type c')
-    val types = types0.unionAll(
-      types0.join(broadcast(subC), types0("o") === subC("from"))
-        .select(col("s"), lit("type").as("p"), col("to").as("o")))
-
-    val core = lifted.filter(col("p") =!= "type").unionAll(types)
-    val full = if (!axiomatic) core else {
-      // rdf1: every used predicate is a Property
-      val rdf1 = inst.select(col("p").as("s")).distinct()
-        .select(col("s"), lit("type").as("p"), lit("Property").as("o"))
-      // rdfs4a/4b: every subject and object is a Resource
-      val rdfs4 = inst.select(col("s"))
-        .unionAll(inst.select(col("o").as("s"))).distinct()
-        .select(col("s"), lit("type").as("p"), lit("Resource").as("o"))
-      // rdfs6: p type Property → p ⊑ p (reflexive, over rdf1's set)
-      val rdfs6 = inst.select(col("p").as("s")).distinct()
-        .select(col("s"), lit("subPropertyOf").as("p"), col("s").as("o"))
-      // rdfs8/10: c type Class → c ⊑ Resource, c ⊑ c — classes here are
-      // the type objects in play (the model types instances, not classes)
-      val classes = types0.select(col("o").as("s")).distinct()
-      val rdfs8 = classes.select(col("s"), lit("subClassOf").as("p"), lit("Resource").as("o"))
-      val rdfs10 = classes.select(col("s"), lit("subClassOf").as("p"), col("s").as("o"))
-      // rdfs12/13: container-membership properties / datatypes (empty
-      // unless the vocabulary appears)
-      val rdfs12 = types0.filter(col("o") === "ContainerMembershipProperty")
-        .select(col("s"), lit("subPropertyOf").as("p"), lit("member").as("o"))
-      val rdfs13 = types0.filter(col("o") === "Datatype")
-        .select(col("s"), lit("subClassOf").as("p"), lit("Literal").as("o"))
-      Seq(core, rdf1, rdfs4, rdfs6, rdfs8, rdfs10, rdfs12, rdfs13).reduce(_ unionAll _)
-    }
-    full.distinct()
-  }
-
-  /** A broadcast-sized (a, b) table's rows: off the plan when it is
-    * local (zero jobs), else one collect. */
+  /** A broadcast-sized (a, b) ontology table's rows: off the plan with
+    * zero jobs when it is local (driver-built Seqs, the TM
+    * extractProgram slices), else one collect. */
   private def tablePairs(df: DataFrame): Seq[(String, String)] =
     LocalTier.planRows(df).getOrElse(df.collect()).toSeq
       .map(r => (r.getString(0), r.getString(1)))
 
-  /** The stratified rule tree over collected rows — the exact driver
-    * replay of the distributed strata below: rdfs7 lift, rdfs2/3
-    * typing, rdfs9 lift, optional axiomatic rules, one distinct. */
-  private def localClosure(rows: Array[(String, String, String)],
-                           subC: Set[(String, String)], subP: Set[(String, String)],
-                           dom: Seq[(String, String)], rng: Seq[(String, String)],
-                           axiomatic: Boolean): Seq[(String, String, String)] = {
-    def multi(ps: Iterable[(String, String)]): Map[String, Seq[String]] =
-      ps.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSeq }
-    val subPm = multi(subP)
-    val subCm = multi(subC)
-    val domM = multi(dom)
-    val rngM = multi(rng)
-    val lifted = rows.toSeq ++ rows.toSeq.flatMap { case (s, p, o) =>
-      subPm.getOrElse(p, Nil).map(q => (s, q, o)) }
-    val domTypes = lifted.flatMap { case (s, p, _) =>
-      domM.getOrElse(p, Nil).map(c => (s, "type", c)) }
-    val rngTypes = lifted.flatMap { case (_, p, o) =>
-      rngM.getOrElse(p, Nil).map(c => (o, "type", c)) }
-    val types0 = lifted.filter(_._2 == "type") ++ domTypes ++ rngTypes
-    val types = types0 ++ types0.flatMap { case (s, _, c) =>
-      subCm.getOrElse(c, Nil).map(c2 => (s, "type", c2)) }
-    val core = lifted.filter(_._2 != "type") ++ types
-    val full = if (!axiomatic) core else {
-      val preds = rows.map(_._2).distinct.toSeq
-      val rdf1 = preds.map(p => (p, "type", "Property"))
-      val rdfs4 = (rows.map(_._1) ++ rows.map(_._3)).distinct.toSeq
-        .map(t => (t, "type", "Resource"))
-      val rdfs6 = preds.map(p => (p, "subPropertyOf", p))
-      val classes = types0.map(_._3).distinct
-      val rdfs8 = classes.map(c => (c, "subClassOf", "Resource"))
-      val rdfs10 = classes.map(c => (c, "subClassOf", c))
-      val rdfs12 = types0.filter(_._3 == "ContainerMembershipProperty")
-        .map(t => (t._1, "subPropertyOf", "member"))
-      val rdfs13 = types0.filter(_._3 == "Datatype")
-        .map(t => (t._1, "subClassOf", "Literal"))
-      core ++ rdf1 ++ rdfs4 ++ rdfs6 ++ rdfs8 ++ rdfs10 ++ rdfs12 ++ rdfs13
+  private[inference] def provablyEmpty(ont: Ontology): Boolean =
+    Seq(ont.subClassOf, ont.subPropertyOf, ont.domain, ont.range)
+      .forall(LocalTier.provablyEmpty)
+
+  /** The closed ontology as driver maps — all [[derive]] reads.
+    * Serializable, so the distributed pass ships it with its tasks. */
+  private final case class Rules(subC: Map[String, Seq[String]],
+                                subP: Map[String, Seq[String]],
+                                dom: Map[String, Seq[String]],
+                                rng: Map[String, Seq[String]],
+                                axiomatic: Boolean) {
+
+    /** Every triple one instance triple (s p o) entails, itself
+      * included (duplicates allowed; the caller's distinct drops them):
+      *  - rdfs7: (s q o) for each p ⊑* q;
+      *  - rdfs2/3: (s type c) for each domain c, (o type c) for each
+      *    range c, of p and of every such q;
+      *  - rdfs9: each of those types, and a lifted (s type c) itself,
+      *    lifted along c ⊑* c';
+      *  - with `axiomatic`, the RDF/RDFS axiomatic-rule entailments
+      *    (reference: rules/RuleRdf01.java, RuleRdfs04a.java and
+      *    siblings — Blazegraph ships them behind its axioms/forwardChain
+      *    options, commonly OFF because they type every term as
+      *    Resource/Property; same default here): rdf1 (p type
+      *    Property), rdfs4a/4b (s, o type Resource), rdfs6 (p ⊑ p),
+      *    and for each class c typed above BEFORE the rdfs9 lift —
+      *    the type objects in play; the model types instances, not
+      *    classes — rdfs8/10 (c ⊑ Resource, c ⊑ c), rdfs12 (a
+      *    ContainerMembershipProperty ⊑ member) and rdfs13 (a
+      *    Datatype ⊑ Literal). */
+    def derive(s: String, p: String, o: String): Iterable[(String, String, String)] = {
+      val out = scala.collection.mutable.ArrayBuffer((s, p, o))
+      val types0 = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      for (q <- p +: subP.getOrElse(p, Nil)) {
+        if (q != p) out += ((s, q, o))
+        if (q == "type") types0 += ((s, o))
+        dom.getOrElse(q, Nil).foreach(c => types0 += ((s, c)))
+        rng.getOrElse(q, Nil).foreach(c => types0 += ((o, c)))
+      }
+      for ((x, c) <- types0) {
+        out += ((x, "type", c))
+        subC.getOrElse(c, Nil).foreach(c2 => out += ((x, "type", c2)))
+      }
+      if (axiomatic) {
+        out += ((p, "type", "Property"))
+        out += ((s, "type", "Resource"))
+        out += ((o, "type", "Resource"))
+        out += ((p, "subPropertyOf", p))
+        for ((x, c) <- types0) {
+          out += ((c, "subClassOf", "Resource"))
+          out += ((c, "subClassOf", c))
+          if (c == "ContainerMembershipProperty") out += ((x, "subPropertyOf", "member"))
+          if (c == "Datatype") out += ((x, "subClassOf", "Literal"))
+        }
+      }
+      out
     }
-    full.distinct
+  }
+
+  /** The ontology read once per closure: sub-class and sub-property
+    * edges closed transitively on the driver (rdfs11 / rdfs5). */
+  private def rules(ont: Ontology, axiomatic: Boolean): Rules = {
+    def multi(ps: Iterable[(String, String)]): Map[String, Seq[String]] =
+      ps.groupMap(_._1)(_._2).map { case (k, vs) => k -> vs.toSeq.distinct }
+    def closed(df: DataFrame) = multi(LocalTier.closure(tablePairs(df)).toSeq)
+    Rules(closed(ont.subClassOf), closed(ont.subPropertyOf),
+      multi(tablePairs(ont.domain)), multi(tablePairs(ont.range)), axiomatic)
+  }
+
+  /** Full closure of instance triples (s,p,o) under the ontology. */
+  def closure(instance: DataFrame, ont: Ontology, axiomatic: Boolean = false): DataFrame = {
+    // EMPTY program (all four ontology tables provably empty, no
+    // axiomatic rules): every rule is a no-op and the closure is the
+    // instance set itself — skip the ontology reads and the derive
+    // pass. The truth-maintenance fast tiers hit this on every commit
+    // of an RDFS-empty store.
+    if (!axiomatic && provablyEmpty(ont)) return instance.distinct()
+    val spark = instance.sparkSession
+    import spark.implicits._
+    val r = rules(ont, axiomatic)
+    // The probe and the pass both read the instance, so it is
+    // materialized once; a LocalRelation input (an Owl.closure
+    // driver-tier result, a driver-built delta) already is, and its
+    // rows come off the plan with zero jobs. Below the tier limit
+    // derive runs over the probed rows on the driver and the closure
+    // lands as a LocalRelation; above it, one map-side pass and one
+    // distinct.
+    val inst =
+      if (LocalTier.planRows(instance).isDefined) instance
+      else instance.localCheckpoint()
+    LocalTier.strings(inst, LocalTier.Rdfs, 3).foreach { rows =>
+      return rows.iterator.flatMap(t => r.derive(t(0), t(1), t(2))).distinct.toSeq
+        .toDF("s", "p", "o")
+    }
+    inst.select("s", "p", "o").as[(String, String, String)]
+      .flatMap { case (s, p, o) => r.derive(s, p, o) }
+      .toDF("s", "p", "o").distinct()
   }
 
   /** Incremental assertion — the truth-maintenance fast path

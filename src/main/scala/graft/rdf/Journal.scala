@@ -196,12 +196,7 @@ final class Journal private (spark: SparkSession, dir: Path) {
       // below paid one full parquet write + delete per empty side on
       // EVERY commit — a fixed job-count tax on the commit-heavy
       // engine paths (truth maintenance, UPDATE, streaming sink).
-      val provablyEmpty = rows0.queryExecution.optimizedPlan match {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          l.data.isEmpty
-        case _ => false
-      }
-      if (provablyEmpty) return false
+      if (graft.plans.LocalTier.provablyEmpty(rows0)) return false
       val rows = if (dedup) rows0.distinct() else rows0
       val p = dir.resolve("segments").resolve(s"c$next-$suffix.parquet")
       // a crash between a previous attempt's segment write and its

@@ -75,7 +75,7 @@ object Rdr {
     // / result on the driver — ONE tiny scan job per layer instead of
     // a checkpoint + emptiness probe + anti-join round, and the final
     // distinct is a driver set, not a shuffle. A description
-    // overflowing the tier budget restarts on [[cbdLoop]].
+    // overflowing LocalTier.CbdRows restarts on [[cbdLoop]].
     var frontier = Set(node)
     val described = scala.collection.mutable.Set(node)
     val out = scala.collection.mutable.LinkedHashSet.empty[(String, String, String)]
@@ -83,7 +83,7 @@ object Rdr {
     Fixpoint.loop("rdr.cbd", maxDepth) { _ =>
       val fdf = frontier.toSeq.sorted.toDF("s")
       LocalTier.probe(src.scanForSubjects(broadcast(fdf)).select("s", "p", "o"),
-          LocalTier.Budget - out.size) match {
+          LocalTier.CbdRows - out.size) match {
         case None => overflow = true
         case Some(rows) =>
           val cand = scala.collection.mutable.Set.empty[String]

@@ -212,11 +212,7 @@ final class PersistedSearchIndex private (spark: SparkSession, dir: Path) {
     // optimization — create()'s seed batch, every append-only sync):
     // skip its checkpoint + count jobs outright (the Journal.writeSeg
     // discipline); a false negative just pays the general path
-    val removedEmpty = removedDocIds.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
+    val removedEmpty = graft.plans.LocalTier.provablyEmpty(removedDocIds)
     val removed =
       if (removedEmpty) removedDocIds.select("doc_id")
       else removedDocIds.select("doc_id").distinct().localCheckpoint()

@@ -210,31 +210,16 @@ object Compiler {
     // small-input tier ([[graft.plans.LocalTier]]): the fixpoint costs
     // ~4 driver-blocking jobs per round at any data size; below the
     // path budget the identical reachability set computes driver-side
-    // (per-source BFS over the distinct edge set = exactly the
-    // converged closure) and lands as a LocalRelation.
-    LocalTier.strings(step, LocalTier.Path, 2) match {
-      case Some(es) =>
-        val adj = es.groupBy(_(0)).map { case (k, vs) => k -> vs.toSeq.map(_(1)) }
-        val out = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-        var overflow = false
-        val it = adj.keysIterator
-        while (!overflow && it.hasNext) {
-          val from = it.next()
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          var frontier: Seq[String] = adj(from)
-          while (frontier.nonEmpty && !overflow) {
-            val fresh = frontier.filter(seen.add)
-            fresh.foreach(t => out += ((from, t)))
-            if (out.size > LocalTcMaxPairs) overflow = true
-            frontier = fresh.flatMap(adj.getOrElse(_, Nil))
-          }
-        }
-        if (!overflow) {
-          val spark = stepIn.sparkSession
-          import spark.implicits._
-          return out.toSeq.toDF("from", "to")
-        }
-      case None => ()
+    // (LocalTier.closure: one BFS per source over the distinct edge
+    // set = exactly the converged closure) and lands as a LocalRelation.
+    for (es <- LocalTier.strings(step, LocalTier.Path, 2)) {
+      val pairs = LocalTier.closure(es.toSeq.map(e => (e(0), e(1))))
+        .take(LocalTcMaxPairs + 1).toVector
+      if (pairs.size <= LocalTcMaxPairs) {
+        val spark = stepIn.sparkSession
+        import spark.implicits._
+        return pairs.toDF("from", "to")
+      }
     }
     var closure = step
     var frontier = closure
@@ -277,8 +262,7 @@ object Compiler {
     * path query with a bound endpoint (ArbitraryLengthPathNode with a
     * constant term — reference ast/ArbitraryLengthPathNode.java
     * evaluates from the bound side for exactly this reason). */
-  def reachFrom(stepIn: DataFrame, seeds: DataFrame, forward: Boolean,
-                maxIters: Int = 64): DataFrame = {
+  def reachFrom(stepIn: DataFrame, seeds: DataFrame, forward: Boolean): DataFrame = {
     val step = stepIn.select("from", "to").distinct().localCheckpoint()
     // driver tier (see transitiveClosure): state is one node set, so
     // no pair-count overflow is possible — the only bail-outs are the
@@ -287,21 +271,17 @@ object Compiler {
          seedRows <- LocalTier.probe(seeds.select("node"), LocalTier.Path)) {
       val (k, v) = if (forward) (0, 1) else (1, 0)
       val adj = es.groupBy(_(k)).map { case (n, vs) => n -> vs.toSeq.map(_(v)) }
-      val visited = scala.collection.mutable.LinkedHashSet.empty[String]
-      var frontier: Seq[String] =
-        seedRows.toSeq.map(_.getString(0)).distinct.flatMap(adj.getOrElse(_, Nil))
-          .distinct.filter(visited.add)
-      while (frontier.nonEmpty)
-        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct.filter(visited.add)
       val spark = stepIn.sparkSession
       import spark.implicits._
-      return visited.toSeq.toDF("node")
+      return LocalTier.reach(adj, seedRows.map(_.getString(0))).toSeq.toDF("node")
     }
     val (key, out) = if (forward) ("from", "to") else ("to", "from")
     var (visited, reached) = Fixpoint.materialize(step.join(seeds, step(key) === seeds("node"))
       .select(col(out).as("node")).distinct())
     var frontier = visited
-    if (reached > 0) Fixpoint.converge("path.reach", maxIters) { _ =>
+    // no cap: the visited set only grows and is bounded by the node
+    // count, so the walk ends on its own, as the driver tier's does
+    if (reached > 0) Fixpoint.converge("path.reach", Int.MaxValue) { _ =>
       val grown = step.join(frontier, step(key) === frontier("node"))
         .select(col(out).as("node")).distinct()
       val (delta, n) = Fixpoint.materialize(grown.join(visited, Seq("node"), "left_anti"))

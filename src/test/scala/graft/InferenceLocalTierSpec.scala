@@ -60,6 +60,65 @@ class InferenceLocalTierSpec extends AnyFunSuite {
     assert(localI == distI)
   }
 
+  test("Rdfs.closure, cyclic subClassOf (A ⊑ B, B ⊑ A): tiers agree, each class lifts to both") {
+    val ont = Rdfs.Ontology(
+      subClassOf = Seq(("A", "B"), ("B", "A")).toDF("sub", "sup"),
+      subPropertyOf = Seq.empty[(String, String)].toDF("sub", "sup"),
+      domain = Seq.empty[(String, String)].toDF("p", "cls"),
+      range = Seq.empty[(String, String)].toDF("p", "cls"))
+    val data = Seq(("s1", "type", "A"), ("s2", "type", "B"), ("s1", "p", "s2")).toDF("s", "p", "o")
+    for (axiomatic <- Seq(false, true)) {
+      val local = rowsOf(Rdfs.closure(data, ont, axiomatic))
+      assert(local == distributed(rowsOf(Rdfs.closure(data, ont, axiomatic))), s"axiomatic=$axiomatic")
+      assert(Set("s1", "s2").forall(x =>
+        Set("A", "B").forall(c => local.contains(Seq(x, "type", c)))), local)
+    }
+  }
+
+  // one property with two super-properties and two domains, and a
+  // subPropertyOf edge into `type`: derive's per-triple maps are
+  // multi-valued, and a lifted triple can become a type statement
+  private lazy val multiOnt = Rdfs.Ontology(
+    subClassOf = Seq(("A", "B"), ("D1", "E")).toDF("sub", "sup"),
+    subPropertyOf = Seq(("hires", "pays"), ("hires", "meets"), ("isA", "type")).toDF("sub", "sup"),
+    domain = Seq(("hires", "D1"), ("hires", "D2"), ("meets", "Person")).toDF("p", "cls"),
+    range = Seq(("pays", "Payee"), ("hires", "Datatype")).toDF("p", "cls"))
+  private lazy val multiInst = Seq(
+    ("acme", "hires", "bob"), ("bob", "isA", "A"), ("bob", "meets", "acme"),
+    ("carl", "type", "D1")).toDF("s", "p", "o")
+
+  test("Rdfs.closure, multi-valued ontology maps: tiers agree, with and without axiomatic") {
+    for (axiomatic <- Seq(false, true)) {
+      val local = rowsOf(Rdfs.closure(multiInst, multiOnt, axiomatic))
+      assert(local == distributed(rowsOf(Rdfs.closure(multiInst, multiOnt, axiomatic))),
+        s"axiomatic=$axiomatic")
+      val want = Set[Seq[Any]](
+        Seq("acme", "pays", "bob"), Seq("acme", "meets", "bob"),
+        Seq("acme", "type", "D1"), Seq("acme", "type", "D2"), Seq("acme", "type", "E"),
+        Seq("acme", "type", "Person"), Seq("bob", "type", "Payee"),
+        Seq("bob", "type", "Datatype"), Seq("bob", "type", "A"), Seq("bob", "type", "B"),
+        Seq("carl", "type", "E"))
+      assert(want.subsetOf(local), want -- local)
+      assert(local.contains(Seq("bob", "subClassOf", "Literal")) == axiomatic)
+      assert(local.contains(Seq("Payee", "subClassOf", "Payee")) == axiomatic)
+    }
+  }
+
+  test("Rdfs.closure forced distributed: exact job count, AQE off") {
+    val recorder = Harness.recorder(spark)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // a driver-built instance, and one behind a shuffle (not
+    // LocalRelation-shaped, so the closure materializes it first)
+    val counts = try distributed {
+      for (inst <- Seq(multiInst, multiInst.repartition(2)); axiomatic <- Seq(false, true))
+      yield {
+        Rdfs.closure(inst, multiOnt, axiomatic).collect() // warm
+        recorder.record(Rdfs.closure(inst, multiOnt, axiomatic).collect())._2.size
+      }
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    assert(counts == Seq(1, 1, 2, 2), counts)
+  }
+
   private lazy val owlOnt = Owl.Ontology(
     transitive = Seq("partOf", "ancestor"),
     inverses = Seq(("parentOf", "childOf")),

@@ -44,8 +44,9 @@ class LocalTierSpec extends AnyFunSuite {
 
   test("budget: one default, overridden per family by its conf key") {
     assert(LocalTier.budget(spark, LocalTier.Gas) == LocalTier.Budget)
+    assert(LocalTier.budget(spark, LocalTier.Rdfs) == LocalTier.Rdfs.limit)
     distributed {
-      assert(Seq(LocalTier.Gas, LocalTier.Inference, LocalTier.Path)
+      assert(Seq(LocalTier.Gas, LocalTier.Inference, LocalTier.Rdfs, LocalTier.Path)
         .forall(LocalTier.budget(spark, _) == 0))
     }
     assert(LocalTier.budget(spark, LocalTier.Path) == LocalTier.Budget)

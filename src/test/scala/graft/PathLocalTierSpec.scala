@@ -39,4 +39,12 @@ class PathLocalTierSpec extends AnyFunSuite {
       assert(local == dist, s"fwd=$fwd seeds=$seedSet")
     }
   }
+
+  test("reachFrom over a 70-edge chain: both tiers walk past 64 steps") {
+    val chain = (0 until 70).map(i => (s"v$i", s"v${i + 1}")).toDF("from", "to")
+    val seeds = Seq("v0").toDF("node")
+    val want = (1 to 70).map(i => Seq(s"v$i")).toSet
+    assert(rowsOf(Compiler.reachFrom(chain, seeds, forward = true)) == want)
+    assert(distributed(rowsOf(Compiler.reachFrom(chain, seeds, forward = true))) == want)
+  }
 }
