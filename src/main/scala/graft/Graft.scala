@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.rdf.{QuadStore, Serializer}
-import graft.sparql.{Algebra, ClearAll, ClearSolutions, Compiler, CreateSolutions, DeleteFromSolutions, DropSolutions, InsertIntoSolutions, Parser, ProtocolDataset, RdfLiteral, SolutionsOp, TriplePattern, TripleSource, Update, UpdateOp}
+import graft.sparql.{Algebra, ClearAll, ClearSolutions, Compiler, CreateSolutions, DeleteFromSolutions, DropSolutions, InsertIntoSolutions, Parser, ProtocolDataset, RdfLiteral, TriplePattern, TripleSource, Update, UpdateOp}
 import org.apache.spark.sql.functions.col
 
 /** The migrating user's single entry point — the analog of the
@@ -156,15 +156,21 @@ final case class Graft(spark: SparkSession, store: QuadStore,
     copy(store = newStore, ospHash = None, textIndex = None)
 
   /** Apply ALREADY-PARSED (possibly transformed) update ops — the
-    * protocol-dataset seam ([[sparql.ProtocolDataset.usingIn]]). The
-    * store ops batch through [[Update.applyQuadsSeq]] as before;
-    * SOLUTIONS ops act on the handle's [[solutionSets]] in request
-    * order (they interleave with store ops — an `INSERT INTO %s
-    * SELECT` sees the store state its position implies). */
-  def updateOps(ops: Seq[UpdateOp]): Graft =
-    if (solutionSets.isEmpty && !ops.exists(_.isInstanceOf[SolutionsOp]))
-      withStore(Update.applyQuadsSeq(store, ops, defaultGraph))
-    else ops.foldLeft(this)((g, op) => g.applyOne(op))
+    * protocol-dataset seam ([[sparql.ProtocolDataset.usingIn]]), in
+    * request order: store ops through [[Update.applyQuads]] (the
+    * handle's store records their change), SOLUTIONS ops on the
+    * handle's [[solutionSets]] (an `INSERT INTO %s SELECT` sees the
+    * store state its position implies). */
+  def updateOps(ops: Seq[UpdateOp]): Graft = ops.foldLeft(this)(_ applyOne _)
+
+  /** Apply a staged write sequence in arrival order — the one fold of a
+    * multi-request transaction: `Left(ops)` is a parsed update request,
+    * `Right(quads)` an insert-only batch (a REST data POST). */
+  def updateItems(items: Seq[Either[Seq[UpdateOp], DataFrame]]): Graft =
+    items.foldLeft(this) {
+      case (h, Left(ops)) => h.updateOps(ops)
+      case (h, Right(q))  => h.withStore(h.store.insertQuads(q))
+    }
 
   private def applyOne(op: UpdateOp): Graft = op match {
     case CreateSolutions(n, silent) =>
@@ -217,10 +223,9 @@ final case class Graft(spark: SparkSession, store: QuadStore,
       }
     case ClearAll =>
       // ALL = graphs AND solution sets (GraphRefAll's ALL arm sets both)
-      withStore(Update.applyQuadsSeq(store, Seq(ClearAll), defaultGraph))
-        .copy(solutionSets = Map.empty)
+      withStore(store.clear()).copy(solutionSets = Map.empty)
     case other =>
-      withStore(Update.applyQuadsSeq(store, Seq(other), defaultGraph))
+      withStore(Update.applyQuads(store, other, defaultGraph))
   }
 
   /** Drop this handle's materialized union-default-graph view from

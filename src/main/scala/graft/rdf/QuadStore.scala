@@ -1,7 +1,8 @@
 package graft.rdf
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Immutable quad-store handle with SPARQL 1.1 graph-management
   * operations (reference: ast/CreateGraph.java:48 and siblings
@@ -34,13 +35,31 @@ import org.apache.spark.sql.functions._
   * holding quads of UNKNOWN provenance must enter through
   * [[QuadStore.ofRaw]], which repairs duplicates once at the boundary
   * instead of every op paying a defensive distinct.
+  *
+  * THE CARRIED CHANGE: every op also records the `(adds, dels)` quads
+  * it applied, and [[delta]] folds them into the change since the
+  * handle's base (the state it was constructed or [[rebased]] at) —
+  * what a journal commit writes (reference: the assert/retract buffers
+  * AST2BOpUpdate stages and SailConnection.commit seals). Steps
+  * compose under the cancellation law `A' = (A ∖ d) ∪ a`,
+  * `D' = D ∪ d`, so `base − D ∪ A`, resolved like a journal commit
+  * (dels first, adds outrank them), is the handle's state: a quad one
+  * op inserts and a later op deletes leaves the change; a quad deleted
+  * then re-inserted rides the add. Ground data is recorded verbatim
+  * (re-inserting a present quad or tombstoning an absent one is a
+  * no-op under that resolution), so a small INSERT DATA's delta plans
+  * no store scan; graph-management steps are graph-sized, since that
+  * IS the change. Steps are thunks: no delta DataFrame is built (and
+  * analyzed) unless [[delta]] is read.
   */
 final class QuadStore private (
     base: DataFrame,
     overrides: Map[String, DataFrame], // g -> that graph's (s,p,o) set
-    dropped: Set[String]) {
+    dropped: Set[String],
+    changes: Vector[QuadStore.Change]) {
+  import QuadStore.{Change, Cols}
 
-  private def cols = Seq("s", "p", "o", "g")
+  private[graft] def sparkSession = base.sparkSession
 
   /** Graphs whose base rows are superseded (dropped or overridden). */
   private def masked: Set[String] = dropped ++ overrides.keySet
@@ -53,9 +72,26 @@ final class QuadStore private (
       if (masked.isEmpty) base
       else base.filter(!col("g").isin(masked.toSeq.sorted: _*))
     overrides.toSeq.sortBy(_._1).foldLeft(kept) { case (acc, (g, t)) =>
-      acc.unionAll(t.select(col("s"), col("p"), col("o"), lit(g).as("g")))
+      acc.unionAll(tagged(g, t))
     }
   }
+
+  /** The change since this handle's base as `(adds, dels)` quads, under
+    * the cancellation law (class doc). Built on first read. */
+  lazy val delta: (DataFrame, DataFrame) = {
+    def union(x: Option[DataFrame], y: Option[DataFrame]) = (x ++ y).reduceOption(_ unionAll _)
+    val (a, d) = changes.foldLeft((Option.empty[DataFrame], Option.empty[DataFrame])) {
+      case ((accA, accD), c) =>
+        val (ca, cd) = (c.adds.map(_()), c.dels.map(_()))
+        val kept = accA.map(x => cd.fold(x)(x.join(_, Cols, "left_anti")))
+        (union(kept, ca), union(accD, cd))
+    }
+    val none = sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), QuadStore.Schema)
+    (a.getOrElse(none), d.getOrElse(none))
+  }
+
+  /** The same state with an empty change: the handle's base moves here. */
+  def rebased: QuadStore = new QuadStore(base, overrides, dropped, Vector.empty)
 
   def graphs: DataFrame = quads.select("g").distinct()
 
@@ -68,6 +104,15 @@ final class QuadStore private (
       case None => base.filter(col("g") === lit(g)).select("s", "p", "o")
     }
 
+  private def tagged(g: String, triples: DataFrame): DataFrame =
+    triples.select(col("s"), col("p"), col("o"), lit(g).as("g"))
+
+  /** The next handle: this one's state edited, `c` appended to its change. */
+  private def next(c: Change, b: DataFrame = base,
+                   ov: Map[String, DataFrame] = overrides,
+                   dr: Set[String] = dropped): QuadStore =
+    new QuadStore(b, ov, dr, changes :+ c)
+
   /** CREATE GRAPH — graphs exist implicitly when non-empty (SPARQL
     * allows empty-graph creation; a lazy view has nothing to persist,
     * so CREATE is the identity, matching CREATE SILENT semantics). */
@@ -75,7 +120,12 @@ final class QuadStore private (
 
   /** DROP GRAPH g. */
   def dropGraph(g: String): QuadStore =
-    new QuadStore(base, overrides - g, dropped + g)
+    next(Change.dels(tagged(g, graph(g))), ov = overrides - g, dr = dropped + g)
+
+  /** DROP GRAPHS — every graph but `keep` (the default graph) goes. */
+  def dropGraphs(keep: String): QuadStore =
+    next(Change.dels(quads.filter(col("g") =!= lit(keep))),
+      b = base.filter(col("g") === lit(keep)), ov = overrides.filter(_._1 == keep))
 
   /** ADD from TO to — union `from`'s triples into `to` (set semantics),
     * `from` unchanged; ADD g TO g is the identity on the row set. The
@@ -92,7 +142,7 @@ final class QuadStore private (
       // branch referenced once (linear chains; see [[insertData]])
       val merged = graph(to).join(src, Seq("s", "p", "o"), "left_anti")
         .unionAll(src)
-      new QuadStore(base, overrides + (to -> merged), dropped)
+      next(Change.adds(tagged(to, graph(from))), ov = overrides + (to -> merged))
     }
 
   /** COPY from TO to — `to` is replaced by `from`'s triples. The
@@ -103,12 +153,16 @@ final class QuadStore private (
     * drop-then-recopy-from-the-dropped-graph would DELETE it. */
   def copyGraph(from: String, to: String): QuadStore =
     if (from == to) this
-    else new QuadStore(base, overrides + (to -> graph(from)), dropped)
+    else next(Change.both(tagged(to, graph(from)), tagged(to, graph(to))),
+      ov = overrides + (to -> graph(from)))
 
   /** MOVE from TO to — COPY then DROP the source; MOVE g TO g is a
     * no-op (SPARQL 1.1 Update §3.2.4). */
   def moveGraph(from: String, to: String): QuadStore =
-    if (from == to) this else copyGraph(from, to).dropGraph(from)
+    if (from == to) this
+    else next(
+      Change.both(tagged(to, graph(from)), tagged(to, graph(to)).unionAll(tagged(from, graph(from)))),
+      ov = overrides + (to -> graph(from)) - from, dr = dropped + from)
 
   /** INSERT DATA into a named graph (set semantics; dedup scoped to
     * the target graph like [[addGraph]]). */
@@ -116,7 +170,7 @@ final class QuadStore private (
     val x = triples.select("s", "p", "o").distinct()
     // (g ∖ X) ∪ X — the graph branch referenced once (linear chains)
     val merged = graph(g).join(x, Seq("s", "p", "o"), "left_anti").unionAll(x)
-    new QuadStore(base, overrides + (g -> merged), dropped)
+    next(Change.adds(tagged(g, triples)), ov = overrides + (g -> merged))
   }
 
   /** INSERT quads that carry their OWN graph tags (the N-Quads LOAD
@@ -127,35 +181,52 @@ final class QuadStore private (
     * (store ∖ X) ∪ X (at production scale only the touched graphs'
     * partitions participate). */
   def insertQuads(incoming0: DataFrame): QuadStore = {
-    val incoming = incoming0.select(cols.map(col): _*).distinct()
-    QuadStore(quads.join(incoming, cols, "left_anti").unionAll(incoming))
+    val incoming = incoming0.select(Cols.map(col): _*).distinct()
+    next(Change.adds(incoming0.select(Cols.map(col): _*)),
+      b = quads.join(incoming, Cols, "left_anti").unionAll(incoming),
+      ov = Map.empty, dr = Set.empty)
   }
 
   /** DELETE DATA from a named graph. */
   def deleteData(g: String, triples: DataFrame): QuadStore = {
     val doomed = triples.select("s", "p", "o")
-    new QuadStore(base,
-      overrides + (g -> graph(g).join(doomed, Seq("s", "p", "o"), "left_anti")),
-      dropped)
+    next(Change.dels(tagged(g, doomed)),
+      ov = overrides + (g -> graph(g).join(doomed, Seq("s", "p", "o"), "left_anti")))
   }
 
   /** DELETE quads that carry their OWN graph tags (the quad-template
     * DELETE { GRAPH g { … } } WHERE path): one anti-join keyed on all
     * four columns — graph tags are data, so this flattens like
     * [[insertQuads]]. */
-  def deleteQuads(doomed: DataFrame): QuadStore =
-    QuadStore(quads.join(doomed.select(cols.map(col): _*).distinct(),
-      cols, "left_anti"))
+  def deleteQuads(doomed0: DataFrame): QuadStore = {
+    val doomed = doomed0.select(Cols.map(col): _*)
+    next(Change.dels(doomed), b = quads.join(doomed, Cols, "left_anti"),
+      ov = Map.empty, dr = Set.empty)
+  }
 
   /** CLEAR ALL. */
-  def clear(): QuadStore = QuadStore(base.limit(0))
+  def clear(): QuadStore =
+    next(Change.dels(quads), b = base.limit(0), ov = Map.empty, dr = Set.empty)
 }
 
 object QuadStore {
+  private val Cols = Seq("s", "p", "o", "g")
+  private val Schema = StructType(Cols.map(StructField(_, StringType)))
+
+  /** One op's recorded step: the quads it added and deleted, each built
+    * only when [[QuadStore.delta]] is read. */
+  private[rdf] final case class Change(adds: Option[() => DataFrame],
+                                  dels: Option[() => DataFrame])
+  private[rdf] object Change {
+    def both(a: => DataFrame, d: => DataFrame): Change = Change(Some(() => a), Some(() => d))
+    def adds(a: => DataFrame): Change = Change(Some(() => a), None)
+    def dels(d: => DataFrame): Change = Change(None, Some(() => d))
+  }
+
   /** Handle over a duplicate-free quad relation (the virtual TPC-H
-    * views are; journal snapshots are). */
+    * views are; journal snapshots are), with an empty change. */
   def apply(quads: DataFrame): QuadStore =
-    new QuadStore(quads, Map.empty, Set.empty)
+    new QuadStore(quads, Map.empty, Set.empty, Vector.empty)
 
   /** Boundary constructor for quads of unknown provenance: dedups ONCE
     * so the set invariant holds and every subsequent op stays

@@ -38,14 +38,15 @@ final class Repository private (spark: SparkSession, val journal: Journal) {
     journal.ospHashAt(v).fold(g)(p => g.copy(ospHash = Some(p.toString)))
   }
 
-  /** THE durable write path: apply a ';'-separated SPARQL UPDATE
-    * request to the head and seal its mutation delta as the next
-    * commit point. The committed (adds, dels) are the ops' OWN
-    * mutation sets ([[graft.sparql.Update.quadsDeltaSeq]]) — a small
-    * INSERT/DELETE DATA plans zero store scans (plan-asserted in
-    * RepositorySpec), so commit cost scales with the change, not the
-    * store. The reference's SailConnection.commit stages the same
-    * assert/retract buffers into its journal's commit point. */
+  /** Apply a ';'-separated SPARQL UPDATE request to the head and seal
+    * its change as the next commit point. The ops run through the same
+    * evaluator as every other write ([[graft.sparql.Update.applyQuads]]);
+    * the commit is the change the folded store carries
+    * ([[QuadStore.delta]]) — a small INSERT/DELETE DATA plans zero store
+    * scans (plan-asserted in RepositorySpec), so commit cost scales
+    * with the change, not the store. The reference's
+    * SailConnection.commit stages the same assert/retract buffers into
+    * its journal's commit point. */
   def update(request: String): Long =
     updateOps(graft.sparql.Parser.parseUpdates(request))
 
@@ -53,8 +54,8 @@ final class Repository private (spark: SparkSession, val journal: Journal) {
     * (using-graph-uri dataset injection) rewrite through. */
   def updateOps(ops: Seq[graft.sparql.UpdateOp]): Long = {
     val head = connection()
-    val (adds, dels) = graft.sparql.Update.quadsDeltaSeq(
-      head.store, ops, head.defaultGraph)
+    val (adds, dels) =
+      graft.sparql.Update.applyQuadsSeq(head.store, ops, head.defaultGraph).delta
     journal.commit(adds, dels)
   }
 

@@ -9,6 +9,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentHashMap, Executors}
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import scala.jdk.CollectionConverters._
 
 /** SPARQL 1.1 Protocol endpoint + REST management plane over
@@ -71,13 +72,17 @@ import scala.jdk.CollectionConverters._
   *     `/namespace/kb/sparql`.
   *
   * DURABILITY: constructed over a journal directory
-  * ([[SparqlServer.durable]]), every namespace is a [[Repository]] —
-  * updates commit their op-shaped delta through the journal
-  * ([[Repository.update]]), ingest lands as insert-only commits, and a
-  * server restart reattaches every namespace from disk (the
-  * reference's namespaces are journal-backed the same way). The
-  * in-memory constructor keeps the old ephemeral behavior for tests
-  * and scratch serving.
+  * ([[SparqlServer.durable]]), every namespace is a [[Repository]] and
+  * a server restart reattaches every namespace from disk (the
+  * reference's namespaces are journal-backed the same way). Every
+  * write — update, ingest, remove, GSP, staged tx — runs the same
+  * evaluator as an in-memory handle: it edits the head's
+  * [[graft.rdf.QuadStore]], which carries the (adds, dels) it applied,
+  * and the namespace's one `publish` seam commits that delta through
+  * the journal (a truth-maintenance namespace commits it through its
+  * maintained closure). The in-memory constructor serves ephemeral
+  * namespaces for tests and scratch serving: its `publish` swaps the
+  * handle.
   *
   * [[graft.sparql.RemoteService]] speaks this protocol back, so two
   * graft clusters federate over SERVICE with no extra glue, and
@@ -97,43 +102,27 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
 
   // ---- tenants ----------------------------------------------------
 
-  /** One namespace's store operations — memory- or journal-backed. */
+  /** One namespace's store operations — memory- or journal-backed.
+    *
+    * ONE WRITE PATH: each write below is written once. It edits the
+    * head handle's [[QuadStore]] — which records the `(adds, dels)` it
+    * applied ([[QuadStore.delta]]) — and hands the edited handle to the
+    * tenant's [[publish]], the one seam where a namespace's change
+    * becomes visible: the in-memory tenant swaps its reference, the
+    * durable tenant commits the delta to its journal, the
+    * truth-maintenance tenant commits it through the maintained
+    * closure. Writes serialize per namespace (the reference's
+    * single-writer journal lock): two concurrent REST updates queue
+    * instead of one failing loud on the journal's version race. */
   private sealed trait Tenant {
     def current: Graft
-    def update(text: String): Unit =
-      updateOps(graft.sparql.Parser.parseUpdates(text))
-    /** Apply already-parsed update ops — the protocol dataset knobs
-      * (using-graph-uri) rewrite the ops before application. */
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit
-    /** Insert parsed quads; returns the statement count ingested. */
-    def ingest(quads: DataFrame): Long
-    /** Remove every graph's occurrence of the (s,p,o) rows; returns
-      * the quad count removed. */
-    def remove(spo: DataFrame): Long
-    /** Remove exactly these (s,p,o,g) quads — the DELETE-by-access-
-      * path arm (graph-scoped, unlike [[remove]]'s every-graph
-      * contract); returns the quad count removed. */
-    def removeQuads(quads: DataFrame): Long
-    def removeQuadsSuppressed(quads: DataFrame): Long = removeQuads(quads)
-    // `suppressTruthMaintenance=true` variants (the reference's update
-    // servlets all accept the knob — QueryServlet.java:132,
-    // DeleteServlet.java:128): identical to the plain ops on non-TM
-    // tenants, verbatim commits (no closure maintenance) on TmTenant
-    def updateOpsSuppressed(ops: Seq[graft.sparql.UpdateOp]): Unit = updateOps(ops)
-    def ingestSuppressed(quads: DataFrame): Long = ingest(quads)
-    def removeSuppressed(spo: DataFrame): Long = remove(spo)
     /** The ASSERTED-statements view — `includeInferred=false`
       * (QueryServlet.java:140, default true; honored by query/
       * HASSTMT/GETSTMTS): identical to [[current]] on non-TM tenants,
-      * the base (un-entailed) store on a truth-maintenance tenant. */
+      * the base (un-entailed) store on a truth-maintenance tenant.
+      * Writes that act on stored statements edit this view. */
     def asserted: Graft = current
     def assertedAt(version: Long): Graft = at(version)
-    /** ATOMIC remove+insert — the reference's UPDATE-with-query /
-      * UPDATE-with-body servlets (UpdateServlet.java:90,817): remove
-      * every graph's occurrence of `removeSpo`, insert `adds`, as ONE
-      * operation; returns removed + inserted. */
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long
     /** Read-only connection against a historical commit point — the
       * protocol's `?timestamp=` knob (TxServlet's read-only tx
       * analog); durable namespaces only. */
@@ -145,10 +134,135 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       * around query compilation so `SERVICE bd:history` serves THIS
       * namespace's commit log. */
     def journal: Option[graft.rdf.Journal] = None
+    /** Metadata-only ESTCARD: Some(n) when the count is answerable
+      * from parquet footers (durable + fully compacted head), None →
+      * caller falls back to an exact count job. */
+    def metadataCount(graph: Option[String]): Option[Long] = None
+    /** Online backup: snapshot the namespace's journal to a
+      * server-visible directory while holding the write lock
+      * (quiesced); durable namespaces only. Returns the backed-up
+      * version. */
+    def backup(target: Path): Long =
+      sys.error("backup needs a journal-backed namespace")
+    def destroy(): Unit
+    /** Drop the cached head handle's materialized merge view. */
+    def release(): Unit
+
+    /** Make `next` — a handle derived from [[current]] or [[asserted]]
+      * whose store carries the write's change — this namespace's
+      * state; returns the version published (-1 in memory).
+      * `suppress`: the request's `suppressTruthMaintenance=true`
+      * (QueryServlet.java:132, DeleteServlet.java:128) — a verbatim
+      * commit on a truth-maintenance tenant, moot elsewhere. */
+    protected def publish(next: Graft, suppress: Boolean): Long
+
+    /** TRIPLES mode (truth maintenance — the reference's TM requires a
+      * triples-mode KB): statements live in the default graph, a
+      * remove names the statements themselves (truth maintenance
+      * un-derives what they supported), graph-scoped Graph Store ops
+      * on named graphs are refused, and an insert's modified count
+      * takes only statements not already asserted. */
+    protected def triplesMode: Boolean = false
+
+    /** A staged tx's whole-store check before it applies: `next` is
+      * the tx folded onto the head, `staged` its items; throws
+      * [[TxConflict]] exactly when a commit now must not land. */
+    protected def validate(next: => Graft, staged: => Seq[Staged],
+                           expectVersion: Long): Unit = ()
+
+    private val SPO = Seq("s", "p", "o")
+
+    /** Incoming statements in the form this namespace stores them. */
+    private def stored(df: DataFrame): DataFrame =
+      if (triplesMode) df.select(SPO.map(col): _*).distinct().withColumn("g", lit("g:default"))
+      else df.select(col("s"), col("p"), col("o"), col("g"))
+
+    private def graphScoped(g: String): Unit =
+      if (triplesMode && g != "g:default") sys.error(
+        "truth-maintenance namespaces are triples-mode (the reference's " +
+          "TM requires a triples-mode KB) — graph-scoped Graph Store " +
+          "operations are not supported")
+
+    private def edit(h: Graft)(f: QuadStore => QuadStore): Graft = h.withStore(f(h.store))
+
+    def update(text: String): Unit = updateOps(Parser.parseUpdates(text))
+
+    /** Apply already-parsed update ops — the protocol dataset knobs
+      * (using-graph-uri) rewrite the ops before application. Their
+      * WHEREs read [[current]] (the entailed store on a TM tenant). */
+    def updateOps(ops: Seq[graft.sparql.UpdateOp], suppress: Boolean = false): Unit =
+      synchronized { publish(current.updateOps(ops), suppress); () }
+
+    /** Insert parsed quads; returns the statement count ingested. */
+    def ingest(quads: DataFrame, suppress: Boolean = false): Long = synchronized {
+      val q = stored(quads).localCheckpoint()
+      val h = asserted
+      publish(edit(h)(_.insertQuads(q)), suppress)
+      q.count()
+    }
+
+    /** Remove every graph's occurrence of the (s,p,o) rows; returns
+      * the quad count removed. */
+    def remove(spo: DataFrame, suppress: Boolean = false): Long =
+      removeBy(SPO, spo, suppress)
+
+    /** Remove exactly these (s,p,o,g) quads — the DELETE-by-access-
+      * path arm (graph-scoped, unlike [[remove]]'s every-graph
+      * contract); returns the quad count removed. */
+    def removeQuads(quads: DataFrame, suppress: Boolean = false): Long =
+      removeBy(if (triplesMode) SPO else SPO :+ "g", quads, suppress)
+
+    private def removeBy(keys: Seq[String], rows: DataFrame, suppress: Boolean): Long =
+      synchronized { val (doomed, _) = replace(keys, rows, None, suppress); doomed.count() }
+
+    /** ATOMIC remove+insert — the reference's UPDATE-with-query /
+      * UPDATE-with-body servlets (UpdateServlet.java:90,817): remove
+      * every graph's occurrence of `removeSpo`, insert `adds`, as ONE
+      * operation; returns removed + inserted. */
+    def updateWithBody(removeSpo: DataFrame, adds: DataFrame, suppress: Boolean): Long =
+      synchronized {
+        val (doomed, added) = replace(SPO, removeSpo, Some(adds), suppress)
+        doomed.count() + added.fold(0L)(_.count())
+      }
+
+    /** The asserted rows matching `rows` on `keys` leave, `adds` (if
+      * any) arrive, as one published change. Returns the removed rows
+      * and the rows counted as inserted. */
+    private def replace(keys: Seq[String], rows: DataFrame, adds: Option[DataFrame],
+                        suppress: Boolean): (DataFrame, Option[DataFrame]) = {
+      val h = asserted
+      val named = if (triplesMode) Some(stored(rows).localCheckpoint()) else None
+      val a = adds.map(stored(_).localCheckpoint())
+      val doomed = h.store.quads
+        .join(named.getOrElse(rows).select(keys.map(col): _*), keys, "left_semi")
+        .localCheckpoint()
+      // triples mode counts only statements not already asserted (a
+      // re-insert counts 0)
+      val added =
+        if (triplesMode) a.map(_.join(h.store.quads, SPO :+ "g", "left_anti").localCheckpoint())
+        else a
+      publish(edit(h) { st =>
+        val st1 = st.deleteQuads(named.getOrElse(doomed))
+        a.fold(st1)(st1.insertQuads)
+      }, suppress)
+      (doomed, added)
+    }
+
     /** Graph Store Protocol PUT: replace graph `g` with `quads`. */
-    def putGraph(g: String, quads: DataFrame): Unit
+    def putGraph(g: String, quads: DataFrame): Unit = synchronized {
+      graphScoped(g)
+      val q = stored(quads).localCheckpoint()
+      publish(edit(asserted)(_.dropGraph(g).insertQuads(q)), suppress = false)
+      ()
+    }
+
     /** Graph Store Protocol DELETE: drop graph `g`. */
-    def dropGraph(g: String): Unit
+    def dropGraph(g: String): Unit = synchronized {
+      graphScoped(g)
+      publish(edit(asserted)(_.dropGraph(g)), suppress = false)
+      ()
+    }
+
     /** Mass-load server-visible files/globs as ONE commit (the
       * DataLoaderServlet analog); returns (version, statements). */
     def bulkLoad(paths: Seq[String], graph: Option[String],
@@ -158,114 +272,87 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         .reduce(_ unionAll _)
       (-1L, ingest(quads))
     }
-    /** Metadata-only ESTCARD: Some(n) when the count is answerable
-      * from parquet footers (durable + fully compacted head), None →
-      * caller falls back to an exact count job. */
-    def metadataCount(graph: Option[String]): Option[Long] = None
+
+    /** Parse a staged tx's update texts (a malformed later item fails
+      * before anything commits); a triples-mode tenant also
+      * materializes its data items, since its items commit one by
+      * one. */
+    private def stage(items: Seq[Either[String, DataFrame]]): Seq[Staged] = items.map {
+      case Left(text) => Left(Parser.parseUpdates(text))
+      case Right(df)  => Right(if (triplesMode) stored(df).localCheckpoint() else df)
+    }
+
     /** Atomically apply a staged tx's items (update texts + parsed
       * quad batches) as one commit; `expectVersion` is the journal
       * version at tx creation — a head that moved since is a CONFLICT
-      * (first-committer-wins, whole-store granularity). */
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long
+      * (first-committer-wins). A triples-mode tenant commits each item
+      * through the maintained closure in arrival order (each
+      * mutation's entailment delta depends on the prior closed state),
+      * so its transactions are not failure-atomic past staging. */
+    def commitStaged(items: Seq[Either[String, DataFrame]], expectVersion: Long): Long =
+      synchronized {
+        if (triplesMode) {
+          validate(current, Nil, expectVersion)
+          stage(items).foreach(i => publish(current.updateItems(Seq(i)), suppress = false))
+          version
+        } else {
+          val staged = stage(items)
+          val next = current.updateItems(staged)
+          validate(next, staged, expectVersion)
+          publish(next, suppress = false)
+        }
+      }
+
     /** PREPARE-TX (TxServlet.java:84): run the SAME validation
       * [[commitStaged]] applies, committing nothing — throws
       * TxConflict exactly when a commit now would. Advisory (no lock
       * is taken between prepare and commit). */
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit
-    /** Online backup: snapshot the namespace's journal to a
-      * server-visible directory while holding the write lock
-      * (quiesced); durable namespaces only. Returns the backed-up
-      * version. */
-    def backup(target: Path): Long =
-      sys.error("backup needs a journal-backed namespace")
-    def destroy(): Unit
+    def prepareStaged(items: Seq[Either[String, DataFrame]], expectVersion: Long): Unit =
+      synchronized {
+        lazy val staged = stage(items)
+        validate(current.updateItems(staged), staged, expectVersion)
+      }
   }
+
+  /** One staged tx item: a parsed update request or a quad batch. */
+  private type Staged = Either[Seq[graft.sparql.UpdateOp], DataFrame]
 
   private def emptyQuads: DataFrame =
     Seq.empty[(String, String, String, String)].toDF("s", "p", "o", "g")
 
   private final class MemTenant(ref: AtomicReference[Graft]) extends Tenant {
     def current: Graft = ref.get()
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit = {
-      ref.updateAndGet(_.updateOps(ops)); ()
+    // the handle's change is published by the swap itself: the next
+    // write starts a fresh change from here
+    protected def publish(next: Graft, suppress: Boolean): Long = {
+      ref.set(next.withStore(next.store.rebased)); -1L
     }
-    // every mutation routes through withStore: a handle seeded from a
-    // twin/index-bearing connection must not keep serving the
-    // committed-version accelerators over mutated in-memory state
-    def ingest(quads: DataFrame): Long = {
-      val q = quads.localCheckpoint()
-      ref.updateAndGet(g => g.withStore(g.store.insertQuads(q)))
-      q.count()
-    }
-    def remove(spo: DataFrame): Long = {
-      val keys = Seq("s", "p", "o")
-      val doomed = ref.get().store.quads
-        .join(spo.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-          keys, "left_semi")
-        .localCheckpoint()
-      ref.updateAndGet(g => g.withStore(
-        QuadStore(g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))))
-      doomed.count()
-    }
-    def removeQuads(quads: DataFrame): Long = {
-      val doomed = ref.get().store.quads
-        .join(quads.select("s", "p", "o", "g").distinct(),
-          Seq("s", "p", "o", "g"), "left_semi")
-        .localCheckpoint()
-      ref.updateAndGet(g => g.withStore(
-        QuadStore(g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))))
-      doomed.count()
-    }
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = {
-      val keys = Seq("s", "p", "o")
-      val doomed = ref.get().store.quads
-        .join(removeSpo.select(keys.map(org.apache.spark.sql.functions.col): _*)
-          .distinct(), keys, "left_semi")
-        .localCheckpoint()
-      val a = adds.localCheckpoint()
-      ref.updateAndGet(g => g.withStore(QuadStore(
-        g.store.quads.join(doomed, Seq("s", "p", "o", "g"), "left_anti"))
-        .insertQuads(a)))
-      doomed.count() + a.count()
-    }
-    def putGraph(g: String, quads: DataFrame): Unit = {
-      val q = quads.localCheckpoint()
-      ref.updateAndGet(h => h.withStore(h.store.dropGraph(g).insertQuads(q)))
-      ()
-    }
-    def dropGraph(g: String): Unit = {
-      ref.updateAndGet(h => h.withStore(h.store.dropGraph(g)))
-      ()
-    }
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = {
-      // in-memory tenants have no commit log to conflict against; the
-      // updateAndGet applies the whole staged sequence atomically
-      ref.updateAndGet(g0 => items.foldLeft(g0) {
-        case (h, Left(text)) => h.update(text)
-        case (h, Right(df))  => h.withStore(h.store.insertQuads(df))
-      })
-      -1L
-    }
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit = ()
+    def release(): Unit = ref.get().release()
     def destroy(): Unit = ()
   }
 
-  /** Journal-backed namespace: reads serve a per-version cached
-    * connection (so the union-default-graph merge view materializes
-    * once per COMMIT, not once per request), writes commit through the
-    * repository's delta path. Every `autoCompactEvery` commits the
-    * journal compacts itself — a server-managed store must keep its
-    * own snapshot-resolution cost bounded (the reference's journal
-    * likewise compacts on its own overflow schedule), or a year of
-    * small REST updates degrades every read into an
-    * O(delta-count)-input resolution. */
-  private final class DurableTenant(repo: Repository, dir: Path) extends Tenant {
-    @volatile private var cached: (Long, Graft) = (-1L, null)
+  /** A journal-backed namespace's attach state, written once for the
+    * durable and the truth-maintenance tenants. Reads serve a
+    * per-version cached connection (so the union-default-graph merge
+    * view materializes once per COMMIT, not once per request). Every
+    * `autoCompactEvery` commits the store compacts itself — a
+    * server-managed store must keep its own snapshot-resolution cost
+    * bounded (the reference's journal likewise compacts on its own
+    * overflow schedule), or a year of small REST updates degrades
+    * every read into an O(delta-count)-input resolution.
+    *
+    * `indexJournal` is the journal the namespace's persisted literal
+    * text index follows (what queries see); `compactionJournal` the
+    * one whose uncompacted commits count toward compaction. */
+  private abstract class JournalTenant(dir: Path, indexJournal: graft.rdf.Journal,
+                                       compactionJournal: graft.rdf.Journal) extends Tenant {
+    /** The store at commit point `v` (-1 = head), unconfigured. */
+    protected def viewAt(v: Long): Graft
+    /** Commit one write's change; returns the version published. */
+    protected def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Long
+    /** Compact the store. */
+    protected def compactStore(): Unit
+
     // per-namespace analyzer config, persisted beside the journal
     // (ConfigurableAnalyzerFactory stores it in namespace properties);
     // read once at attach — restart reattaches it with the namespace
@@ -273,7 +360,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val f = dir.resolve("analyzer.conf")
       if (Files.exists(f)) Some(Files.readString(f).trim).filter(_.nonEmpty) else None
     }
-    private def withConf(g: Graft): Graft =
+    protected def withConf(g: Graft): Graft =
       if (analyzerConf.isDefined) g.copy(analyzerName = analyzerConf) else g
     // namespace-owned persisted literal text index (created by the
     // namespace POST's textIndex=true): reattached with the namespace
@@ -283,47 +370,64 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val d = dir.resolve("textindex")
       if (graft.search.PersistedSearchIndex.exists(d.toString)) {
         val ix = graft.search.PersistedSearchIndex.open(spark, d.toString)
-        graft.rdf.TextIndexMaintenance.sync(ix, repo.journal)
+        graft.rdf.TextIndexMaintenance.sync(ix, indexJournal)
         Some(ix)
       } else None
     }
     /** Attach the index view to a HEAD connection — only when current
       * to the head version (a stale index must not serve hits for
-      * literals that were since removed); historical `at()` reads
-      * never attach it. */
+      * literals that were since removed); historical and asserted
+      * reads never attach it. */
     private def withIx(g: Graft): Graft = textIx match {
-      case Some(ix) if ix.version == repo.version => g.copy(textIndex = Some(ix.view))
+      case Some(ix) if ix.version == indexJournal.version => g.copy(textIndex = Some(ix.view))
       case _ => g
     }
+    @volatile private var cached: (Long, Graft) = (-1L, null)
     def current: Graft = {
-      val v = repo.version
       val c = cached
-      if (c._1 == v && c._2 != null) c._2
+      if (c._1 == version && c._2 != null) c._2
       else synchronized {
-        if (cached._1 != v || cached._2 == null)
-          cached = (v, withIx(withConf(repo.connection())))
+        // version is re-read INSIDE the lock and the head read from the
+        // same lock-held point (writes share this monitor), so a commit
+        // landing between the fast-path check and here can never cache
+        // a NEW state under an OLD version key
+        val vNow = version
+        if (cached._1 != vNow || cached._2 == null)
+          cached = (vNow, withIx(withConf(viewAt(-1L))))
         cached._2
       }
     }
-    // ospIndex=true namespaces lay down the object-hash twin on every
-    // compaction — searchInSearch hit joins then prune out of the box
-    private val ospIndex: Boolean = Files.exists(dir.resolve("ospindex"))
-    private def maybeCompact(): Unit = synchronized {
-      // every write path runs through here; the journal compaction (if
+    override def at(version: Long): Graft = withConf(viewAt(version))
+    def release(): Unit = synchronized {
+      Option(cached._2).foreach(_.release())
+      cached = (-1L, null)
+    }
+
+    protected def publish(next: Graft, suppress: Boolean): Long = {
+      // a journal commits quads only
+      if (next.solutionSets.nonEmpty) Update.connectionScoped()
+      val (adds, dels) = next.store.delta
+      val v = commit(adds, dels, suppress)
+      maybeCompact()
+      v
+    }
+
+    protected def maybeCompact(): Unit = synchronized {
+      // every write path runs through here; the store compaction (if
       // due) happens FIRST, so the text-index sync lands on the
       // post-compaction head version — syncing before it would leave
-      // ix.version one behind repo.version and withIx would silently
-      // detach the index until the next write (the compaction commit
-      // itself is skipped by changedQuads, so the sync stays
-      // delta-sized either way)
+      // ix.version one behind and withIx would silently detach the
+      // index until the next write (the compaction commit itself is
+      // skipped by changedQuads, so the sync stays delta-sized either
+      // way)
       val compacting =
-        repo.version - repo.journal.lastCompacted >= autoCompactEvery
-      if (compacting) repo.compact(ospHashTwin = ospIndex)
+        compactionJournal.version - compactionJournal.lastCompacted >= autoCompactEvery
+      if (compacting) compactStore()
       // the index (if any) catches up to the head (delta-sized batch),
       // so the next `current` serves index-backed search over the new
       // commit
       textIx.foreach { ix =>
-        graft.rdf.TextIndexMaintenance.sync(ix, repo.journal)
+        graft.rdf.TextIndexMaintenance.sync(ix, indexJournal)
         // the journal's compaction moment is the index's too: collapse
         // its segment log so steady-state search reads ONE postings
         // scan. Reclaim discipline: vacuum FIRST — it deletes only
@@ -336,63 +440,22 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         if (compacting) { ix.vacuum(); ix.compact() }
       }
     }
-    // writes serialize per namespace (the reference's single-writer
-    // journal lock): two concurrent REST updates queue instead of one
-    // failing loud on the journal's version race
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      synchronized { repo.updateOps(ops); maybeCompact() }
-    override def at(version: Long): Graft = withConf(repo.connection(version))
+    def destroy(): Unit = deleteRecursively(dir)
+  }
+
+  /** Journal-backed namespace: writes commit their change through the
+    * repository's journal. */
+  private final class DurableTenant(repo: Repository, dir: Path)
+      extends JournalTenant(dir, repo.journal, repo.journal) {
+    // ospIndex=true namespaces lay down the object-hash twin on every
+    // compaction — searchInSearch hit joins then prune out of the box
+    private val ospIndex: Boolean = Files.exists(dir.resolve("ospindex"))
+    protected def viewAt(v: Long): Graft = repo.connection(v)
+    protected def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Long =
+      repo.journal.commit(adds, dels)
+    protected def compactStore(): Unit = { repo.compact(ospHashTwin = ospIndex); () }
     override def version: Long = repo.version
     override def journal: Option[graft.rdf.Journal] = Some(repo.journal)
-    def ingest(quads: DataFrame): Long = synchronized {
-      val q = quads.localCheckpoint()
-      repo.journal.commit(adds = q, dels = emptyQuads)
-      maybeCompact()
-      q.count()
-    }
-    def remove(spo: DataFrame): Long = synchronized {
-      val keys = Seq("s", "p", "o")
-      val doomed = current.store.quads
-        .join(spo.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-          keys, "left_semi")
-        .localCheckpoint()
-      repo.journal.commit(adds = emptyQuads, dels = doomed)
-      maybeCompact()
-      doomed.count()
-    }
-    def removeQuads(quads: DataFrame): Long = synchronized {
-      val doomed = current.store.quads
-        .join(quads.select("s", "p", "o", "g").distinct(),
-          Seq("s", "p", "o", "g"), "left_semi")
-        .localCheckpoint()
-      repo.journal.commit(adds = emptyQuads, dels = doomed)
-      maybeCompact()
-      doomed.count()
-    }
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = synchronized {
-      val keys = Seq("s", "p", "o")
-      val doomed = current.store.quads
-        .join(removeSpo.select(keys.map(org.apache.spark.sql.functions.col): _*)
-          .distinct(), keys, "left_semi")
-        .localCheckpoint()
-      val a = adds.localCheckpoint()
-      repo.journal.commit(adds = a, dels = doomed)
-      maybeCompact()
-      doomed.count() + a.count()
-    }
-    def putGraph(g: String, quads: DataFrame): Unit = synchronized {
-      import org.apache.spark.sql.functions.{col, lit}
-      val old = current.store.quads.filter(col("g") === lit(g))
-      repo.journal.commit(adds = quads.localCheckpoint(), dels = old)
-      maybeCompact()
-    }
-    def dropGraph(g: String): Unit = synchronized {
-      import org.apache.spark.sql.functions.{col, lit}
-      val old = current.store.quads.filter(col("g") === lit(g))
-      repo.journal.commit(adds = emptyQuads, dels = old)
-      maybeCompact()
-    }
     override def bulkLoad(paths: Seq[String], graph: Option[String],
                           compact: Boolean): (Long, Long) = synchronized {
       // drives THIS tenant's journal handle — no second handle on the
@@ -426,51 +489,33 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       repo.journal.backupTo(target)
       repo.version
     }
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = synchronized {
-      val (adds, dels) = validateStaged(items, expectVersion)
-      val v = repo.journal.commit(adds, dels)
-      maybeCompact()
-      v
-    }
-    override def prepareStaged(items: Seq[Either[String, DataFrame]],
-                               expectVersion: Long): Unit = synchronized {
-      validateStaged(items, expectVersion); ()
-    }
-    /** The front half of a staged commit: fold the items into one
-      * (adds, dels) and run the two-sided conflict validation; throws
-      * [[TxConflict]] exactly when a commit now would. */
-    private def validateStaged(items: Seq[Either[String, DataFrame]],
-                               expectVersion: Long): (DataFrame, DataFrame) = {
-      val head = current
-      val mixed = items.map {
-        case Left(text) => Left(graft.sparql.Parser.parseUpdates(text))
-        case Right(df)  => Right(df)
-      }
-      var (adds, dels) = Update.quadsDeltaMixed(head.store, mixed, head.defaultGraph)
+    /** Two-sided conflict validation when the head moved:
+      *
+      * 1. WRITE set (TxServlet.java:56-58's per-index-range revision
+      *    check, at partition granularity): the partitionBy("g")
+      *    segment manifests name every graph the interleaved commits
+      *    wrote — 409 when that set intersects THIS tx's write set.
+      *    Compaction commits are skipped: a compaction snapshot names
+      *    every graph but changes nothing logically, and maybeCompact()
+      *    runs after every write, so counting it would 409 every tx
+      *    racing an auto-compaction.
+      *
+      * 2. READ set, by re-evaluation: graph manifests can't tell WHAT
+      *    an update's WHERE read, so the staged delta is evaluated
+      *    twice — against the expectVersion snapshot the client saw,
+      *    and against the current head — and the tx 409s when they
+      *    differ. An update whose WHERE reads graph Y but writes graph
+      *    X conflicts iff an interleaved commit to Y actually changed
+      *    the update's effect; staged literal DataFrames evaluate
+      *    identically on both sides and commit (their semantics are
+      *    rebase-onto-head by definition — the server cannot see what
+      *    stale reads produced them). */
+    override protected def validate(next: => Graft, staged: => Seq[Staged],
+                                    expectVersion: Long): Unit =
       if (repo.version != expectVersion) {
-        // Two-sided conflict validation when the head moved:
-        //
-        // 1. WRITE set (TxServlet.java:56-58's per-index-range revision
-        //    check, at partition granularity): the partitionBy("g")
-        //    segment manifests name every graph the interleaved commits
-        //    wrote — 409 when that set intersects THIS tx's write set.
-        //    Compaction commits are skipped: a compaction snapshot
-        //    names every graph but changes nothing logically, and
-        //    maybeCompact() runs after every write, so counting it
-        //    would 409 every tx racing an auto-compaction.
-        //
-        // 2. READ set, by re-evaluation: graph manifests can't tell
-        //    WHAT an update's WHERE read, so the staged delta is
-        //    evaluated twice — against the expectVersion snapshot the
-        //    client saw, and against the current head — and the tx
-        //    409s when they differ. An update whose WHERE reads graph
-        //    Y but writes graph X conflicts iff an interleaved commit
-        //    to Y actually changed the update's effect; staged literal
-        //    DataFrames evaluate identically on both sides and commit
-        //    (their semantics are rebase-onto-head by definition —
-        //    the server cannot see what stale reads produced them).
-        adds = adds.localCheckpoint(); dels = dels.localCheckpoint()
+        val (adds, dels) = next.store.delta match {
+          case (a, d) => (a.localCheckpoint(), d.localCheckpoint())
+        }
         val interleaved: Option[Set[String]] =
           (expectVersion + 1 to repo.version)
             .filterNot(repo.journal.compactedAt)
@@ -488,9 +533,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
             s"tx conflict: head moved from v$expectVersion to v${repo.version} " +
               "and a legacy unpartitioned segment hides its touched graphs")
         }
-        val asSeen = at(expectVersion)
-        val (adds0, dels0) =
-          Update.quadsDeltaMixed(asSeen.store, mixed, asSeen.defaultGraph)
+        val (adds0, dels0) = at(expectVersion).updateItems(staged).store.delta
         def differ(x: DataFrame, y: DataFrame): Boolean =
           x.exceptAll(y).limit(1).count() > 0 ||
             y.exceptAll(x).limit(1).count() > 0
@@ -500,9 +543,6 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
               s"v$expectVersion (head now v${repo.version}) — its effect " +
               "differs between the two snapshots")
       }
-      (adds, dels)
-    }
-    def destroy(): Unit = deleteRecursively(dir)
   }
 
   /** Truth-maintenance namespace — the reference's inference-enabled
@@ -514,170 +554,69 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * ([[graft.inference.MaintainedClosure]], DYNAMIC program: the
     * TBox arrives over the protocol as statements). Queries — head and
     * `?timestamp=` historical reads alike — serve the CLOSED
-    * (entailed) store; mutations commit through the maintained
-    * closure; suppressed requests commit verbatim and stay unclosed
-    * until a re-derive-tier commit converges them.
+    * (entailed) store; update WHEREs read it too (queries on an
+    * inferencing namespace see inference — the reference's TM stores
+    * behave the same), and each change applies to the ASSERTED
+    * statements through the maintained closure, DRed keeping derivable
+    * rows; suppressed requests commit verbatim and stay unclosed until
+    * a re-derive-tier commit converges them. The per-namespace
+    * analyzer and persisted literal text index compose with TM exactly
+    * like the durable tenant, the index maintained over the CLOSED
+    * journal (bds:search sees what queries see: the entailed store).
     *
     * TRIPLES mode: the reference does not support truth maintenance
     * over quads (BigdataSail — TM requires a triples-mode KB), so
     * graph-scoped Graph Store ops are refused loud and all statements
     * live in the default graph. */
-  private final class TmTenant(tm: graft.inference.MaintainedClosure,
-                               dir: Path) extends Tenant {
-    import org.apache.spark.sql.functions.{col, lit}
-    @volatile private var cached: (Long, Graft) = (-1L, null)
-    private def spoOf(df: DataFrame): DataFrame =
-      df.select("s", "p", "o").distinct()
-    // per-namespace analyzer + persisted literal text index compose
-    // with TM exactly like DurableTenant — the index maintains over
-    // the CLOSED journal (bds:search sees what queries see: the
-    // entailed store), synced at attach and on every write
-    private val analyzerConf: Option[String] = {
-      val f = dir.resolve("analyzer.conf")
-      if (Files.exists(f)) Some(Files.readString(f).trim).filter(_.nonEmpty) else None
-    }
-    private val textIx: Option[graft.search.PersistedSearchIndex] = {
-      val d = dir.resolve("textindex")
-      if (graft.search.PersistedSearchIndex.exists(d.toString)) {
-        val ix = graft.search.PersistedSearchIndex.open(spark, d.toString)
-        graft.rdf.TextIndexMaintenance.sync(ix, tm.journals._2)
-        Some(ix)
-      } else None
-    }
-    private def withConf(g: Graft): Graft = {
-      val g1 = withAnalyzer(g)
-      textIx match {
-        case Some(ix) if ix.version == tm.journals._2.version =>
-          g1.copy(textIndex = Some(ix.view))
-        case _ => g1
-      }
-    }
-    private def withAnalyzer(g: Graft): Graft =
-      if (analyzerConf.isDefined) g.copy(analyzerName = analyzerConf) else g
-    private def view(t: DataFrame): Graft = withAnalyzer(Graft(spark, QuadStore(
-      t.select(col("s"), col("p"), col("o"), lit("g:default").as("g")))))
-    def current: Graft = {
-      val c = cached
-      if (c._1 == tm.version && c._2 != null) c._2
-      else synchronized {
-        // version is re-read INSIDE the lock and the closure read from
-        // the same lock-held point (mutations share this monitor), so
-        // a commit landing between the fast-path check and here can
-        // never cache a NEW closure under an OLD version key
-        val vNow = tm.version
-        if (cached._1 != vNow || cached._2 == null)
-          cached = (vNow, withConf(view(tm.closure())))
-        cached._2
-      }
-    }
-    // historical / asserted views never attach the head index (it
-    // serves hits for literals those views may not contain)
-    override def at(version: Long): Graft = view(tm.closure(version))
-    override def asserted: Graft = view(tm.base())
-    override def assertedAt(version: Long): Graft = view(tm.base(version))
+  private final class TmTenant(tm: graft.inference.MaintainedClosure, dir: Path)
+      extends JournalTenant(dir, tm.journals._2, tm.journals._1) {
+    override protected def triplesMode: Boolean = true
+    private def view(t: DataFrame): Graft = Graft(spark, QuadStore(
+      t.select(col("s"), col("p"), col("o"), lit("g:default").as("g"))))
+    protected def viewAt(v: Long): Graft = view(tm.closure(v))
+    // the asserted views never attach the head index (it serves hits
+    // for literals those views may not contain)
+    override def asserted: Graft = withConf(view(tm.base()))
+    override def assertedAt(version: Long): Graft = withConf(view(tm.base(version)))
     override def version: Long = tm.version
     // bd:history serves the ASSERTED change log (the base journal) —
     // entailment churn is derived state, not user history
     override def journal: Option[graft.rdf.Journal] = Some(tm.journals._1)
-    private def maybeCompact(): Unit = {
-      val b = tm.journals._1
-      val compacting = b.version - b.lastCompacted >= autoCompactEvery
-      if (compacting) tm.compact()
-      // the index catches up to the CLOSED head (delta-sized batch);
-      // compaction is its vacuum/compact moment too (the DurableTenant
-      // reclaim discipline)
-      textIx.foreach { ix =>
-        graft.rdf.TextIndexMaintenance.sync(ix, tm.journals._2)
-        if (compacting) { ix.vacuum(); ix.compact() }
+    /** The change, projected to statements, through the closure's own
+      * entry points: inserts only assert, deletes only retract (DRed),
+      * both commit as ONE atomic delta, suppressed lands verbatim. A
+      * change with neither side commits nothing. */
+    protected def commit(adds: DataFrame, dels: DataFrame, suppress: Boolean): Long = {
+      val (a, d) = (adds.select("s", "p", "o"), dels.select("s", "p", "o"))
+      if (suppress) tm.commitRaw(a, d)
+      else (held(a), held(d)) match {
+        case (None, None)       => ()
+        case (Some(x), None)    => tm.assertTriples(x)
+        case (None, Some(y))    => tm.retractTriples(y)
+        case (Some(x), Some(y)) => tm.commitDelta(x, y)
+      }
+      tm.version
+    }
+    /** `side` if it may hold rows. Ground data and materialized batches
+      * pass as they are; a side derived from the store (a WHERE
+      * solution, a graph) is materialized once, its row count read off
+      * that job, so an empty one commits nothing. */
+    private def held(side: DataFrame): Option[DataFrame] = {
+      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+      def leaf(p: LogicalPlan): Boolean = p match {
+        case l: LocalRelation => l.data.nonEmpty
+        case Project(_, child) => leaf(child)
+        case _: org.apache.spark.sql.execution.LogicalRDD => true
+        case _ => false
+      }
+      if (graft.plans.LocalTier.provablyEmpty(side)) None
+      else if (leaf(side.queryExecution.optimizedPlan)) Some(side)
+      else graft.plans.Fixpoint.materialize(side) match {
+        case (_, 0L) => None
+        case (m, _)  => Some(m)
       }
     }
-    private def applyDelta(adds: DataFrame, dels: DataFrame,
-                           suppress: Boolean): Unit = {
-      val a = spoOf(adds).localCheckpoint()
-      val d = spoOf(dels).localCheckpoint()
-      if (suppress) { tm.commitRaw(a, d); () }
-      else if (!a.isEmpty || !d.isEmpty) {
-        // ONE journal commit carries remove+insert — the documented
-        // ATOMIC contract of updateWithBody (a crash cannot persist
-        // the removal without the insert, readers never observe the
-        // intermediate state, and one HTTP request = one version)
-        tm.commitDelta(a, d)
-        ()
-      }
-      maybeCompact()
-    }
-    private def updateOpsTm(ops: Seq[graft.sparql.UpdateOp],
-                            suppress: Boolean): Unit = synchronized {
-      val head = current
-      // the ops' WHERE clauses evaluate against the ENTAILED store
-      // (queries on an inferencing namespace see inference — the
-      // reference's TM stores behave the same); the delta then applies
-      // to the ASSERTED statements, DRed keeping derivable rows
-      val (adds, dels) = Update.quadsDeltaSeq(head.store, ops, head.defaultGraph)
-      applyDelta(adds, dels, suppress)
-    }
-    def updateOps(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      updateOpsTm(ops, suppress = false)
-    override def updateOpsSuppressed(ops: Seq[graft.sparql.UpdateOp]): Unit =
-      updateOpsTm(ops, suppress = true)
-    def ingest(quads: DataFrame): Long = synchronized {
-      val q = spoOf(quads).localCheckpoint()
-      tm.assertTriples(q)
-      maybeCompact()
-      q.count()
-    }
-    override def ingestSuppressed(quads: DataFrame): Long = synchronized {
-      val q = spoOf(quads).localCheckpoint()
-      tm.commitRaw(q, q.limit(0))
-      maybeCompact()
-      q.count()
-    }
-    private def removeTm(spo: DataFrame, suppress: Boolean): Long = synchronized {
-      val r = spoOf(spo).localCheckpoint()
-      // modified count = what was actually ASSERTED (retracting an
-      // inferred-only or absent row is a no-op on the base)
-      val doomed = tm.base().join(r, Seq("s", "p", "o"), "left_semi")
-        .localCheckpoint()
-      if (suppress) tm.commitRaw(r.limit(0), r) else tm.retractTriples(r)
-      maybeCompact()
-      doomed.count()
-    }
-    def remove(spo: DataFrame): Long = removeTm(spo, suppress = false)
-    override def removeSuppressed(spo: DataFrame): Long =
-      removeTm(spo, suppress = true)
-    // triples-mode: the quad form projects to statements (the only
-    // graph is the synthetic default tag)
-    def removeQuads(quads: DataFrame): Long = removeTm(quads, suppress = false)
-    override def removeQuadsSuppressed(quads: DataFrame): Long =
-      removeTm(quads, suppress = true)
-    def updateWithBody(removeSpo: DataFrame, adds: DataFrame,
-                       suppress: Boolean): Long = synchronized {
-      val r = spoOf(removeSpo).localCheckpoint()
-      val a = spoOf(adds).localCheckpoint()
-      val doomed = tm.base().join(r, Seq("s", "p", "o"), "left_semi")
-        .localCheckpoint()
-      // the add side counts like the remove side: only statements NOT
-      // already asserted are modifications (a re-insert counts 0)
-      val added = a.join(tm.base(), Seq("s", "p", "o"), "left_anti")
-        .localCheckpoint()
-      applyDelta(a, r, suppress)
-      doomed.count() + added.count()
-    }
-    private def triplesOnly(): Nothing = sys.error(
-      "truth-maintenance namespaces are triples-mode (the reference's " +
-        "TM requires a triples-mode KB) — graph-scoped Graph Store " +
-        "operations are not supported")
-    // GSP on the DEFAULT graph is the triples-mode store itself:
-    // PUT = replace-all (retract the asserted base, assert the body),
-    // DELETE = retract-all; NAMED graphs are refused loud above
-    def putGraph(g: String, quads: DataFrame): Unit =
-      if (g != "g:default") triplesOnly()
-      else synchronized { applyDelta(quads, tm.base(), suppress = false) }
-    def dropGraph(g: String): Unit =
-      if (g != "g:default") triplesOnly()
-      else synchronized {
-        applyDelta(tm.base().limit(0), tm.base(), suppress = false)
-      }
+    protected def compactStore(): Unit = tm.compact()
     override def bulkLoad(paths: Seq[String], graph: Option[String],
                           compact: Boolean): (Long, Long) = synchronized {
       require(graph.isEmpty,
@@ -689,46 +628,19 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       if (compact) tm.compact()
       (tm.version, n)
     }
-    // staged tx: whole-store first-committer-wins (each item commits
-    // through the maintained closure in arrival order — TM cannot fold
-    // a tx into one commit because each mutation's entailment delta
-    // depends on the prior closed state)
-    def commitStaged(items: Seq[Either[String, DataFrame]],
-                     expectVersion: Long): Long = synchronized {
+    // staged tx: whole-store first-committer-wins
+    override protected def validate(next: => Graft, staged: => Seq[Staged],
+                                    expectVersion: Long): Unit =
       if (tm.version != expectVersion)
         throw new TxConflict(
           s"tx conflict: head moved from v$expectVersion to v${tm.version} " +
             "(truth-maintenance namespaces validate at whole-store granularity)")
-      // pre-parse every update text and pre-materialize every data
-      // item BEFORE the first commit: a malformed later item must not
-      // leave earlier items durably committed. Beyond this point TM
-      // transactions are NOT failure-atomic — each item commits
-      // through the maintained closure in arrival order, because each
-      // mutation's entailment delta depends on the prior closed state.
-      val staged = items.map {
-        case Left(text) => Left(graft.sparql.Parser.parseUpdates(text))
-        case Right(df)  => Right(spoOf(df).localCheckpoint())
-      }
-      staged.foreach {
-        case Left(ops) => updateOps(ops)
-        case Right(df) => ingest(df)
-      }
-      tm.version
-    }
-    def prepareStaged(items: Seq[Either[String, DataFrame]],
-                      expectVersion: Long): Unit = {
-      if (tm.version != expectVersion)
-        throw new TxConflict(
-          s"tx conflict: head moved from v$expectVersion to v${tm.version} " +
-            "(truth-maintenance namespaces validate at whole-store granularity)")
-    }
     override def backup(target: Path): Long = synchronized {
       val (b, c) = tm.journals
       b.backupTo(target.resolve("base"))
       c.backupTo(target.resolve("closed"))
       tm.version
     }
-    def destroy(): Unit = deleteRecursively(dir)
   }
 
   /** Staged-tx commit lost first-committer-wins validation. */
@@ -817,12 +729,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     val tx = txs.get(id)
     require(tx != null, s"no such transaction: $id")
     require(tx.ns == ns, s"transaction $id belongs to namespace ${tx.ns}, not $ns")
-    tx.items.synchronized { tx.items.toVector }.foldLeft(tx.base) {
-      case (h, Left(text)) => h.update(text)
-      // withStore: the staged writes invalidate the committed-version
-      // accelerators (osp twin / text index) for THIS view
-      case (h, Right(df))  => h.withStore(h.store.insertQuads(df))
-    }
+    // updateItems routes through withStore: the staged writes
+    // invalidate the committed-version accelerators (osp twin / text
+    // index) for THIS view
+    tx.base.updateItems(tx.items.synchronized { tx.items.toVector }
+      .map(_.left.map(Parser.parseUpdates)))
   }
 
   private def stageTx(id: String, ns: String,
@@ -916,7 +827,8 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   // a thread per in-flight exchange: a long-running query must not
   // block /status or the cancel that kills it
-  server.setExecutor(Executors.newCachedThreadPool())
+  private val handlers = Executors.newCachedThreadPool()
+  server.setExecutor(handlers)
 
   /** `http://host:port` of the bound socket (port 0 = OS-assigned). */
   def address: String =
@@ -1512,7 +1424,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           .exists(_.toBoolean)
         val n =
           try inJobGroup(ns, "data-POST") {
-            if (suppress) t.ingestSuppressed(quads) else t.ingest(quads)
+            t.ingest(quads, suppress)
           }
           finally spill.foreach(dropSpill)
         respond(ex, 200, "application/xml",
@@ -1603,7 +1515,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         .exists(_.toBoolean)
       val n = inJobGroup(ns, "data-DELETE (access path)") {
         val doomed = accessPath(t.current, qp)
-        if (suppressAp) t.removeQuadsSuppressed(doomed) else t.removeQuads(doomed)
+        t.removeQuads(doomed, suppressAp)
       }
       respond(ex, 200, "application/xml",
         s"""<?xml version="1.0"?><data modified="$n"/>""")
@@ -1625,7 +1537,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       .flatten.exists(_.toBoolean)
     val n =
       try inJobGroup(ns, "data-DELETE") {
-        if (suppress) t.removeSuppressed(spo) else t.remove(spo)
+        t.remove(spo, suppress)
       }
       finally spill.foreach(dropSpill)
     respond(ex, 200, "application/xml",
@@ -1822,8 +1734,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
             .get("suppressTruthMaintenance").flatten
             .orElse(if (isForm) formParam(body, "suppressTruthMaintenance") else None)
             .exists(_.toBoolean)
-          if (suppress) tenant(ns).updateOpsSuppressed(rewritten)
-          else tenant(ns).updateOps(rewritten)
+          tenant(ns).updateOps(rewritten, suppress)
       }
       respond(ex, 204, "text/plain", "")
     } catch {
@@ -2455,11 +2366,16 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   server.createContext("/", IndexHandler)
 
   def start(): this.type = { server.start(); this }
+  /** Stop serving and free what the server holds: the handler and
+    * deadline threads (the per-instance pools would otherwise leak
+    * their threads per started server — noticeable in test suites)
+    * and every namespace's cached head handle, whose materialized
+    * merge view sits in block storage until released. */
   def stop(): Unit = {
     server.stop(0)
-    // the per-instance deadline scheduler would otherwise leak one
-    // daemon thread per started server (noticeable in test suites)
+    handlers.shutdown()
     deadlines.shutdownNow()
+    namespaces.values.asScala.foreach(_.release())
   }
 }
 

@@ -2,11 +2,18 @@ package graft.sparql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rdf.TripleStore
+import graft.rdf.{QuadStore, TripleStore}
 
-/** Executes parsed SPARQL UPDATE operations against a [[TripleStore]]
-  * (reference: ast/eval/AST2BOpUpdate.java driving the B+Tree
-  * mutations; here each op yields a new functional store). */
+/** Executes parsed SPARQL UPDATE operations (reference:
+  * ast/eval/AST2BOpUpdate.java driving the B+Tree mutations; here each
+  * op yields a new functional store).
+  *
+  * ONE evaluator: [[applyQuads]] is the only function that maps an op
+  * to a store change. The [[QuadStore]] it returns carries the
+  * `(adds, dels)` the op applied ([[QuadStore.delta]]), so the
+  * in-memory handle, the journal commit ([[quadsDeltaSeq]], read off
+  * the folded store) and the truth-maintained commit all come from the
+  * same single evaluation of each op's WHERE. */
 object Update {
 
   private def t2c(t: Term, n: String): Column = t match {
@@ -21,7 +28,7 @@ object Update {
     * like `INSERT { GRAPH ?g { … } } WHERE { GRAPH ?g { … } }` bind
     * their graph variable from the data (§3.1.3 over the Graph
     * Store). */
-  private def bareQuadsSource(store: graft.rdf.QuadStore): TripleSource =
+  private def bareQuadsSource(store: QuadStore): TripleSource =
     new TripleSource {
       lazy val triples: DataFrame = store.quads.select("s", "p", "o").distinct()
       override def quads: Option[DataFrame] = Some(store.quads)
@@ -33,8 +40,7 @@ object Update {
     * DatasetClause handles graph selection over `quads`; bare
     * default-graph reads (no dataset restriction in play) see the
     * store's default graph. */
-  private def usingSource(store: graft.rdf.QuadStore,
-                          defaultGraph: String): TripleSource =
+  private def usingSource(store: QuadStore, defaultGraph: String): TripleSource =
     new TripleSource {
       lazy val triples: DataFrame = store.graph(defaultGraph)
       override def quads: Option[DataFrame] = Some(store.quads)
@@ -85,90 +91,75 @@ object Update {
   }
 
   /** Apply `op` to a triples-mode `store` (GRAPH tags on ground data
-    * are ignored — a triple store has one graph); WHERE clauses
-    * evaluate against the store's own (pre-update) triples. */
-  def apply(store: TripleStore, op: UpdateOp): TripleStore = op match {
-    case InsertData(d) => store.insertData(ground(d.map(_._2), store.triples.sparkSession))
-    case DeleteData(d) => store.deleteData(ground(d.map(_._2), store.triples.sparkSession))
-    case DeleteInsertWhere(del, ins, where) =>
-      val sol = shared(Compiler.compile(where, TripleSource.plain(store.triples)),
-        del.size + ins.size)
-      val deletes =
-        if (del.isEmpty) store.triples.limit(0) else instantiate(del, sol)
-      val inserts =
-        if (ins.isEmpty) store.triples.limit(0) else instantiate(ins, sol)
-      store.deleteInsert(deletes, inserts)
-    case other =>
-      sys.error(s"triples-mode update supports ground data and DELETE/INSERT WHERE, got $other")
+    * are ignored — a triple store has one graph): [[applyQuads]] over
+    * that one graph, the WHERE reading the plain graph (no
+    * union-default distinct) against the pre-update triples. */
+  def apply(store: TripleStore, op: UpdateOp): TripleStore = {
+    val g = "g:default"
+    val scoped = op match {
+      case InsertData(d) => InsertData(d.map { case (_, t) => (None, t) })
+      case DeleteData(d) => DeleteData(d.map { case (_, t) => (None, t) })
+      case w: DeleteInsertWhere => WithGraph(g, w)
+      case other =>
+        sys.error(s"triples-mode update supports ground data and DELETE/INSERT WHERE, got $other")
+    }
+    val quads = store.triples.select(col("s"), col("p"), col("o"), lit(g).as("g"))
+    TripleStore(applyQuads(QuadStore(quads), scoped, g).graph(g))
   }
 
-  /** Apply ground-data ops to a quads-mode store: each GRAPH block
-    * lands in its named graph, bare triples in `defaultGraph`. */
-  def applyQuads(store: graft.rdf.QuadStore, op: UpdateOp,
-                 defaultGraph: String = "g:default"): graft.rdf.QuadStore = {
-    val spark = store.quads.sparkSession
+  /** Apply one op to a quads-mode store: ground data lands per GRAPH
+    * block (bare triples in `defaultGraph`), WHERE-driven ops evaluate
+    * their WHERE once against the pre-update store and apply deletes
+    * before inserts (§3.1.3), graph management acts per graph. The
+    * returned store records the change ([[QuadStore.delta]]). */
+  def applyQuads(store: QuadStore, op: UpdateOp,
+                 defaultGraph: String = "g:default"): QuadStore = {
+    val spark = store.sparkSession
     def byGraph(d: Seq[(Option[String], TriplePattern)]) =
       d.groupBy(_._1.getOrElse(defaultGraph)).view.mapValues(v => ground(v.map(_._2), spark))
+    // plain templates act on graph `g`
+    def rewrite(g: String, where: Algebra, src: TripleSource,
+                del: Seq[TriplePattern], ins: Seq[TriplePattern]): QuadStore = {
+      val sol = shared(Compiler.compile(where, src), del.size + ins.size)
+      val st1 = if (del.isEmpty) store else store.deleteData(g, instantiate(del, sol))
+      if (ins.isEmpty) st1 else st1.insertData(g, instantiate(ins, sol))
+    }
+    // quad templates: each template triple lands in its own graph
+    def rewriteQuads(where: Algebra, src: TripleSource,
+                     del: Seq[(Option[Term], TriplePattern)],
+                     ins: Seq[(Option[Term], TriplePattern)]): QuadStore = {
+      val sol = shared(Compiler.compile(where, src), del.size + ins.size)
+      val st1 =
+        if (del.isEmpty) store else store.deleteQuads(instantiateQuads(del, sol, defaultGraph))
+      if (ins.isEmpty) st1 else st1.insertQuads(instantiateQuads(ins, sol, defaultGraph))
+    }
     op match {
       case InsertData(d) =>
         byGraph(d).foldLeft(store) { case (st, (g, df)) => st.insertData(g, df) }
       case DeleteData(d) =>
         byGraph(d).foldLeft(store) { case (st, (g, df)) => st.deleteData(g, df) }
+      // WHERE and templates evaluate against graph g only (§3.1.3)
       case WithGraph(g, DeleteInsertWhere(del, ins, where)) =>
-        // WHERE and templates evaluate against graph g only (§3.1.3)
-        val sol = shared(Compiler.compile(where, TripleSource.plain(store.graph(g))),
-          del.size + ins.size)
-        val st1 =
-          if (del.isEmpty) store else store.deleteData(g, instantiate(del, sol))
-        if (ins.isEmpty) st1 else st1.insertData(g, instantiate(ins, sol))
+        rewrite(g, where, TripleSource.plain(store.graph(g)), del, ins)
+      // bare (no WITH/USING): the WHERE sees the union default graph
+      // (the façade's quads-mode query convention) and GRAPH patterns
+      // range over the store's named graphs; template triples without
+      // GRAPH address the default graph (§3.1.3)
       case DeleteInsertWhere(del, ins, where) =>
-        // bare (no WITH/USING) DELETE/INSERT WHERE in quads mode: the
-        // WHERE sees the union default graph (the façade's quads-mode
-        // query convention), templates act on `defaultGraph` (§3.1.3:
-        // template triples without GRAPH address the default graph)
-        val sol = shared(Compiler.compile(where, bareQuadsSource(store)),
-          del.size + ins.size)
-        val st1 =
-          if (del.isEmpty) store
-          else store.deleteData(defaultGraph, instantiate(del, sol))
-        if (ins.isEmpty) st1
-        else st1.insertData(defaultGraph, instantiate(ins, sol))
+        rewrite(defaultGraph, where, bareQuadsSource(store), del, ins)
       case QuadsTemplateWhere(del, ins, where) =>
-        // quad templates: WHERE evaluates like the bare form above,
-        // with GRAPH patterns ranging over the store's named graphs;
-        // each template triple lands in its own graph
-        val sol = shared(Compiler.compile(where, bareQuadsSource(store)),
-          del.size + ins.size)
-        val st1 =
-          if (del.isEmpty) store
-          else store.deleteQuads(instantiateQuads(del, sol, defaultGraph))
-        if (ins.isEmpty) st1
-        else st1.insertQuads(instantiateQuads(ins, sol, defaultGraph))
-      case UsingClause(defaults, named, inner) =>
-        // the WHERE sees the USING dataset (update-side FROM/FROM
-        // NAMED): default-graph patterns scan the USING graphs' merge,
-        // GRAPH patterns range over USING NAMED. Plain templates act
-        // on the default graph (§3.1.3 USING); quad templates address
-        // their own graphs (GRAPH vars bind from the USING NAMED set).
-        val src = usingSource(store, defaultGraph)
-        inner match {
-          case DeleteInsertWhere(del, ins, where) =>
-            val sol = shared(Compiler.compile(DatasetClause(defaults, named, where), src),
-              del.size + ins.size)
-            val st1 =
-              if (del.isEmpty) store
-              else store.deleteData(defaultGraph, instantiate(del, sol))
-            if (ins.isEmpty) st1
-            else st1.insertData(defaultGraph, instantiate(ins, sol))
-          case QuadsTemplateWhere(del, ins, where) =>
-            val sol = shared(Compiler.compile(DatasetClause(defaults, named, where), src),
-              del.size + ins.size)
-            val st1 =
-              if (del.isEmpty) store
-              else store.deleteQuads(instantiateQuads(del, sol, defaultGraph))
-            if (ins.isEmpty) st1
-            else st1.insertQuads(instantiateQuads(ins, sol, defaultGraph))
-        }
+        rewriteQuads(where, bareQuadsSource(store), del, ins)
+      // the WHERE sees the USING dataset (update-side FROM/FROM NAMED):
+      // default-graph patterns scan the USING graphs' merge, GRAPH
+      // patterns range over USING NAMED. Plain templates act on the
+      // default graph (§3.1.3 USING); quad templates address their own
+      // graphs (GRAPH vars bind from the USING NAMED set).
+      case UsingClause(defaults, named, DeleteInsertWhere(del, ins, where)) =>
+        rewrite(defaultGraph, DatasetClause(defaults, named, where),
+          usingSource(store, defaultGraph), del, ins)
+      case UsingClause(defaults, named, QuadsTemplateWhere(del, ins, where)) =>
+        rewriteQuads(DatasetClause(defaults, named, where),
+          usingSource(store, defaultGraph), del, ins)
       // -- text-form graph management (ast/CreateGraph.java family) --
       case CreateGraph(g, _)   => store.createGraph(g)
       case DropGraph(g, _)     => store.dropGraph(g.getOrElse(defaultGraph))
@@ -176,18 +167,8 @@ object Update {
       case ClearAll            => store.clear()
       // DROP GRAPHS (GraphRefAll's GRAPHS arm): every NAMED graph
       // goes, the default graph stays
-      case DropGraphs(_) =>
-        graft.rdf.QuadStore(
-          store.quads.filter(org.apache.spark.sql.functions.col("g") === defaultGraph))
-      case _: SolutionsOp =>
-        // named solution sets are CONNECTION-scoped (they live on the
-        // Graft handle — graft.Graft.applyOne; the reference's default
-        // ISolutionSetManager is the SPARQL cache, not the journal).
-        // Reaching the bare store path means the caller has no handle
-        // to hold them — refuse rather than silently drop.
-        sys.error("named solution sets are connection-scoped: apply " +
-          "SOLUTIONS updates through a Graft handle (graft.Graft.update), " +
-          "not the bare quad-store path")
+      case DropGraphs(_)       => store.dropGraphs(defaultGraph)
+      case _: SolutionsOp      => connectionScoped()
       case CopyGraph(f, t, _)  =>
         store.copyGraph(f.getOrElse(defaultGraph), t.getOrElse(defaultGraph))
       case MoveGraph(f, t, _)  =>
@@ -208,15 +189,15 @@ object Update {
   }
 
   /** Apply a ';'-separated op sequence in request order. */
-  def applyQuadsSeq(store: graft.rdf.QuadStore, ops: Seq[UpdateOp],
-                    defaultGraph: String = "g:default"): graft.rdf.QuadStore =
+  def applyQuadsSeq(store: QuadStore, ops: Seq[UpdateOp],
+                    defaultGraph: String = "g:default"): QuadStore =
     ops.foldLeft(store)(applyQuads(_, _, defaultGraph))
 
-  /** The (g-tagged) quads a LOAD op contributes — shared by the store
-    * apply and the delta path. N-Quads/TriG statements carry their own
-    * graph tags (INTO GRAPH overrides); JSON-LD named-graph documents
-    * keep their labels unless INTO GRAPH flattens; every triples-mode
-    * document lands whole in the target graph. */
+  /** The (g-tagged) quads a LOAD op contributes. N-Quads/TriG
+    * statements carry their own graph tags (INTO GRAPH overrides);
+    * JSON-LD named-graph documents keep their labels unless INTO GRAPH
+    * flattens; every triples-mode document lands whole in the target
+    * graph. */
   private[graft] def loadOpQuads(spark: org.apache.spark.sql.SparkSession, src: String,
                                  g: Option[String], defaultGraph: String): DataFrame = {
     val path = src.stripPrefix("file://")
@@ -246,133 +227,45 @@ object Update {
 
   /** The journal-shaped mutation delta of one op against `store`:
     * `(adds, dels)` quad DataFrames sized by the CHANGE, never the
-    * store — the write path [[graft.rdf.Repository.update]] commits
-    * (the reference stages exactly these sets in its
-    * TruthMaintenance/commitNow buffers; a lakehouse MERGE ships the
-    * matched/not-matched sets the same way). Ground-data ops emit
-    * their own rows verbatim: journal resolution is idempotent for
-    * re-inserted quads and tombstones of absent quads, so NO
-    * existence anti-join against the store is needed — a small
+    * store — [[applyQuads]]'s recorded change ([[QuadStore.delta]]).
+    * Ground-data ops emit their own rows verbatim, so a small
     * INSERT/DELETE DATA commit plans zero store scans (plan-asserted
-    * in RepositorySpec). Graph-management deltas are graph-sized (that
-    * IS the change). WHERE-driven ops evaluate against the pre-update
-    * store, like [[applyQuads]]. */
-  def quadsDelta(store: graft.rdf.QuadStore, op: UpdateOp,
-                 defaultGraph: String = "g:default"): (DataFrame, DataFrame) = {
-    val spark = store.quads.sparkSession
-    val nothing = graft.rdf.QuadStore(store.quads.limit(0)).quads
-    def tag(g: String, df: DataFrame): DataFrame =
-      df.select("s", "p", "o").withColumn("g", lit(g))
-    def byGraph(d: Seq[(Option[String], TriplePattern)]): DataFrame =
-      d.groupBy(_._1.getOrElse(defaultGraph)).view
-        .mapValues(v => ground(v.map(_._2), spark)).toSeq
-        .map { case (g, df) => tag(g, df) }
-        .reduceOption(_ unionAll _).getOrElse(nothing)
-    def tagged(g: String, tmpl: Seq[TriplePattern], sol: DataFrame): DataFrame =
-      if (tmpl.isEmpty) nothing else tag(g, instantiate(tmpl, sol))
-    op match {
-      case InsertData(d) => (byGraph(d), nothing)
-      case DeleteData(d) => (nothing, byGraph(d))
-      case WithGraph(g, DeleteInsertWhere(del, ins, where)) =>
-        val sol = shared(Compiler.compile(where, TripleSource.plain(store.graph(g))),
-          del.size + ins.size)
-        (tagged(g, ins, sol), tagged(g, del, sol))
-      case DeleteInsertWhere(del, ins, where) =>
-        val sol = shared(Compiler.compile(where, bareQuadsSource(store)),
-          del.size + ins.size)
-        (tagged(defaultGraph, ins, sol), tagged(defaultGraph, del, sol))
-      case QuadsTemplateWhere(del, ins, where) =>
-        val sol = shared(Compiler.compile(where, bareQuadsSource(store)),
-          del.size + ins.size)
-        def inst(t: Seq[(Option[Term], TriplePattern)]): DataFrame =
-          if (t.isEmpty) nothing else instantiateQuads(t, sol, defaultGraph)
-        (inst(ins), inst(del))
-      case UsingClause(defaults, named, inner) =>
-        val src = usingSource(store, defaultGraph)
-        inner match {
-          case DeleteInsertWhere(del, ins, where) =>
-            val sol = shared(Compiler.compile(DatasetClause(defaults, named, where), src),
-              del.size + ins.size)
-            (tagged(defaultGraph, ins, sol), tagged(defaultGraph, del, sol))
-          case QuadsTemplateWhere(del, ins, where) =>
-            val sol = shared(Compiler.compile(DatasetClause(defaults, named, where), src),
-              del.size + ins.size)
-            def inst(t: Seq[(Option[Term], TriplePattern)]): DataFrame =
-              if (t.isEmpty) nothing else instantiateQuads(t, sol, defaultGraph)
-            (inst(ins), inst(del))
-        }
-      case CreateGraph(_, _) => (nothing, nothing)
-      case DropGraph(g, _)   =>
-        (nothing, tag(g.getOrElse(defaultGraph), store.graph(g.getOrElse(defaultGraph))))
-      case ClearGraph(g, _)  =>
-        (nothing, tag(g.getOrElse(defaultGraph), store.graph(g.getOrElse(defaultGraph))))
-      case ClearAll          => (nothing, store.quads)
-      case CopyGraph(f0, t0, _) =>
-        val (f, t) = (f0.getOrElse(defaultGraph), t0.getOrElse(defaultGraph))
-        if (f == t) (nothing, nothing)
-        else (tag(t, store.graph(f)), tag(t, store.graph(t)))
-      case MoveGraph(f0, t0, _) =>
-        val (f, t) = (f0.getOrElse(defaultGraph), t0.getOrElse(defaultGraph))
-        if (f == t) (nothing, nothing)
-        else (tag(t, store.graph(f)),
-          tag(t, store.graph(t)).unionAll(tag(f, store.graph(f))))
-      case AddGraph(f0, t0, _) =>
-        (tag(t0.getOrElse(defaultGraph), store.graph(f0.getOrElse(defaultGraph))), nothing)
-      case Load(src, g, silent) =>
-        try {
-          val q = loadOpQuads(spark, src, g, defaultGraph)
-          ((if (silent) q.localCheckpoint() else q), nothing)
-        } catch { case e: Exception if silent => (nothing, nothing) }
-      case DropGraphs(_) =>
-        (nothing, store.quads.filter(
-          org.apache.spark.sql.functions.col("g") =!= defaultGraph))
-      case _: SolutionsOp =>
-        // see applyQuads: sets live on the Graft handle, never in a
-        // journal commit — a durable namespace refuses rather than
-        // silently dropping the op
-        sys.error("named solution sets are connection-scoped: apply " +
-          "SOLUTIONS updates through a Graft handle (graft.Graft.update), " +
-          "not a journal-backed namespace")
-      case other => sys.error(s"quads-mode update supports ground data, WITH-scoped ops and graph management, got $other")
-    }
-  }
+    * in RepositorySpec); graph-management deltas are graph-sized (that
+    * IS the change). */
+  def quadsDelta(store: QuadStore, op: UpdateOp,
+                 defaultGraph: String = "g:default"): (DataFrame, DataFrame) =
+    applyQuads(store.rebased, op, defaultGraph).delta
 
-  /** Fold an op sequence into ONE journal commit's `(adds, dels)`.
-    * Later ops see earlier ops' store state (request order, §3.1);
-    * the accumulated sets compose under the cancellation law
-    * `A' = (A \ dels) ∪ adds`, `D' = D ∪ dels`, which is exactly what
-    * makes a single commit (dels apply before adds) reproduce the
-    * sequential result: a row op1 inserts and op2 deletes leaves the
-    * commit, a row op1 deletes and op2 re-inserts rides the
-    * within-commit add-outranks-delete rule. All delta-sized joins. */
-  def quadsDeltaSeq(store: graft.rdf.QuadStore, ops: Seq[UpdateOp],
+  /** Fold an op sequence into ONE journal commit's `(adds, dels)`:
+    * later ops see earlier ops' store state (request order, §3.1) and
+    * the steps compose under the store's cancellation law
+    * ([[QuadStore]]), which makes a single commit (dels apply before
+    * adds) reproduce the sequential result. */
+  def quadsDeltaSeq(store: QuadStore, ops: Seq[UpdateOp],
                     defaultGraph: String = "g:default"): (DataFrame, DataFrame) =
-    quadsDeltaMixed(store, Seq(Left(ops)), defaultGraph)
+    applyQuadsSeq(store.rebased, ops, defaultGraph).delta
 
   /** [[quadsDeltaSeq]] over a MIXED sequence of parsed update requests
     * and pre-parsed quad batches — the multi-request write-transaction
-    * fold (TxServlet analog): each staged request applies in arrival
-    * order under the same cancellation law, and the whole tx lands as
-    * ONE commit's (adds, dels). A `Right(quads)` batch is an
-    * insert-only step (REST data POST staged into a tx). */
-  def quadsDeltaMixed(store: graft.rdf.QuadStore,
+    * fold ([[graft.Graft.updateItems]], TxServlet analog): the whole
+    * tx lands as ONE commit's (adds, dels). A `Right(quads)` batch is
+    * an insert-only step (REST data POST staged into a tx). */
+  def quadsDeltaMixed(store: QuadStore,
                       items: Seq[Either[Seq[UpdateOp], DataFrame]],
                       defaultGraph: String = "g:default"): (DataFrame, DataFrame) = {
-    val cols = Seq("s", "p", "o", "g")
-    val nothing = store.quads.limit(0)
-    items.foldLeft((store, nothing, nothing)) {
-      case ((st, accA, accD), Left(ops)) =>
-        ops.foldLeft((st, accA, accD)) { case ((s2, a2, d2), op) =>
-          val (a, d) = quadsDelta(s2, op, defaultGraph)
-          (applyQuads(s2, op, defaultGraph),
-            a2.join(d, cols, "left_anti").unionAll(a),
-            d2.unionAll(d))
-        }
-      case ((st, accA, accD), Right(q)) =>
-        val qq = q.select(cols.head, cols.tail: _*)
-        (st.insertQuads(qq), accA.unionAll(qq), accD)
-    } match { case (_, a, d) => (a, d) }
+    if (items.exists(_.left.exists(_.exists(_.isInstanceOf[SolutionsOp])))) connectionScoped()
+    graft.Graft(store.sparkSession, store.rebased, defaultGraph).updateItems(items).store.delta
   }
+
+  /** Named solution sets are CONNECTION-scoped (they live on the Graft
+    * handle — graft.Graft.applyOne; the reference's default
+    * ISolutionSetManager is the SPARQL cache, not the journal). A
+    * caller with no handle to hold them refuses rather than silently
+    * dropping the op. */
+  private[graft] def connectionScoped(): Nothing =
+    sys.error("named solution sets are connection-scoped: apply " +
+      "SOLUTIONS updates through a Graft handle (graft.Graft.update), " +
+      "not the bare quad-store path or a journal-backed namespace")
 
   /** LOAD source reader: a parquet (s,p,o) table, a Turtle (.ttl)
     * document ([[graft.rdf.Turtle]] — whole-file parse, one task per
