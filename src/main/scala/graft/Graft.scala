@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.rdf.{QuadStore, Serializer}
-import graft.sparql.{Algebra, ClearAll, ClearSolutions, Compiler, CreateSolutions, DeleteFromSolutions, DropSolutions, InsertIntoSolutions, Parser, ProtocolDataset, RdfLiteral, TriplePattern, TripleSource, Update, UpdateOp}
-import org.apache.spark.sql.functions.col
+import graft.sparql.{Algebra, ClearAll, ClearSolutions, Compiler, CreateSolutions, DeleteFromSolutions, DropSolutions, InsertIntoSolutions, Parser, ProtocolDataset, TriplePattern, TripleSource, Update, UpdateOp}
 
 /** The migrating user's single entry point — the analog of the
   * reference's repository-connection surface
@@ -83,12 +82,8 @@ final case class Graft(spark: SparkSession, store: QuadStore,
     // corpus IS the literal space, so one index serves both slots
     override def searchIndex: Option[graft.search.SearchIndexView] = textIndex
     override def literalIndex: Option[graft.search.SearchIndexView] = textIndex
-    override def searchCorpus: Option[DataFrame] = Some {
-      val t = store.quads.select(col("o").cast("string").as("t")).distinct()
-      val isIri = col("t").rlike(Parser.IriShape) && !col("t").startsWith("_:")
-      t.filter(!isIri && !col("t").startsWith("_:"))
-        .select(col("t").as("doc_id"), RdfLiteral.strOf(col("t")).as("text"))
-    }
+    override def searchCorpus: Option[DataFrame] =
+      Some(graft.sparql.BuiltinServices.literalSpace(store.quads))
     // durable OSP-hash twin (Journal.compact(ospHashTwin = true)):
     // hit→subject joins prune to the hits' object-hash partition
     // directories instead of paying the full-view pass. The twin holds

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft
 import graft.rdf.{QuadStore, Rdr, Repository}
-import graft.sparql.Parser
 
 /** The Generic Object Model — Blazegraph's `bigdata-gom` module
   * (reference: bigdata-core/bigdata-gom/src/java/com/bigdata/gom/)
@@ -443,8 +442,7 @@ final class Gpo private[gom] (om: ObjectManager, val id: String) {
   /** Exists (self,p,?) (IGPO.isBound). */
   def isBound(property: String): Boolean = getValues(property).nonEmpty
 
-  private def isResource(t: String): Boolean =
-    t.startsWith("_:") || (t.matches(Parser.IriShape + ".*") && !t.startsWith("_:"))
+  private def isResource(t: String): Boolean = !graft.rdf.Lexicon.isLiteral(t)
 
   /** All resources this object points at (IGPO.getLinksOut). */
   def getLinksOut: Seq[Gpo] =
@@ -631,13 +629,9 @@ trait GenericSkin {
   * (reference: gpo/BasicSkin.java — getString/getInt/getDouble/
   * getBoolean over the value factory). */
 final class BasicSkin(val gpo: Gpo) extends GenericSkin {
-  // driver-side facet strip of the string term model: "lex"@tag /
-  // "lex"^^dt → lex (the Column twin is RdfLiteral.strOf)
-  private def lex(t: String): String = {
-    val m = "(?s)^\"(.*)\"(@[A-Za-z0-9-]+|\\^\\^\\S+)$".r
-    t match { case m(l, _) => l; case _ => t }
-  }
-  def getString(p: String): Option[String] = gpo.getValue(p).map(lex)
+  /** The value's lexical form: "lex"@tag / "lex"^^dt → lex. */
+  def getString(p: String): Option[String] =
+    gpo.getValue(p).map(graft.sparql.RdfLiteral.strOf(_: String))
   def getInt(p: String): Option[Int] = getString(p).flatMap(_.toIntOption)
   def getLong(p: String): Option[Long] = getString(p).flatMap(_.toLongOption)
   def getDouble(p: String): Option[Double] = getString(p).flatMap(_.toDoubleOption)

@@ -179,7 +179,7 @@ object JsonLd {
           else if (idx < 0 && vocab.nonEmpty) vocab + t
           else t
         }
-      Scope.intern(iri, "")
+      Lexicon.intern(iri)
     }
 
     private def freshBnode(): String = { bn += 1; s"_:$docScope-gen$bn" }

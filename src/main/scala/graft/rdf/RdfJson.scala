@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   *       "uri"|"literal"|"bnode", "lang": …, "datatype": …} ] } } }}}
   *
   * Subjects/objects of type `bnode` carry `_:`-prefixed labels,
-  * document-scoped like every other loader; IRIs intern via [[Scope]];
+  * document-scoped like every other loader; IRIs intern via [[Lexicon]];
   * literals land as the [[graft.sparql.RdfLiteral]] term forms
   * (`lang` → tagged, `datatype` → typed; per the spec a value carries
   * at most one of the two). Whole-file parse per task, distributed
@@ -26,18 +26,18 @@ object RdfJson {
     val docScope = Scope.of(content)
     def node(id: String): String =
       if (id.startsWith("_:")) "_:" + docScope + "-" + id.drop(2)
-      else Scope.intern(id, "")
+      else Lexicon.intern(id)
     def obj(v: JsonNode): String = {
       val value = Option(v.get("value")).map(_.asText())
         .getOrElse(sys.error("rdf/json: object without \"value\""))
       v.path("type").asText("literal") match {
-        case "uri"   => Scope.intern(value, "")
+        case "uri"   => Lexicon.intern(value)
         // the spec prefixes bnode values with "_:"; accept bare labels
         case "bnode" => node(if (value.startsWith("_:")) value else "_:" + value)
         case "literal" =>
           val lang = Option(v.get("lang")).map(_.asText()).filter(_.nonEmpty)
           val dt = Option(v.get("datatype")).map(_.asText()).filter(_.nonEmpty)
-          dt.map(d => graft.sparql.RdfLiteral.typed(value, Scope.intern(d, "")))
+          dt.map(d => graft.sparql.RdfLiteral.typed(value, Lexicon.intern(d)))
             .orElse(lang.map(graft.sparql.RdfLiteral.tagged(value, _)))
             .getOrElse(value)
         case other => sys.error(s"rdf/json: unknown object type '$other'")
@@ -51,7 +51,7 @@ object RdfJson {
       if (!se.getValue.isObject)
         sys.error(s"rdf/json: subject '${se.getKey}' must map to an object")
       se.getValue.fields().asScala.foreach { pe =>
-        val p = Scope.intern(pe.getKey, "")
+        val p = Lexicon.intern(pe.getKey)
         if (!pe.getValue.isArray)
           sys.error(s"rdf/json: predicate '${pe.getKey}' must map to an array")
         pe.getValue.elements().asScala.foreach(v => out += ((s, p, obj(v))))

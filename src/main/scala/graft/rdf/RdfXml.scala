@@ -95,8 +95,6 @@ object RdfXml {
 
     private def textContent(e: Element): String = e.getTextContent
 
-    private def intern(iri: String, base: String): String = Scope.intern(iri, base)
-
     private def attr(e: Element, local: String): Option[String] =
       Option(e.getAttributeNS(RdfNs, local)).filter(_.nonEmpty)
 
@@ -119,12 +117,12 @@ object RdfXml {
     private def nodeElement(e: Element, base0: String, lang0: Option[String]): String = {
       val base = inheritedBase(e, base0)
       val lang = inherited(e, lang0)
-      val subj = attr(e, "about").map(intern(_, base))
-        .orElse(attr(e, "ID").map(id => intern(base + "#" + id, base)))
+      val subj = attr(e, "about").map(Lexicon.intern(_, base))
+        .orElse(attr(e, "ID").map(id => Lexicon.intern(base + "#" + id, base)))
         .orElse(attr(e, "nodeID").map("_:" + docScope + "-" + _))
         .getOrElse(freshBnode())
       if (!(nsOf(e) == RdfNs && e.getLocalName == "Description"))
-        out += ((subj, "type", intern(nsOf(e) + e.getLocalName, base)))
+        out += ((subj, "type", Lexicon.intern(nsOf(e) + e.getLocalName, base)))
       propertyAttributes(e, subj, base, lang)
       var li = 0
       childElements(e).foreach { pe =>
@@ -146,7 +144,7 @@ object RdfXml {
         val isSyntax = ns == RdfNs || ns == "http://www.w3.org/XML/1998/namespace" ||
           ns == "http://www.w3.org/2000/xmlns/" || a.getNodeName.startsWith("xml")
         if (!isSyntax && ns.nonEmpty)
-          out += ((subj, intern(ns + a.getLocalName, base), literal(a.getNodeValue, lang, None)))
+          out += ((subj, Lexicon.intern(ns + a.getLocalName, base), literal(a.getNodeValue, lang, None)))
       }
     }
 
@@ -154,8 +152,8 @@ object RdfXml {
       * document order; everything else is its expanded name. */
     private def predicateOf(pe: Element, base: String, li: Int): (String, Int) =
       if (pe.getNamespaceURI == RdfNs && pe.getLocalName == "li")
-        (intern(RdfNs + "_" + (li + 1), base), li + 1)
-      else (intern(nsOf(pe) + pe.getLocalName, base), li)
+        (Lexicon.intern(RdfNs + "_" + (li + 1), base), li + 1)
+      else (Lexicon.intern(nsOf(pe) + pe.getLocalName, base), li)
 
     private def literal(lex: String, lang: Option[String], dt: Option[String]): String =
       dt.map(graft.sparql.RdfLiteral.typed(lex, _))
@@ -211,8 +209,8 @@ object RdfXml {
         case (Some(other), _, _) =>
           fail(s"parseType=\"$other\" is not supported")
         case (None, Some(res), _) =>
-          out += ((subj, p, intern(res, base)))
-          propertyAttributes(pe, intern(res, base), base, lang)
+          out += ((subj, p, Lexicon.intern(res, base)))
+          propertyAttributes(pe, Lexicon.intern(res, base), base, lang)
         case (None, None, Some(id)) =>
           out += ((subj, p, "_:" + docScope + "-" + id))
         case (None, None, None) if kids.nonEmpty =>
@@ -220,7 +218,7 @@ object RdfXml {
           kids.foreach(k => out += ((subj, p, nodeElement(k, base, lang))))
         case _ =>
           out += ((subj, p, literal(textContent(pe), lang,
-            attr(pe, "datatype").map(intern(_, base)))))
+            attr(pe, "datatype").map(Lexicon.intern(_, base)))))
       }
     }
   }

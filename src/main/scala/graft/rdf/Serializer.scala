@@ -11,80 +11,27 @@ import org.apache.spark.sql.functions._
   * parallel (no document-global state like Turtle prefixes).
   *
   * Inverse of the LOAD readers ([[graft.sparql.Update.loadTriples]] /
-  * `loadQuads`): base-local terms re-expand under `urn:graft:`, global
-  * IRIs pass through, tagged/typed literal term forms
-  * ([[graft.sparql.RdfLiteral]]) render as `"lex"@lang` /
-  * `"lex"^^<dt>`, everything else quotes as a literal with escapes.
-  * Term-type rule matches the engine's isIRI semantics: scheme-shaped
-  * terms are IRIs (the string lexicon's documented convention).
+  * `loadQuads`). Every term renders through [[Lexicon]]: its IRI, its
+  * N-Triples token, its escapes and its kind.
   */
 object Serializer {
-
-  /** Schemes treated as GLOBAL IRIs; any other scheme-shaped term is a
-    * base-local id (`c:42` ⇄ `<urn:graft:c:42>`), matching the
-    * loaders' interning. */
-  private val globalScheme = "^(http|https|urn|file|mailto|did|tag):"
-
-  /** Escapes backslash FIRST, then `"`, newline, carriage return, tab
-    * (the characters that would break the line format — an unescaped
-    * `\r` even SPLITS the record in Spark's text reader). Escaping
-    * `\` first makes the chain lossless: a literal containing the raw
-    * two-char text `\n` renders as `\\n` and reloads as `\n`, while a
-    * real newline renders as `\n` and reloads as a newline — the
-    * loaders' sentinel unescape ([[graft.sparql.Update]]) is the exact
-    * inverse. Backslashes are common in code corpora; this must not
-    * alias. */
-  private def escape(c: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      c, "\\\\", "\\\\\\\\"),
-      "\"", "\\\\\""), "\n", "\\\\n"), "\r", "\\\\r"), "\t", "\\\\t")
-
-  /** Resource position (s/p/g): bnode label or an angle-bracketed IRI,
-    * re-expanding base-local names. */
-  private def resource(c: Column): Column =
-    when(c.startsWith("_:"), c)
-      // the canonical `type` term re-expands to rdf:type, its source
-      // IRI (Parser.RdfTypeIri — the intern seams' inverse)
-      .when(c === "type", lit("<" + graft.sparql.Parser.RdfTypeIri + ">"))
-      .when(c.rlike(globalScheme), concat(lit("<"), c, lit(">")))
-      .otherwise(concat(lit("<" + graft.sparql.Parser.Base), c, lit(">")))
-
-  /** Object position, parameterized by the resource renderer (angle
-    * brackets for N-Triples, prefix compression for Turtle/TriG):
-    * IRI/bnode → resource form; tagged/typed literals re-quote their
-    * LEXICAL form through escape() (a raw facet form with embedded
-    * quotes or newlines would break the line format); plain literals
-    * quote + escape. */
-  private def objTermWith(c: Column, res: Column => Column): Column = {
-    val lit0 = graft.sparql.RdfLiteral
-    when(c.startsWith("_:"), c)
-      .when(lit0.isTagged(c), concat(
-        lit("\""), escape(lit0.strOf(c)), lit("\"@"), lit0.langOf(c)))
-      .when(lit0.isTyped(c), concat(
-        lit("\""), escape(lit0.strOf(c)), lit("\"^^"),
-        res(lit0.typedDatatypeOf(c))))
-      .when(c.rlike(graft.sparql.Parser.IriShape), res(c))
-      .otherwise(concat(lit("\""), escape(c), lit("\"")))
-  }
-
-  private def objTerm(c: Column): Column = objTermWith(c, resource)
 
   /** triples(s,p,o) → one N-Triples line per row (column `value`). */
   def toNTriples(triples: DataFrame): DataFrame =
     triples.select(concat(
-      resource(col("s")), lit(" "), resource(col("p")), lit(" "),
-      objTerm(col("o")), lit(" .")).as("value"))
+      Lexicon.resource(col("s")), lit(" "), Lexicon.resource(col("p")), lit(" "),
+      Lexicon.token(col("o")), lit(" .")).as("value"))
 
   /** quads(s,p,o,g) → one N-Quads line per row (column `value`). */
   def toNQuads(quads: DataFrame): DataFrame =
     quads.select(concat(
-      resource(col("s")), lit(" "), resource(col("p")), lit(" "),
-      objTerm(col("o")), lit(" "), resource(col("g")), lit(" .")).as("value"))
+      Lexicon.resource(col("s")), lit(" "), Lexicon.resource(col("p")), lit(" "),
+      Lexicon.token(col("o")), lit(" "), Lexicon.resource(col("g")), lit(" .")).as("value"))
 
   /** Default Turtle prefix table: the engine base plus the vocabularies
     * the term model actually emits. */
   val defaultPrefixes: Seq[(String, String)] = Seq(
-    "g" -> graft.sparql.Parser.Base,
+    "g" -> Lexicon.Base,
     "xsd" -> "http://www.w3.org/2001/XMLSchema#",
     "rdf" -> "http://www.w3.org/1999/02/22-rdf-syntax-ns#")
 
@@ -132,7 +79,7 @@ object Serializer {
   private def subjectBlocks(df: DataFrame, prefixes: Seq[(String, String)],
                             extraKeys: Seq[Column] = Seq.empty): DataFrame = {
     val res = compressTerm(_: Column, prefixes)
-    val obj = objTermWith(col("o"), res)
+    val obj = Lexicon.token(col("o"), res)
     val pred = when(col("p") === "type", lit("a")).otherwise(res(col("p")))
     df.groupBy(extraKeys :+ col("s") :+ pred.as("pt"): _*)
       .agg(concat_ws(" , ", sort_array(collect_list(obj))).as("objs"))
@@ -141,21 +88,25 @@ object Serializer {
         sort_array(collect_list(concat(col("pt"), lit(" "), col("objs"))))).as("body"))
   }
 
-  /** Prefix-compress a full-or-local resource term (longest namespace
-    * wins — Turtle 1.1 PN_LOCAL allows ':', so base-local ids like
-    * `c:42` compress to `g:c:42`); bnodes pass through, no-match falls
-    * back to `<iri>`. */
-  private def compressTerm(c: Column, prefixes: Seq[(String, String)]): Column = {
-    val full = when(c.rlike(globalScheme), c)
-      .otherwise(concat(lit(graft.sparql.Parser.Base), c))
-    val fallback = concat(lit("<"), full, lit(">"))
-    val compressed = prefixes.sortBy(-_._2.length).foldRight(fallback) {
+  /** Prefix-compress a resource term's IRI (longest namespace wins —
+    * Turtle 1.1 PN_LOCAL allows ':', so base-local ids like `c:42`
+    * compress to `g:c:42`); bnodes pass through, no match falls back
+    * to `<iri>`. */
+  private def compressTerm(c: Column, prefixes: Seq[(String, String)]): Column =
+    compress(c, prefixes, full => concat(lit("<"), full, lit(">")))
+
+  /** `pfx:local` for the longest namespace of the term's IRI, else
+    * `fallback(iri)`; bnode labels pass through. */
+  private def compress(c: Column, prefixes: Seq[(String, String)],
+                       fallback: Column => Column): Column = {
+    val full = Lexicon.iri(c)
+    val compressed = prefixes.sortBy(-_._2.length).foldRight(fallback(full)) {
       case ((p, ns), els) =>
         when(full.startsWith(ns),
           concat(lit(p + ":"), full.substr(lit(ns.length + 1), lit(Int.MaxValue))))
           .otherwise(els)
     }
-    when(c.startsWith("_:"), c).otherwise(compressed)
+    when(Lexicon.isBnode(c), c).otherwise(compressed)
   }
 
   /** JSON-LD EXPORT: one flat node object per SUBJECT (column
@@ -180,9 +131,9 @@ object Serializer {
   def toJsonLd(triples: DataFrame): DataFrame = {
     val c = col("o")
     val lit0 = graft.sparql.RdfLiteral
-    val resRef = (t: Column) => when(t.startsWith("_:"), t).otherwise(iriOf(t))
+    val resRef = (t: Column) => when(Lexicon.isBnode(t), t).otherwise(Lexicon.iri(t))
     val objJson =
-      when(c.startsWith("_:") || c.rlike(graft.sparql.Parser.IriShape),
+      when(!Lexicon.isLiteral(c),
         concat(lit("{\"@id\":"), jsonStr(resRef(c)), lit("}")))
         .when(lit0.isTagged(c), concat(
           lit("{\"@value\":"), jsonStr(lit0.strOf(c)),
@@ -194,7 +145,7 @@ object Serializer {
     val isType = col("p") === "type"
     // rdf:type → "@type": [name strings]; other predicates key their
     // object arrays; '@' sorts first so @type lands before predicates
-    val rendered = when(isType, jsonStr(when(c.rlike(graft.sparql.Parser.IriShape), iriOf(c)).otherwise(c)))
+    val rendered = when(isType, jsonStr(when(Lexicon.isIri(c), Lexicon.iri(c)).otherwise(c)))
       .otherwise(objJson)
     triples
       .groupBy(col("s"), when(isType, lit("\"@type\"")).otherwise(jsonStr(col("p"))).as("key"))
@@ -229,20 +180,11 @@ object Serializer {
                       prefixes: Seq[(String, String)] = defaultPrefixes): DataFrame = {
     // compact IRI: longest namespace wins, bnodes pass, no-match keeps
     // the full IRI (JSON-LD needs no angle brackets, unlike Turtle)
-    def compactIri(c: Column): Column = {
-      val full = iriOf(c)
-      val compressed = prefixes.sortBy(-_._2.length).foldRight(full) {
-        case ((p, ns), els) =>
-          when(full.startsWith(ns),
-            concat(lit(p + ":"), full.substr(lit(ns.length + 1), lit(Int.MaxValue))))
-            .otherwise(els)
-      }
-      when(c.startsWith("_:"), c).otherwise(compressed)
-    }
+    def compactIri(c: Column): Column = compress(c, prefixes, identity)
     val c = col("o")
     val lit0 = graft.sparql.RdfLiteral
     val objJson =
-      when(c.startsWith("_:") || c.rlike(graft.sparql.Parser.IriShape),
+      when(!Lexicon.isLiteral(c),
         concat(lit("{\"@id\":"), jsonStr(compactIri(c)), lit("}")))
         .when(lit0.isTagged(c), concat(
           lit("{\"@value\":"), jsonStr(lit0.strOf(c)),
@@ -281,19 +223,18 @@ object Serializer {
     val c = col("o")
     val lit0 = graft.sparql.RdfLiteral
     // predicate element QName: lexicon-local names live in the g:
-    // (engine-base) namespace — g:name, g:type (the loader maps them
-    // back: parse(g:type) → "type"); a full-IRI predicate splits at
-    // its last '#'/'/' into a local xmlns:n declaration, the standard
-    // RDF/XML writer rule
-    val isGlobalP = col("p").rlike(globalScheme)
-    val qname = when(isGlobalP,
-      concat(lit("n:"), regexp_extract(col("p"), "([^#/]+)$", 1)))
-      .otherwise(concat(lit("g:"), col("p")))
-    val nsDecl = when(isGlobalP, concat(
-      lit(" xmlns:n=\""), attrEsc(regexp_extract(col("p"), "^(.*[#/])[^#/]*$", 1)), lit("\"")))
-      .otherwise(lit(""))
+    // (engine-base) namespace — g:name (the loader maps it back); any
+    // other predicate IRI, rdf:type among them, splits at its last
+    // '#'/'/' into a local xmlns:n declaration, the standard RDF/XML
+    // writer rule
+    val isLocalP = Lexicon.isLocal(col("p"))
+    val pIri = Lexicon.iri(col("p"))
+    val qname = when(isLocalP, concat(lit("g:"), col("p")))
+      .otherwise(concat(lit("n:"), regexp_extract(pIri, "([^#/]+)$", 1)))
+    val nsDecl = when(isLocalP, lit("")).otherwise(concat(
+      lit(" xmlns:n=\""), attrEsc(regexp_extract(pIri, "^(.*[#/])[^#/]*$", 1)), lit("\"")))
     val obj =
-      when(c.startsWith("_:"), concat(
+      when(Lexicon.isBnode(c), concat(
         lit("<"), qname, nsDecl,
         lit(" rdf:nodeID=\""), attrEsc(regexp_replace(c, "^_:", "")), lit("\"/>")))
         .when(lit0.isTagged(c), concat(
@@ -303,13 +244,13 @@ object Serializer {
           lit("<"), qname, nsDecl, lit(" rdf:datatype=\""),
           attrEsc(lit0.typedDatatypeOf(c)), lit("\">"),
           esc(lit0.strOf(c)), lit("</"), qname, lit(">")))
-        .when(c.rlike(graft.sparql.Parser.IriShape), concat(
-          lit("<"), qname, nsDecl, lit(" rdf:resource=\""), attrEsc(iriOf(c)), lit("\"/>")))
+        .when(Lexicon.isIri(c), concat(
+          lit("<"), qname, nsDecl, lit(" rdf:resource=\""), attrEsc(Lexicon.iri(c)), lit("\"/>")))
         .otherwise(concat(
           lit("<"), qname, nsDecl, lit(">"), esc(c), lit("</"), qname, lit(">")))
-    val subjAttr = when(col("s").startsWith("_:"),
+    val subjAttr = when(Lexicon.isBnode(col("s")),
       concat(lit("rdf:nodeID=\""), attrEsc(regexp_replace(col("s"), "^_:", "")), lit("\"")))
-      .otherwise(concat(lit("rdf:about=\""), attrEsc(iriOf(col("s"))), lit("\"")))
+      .otherwise(concat(lit("rdf:about=\""), attrEsc(Lexicon.iri(col("s"))), lit("\"")))
     triples
       .groupBy(col("s"))
       .agg(concat_ws("", sort_array(collect_list(obj))).as("body"))
@@ -320,7 +261,7 @@ object Serializer {
 
   def rdfXmlHead: String =
     """<?xml version="1.0"?><rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" """ +
-      s"""xmlns:g="${graft.sparql.Parser.Base}">"""
+      s"""xmlns:g="${Lexicon.Base}">"""
   val rdfXmlFoot: String = "</rdf:RDF>"
 
   // ---- SPARQL Query Results formats --------------------------------
@@ -336,15 +277,6 @@ object Serializer {
   // writes around the lines. Unbound variables (nulls) are omitted
   // (JSON/XML) or empty (CSV/TSV), per the specs.
 
-  /** The full IRI a term denotes (base-local names re-expand), no
-    * angle brackets — the JSON/XML/CSV `uri` rendering. */
-  private def iriOf(c: Column): Column =
-    when(c.rlike(globalScheme), c)
-      .otherwise(concat(lit(graft.sparql.Parser.Base), c))
-
-  private def isIriTerm(c: Column): Column =
-    c.rlike(graft.sparql.Parser.IriShape) && !c.startsWith("_:")
-
   /** One results.bindings element per row (column `value`): a JSON
     * object keyed by variable with `{"type","value","xml:lang",
     * "datatype"}` term objects. `to_json` owns the escaping; null
@@ -354,11 +286,11 @@ object Serializer {
     val fields = solutions.columns.map { v =>
       val c = col("`" + v + "`").cast("string")
       val term = when(c.isNull, lit(null).cast("struct<type:string,value:string,`xml:lang`:string,datatype:string>"))
-        .when(c.startsWith("_:"), struct(
+        .when(Lexicon.isBnode(c), struct(
           lit("bnode").as("type"), regexp_replace(c, "^_:", "").as("value"),
           lit(null).cast("string").as("xml:lang"), lit(null).cast("string").as("datatype")))
-        .when(isIriTerm(c), struct(
-          lit("uri").as("type"), iriOf(c).as("value"),
+        .when(Lexicon.isIri(c), struct(
+          lit("uri").as("type"), Lexicon.iri(c).as("value"),
           lit(null).cast("string").as("xml:lang"), lit(null).cast("string").as("datatype")))
         .otherwise(struct(
           lit("literal").as("type"), lit0.strOf(c).as("value"),
@@ -387,11 +319,11 @@ object Serializer {
     val bindings = solutions.columns.map { v =>
       val c = col("`" + v + "`").cast("string")
       when(c.isNull, lit(""))
-        .when(c.startsWith("_:"), concat(
+        .when(Lexicon.isBnode(c), concat(
           lit(s"""<binding name="$v"><bnode>"""),
           xmlEscape(regexp_replace(c, "^_:", "")), lit("</bnode></binding>")))
-        .when(isIriTerm(c), concat(
-          lit(s"""<binding name="$v"><uri>"""), xmlEscape(iriOf(c)), lit("</uri></binding>")))
+        .when(Lexicon.isIri(c), concat(
+          lit(s"""<binding name="$v"><uri>"""), xmlEscape(Lexicon.iri(c)), lit("</uri></binding>")))
         .when(lit0.isTagged(c), concat(
           lit(s"""<binding name="$v"><literal xml:lang=""""), lit0.langOf(c),
           lit("\">"), xmlEscape(lit0.strOf(c)), lit("</literal></binding>")))
@@ -425,8 +357,8 @@ object Serializer {
     val cells = solutions.columns.map { v =>
       val c = col("`" + v + "`").cast("string")
       val plain = when(c.isNull, lit(""))
-        .when(c.startsWith("_:"), c)
-        .when(isIriTerm(c), iriOf(c))
+        .when(Lexicon.isBnode(c), c)
+        .when(Lexicon.isIri(c), Lexicon.iri(c))
         .otherwise(lit0.strOf(c))
       when(plain.rlike("[,\"\n\r]"),
         concat(lit("\""), regexp_replace(plain, "\"", "\"\""), lit("\"")))
@@ -443,7 +375,7 @@ object Serializer {
       val c = col("`" + v + "`").cast("string")
       when(c.isNull, lit(""))
         .when(c.rlike("^[-+]?[0-9]+(\\.[0-9]+)?$"), c) // numbers stay bare
-        .otherwise(objTerm(c))
+        .otherwise(Lexicon.token(c))
     }
     solutions.select(concat_ws("\t", cells.toSeq: _*).as("value"))
   }

@@ -13,7 +13,7 @@ import org.w3c.dom.{Element, Node}
   * `<TriX>` root holding `<graph>` blocks; a graph's optional leading
   * `<uri>`/`<id>` names it (absent → the default graph), then
   * `<triple>` elements of exactly three term children —
-  * `<uri>` (IRIs, interned like every other loader via [[Scope]]),
+  * `<uri>` (IRIs, interned like every other loader via [[Lexicon]]),
   * `<id>` (blank nodes, document-scoped labels like Turtle/RDF-XML),
   * `<plainLiteral>` (optional `xml:lang` → tagged term) and
   * `<typedLiteral datatype=…>` (typed term). The DOM setup carries
@@ -53,7 +53,7 @@ object TriX {
         .collect { case el: Element => el }.toVector
     }
     def term(e: Element): String = e.getLocalName match {
-      case "uri" => Scope.intern(e.getTextContent.trim, "")
+      case "uri" => Lexicon.intern(e.getTextContent.trim)
       case "id"  => "_:" + docScope + "-" + e.getTextContent.trim
       case "plainLiteral" =>
         val lang = Option(e.getAttributeNS("http://www.w3.org/XML/1998/namespace", "lang"))
@@ -62,7 +62,7 @@ object TriX {
       case "typedLiteral" =>
         val dt = e.getAttribute("datatype")
         if (dt.isEmpty) sys.error("trix: <typedLiteral> needs a datatype attribute")
-        graft.sparql.RdfLiteral.typed(e.getTextContent, Scope.intern(dt, ""))
+        graft.sparql.RdfLiteral.typed(e.getTextContent, Lexicon.intern(dt))
       case other => sys.error(s"trix: unexpected term element <$other>")
     }
 

@@ -41,8 +41,7 @@ object TripleStorage {
   /** The object-id scheme of a term (`n:3` → `n`), `lit` for plain
     * literals — the OSP partition key. */
   private def objBucket(o: org.apache.spark.sql.Column) =
-    when(o.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"),
-      substring_index(o, ":", 1)).otherwise("lit")
+    when(Lexicon.isIri(o), substring_index(o, ":", 1)).otherwise("lit")
 
   /** OSP twin: the same triples partitioned by the OBJECT's id scheme
     * (literals pool under `lit`), objects sorted within partitions —
@@ -62,7 +61,7 @@ object TripleStorage {
       spark.read.parquet(path).select("s", "p", "o")
     override def scan(tp: TriplePattern): DataFrame = tp.o match {
       case Const(v) =>
-        val bucket = if (v.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*")) v.takeWhile(_ != ':') else "lit"
+        val bucket = if (Lexicon.isIri(v)) v.takeWhile(_ != ':') else "lit"
         TripleSource.filterScan(
           spark.read.parquet(path).filter(col("ob") === bucket).select("s", "p", "o"), tp)
       case _ => TripleSource.filterScan(triples, tp)

@@ -133,7 +133,7 @@ object Turtle {
       iri
     }
 
-    private def intern(iri: String): String = Scope.intern(iri, base)
+    private def intern(iri: String): String = Lexicon.intern(iri, base)
 
     /** Prefixed-name expansion; `_:label` bnodes rescope to the
       * document; undeclared-prefix terms (already-internal lexicon
@@ -288,45 +288,10 @@ object Turtle {
         nodes.head
       }
 
-    /** One content char into `sb`, decoding a backslash escape. */
-    private def consumeChar(sb: StringBuilder): Unit =
-      if (s(i) == '\\' && i + 1 < s.length) {
-        i += 1
-        sb += (s(i) match {
-          case 'n' => '\n'
-          case 't' => '\t'
-          case 'r' => '\r'
-          case 'u' =>
-            val h = s.substring(i + 1, i + 5); i += 4
-            Integer.parseInt(h, 16).toChar
-          case c => c // covers \" \\ and pass-through
-        })
-        i += 1
-      } else { sb += s(i); i += 1 }
-
     private def literal(): String = {
       val lex =
-        if (s.startsWith("\"\"\"", i)) {
-          // STRING_LITERAL_LONG_QUOTE [Turtle 1.1 22]: raw newlines and
-          // quotes allowed; the grammar permits up to TWO quotes before
-          // the closing delimiter (longest match), so a `"""` run with
-          // a quote right after it is content-quote + still-open
-          i += 3
-          val sb = new StringBuilder
-          while (i < s.length &&
-                 !(s.startsWith("\"\"\"", i) && !(i + 3 < s.length && s(i + 3) == '"')))
-            consumeChar(sb)
-          if (i >= s.length) fail("unterminated triple-quoted string")
-          i += 3
-          sb.toString
-        } else {
-          i += 1
-          val sb = new StringBuilder
-          while (i < s.length && s(i) != '"') consumeChar(sb)
-          if (i >= s.length) fail("unterminated string literal")
-          i += 1
-          sb.toString
-        }
+        try { val (l, after) = Lexicon.scanString(s, i); i = after; l }
+        catch { case e: RuntimeException => fail(e.getMessage) }
       if (i < s.length && s(i) == '@') {
         i += 1
         val st = i
@@ -361,18 +326,4 @@ private[rdf] object Scope {
     java.security.MessageDigest.getInstance("MD5")
       .digest(content.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
-
-  /** The ONE base-resolve + engine-base interning rule every loader
-    * applies (Parser.internIri analog): relative references resolve
-    * against `base` (pragmatic concat), engine-base IRIs intern to
-    * local lexicon names. Shared so the loaders cannot diverge. */
-  def intern(iri: String, base: String): String = {
-    val full =
-      if (base.nonEmpty && !iri.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*")) base + iri
-      else iri
-    if (full == graft.sparql.Parser.RdfTypeIri) "type" // canonical (Parser.RdfTypeIri)
-    else if (full.startsWith(graft.sparql.Parser.Base))
-      full.drop(graft.sparql.Parser.Base.length)
-    else full
-  }
 }

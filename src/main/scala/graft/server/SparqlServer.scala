@@ -2,7 +2,7 @@ package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.Graft
-import graft.rdf.{QuadStore, Repository, Serializer}
+import graft.rdf.{Lexicon, QuadStore, Repository, Serializer}
 import graft.sparql.{Algebra, Ask, Parser, Update}
 import java.net.InetSocketAddress
 import java.nio.file.{Files, Path, Paths}
@@ -975,7 +975,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
                             defaultKey: String, namedKey: String): (Seq[String], Seq[String]) = {
     val sources = Seq(rawQuery(ex)) ++ formBody.get().toSeq
     def all(key: String): Seq[String] =
-      sources.flatMap(multiParams(_, key)).map(internIri)
+      sources.flatMap(multiParams(_, key)).map(Lexicon.intern)
     (all(defaultKey), all(namedKey))
   }
 
@@ -1095,42 +1095,16 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * bodies on disk. */
   private def dropSpill(p: Path): Unit = { Files.deleteIfExists(p); () }
 
-  /** Intern a plain IRI the way the loaders do (`urn:graft:x` → `x`). */
-  private def internIri(iri: String): String =
-    if (iri.startsWith(Parser.Base)) iri.drop(Parser.Base.length) else iri
-
-  /** An N-Triples-encoded term parameter (`<iri>`, `"lit"`,
-    * `"lit"@lang`, `"lit"^^<dt>`, `_:b`) → the engine's term encoding;
-    * a bare value passes through (convenience the reference's ESTCARD
-    * does not need, but curl users will thank). */
-  private def ntTerm(t: String): String = {
-    // (?s): a literal term may carry raw newlines (the RdfLiteral
-    // DOTALL convention) — without it such a term falls through to
-    // the bare-value branch
-    val Tagged = "(?s)^\"(.*)\"@([A-Za-z0-9-]+)$".r
-    val Typed = "(?s)^\"(.*)\"\\^\\^<(.*)>$".r
-    val Quoted = "(?s)^\"(.*)\"$".r
-    def unesc(s: String): String = s
-      .replace("\\\\", "￿").replace("\\n", "\n").replace("\\r", "\r")
-      .replace("\\t", "\t").replace("\\\"", "\"").replace("￿", "\\")
-    t match {
-      case _ if t.startsWith("<") && t.endsWith(">") =>
-        internIri(t.substring(1, t.length - 1))
-      case Tagged(lex, lang) => "\"" + unesc(lex) + "\"@" + lang
-      case Typed(lex, dt)    => "\"" + unesc(lex) + "\"^^" + internIri(dt)
-      case Quoted(lex)       => unesc(lex)
-      case _                 => t
-    }
-  }
-
   /** The quad access path for ESTCARD/GETSTMTS: bound terms prune the
-    * scan (the narrow-scan pruning the quad source already proves). */
+    * scan (the narrow-scan pruning the quad source already proves).
+    * Each term is an N-Triples token (`<iri>`, `"lit"@lang`, `_:b`),
+    * or a bare term value. */
   private def accessPath(g: Graft, p: Map[String, Option[String]]): DataFrame = {
     import org.apache.spark.sql.functions.col
     Seq("s" -> "s", "p" -> "p", "o" -> "o", "c" -> "g").foldLeft(g.store.quads) {
       case (df, (param, column)) =>
         p.get(param).flatten match {
-          case Some(term) => df.filter(col(column) === ntTerm(term))
+          case Some(term) => df.filter(col(column) === Lexicon.fromToken(term))
           case None       => df
         }
     }
@@ -1398,7 +1372,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   private def handleInsert(ex: HttpExchange, ns: String): Unit = {
     val qp = params(rawQuery(ex))
     val graph = qp.get("context-uri").flatten.orElse(qp.get("graph").flatten)
-      .map(internIri)
+      .map(Lexicon.intern)
     val t = tenant(ns)
     val (quads, spill) = qp.get("uri").flatten match {
       case Some(uri) =>
@@ -1579,7 +1553,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     val t0 = System.currentTimeMillis()
     val qp = params(rawQuery(ex))
     val spoBound = Seq("s", "p", "o").exists(k => qp.get(k).flatten.isDefined)
-    val graph = qp.get("c").flatten.map(ntTerm)
+    val graph = qp.get("c").flatten.map(Lexicon.fromToken)
     val fast = if (spoBound) None else tenant(ns).metadataCount(graph)
     val (n, attrs) = fast match {
       case Some(m) => (m, s""" fastpath="metadata"""")
@@ -1604,7 +1578,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     try {
       require(ex.getRequestMethod == "POST", "dataloader requires POST")
       val qp = params(rawQuery(ex))
-      val graph = qp.get("graph").flatten.map(internIri)
+      val graph = qp.get("graph").flatten.map(Lexicon.intern)
       val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
       val paths = body.split('\n').map(_.trim)
         .filter(p => p.nonEmpty && !p.startsWith("#")).toSeq
@@ -1630,11 +1604,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       tenant(ns).current.store.graphs.collect().map(_.getString(0)).sorted
     }
     def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;").replace("\"", "&quot;")
-    val body = gs.map { g =>
-      val iri = if (g.matches("^(http|https|urn|file|mailto|did|tag):.*")) g
-                else Parser.Base + g
-      s"""<context uri="${esc(iri)}"/>"""
-    }.mkString
+    val body = gs.map(g => s"""<context uri="${esc(Lexicon.iri(g))}"/>""").mkString
     respond(ex, 200, "application/xml",
       s"""<?xml version="1.0"?><contexts>$body</contexts>""")
   }
@@ -1665,7 +1635,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val t = tenant(ns)
       val g =
         if (qp.contains("default")) t.current.defaultGraph
-        else internIri(qp.get("graph").flatten.getOrElse(
+        else Lexicon.intern(qp.get("graph").flatten.getOrElse(
           sys.error("graph store request needs ?graph=<iri> or ?default")))
       def graphRows = t.current.store.graph(g)
       ex.getRequestMethod match {
@@ -1992,15 +1962,13 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         require(ex.getRequestMethod == "POST", "blueprints requires GET or POST")
         val form = params(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
         def p(k: String) = form.get(k).flatten.getOrElse(sys.error(s"missing param $k"))
-        // bare ids render under the engine base (the loaders intern it
-        // back to the local name MutableGraph uses); full IRIs pass
+        // ids render as IRIs (the parser interns them back to the
+        // terms MutableGraph uses)
         def iri(x: String) = {
           require(x.matches("[^\\s<>\"{}|^`]+"), s"bad term: $x")
-          if (x.matches("^(http|https|urn|file|mailto|did|tag):.*")) s"<$x>"
-          else s"<${Parser.Base}$x>"
+          "<" + Lexicon.iri(x) + ">"
         }
-        def strLit(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
+        def strLit(x: String) = "\"" + Lexicon.escape(x) + "\""
         val text = p("op") match {
           case "addVertex" =>
             s"INSERT DATA { ${iri(p("id"))} ${iri("type")} ${iri(form.get("label").flatten.getOrElse("Vertex"))} }"

@@ -63,9 +63,8 @@ object BuiltinServices {
     * the per-query slow path above and by the persisted literal
     * index's build/maintenance ([[graft.rdf.TextIndexMaintenance]]). */
   private[graft] def literalSpace(rel: DataFrame): DataFrame = {
-    val t = rel.select(col("o").cast("string").as("t")).distinct()
-    val isIri = col("t").rlike(Parser.IriShape) && !col("t").startsWith("_:")
-    t.filter(!isIri && !col("t").startsWith("_:"))
+    rel.select(col("o").cast("string").as("t")).distinct()
+      .filter(graft.rdf.Lexicon.isLiteral(col("t")))
       .select(col("t").as("doc_id"), RdfLiteral.strOf(col("t")).as("text"))
   }
 
@@ -249,10 +248,7 @@ object BuiltinServices {
         .select(col("s"), col("o").cast("string").as("o"))
         .filter(if (matchAll) conds.reduce(_ && _) else conds.reduce(_ || _))
         .localCheckpoint()
-      val isIri = col("t").rlike(Parser.IriShape) && !col("t").startsWith("_:")
-      val corpus = candRows.select(col("o").as("t")).distinct()
-        .filter(!isIri && !col("t").startsWith("_:"))
-        .select(col("t").as("doc_id"), RdfLiteral.strOf(col("t")).as("text"))
+      val corpus = literalSpace(candRows)
       // matchExact (verbatim phrase containment against the literal's
       // lexical form) is rank-independent — it composes with the
       // prefiltered candidate corpus

@@ -209,8 +209,7 @@ object FtsService {
       // when vf.createURI rejects the hit value
       // (FulltextSearchServiceFactory.java:558-567; the corpus'
       // fts-typeCastException case asserts the failure)
-      if (resultType == "URI" &&
-          !(value.matches(Parser.IriShape + ".*") && !value.startsWith("_:")))
+      if (resultType == "URI" && !graft.rdf.Lexicon.isIri(value))
         sys.error("Type cast exception: search result value is not a " +
           s"URI under fts:searchResultType URI: $value")
       Some(Row.fromSeq(

@@ -3,6 +3,8 @@ package graft.sparql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.rdf.Lexicon
+
 /** Recursive-descent parser for a practical subset of SPARQL 1.1,
   * producing [[Algebra]] (which Compiler turns into a DataFrame plan).
   *
@@ -32,20 +34,10 @@ import org.apache.spark.sql.functions._
   */
 object Parser {
 
-  /** The engine vocabulary base IRI: terms under it normalize to their
-    * local names. */
-  val Base = "urn:graft:"
-
-  /** Lexical shape of an IRI term in the string lexicon: a scheme
-    * prefix (`c:`, `urn:`, `http:`) — SURVEY §3's id forms. */
-  private[graft] val IriShape = "^[A-Za-z][A-Za-z0-9+.-]*:"
-
-  /** The full rdf:type IRI. The lexicon's canonical term for it is the
-    * local name `type` (what `a` sugar, the RDF/XML typed-element rule
-    * and the JSON-LD `@type` key already produce) — every interning
-    * seam maps the full IRI down to it and the serializers expand it
-    * back, so `a`, `rdf:type` and `<http://…#type>` are ONE term. */
-  val RdfTypeIri = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+  /** The engine vocabulary base IRI and the rdf:type IRI
+    * ([[graft.rdf.Lexicon]] owns the term encoding). */
+  val Base = Lexicon.Base
+  val RdfTypeIri = Lexicon.RdfTypeIri
 
   /** The reference's magic-service namespace IRIs → the engine's
     * prefix-name spellings (SearchServiceFactory's BDS namespace,
@@ -73,43 +65,6 @@ object Parser {
   // ---- tokenizer ----
   private val symbolChars = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_:#-.".toSet
 
-  /** Scan one string literal starting at `q(start)` (a quote char):
-    * short or long (tripled delimiter) form, single or double quotes
-    * (grammar [156-159] STRING_LITERAL1/2/LONG1/LONG2), backslash
-    * escapes decoded (ECHAR + UCHAR). Returns (decoded lexical form,
-    * index just past the closing delimiter). */
-  private def scanStringLiteral(q: String, start: Int): (String, Int) = {
-    val quote = q(start)
-    val long = q.startsWith(quote.toString * 3, start)
-    var i = start + (if (long) 3 else 1)
-    val sb = new StringBuilder
-    while (i < q.length) {
-      if (long && q.startsWith(quote.toString * 3, i) &&
-          !(i + 3 < q.length && q(i + 3) == quote))
-        return (sb.toString, i + 3)
-      if (!long && q(i) == quote) return (sb.toString, i + 1)
-      if (q(i) == '\\' && i + 1 < q.length) {
-        i += 1
-        q(i) match {
-          case 'n' => sb += '\n'; i += 1
-          case 't' => sb += '\t'; i += 1
-          case 'r' => sb += '\r'; i += 1
-          case 'b' => sb += '\b'; i += 1
-          case 'f' => sb += '\f'; i += 1
-          case 'u' => sb += Integer.parseInt(q.substring(i + 1, i + 5), 16).toChar; i += 5
-          case 'U' => sb.appendAll(Character.toChars(
-            Integer.parseInt(q.substring(i + 1, i + 9), 16))); i += 9
-          case c => sb += c; i += 1 // \" \' \\ pass through decoded
-        }
-      } else {
-        require(long || (q(i) != '\n' && q(i) != '\r'),
-          s"unterminated string literal at $start")
-        sb += q(i); i += 1
-      }
-    }
-    sys.error(s"unterminated string literal at $start")
-  }
-
   private[sparql] def tokenize(q: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
@@ -127,7 +82,7 @@ object Parser {
         // (grammar [156-159]), backslash escapes decoded. Emitted
         // normalized as a double-quoted token so every downstream
         // consumer sees ONE form.
-        val (lex, after) = scanStringLiteral(q, i)
+        val (lex, after) = Lexicon.scanString(q, i)
         var j = after
         val sb = new StringBuilder("\"").append(lex).append('"')
         if (j < q.length && q(j) == '@') {
@@ -1525,12 +1480,10 @@ object Parser {
       val a = a0.cast("string")
       val b = b0.cast("string")
       val (na, nb) = (RdfLiteral.numOf(a), RdfLiteral.numOf(b))
-      def isLit(c: Column) =
-        !c.rlike(Parser.IriShape) && !c.startsWith("_:")
       val indeterminate =
         (RdfLiteral.illComparable(a) || RdfLiteral.illComparable(b)) &&
           !RdfLiteral.isTagged(a) && !RdfLiteral.isTagged(b) &&
-          isLit(a) && isLit(b)
+          Lexicon.isLiteral(a) && Lexicon.isLiteral(b)
       when(a === b, lit(true))
         .when(na.isNotNull && nb.isNotNull, na === nb)
         .when(indeterminate, lit(null).cast("boolean"))
@@ -1618,17 +1571,14 @@ object Parser {
         else t
       }
 
-    /** IRIs under the engine base intern to their local name; the full
-      * rdf:type IRI interns to the canonical `type` (see [[RdfTypeIri]]);
-      * the reference's magic-service namespaces intern to the engine's
-      * prefix names, so `PREFIX bd: <…/rdf/search#>` queries hit the
-      * same lift/registry paths as the `bds:`-spelled ones. */
+    /** [[Lexicon.intern]], plus a query-only rule: the reference's
+      * magic-service namespaces intern to the engine's prefix names,
+      * so `PREFIX bd: <…/rdf/search#>` queries hit the same
+      * lift/registry paths as the `bds:`-spelled ones. */
     private def internIri(iri: String): String =
-      if (iri == RdfTypeIri) "type"
-      else Parser.NsAliases.collectFirst {
+      Parser.NsAliases.collectFirst {
         case (ns, pfx) if iri.startsWith(ns) => pfx + iri.drop(ns.length)
-      }.getOrElse(
-        if (iri.startsWith(Base)) iri.drop(Base.length) else iri)
+      }.getOrElse(Lexicon.intern(iri))
 
     private def term(t: String): Term =
       if (t.startsWith("?")) {
@@ -1836,14 +1786,14 @@ object Parser {
         // `urn:…` — scheme-prefixed; the same term-type rule the
         // object-bound access path uses to prune literal branches);
         // everything else is a literal. The model has no blank nodes.
-        case "ISIRI" | "ISURI" => a(0).rlike(IriShape) && !a(0).startsWith("_:")
-        case "ISLITERAL"       => !a(0).rlike(IriShape) && !a(0).startsWith("_:")
+        case "ISIRI" | "ISURI" => Lexicon.isIri(a(0))
+        case "ISLITERAL"       => Lexicon.isLiteral(a(0))
         // numeric lexical form, plain or numerically-typed (a tagged
         // literal is rdf:langString, never numeric)
         case "ISNUMERIC" =>
           RdfLiteral.strOf(a(0)).rlike("^[-+]?[0-9]+(\\.[0-9]+)?$") &&
             !RdfLiteral.isTagged(a(0))
-        case "ISBLANK"         => a(0).startsWith("_:")
+        case "ISBLANK"         => Lexicon.isBnode(a(0))
         // §17.4.2.{6-9} + §17.4.3.1: lang/datatype facet introspection
         // over the tagged-literal term forms (RdfLiteral)
         case "LANG"        => RdfLiteral.langOf(a(0))
@@ -1853,8 +1803,7 @@ object Parser {
         case "STRDT"       => RdfLiteral.strDt(a(0), a(1))
         // §17.4.2.8 IRI(str): strips any literal facet; base-relative
         // IRIs intern to local names (the lexicon-internalization rule)
-        case "IRI" | "URI" =>
-          regexp_replace(RdfLiteral.strOf(a(0).cast("string")), "^" + Base, "")
+        case "IRI" | "URI" => Lexicon.intern(RdfLiteral.strOf(a(0).cast("string")))
         // §17.4.2.9 BNODE(str): deterministic label per lexical form
         case "BNODE" => concat(lit("_:"), a(0))
         // §17.4.6 ENCODE_FOR_URI: percent-encode everything outside

@@ -39,6 +39,19 @@ object RdfLiteral {
     * and be treated as a plain literal. */
   private val langShape = "(?s)^\".*\"@[A-Za-z]+(-[A-Za-z0-9]+)*$"
   private val typedShape = "(?s)^\".*\"\\^\\^"
+  private val LexOf = "(?s)^\"(.*)\"(@|\\^\\^)"
+  private val LangOf = "(?s)^\".*\"@(.*)$"
+  private val DatatypeOf = "(?s)^\".*\"\\^\\^(.*)$"
+
+  /** `regexp_extract(_, regex, 1)` for the driver-side String twins
+    * ([[graft.rdf.Lexicon]]): "" when nothing matches. */
+  private def extract1(regex: String): String => String = {
+    val p = java.util.regex.Pattern.compile(regex)
+    s => { val m = p.matcher(s); if (m.find()) m.group(1) else "" }
+  }
+  private val lexOf = extract1(LexOf)
+  private val tagOf = extract1(LangOf)
+  private val dtOf = extract1(DatatypeOf)
 
   // ---- Scala-side constructors (parser constants, ingest, tests) ----
   def tagged(lex: String, lang: String): String = "\"" + lex + "\"@" + lang
@@ -46,16 +59,21 @@ object RdfLiteral {
 
   def isTagged(c: Column): Column = c.rlike(langShape)
   def isTyped(c: Column): Column = c.rlike(typedShape)
+  private val taggedShaped = java.util.regex.Pattern.compile(langShape)
+  private val typedShaped = java.util.regex.Pattern.compile(typedShape)
+  def isTagged(t: String): Boolean = taggedShaped.matcher(t).find()
+  def isTyped(t: String): Boolean = typedShaped.matcher(t).find()
 
   /** STR (§17.4.2.5): the lexical form — strips the tag facet; IRIs
     * and plain literals pass through unchanged. */
   def strOf(c: Column): Column =
-    when(isTagged(c) || isTyped(c), regexp_extract(c, "(?s)^\"(.*)\"(@|\\^\\^)", 1))
-      .otherwise(c)
+    when(isTagged(c) || isTyped(c), regexp_extract(c, LexOf, 1)).otherwise(c)
+  def strOf(t: String): String = if (isTagged(t) || isTyped(t)) lexOf(t) else t
 
   /** LANG (§17.4.2.6): the language tag; '' for any untagged term. */
   def langOf(c: Column): Column =
-    when(isTagged(c), regexp_extract(c, "(?s)^\".*\"@(.*)$", 1)).otherwise(lit(""))
+    when(isTagged(c), regexp_extract(c, LangOf, 1)).otherwise(lit(""))
+  def langOf(t: String): String = if (isTagged(t)) tagOf(t) else ""
 
   /** DATATYPE (§17.4.2.7): explicit datatype of a typed literal;
     * rdf:langString for tagged; numeric-shaped plain terms report
@@ -64,9 +82,9 @@ object RdfLiteral {
     * other plain literals xsd:string; IRIs are a type error → unbound
     * (null). */
   def datatypeOf(c: Column): Column =
-    when(isTyped(c), regexp_extract(c, "(?s)^\".*\"\\^\\^(.*)$", 1))
+    when(isTyped(c), typedDatatypeOf(c))
       .when(isTagged(c), lit(RdfLangString))
-      .when(c.rlike(Parser.IriShape), lit(null).cast("string"))
+      .when(graft.rdf.Lexicon.isIri(c), lit(null).cast("string"))
       .when(c.rlike("^[-+]?[0-9]+$"), lit(XsdInteger))
       .when(c.rlike("^[-+]?[0-9]*\\.[0-9]+$"), lit(XsdDecimal))
       .otherwise(lit(XsdString))
@@ -75,8 +93,8 @@ object RdfLiteral {
     * single extract every serializer shares (callers guard with
     * [[isTyped]]). `(?s)` so a lexical form spanning newlines still
     * yields its datatype instead of an empty string. */
-  def typedDatatypeOf(c: Column): Column =
-    regexp_extract(c, "(?s)^\".*\"\\^\\^(.*)$", 1)
+  def typedDatatypeOf(c: Column): Column = regexp_extract(c, DatatypeOf, 1)
+  def typedDatatypeOf(t: String): String = dtOf(t)
 
   /** LANGMATCHES (§17.4.3.1 / RFC 4647 basic filtering): '*' matches
     * any non-empty tag; otherwise case-insensitive exact match or
@@ -133,7 +151,7 @@ object RdfLiteral {
       .when(lower(lex) === "true", lit(true))
       .when(lower(lex) === "false", lit(false))
       .when(numOf(c).isNotNull, numOf(c) =!= 0.0)
-      .when(c.rlike(Parser.IriShape) || c.startsWith("_:"), lit(false))
+      .when(!graft.rdf.Lexicon.isLiteral(c), lit(false))
       .otherwise(length(lex) > 0)
   }
 

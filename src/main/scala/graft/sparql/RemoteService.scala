@@ -61,7 +61,7 @@ object RemoteService {
   /** W3C SPARQL JSON results document → solutions DataFrame (one
     * string column per `head.vars` entry, null for unbound). Term
     * conversion is the inverse of the engine's JSON results writer:
-    * `uri` values intern under the engine base, `bnode` labels regain
+    * `uri` values intern ([[graft.rdf.Lexicon.intern]]), `bnode` labels regain
     * `_:`, literals with `xml:lang`/non-string `datatype` land as the
     * [[RdfLiteral]] tagged/typed term forms. */
   def parseJsonResults(spark: SparkSession, json: String): DataFrame = {
@@ -76,8 +76,7 @@ object RemoteService {
           val t = b.get(v)
           val value = t.path("value").asText()
           t.path("type").asText() match {
-            case "uri" =>
-              if (value.startsWith(Parser.Base)) value.drop(Parser.Base.length) else value
+            case "uri" => graft.rdf.Lexicon.intern(value)
             case "bnode" => "_:" + value
             case _ => // "literal" (and legacy "typed-literal")
               if (t.has("xml:lang")) RdfLiteral.tagged(value, t.get("xml:lang").asText())

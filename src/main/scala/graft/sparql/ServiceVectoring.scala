@@ -30,27 +30,11 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   */
 object ServiceVectoring {
 
-  /** Driver-side twin of the N-Triples term renderer
-    * ([[graft.rdf.Serializer]] resource/objTerm): engine term → one
-    * standard SPARQL token. None for blank nodes (illegal in VALUES —
-    * and label-scoped, so they cannot transfer anyway). */
-  def sparqlToken(t: String): Option[String] = {
-    val globalScheme = "^(http|https|urn|file|mailto|did|tag):.*"
-    def iri(i: String): String =
-      if (i.matches(globalScheme)) s"<$i>" else s"<${Parser.Base}$i>"
-    def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-    val Tagged = "(?s)^\"(.*)\"@([A-Za-z0-9-]+)$".r
-    val Typed = "(?s)^\"(.*)\"\\^\\^(\\S+)$".r
-    if (t == null || t.startsWith("_:")) None
-    else t match {
-      case Tagged(lex, lang) => Some("\"" + esc(lex) + "\"@" + lang)
-      case Typed(lex, dt)    => Some("\"" + esc(lex) + "\"^^" + iri(dt))
-      case i if i.matches(Parser.IriShape + ".*") => Some(iri(i))
-      case plain => Some("\"" + esc(plain) + "\"")
-    }
-  }
+  /** Engine term → one standard SPARQL token (its N-Triples token).
+    * None for unbound and blank nodes (illegal in VALUES — and
+    * label-scoped, so they cannot transfer anyway). */
+  def sparqlToken(t: String): Option[String] =
+    Option(t).filterNot(graft.rdf.Lexicon.isBnode).map(graft.rdf.Lexicon.token)
 
   /** `VALUES (?a ?b) { (ta tb) … }` over pre-rendered token rows. */
   def valuesClause(vars: Seq[String], rows: Seq[Seq[String]]): String =

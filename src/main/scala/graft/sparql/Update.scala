@@ -2,7 +2,7 @@ package graft.sparql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rdf.{QuadStore, TripleStore}
+import graft.rdf.{Lexicon, QuadStore, TripleStore}
 
 /** Executes parsed SPARQL UPDATE operations (reference:
   * ast/eval/AST2BOpUpdate.java driving the B+Tree mutations; here each
@@ -329,8 +329,8 @@ object Update {
     else {
       val pat = "^\\s*" + RTerm + "\\s+" + RTerm + "\\s+" + OTerm + EolComment
       val rows = lineStatements(spark, path, pat, "ntriples")
-      rows.select(fileScoped(unwrapTerm(col("t1"))).as("s"), unwrapTerm(col("t2")).as("p"),
-                  fileScoped(unwrapTerm(col("t3"))).as("o"))
+      rows.select(fileScoped(Lexicon.fromToken(col("t1"))).as("s"),
+        Lexicon.fromToken(col("t2")).as("p"), fileScoped(Lexicon.fromToken(col("t3"))).as("o"))
     }
   }
 
@@ -341,9 +341,9 @@ object Update {
     val path = source.stripPrefix("file://")
     val pat = "^\\s*" + RTerm + "\\s+" + RTerm + "\\s+" + OTerm + "\\s+" + RTerm + EolComment
     val rows = lineStatements(spark, path, pat, "nquads")
-    rows.select(fileScoped(unwrapTerm(col("t1"))).as("s"), unwrapTerm(col("t2")).as("p"),
-                fileScoped(unwrapTerm(col("t3"))).as("o"),
-                fileScoped(unwrapTerm(col("t4"))).as("g"))
+    rows.select(fileScoped(Lexicon.fromToken(col("t1"))).as("s"),
+      Lexicon.fromToken(col("t2")).as("p"), fileScoped(Lexicon.fromToken(col("t3"))).as("o"),
+      fileScoped(Lexicon.fromToken(col("t4"))).as("g"))
   }
 
   /** Shared line-format scan: skips blank and `#`-comment lines, then
@@ -373,7 +373,7 @@ object Update {
     * (before any shuffle), rendered 16-hex to match Scope.of's width
     * so display normalization strips both the same way. */
   private def fileScoped(c: Column): Column =
-    when(c.startsWith("_:"),
+    when(Lexicon.isBnode(c),
       concat(lit("_:"), format_string("%016x", xxhash64(input_file_name())),
         lit("-"), c.substr(lit(3), length(c)))).otherwise(c)
 
@@ -390,38 +390,4 @@ object Update {
   /** Object position: resource, or a literal with backslash escapes
     * and an optional `@lang` / `^^<dt>` facet. */
   private val OTerm = """(<[^>]*>|_:[A-Za-z0-9_-]+|"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9-]+|\^\^<[^>]*>)?)"""
-
-  /** `<iri>` → interned term; `"lit"` → unescaped lexical form; facet
-    * forms land as the RdfLiteral tagged/typed term encodings
-    * (inverse of [[graft.rdf.Serializer]]). */
-  private def unwrapTerm(c: Column): Column = {
-    val base = graft.sparql.Parser.Base
-    def intern(x: Column): Column =
-      when(x === graft.sparql.Parser.RdfTypeIri, lit("type")) // canonical rdf:type
-        .when(x.startsWith(base), x.substr(lit(base.length + 1), length(x)))
-        .otherwise(x)
-    // Exact inverse of Serializer.escape: park escaped backslashes
-    // (`\\`) on a sentinel first so `\\n` (raw backslash + 'n' in the
-    // data) is NOT misread as a newline, decode the named escapes,
-    // then restore the sentinel as a single backslash. U+FFFF is a
-    // Unicode noncharacter (never valid interchange text), so it
-    // cannot collide with real data.
-    def unesc(x: Column): Column =
-      regexp_replace(
-        regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-          regexp_replace(x, "\\\\\\\\", "\uFFFF"),
-          "\\\\n", "\n"), "\\\\r", "\r"), "\\\\t", "\t"), "\\\\\"", "\""),
-        "\uFFFF", "\\\\")
-    when(c.startsWith("<"), intern(c.substr(lit(2), length(c) - 2)))
-      .when(c.startsWith("_:"), c)
-      // "lex"@lang → tagged form with the lex unescaped
-      .when(c.rlike("^\".*\"@"),
-        concat(lit("\""), unesc(regexp_extract(c, "^\"(.*)\"@", 1)),
-          lit("\"@"), regexp_extract(c, "\"@([A-Za-z0-9-]+)$", 1)))
-      // "lex"^^<dt> → typed form with the datatype IRI interned
-      .when(c.rlike("^\".*\"\\^\\^<"),
-        concat(lit("\""), unesc(regexp_extract(c, "^\"(.*)\"\\^\\^<", 1)),
-          lit("\"^^"), intern(regexp_extract(c, "\\^\\^<(.*)>$", 1))))
-      .otherwise(unesc(regexp_replace(c, "^\"|\"$", "")))
-  }
 }

@@ -7,7 +7,7 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps three mechanisms ONE each. No `src/main` file other than
+/** Keeps four mechanisms ONE each. No `src/main` file other than
   * `graft/plans/LocalTier.scala` may read a `*.localBound` conf key or
   * declare its own `Local*Bound` constant — a new driver-side replay
   * takes its budget and probe from [[graft.plans.LocalTier]]. No
@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * entry point takes its session from [[graft.Harness]]. And no
   * `src/main` file other than `graft/plans/Fixpoint.scala` may run its
   * own round loop over DataFrames — a new distributed iteration runs
-  * on [[graft.plans.Fixpoint]]. */
+  * on [[graft.plans.Fixpoint]]. And no `src/main` file other than
+  * `graft/rdf/Lexicon.scala` may spell the global-IRI schemes or strip
+  * the engine base by hand — a new term rendering or interning calls
+  * [[graft.rdf.Lexicon]]. */
 class LocalTierGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): List[Path] = {
@@ -126,6 +129,34 @@ class LocalTierGuardSpec extends AnyFunSuite {
     val files = scalaFiles(main) ++ scalaFiles(Paths.get("src", "test", "scala"))
     val found = offenders(files, main.resolve("graft/Harness.scala"),
       """SparkSession\s*\.\s*builder\b""".r, """SPARK_GRAFT_CPU[S]""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** Spellings of the term encoding outside its codec: the global-IRI
+    * scheme list, and the engine base stripped by hand (`drop` or
+    * `substring` by its length, `stripPrefix`, an anchored regex) or
+    * aliased to a local name first (`Parser.Base` itself re-exports
+    * it). */
+  private val lexiconRules = Seq(
+    """\(http\|https\|""".r,
+    """\bBase\s*\.\s*length\b""".r,
+    """stripPrefix\s*\(\s*([\w.]*\.)?Base\s*\)""".r,
+    """"\^"\s*\+\s*([\w.]*\.)?Base\b""".r,
+    """\b(val|var|def)\s+[a-z]\w*\s*=\s*([\w.]*\.)?(Parser|Lexicon)\.Base\b""".r)
+
+  test("only Lexicon knows the term encoding") {
+    def leaks(line: String) = lexiconRules.exists(_.findFirstIn(line).isDefined)
+    // the detector itself: the copies it must catch, and the calls it
+    // must let pass
+    assert(leaks("""val globalScheme = "^(http|https|urn|file|mailto|did|tag):.*""""))
+    assert(leaks("if (iri.startsWith(Parser.Base)) iri.drop(Parser.Base.length) else iri"))
+    assert(leaks("value.stripPrefix(graft.sparql.Parser.Base)"))
+    assert(leaks("""regexp_replace(c, "^" + Base, "")"""))
+    assert(leaks("val base = graft.sparql.Parser.Base"))
+    assert(!leaks("""s"<${Lexicon.iri(x)}>" + Lexicon.intern(iri) + Parser.Base"""))
+    assert(!leaks("val Base = Lexicon.Base"))
+    val root = Paths.get("src", "main", "scala")
+    val found = offenders(scalaFiles(root), root.resolve("graft/rdf/Lexicon.scala"), lexiconRules: _*)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -828,6 +828,22 @@ class ParserSpec extends AnyFunSuite {
       graft.rdf.Turtle.parse("<urn:graft:a> <urn:graft:b> ( 1 2 ."))
   }
 
+  test("Turtle and TriG decode \\b, \\f and \\U escapes like the SPARQL parser") {
+    val lit = "\"x\\U0001F600y\\bz\\fw\""
+    val want = "x\uD83D\uDE00y\bz\fw"
+    assert(graft.rdf.Turtle.parse(s"<urn:graft:a> <urn:graft:b> $lit .") ==
+      Vector(("a", "b", want)))
+    assert(graft.rdf.Turtle.parseTrig(
+      s"<urn:graft:g> { <urn:graft:a> <urn:graft:b> $lit }", "g:default") ==
+      Vector(("a", "b", want, "g")))
+    val sparql = Graft.empty(spark).update(s"INSERT DATA { a b $lit }")
+      .query("SELECT ?o WHERE { a b ?o }").collect().map(_.getString(0))
+    assert(sparql.toSeq == Seq(want))
+    // a short string may not span lines (Turtle 1.1 [22], as in SPARQL)
+    intercept[RuntimeException](
+      graft.rdf.Turtle.parse("<urn:graft:a> <urn:graft:b> \"x\ny\" ."))
+  }
+
   test("LOAD .trig: GRAPH blocks carry labels, bare statements hit default") {
     val trig = java.nio.file.Files.createTempFile("graft_load", ".trig")
     java.nio.file.Files.writeString(trig,

@@ -197,6 +197,45 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("access-path terms intern like SPARQL: ESTCARD of <rdf:type> counts the `a` triples") {
+    val g0 = Graft.empty(spark).update(
+      """INSERT DATA { x:1 a x:Widget . x:2 a x:Widget . x:1 label "gear" .
+        |  GRAPH g:extra { x:3 a x:Widget } }""".stripMargin)
+    val srv = new SparqlServer(g0).start()
+    try {
+      def get(url: String) = send(req(url).GET())
+      def enc(t: String) = java.net.URLEncoder.encode(t, "UTF-8")
+      def sparqlCount(where: String) = graft.sparql.RemoteService.parseJsonResults(spark,
+        post(srv.address + "/sparql", s"SELECT * WHERE { $where }", "application/sparql-query")
+          .body()).count()
+      val typeIri = s"<${graft.sparql.Parser.RdfTypeIri}>"
+      val rdfType = enc(typeIri)
+      assert(sparqlCount(s"?s $typeIri ?o") == 3)
+      assert(get(srv.address + s"/sparql?ESTCARD&p=$rdfType").body()
+        .contains("""rangeCount="3""""))
+      val x1 = enc("<urn:graft:x:1>")
+      assert(get(srv.address + s"/sparql?HASSTMT&s=$x1&p=$rdfType").body()
+        .contains("""result="true""""))
+      assert(get(srv.address + s"/sparql?GETSTMTS&p=$rdfType").body().split("\n").length == 3)
+      // DELETE-by-access-path drops the matching statement
+      val d = send(req(srv.address + s"/sparql?s=$x1&p=$rdfType").DELETE())
+      assert(d.body().contains("""modified="1""""))
+      assert(sparqlCount(s"?s $typeIri ?o") == 2)
+      assert(get(srv.address + s"/sparql?ESTCARD&p=$rdfType").body()
+        .contains("""rangeCount="2""""))
+    } finally srv.stop()
+  }
+
+  test("a remote rdf:type binding comes back as `type` and joins a local `a` pattern") {
+    val doc = s"""{"head":{"vars":["p"]},"results":{"bindings":[
+      |{"p":{"type":"uri","value":"${graft.sparql.Parser.RdfTypeIri}"}}]}}""".stripMargin
+    val remote = graft.sparql.RemoteService.parseJsonResults(spark, doc)
+    assert(remote.collect().map(_.getString(0)).toSeq == Seq("type"))
+    val local = Graft.empty(spark).update("INSERT DATA { x:1 a x:Widget . x:1 label \"gear\" }")
+      .query("SELECT ?s ?p WHERE { ?s ?p ?o }")
+    assert(local.join(remote, "p").collect().map(_.getString(1)).toSeq == Seq("x:1"))
+  }
+
   test("HASSTMT / ?uuid / DELETE-by-access-path (QueryServlet + DeleteServlet fidelity arms)") {
     val g0 = Graft.empty(spark).update(
       """INSERT DATA {
