@@ -4,13 +4,15 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.Graft
 import graft.rdf.{Lexicon, QuadStore, Repository, Serializer}
 import graft.sparql.{Algebra, Ask, Parser, Update}
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentHashMap, Executors}
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** SPARQL 1.1 Protocol endpoint + REST management plane over
   * [[graft.Graft]] handles — the NanoSparqlServer analog
@@ -96,6 +98,8 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   def this(initial: Graft, host: String = "127.0.0.1", port: Int = 0,
            defaultNamespace: String = "kb") =
     this(initial, host, port, defaultNamespace, None, Int.MaxValue)
+
+  import SparqlServer.Request
 
   private val spark = initial.spark
   import spark.implicits._
@@ -322,10 +326,15 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
 
   private final class MemTenant(ref: AtomicReference[Graft]) extends Tenant {
     def current: Graft = ref.get()
-    // the handle's change is published by the swap itself: the next
-    // write starts a fresh change from here
+    // the handle's change is published by the swap itself. The next
+    // handle starts over ONE materialized relation: a handle over the
+    // written store would carry every earlier write's plan, and the
+    // next write would plan (and run) all of them again. Its partitions
+    // are capped at the session's parallelism — each write's union
+    // adds the branches it touched, so uncapped they would multiply
     protected def publish(next: Graft, suppress: Boolean): Long = {
-      ref.set(next.withStore(next.store.rebased)); -1L
+      val quads = next.store.quads.coalesce(spark.sparkContext.defaultParallelism)
+      ref.set(next.withStore(QuadStore(quads.localCheckpoint()))); -1L
     }
     def release(): Unit = ref.get().release()
     def destroy(): Unit = ()
@@ -812,13 +821,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * three knobs with its precedence — the X-BIGDATA-MAX-QUERY-MILLIS
     * header overrides `maxQueryTimeMillis=` (ms) overrides `timeout=`
     * (whole seconds; ≤0 = unlimited). BigdataRDFContext.getQueryTimeout. */
-  private def queryTimeoutMs(ex: HttpExchange,
-                             qp: Map[String, Option[String]]): Long = {
+  private def queryTimeoutMs(r: Request): Long = {
     def num(s: String): Option[Long] = s.trim.toLongOption
-    Option(ex.getRequestHeaders.getFirst("X-BIGDATA-MAX-QUERY-MILLIS"))
-      .flatMap(num)
-      .orElse(qp.get("maxQueryTimeMillis").flatten.flatMap(num))
-      .orElse(qp.get("timeout").flatten.flatMap(num).map(_ * 1000L))
+    r.header("X-BIGDATA-MAX-QUERY-MILLIS").flatMap(num)
+      .orElse(r.param("maxQueryTimeMillis").flatMap(num))
+      .orElse(r.param("timeout").flatMap(num).map(_ * 1000L))
       .filter(_ > 0).getOrElse(0L)
   }
 
@@ -834,19 +841,41 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   def address: String =
     s"http://${server.getAddress.getHostString}:${server.getAddress.getPort}"
 
-  /** HTML-escape for workbench/status pages. */
+  /** HTML/XML-escape for workbench/status pages and reply attributes. */
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;")
 
-  private def wantsGzip(ex: HttpExchange): Boolean =
-    Option(ex.getRequestHeaders.getFirst("Accept-Encoding")).exists(_.contains("gzip"))
+  private def wantsGzip(r: Request): Boolean =
+    r.header("Accept-Encoding").exists(_.contains("gzip"))
 
-  private def respond(ex: HttpExchange, status: Int, contentType: String,
+  /** THE REPLY SEAM: every handler runs on its exchange's one
+    * [[Request]], and every failure answers here — a query deadline
+    * kill is the server giving up (503), a lost first-committer-wins
+    * validation a conflict (409), anything else the client's bad
+    * request (400). An exchange whose status line a stream already
+    * sent can only be dropped. */
+  private def serve(handle: Request => Unit): HttpHandler = ex => {
+    val r = new Request(ex)
+    try handle(r)
+    catch {
+      case NonFatal(e) =>
+        val (status, msg) = e match {
+          case t: QueryTimeout => (503, t.getMessage)
+          case c: TxConflict   => (409, c.getMessage)
+          case _               => (400, s"bad request: ${e.getMessage}")
+        }
+        if (ex.getResponseCode != -1) ex.close()
+        else try respond(r, status, "text/plain", msg) catch { case NonFatal(_) => ex.close() }
+    }
+  }
+
+  private def respond(r: Request, status: Int, contentType: String,
                       body: String): Unit = {
+    val ex = r.ex
     val raw = body.getBytes("UTF-8")
     val bytes =
-      if (raw.nonEmpty && wantsGzip(ex)) {
+      if (raw.nonEmpty && wantsGzip(r)) {
         ex.getResponseHeaders.add("Content-Encoding", "gzip")
         val buf = new java.io.ByteArrayOutputStream()
         val gz = new java.util.zip.GZIPOutputStream(buf)
@@ -859,13 +888,22 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     ex.close()
   }
 
+  /** The reference's `<data …/>` reply document (InsertServlet,
+    * DeleteServlet, QueryServlet's ESTCARD/HASSTMT, BackupServlet):
+    * one attribute per pair, in order. */
+  private def data(r: Request, attrs: (String, Any)*): Unit =
+    respond(r, 200, "application/xml", attrs
+      .map { case (k, v) => s"""$k="${esc(v.toString)}"""" }
+      .mkString("""<?xml version="1.0"?><data """, " ", "/>"))
+
   /** Chunked-transfer document: `head`, then `rows` joined by `sep`,
     * then `foot` — written as each partition's iterator arrives, so
     * the driver holds one partition of rows at a time, never the
     * result set. */
-  private def respondStream(ex: HttpExchange, contentType: String, head: String,
+  private def respondStream(r: Request, contentType: String, head: String,
                             rows: Iterator[String], sep: String,
                             foot: String): Unit = {
+    val ex = r.ex
     // force the FIRST partition's job before committing the status
     // line: a query error (or a cancelQuery) during it surfaces as a
     // clean 400 rather than an aborted 200 stream. Later partitions'
@@ -874,7 +912,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     ex.getResponseHeaders.add("Content-Type", contentType)
     // transfer compression composes with chunking: a 100-GB N-Triples
     // export over HTTP is mostly repeated IRIs — gzip when asked
-    val gzip = wantsGzip(ex)
+    val gzip = wantsGzip(r)
     if (gzip) ex.getResponseHeaders.add("Content-Encoding", "gzip")
     ex.sendResponseHeaders(200, 0) // 0 = chunked
     val sink: java.io.OutputStream =
@@ -892,43 +930,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     out.flush(); out.close(); ex.close()
   }
 
-  /** One column of strings, driver-bounded to a partition at a time. */
-  private def lines(df: DataFrame): Iterator[String] =
-    df.toLocalIterator().asScala.map(_.getString(0))
-
-  private def formParam(s: String, key: String): Option[String] =
-    s.split('&').collectFirst {
-      case kv if kv.startsWith(key + "=") =>
-        java.net.URLDecoder.decode(kv.drop(key.length + 1), "UTF-8")
-    }
-
-  /** Query-string / form flags and values: `ESTCARD&s=…` parses to
-    * presence + decoded values. */
-  private def params(raw: String): Map[String, Option[String]] =
-    raw.split('&').filter(_.nonEmpty).map { kv =>
-      kv.split("=", 2) match {
-        case Array(k)    => k -> None
-        case Array(k, v) => k -> Some(java.net.URLDecoder.decode(v, "UTF-8"))
-      }
-    }.toMap
-
-  private def rawQuery(ex: HttpExchange): String =
-    Option(ex.getRequestURI.getRawQuery).getOrElse("")
-
-  /** EVERY value of a repeated parameter, in order (the SPARQL 1.1
-    * Protocol dataset parameters repeat: `default-graph-uri=g1&
-    * default-graph-uri=g2` — [[params]]' Map collapses them). */
-  private def multiParams(raw: String, key: String): Seq[String] =
-    raw.split('&').toSeq.collect {
-      case kv if kv.startsWith(key + "=") =>
-        java.net.URLDecoder.decode(kv.drop(key.length + 1), "UTF-8")
-    }
-
   /** Minimal RFC 7231 Accept negotiation: parse the media-range list
     * with q-values and return the SUPPORTED type with the highest q
     * (exact ranges beat wildcards at equal q, header order breaks
     * remaining ties, q=0 excludes). None when the header names no
-    * supported type — callers keep their loose contains-dispatch
+    * supported type — [[pick]] then falls back to its loose match
     * (the `Accept: xml` curl convenience). */
   private def negotiate(accept: String, supported: Seq[String]): Option[String] = {
     val ranges = accept.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
@@ -968,54 +974,108 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     }
   }
 
-  /** Protocol dataset parameters of a request — from the URL query
-    * string AND (for the URL-encoded POST binding) the form body
-    * [[queryText]] stashed. IRIs intern like every other loader path. */
-  private def datasetParams(ex: HttpExchange,
-                            defaultKey: String, namedKey: String): (Seq[String], Seq[String]) = {
-    val sources = Seq(rawQuery(ex)) ++ formBody.get().toSeq
-    def all(key: String): Seq[String] =
-      sources.flatMap(multiParams(_, key)).map(Lexicon.intern)
-    (all(defaultKey), all(namedKey))
-  }
+  // ---- result formats ---------------------------------------------
 
-  private def contentType(ex: HttpExchange): String =
-    Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
+  /** One result serialization — THE format table: its media type, its
+    * `format=` aliases, the substring a loose `Accept` value selects it
+    * by, its W3C format-registry name (the Service Description's
+    * `sd:resultFormat`), and its streamed writer: `head(vars)`, one
+    * line of `rows(df)` per row joined by `sep`, then `foot`. `ask`
+    * renders an ASK result's boolean document, where the format has
+    * one. */
+  private final case class Format(mediaType: String, aliases: Seq[String], key: String,
+                                  w3cName: String, head: Seq[String] => String,
+                                  rows: DataFrame => DataFrame, sep: String, foot: String,
+                                  ask: Option[Boolean => String] = None)
 
-  /** A form body's `update=`, stashed by [[queryText]] for the same
-    * handler invocation (one thread per exchange) — the request body
-    * can only be read once. */
-  private val formUpdate = new ThreadLocal[Option[String]] {
-    override def initialValue(): Option[String] = None
-  }
+  /** SELECT results; the two SPARQL results documents also answer ASK. */
+  private val bindingFormats = Seq(
+    Format("application/sparql-results+json", Seq("json"), "results+json",
+      "SPARQL_Results_JSON", Serializer.sparqlJsonHead, Serializer.sparqlJsonBindings,
+      ",", Serializer.sparqlJsonFoot, Some(Serializer.sparqlAskJson _)),
+    Format("application/sparql-results+xml", Seq("xml"), "xml",
+      "SPARQL_Results_XML", Serializer.sparqlXmlHead, Serializer.sparqlXmlResults,
+      "", Serializer.sparqlXmlFoot, Some(Serializer.sparqlAskXml _)),
+    Format("text/csv", Seq("csv"), "csv", "SPARQL_Results_CSV",
+      _.mkString(",") + "\r\n", Serializer.sparqlCsvRows, "\r\n", ""),
+    Format("text/tab-separated-values", Seq("tsv"), "tab-separated", "SPARQL_Results_TSV",
+      _.map("?" + _).mkString("\t") + "\n", Serializer.sparqlTsvRows, "\n", ""))
 
-  /** A form POST's raw URL-encoded body, stashed like [[formUpdate]] —
-    * the protocol dataset parameters (`default-graph-uri` etc.) ride
-    * in it under the URL-encoded POST binding. */
-  private val formBody = new ThreadLocal[Option[String]] {
-    override def initialValue(): Option[String] = None
-  }
+  private val askFormats = bindingFormats.filter(_.ask.isDefined)
 
-  private def queryText(ex: HttpExchange): Option[String] = {
-    val ct = contentType(ex)
-    formUpdate.set(None)
-    formBody.set(None)
-    if (ex.getRequestMethod == "GET" || ex.getRequestMethod == "DELETE")
-      formParam(rawQuery(ex), "query")
-    else {
-      val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      if (ct.startsWith("application/x-www-form-urlencoded")) {
-        formUpdate.set(formParam(body, "update"))
-        formBody.set(Some(body))
-        formParam(body, "query")
-      } else Some(body) // application/sparql-query (and permissive default)
+  private val NTriples = Format("application/n-triples", Seq("ntriples", "nt"), "n-triples",
+    "N-Triples", _ => "", Serializer.toNTriples, "\n", "")
+
+  /** CONSTRUCT / DESCRIBE results (the reference negotiates Rio writers
+    * the same way); N-Triples is the default. */
+  private val graphFormats = Seq(NTriples,
+    Format("text/turtle", Seq("turtle", "ttl"), "turtle", "Turtle",
+      _ => Serializer.turtleHeader() + "\n", Serializer.toTurtle(_), "\n", ""),
+    Format("application/ld+json", Seq("jsonld"), "ld+json", "JSON-LD",
+      _ => "{\"@context\":" + Serializer.jsonLdContext() + ",\"@graph\":[",
+      Serializer.toJsonLdCompact(_), ",", "]}"))
+
+  /** Statements with their graph: GETSTMTS and `?convert` only. */
+  private val NQuads = Format("application/n-quads", Nil, "n-quads", "N-Quads",
+    _ => "", Serializer.toNQuads, "\n", "")
+
+  /** The format of `fs` the client asked for: RFC 7231 negotiation,
+    * else the first whose key the header contains, else the first. */
+  private def pick(accept: String, fs: Seq[Format]): Format =
+    negotiate(accept, fs.map(_.mediaType)).flatMap(t => fs.find(_.mediaType == t))
+      .orElse(fs.find(f => accept.contains(f.key)))
+      .getOrElse(fs.head)
+
+  /** `df` streamed as format `f`'s document. */
+  private def stream(r: Request, f: Format, df: DataFrame): Unit =
+    respondStream(r, f.mediaType, f.head(df.columns.toSeq),
+      f.rows(df).toLocalIterator().asScala.map(_.getString(0)), f.sep, f.foot)
+
+  // ---- request decisions ------------------------------------------
+
+  /** `includeInferred` (QueryServlet.java:140, default true): false
+    * reads the ASSERTED statements — meaningful on a truth-maintenance
+    * namespace, identity elsewhere. */
+  private def inferred(r: Request): Boolean =
+    r.param("includeInferred").forall(_.toBoolean)
+
+  /** THE READ VIEW of every read (query, HASSTMT, GETSTMTS, ESTCARD):
+    * `?timestamp=<version>` is a read-only tx against that commit point
+    * (the reference's TxServlet/timestamp knob), `?tx=<id>` reads
+    * inside an open transaction — start snapshot + own staged writes —
+    * and otherwise the head; each entailed or asserted per
+    * [[inferred]]. */
+  private def readView(r: Request, ns: String): Graft = {
+    val t = tenant(ns)
+    (r.param("timestamp").map(_.toLong), r.param("tx")) match {
+      case (Some(v), _)     => if (inferred(r)) t.at(v) else t.assertedAt(v)
+      case (None, Some(id)) => txView(id, ns)
+      case (None, None)     => if (inferred(r)) t.current else t.asserted
     }
   }
 
+  /** `suppressTruthMaintenance=true` (QueryServlet.java:132,
+    * DeleteServlet.java:128): skip closure maintenance for THIS
+    * request — a no-op on non-TM namespaces. */
+  private def suppress(r: Request): Boolean =
+    r.param("suppressTruthMaintenance").exists(_.toBoolean)
+
+  /** Compile with THIS namespace's journal answering bd:history (the
+    * built plan carries the segment scans; execution needs no scope),
+    * capped at a `?timestamp=` read view's version. An in-memory
+    * namespace compiles in a PINNED journal-less scope: its bd:history
+    * fails loud, never falling through to a process-global default
+    * registration (cross-namespace history exposure). */
+  private def compiled(ns: String, cap: Option[Long])(build: => DataFrame): DataFrame =
+    tenant(ns).journal match {
+      case Some(j) => graft.sparql.HistoryService.withJournal(j, cap)(build)
+      case None    => graft.sparql.HistoryService.withoutJournal(build)
+    }
+
   // ---- term + document decoding -----------------------------------
 
-  /** Content-Type → LOAD extension; the single dispatch table for both
-    * ingest and body-DELETE (InsertServlet's Rio format negotiation). */
+  /** Content-Type → LOAD extension; the single dispatch table of every
+    * RDF body (InsertServlet's Rio format negotiation). */
   private val rdfContentTypes = Map(
     "text/turtle" -> "ttl", "application/x-turtle" -> "ttl",
     "application/n-triples" -> "nt", "text/plain" -> "nt",
@@ -1024,25 +1084,33 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     "application/trix" -> "trix", "application/rdf+json" -> "rj",
     "text/rdf+n3" -> "n3", "text/n3" -> "n3")
 
+  /** W3C format-registry names of the LOAD extensions (TriX has none):
+    * the Service Description's `sd:inputFormat`. */
+  private val w3cInputNames = Map("ttl" -> "Turtle", "nt" -> "N-Triples",
+    "rdf" -> "RDF_XML", "jsonld" -> "JSON-LD", "nq" -> "N-Quads", "trig" -> "TriG",
+    "rj" -> "RDF_JSON", "n3" -> "N3")
+
   private def rdfExtension(ct: String): Option[String] =
     rdfContentTypes.get(ct.split(';').head.trim.toLowerCase)
 
-  /** Parse a request body as an RDF document by writing it to a spill
-    * file and running the distributed LOAD readers over it — the same
-    * code path (and the same loud parse failures) as SPARQL LOAD.
-    * A POSTed body is driver-received by protocol nature (and the
-    * spill file is driver-local): bulk cluster-scale ingest goes
-    * through `?uri=` against shared storage instead, where executors
-    * read the document directly. */
-  private def bodyQuads(ex: HttpExchange, ext: String, graph: Option[String],
-                        defaultGraph: String): (DataFrame, Path) =
-    bytesQuads(ex.getRequestBody.readAllBytes(), ext, graph, defaultGraph)
-
-  private def bytesQuads(bytes: Array[Byte], ext: String, graph: Option[String],
-                         defaultGraph: String): (DataFrame, Path) = {
+  /** Run `use` over an RDF document's quads — `ct` picks the parser —
+    * then delete its spill file. The document is written to a spill
+    * file and read by the distributed LOAD readers: the same code path
+    * (and the same loud parse failures) as SPARQL LOAD. A POSTed body
+    * is driver-received by protocol nature (and the spill file is
+    * driver-local): bulk cluster-scale ingest goes through `?uri=`
+    * against shared storage instead, where executors read the
+    * document directly. Every mutation path materializes the parsed
+    * data before it returns, so a long-lived server does not
+    * accumulate request bodies on disk. */
+  private def withDocument[T](ct: String, bytes: Array[Byte], graph: Option[String],
+                              defaultGraph: String)(use: DataFrame => T): T = {
+    val ext = rdfExtension(ct).getOrElse(sys.error(s"unsupported RDF content type: '$ct'"))
     val tmp = Files.createTempFile("graft_post", s".$ext")
-    Files.write(tmp, bytes)
-    (Update.loadOpQuads(spark, s"file://$tmp", graph, defaultGraph), tmp)
+    try {
+      Files.write(tmp, bytes)
+      use(Update.loadOpQuads(spark, s"file://$tmp", graph, defaultGraph))
+    } finally { Files.deleteIfExists(tmp); () }
   }
 
   /** Minimal multipart/form-data reader for the UPDATE-with-body
@@ -1089,26 +1157,16 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       }.toMap
   }
 
-  /** Delete a request's spill file once the tenant op has MATERIALIZED
-    * the parsed data (every mutation path localCheckpoints before it
-    * returns) — a long-lived server must not accumulate request
-    * bodies on disk. */
-  private def dropSpill(p: Path): Unit = { Files.deleteIfExists(p); () }
-
-  /** The quad access path for ESTCARD/GETSTMTS: bound terms prune the
-    * scan (the narrow-scan pruning the quad source already proves).
-    * Each term is an N-Triples token (`<iri>`, `"lit"@lang`, `_:b`),
-    * or a bare term value. */
-  private def accessPath(g: Graft, p: Map[String, Option[String]]): DataFrame = {
-    import org.apache.spark.sql.functions.col
+  /** The quad access path for ESTCARD/GETSTMTS/HASSTMT and
+    * DELETE-by-access-path: bound terms prune the scan (the
+    * narrow-scan pruning the quad source already proves). Each term
+    * is an N-Triples token (`<iri>`, `"lit"@lang`, `_:b`), or a bare
+    * term value. */
+  private def accessPath(g: Graft, r: Request): DataFrame =
     Seq("s" -> "s", "p" -> "p", "o" -> "o", "c" -> "g").foldLeft(g.store.quads) {
       case (df, (param, column)) =>
-        p.get(param).flatten match {
-          case Some(term) => df.filter(col(column) === Lexicon.fromToken(term))
-          case None       => df
-        }
+        r.param(param).fold(df)(term => df.filter(col(column) === Lexicon.fromToken(term)))
     }
-  }
 
   // ---- handlers ---------------------------------------------------
 
@@ -1118,291 +1176,162 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     case _ => false
   }
 
-  private def handleQuery(ex: HttpExchange, ns: String): Unit =
-    try {
-      val qp = params(rawQuery(ex))
-      if (ex.getRequestMethod == "HEAD") {
-        // HEAD /sparql: endpoint liveness probe (generic clients and
-        // monitors send it; the reference's servlets inherit it from
-        // HttpServlet) — status + headers, NO body. The namespace must
-        // resolve FIRST: a monitor probing a deleted namespace must
-        // see the same 4xx a GET would, not a healthy 200
-        tenant(ns)
-        ex.getResponseHeaders.set("Content-Type", "application/n-triples")
-        ex.sendResponseHeaders(200, -1)
-        ex.close()
-      } else if (qp.contains("uuid"))
-        // QueryServlet.java:183: mint a UUID server-side as text/plain
-        // (RFC 4122 has no REST method, so the reference added one);
-        // GET and POST alike, checked before the content-type arms
-        respond(ex, 200, "text/plain", java.util.UUID.randomUUID().toString)
-      else if (qp.contains("HASSTMT")) handleHasStmt(ex, ns)
-      else if (ex.getRequestMethod == "PUT")
-        // UPDATE-with-query: atomic delete-described + insert-body
-        handleUpdateWithQuery(ex, ns)
-      else if (ex.getRequestMethod == "POST" && qp.contains("updatePost"))
-        // UPDATE via POST w/ multipart add/remove parts
-        handleUpdateWithParts(ex, ns)
-      else if (ex.getRequestMethod == "POST" && qp.contains("delete"))
-        // DELETE via POST w/ body (clients that cannot send a DELETE
-        // body — RESTServlet.java:275)
-        handleDelete(ex, ns)
-      else if (ex.getRequestMethod == "GET" && qp.isEmpty)
-        // SPARQL 1.1 Service Description — the reference answers a
-        // bare GET on the endpoint with one (BigdataRDFServlet /
-        // VoID+SD document); N-Triples, one line per statement
-        handleServiceDescription(ex, ns)
-      else if (ex.getRequestMethod == "GET" && qp.contains("ESTCARD")) handleEstcard(ex, ns)
-      else if (ex.getRequestMethod == "GET" && qp.contains("CONTEXTS")) handleContexts(ex, ns)
-      else if (ex.getRequestMethod == "GET" && qp.contains("GETSTMTS")) handleGetStmts(ex, ns)
-      else if (ex.getRequestMethod == "DELETE") handleDelete(ex, ns)
-      else if (ex.getRequestMethod == "POST" &&
-        contentType(ex).startsWith("application/sparql-update"))
-        // the reference dispatches update bodies from /sparql by
-        // content type (UpdateServlet via RESTServlet)
-        handleUpdate(ex, ns)
-      else if (ex.getRequestMethod == "POST" &&
-        (rdfExtension(contentType(ex)).isDefined || qp.contains("uri")))
-        handleInsert(ex, ns)
-      else if (ex.getRequestMethod == "POST" &&
-        contentType(ex).startsWith("application/x-www-form-urlencoded")) {
-        // the one-shot request body is read ONCE here: queryText
-        // stashes the form's update= and returns its query=, and the
-        // reference's RESTServlet form dispatch follows — query= runs,
-        // else update= applies, else a form with neither is not
-        // guessed at (SPARQL 1.1 Protocol's URL-encoded POST binding)
-        queryText(ex) match {
-          case Some(q) => execQuery(ex, ns, qp, q)
-          case None => formUpdate.get() match {
-            case Some(u) =>
-              val (ugs, ungs) =
-                datasetParams(ex, "using-graph-uri", "using-named-graph-uri")
-              val ops = Parser.parseUpdates(u)
-              tenant(ns).updateOps(
-                if (ugs.isEmpty && ungs.isEmpty) ops
-                else graft.sparql.ProtocolDataset.usingIn(ops, ugs, ungs))
-              respond(ex, 204, "text/plain", "")
-            case None =>
-              respond(ex, 400, "text/plain", "bad request: no query or update in form")
-          }
-        }
-      } else {
-        val ct = contentType(ex)
-        if (ex.getRequestMethod == "POST" && ct.nonEmpty &&
-            !ct.startsWith("application/sparql-query"))
-          // a DECLARED media type none of the dispatch arms above
-          // recognize → 415 (sparql11-protocol: the direct-POST query
-          // binding is application/sparql-query; RDF ingest types and
-          // the form binding dispatched earlier). A POST with NO
-          // Content-Type stays the permissive query-text convenience.
-          respond(ex, 415, "text/plain", s"unsupported media type: $ct")
-        else {
-          val q = queryText(ex).getOrElse(sys.error("no query in request"))
-          execQuery(ex, ns, qp, q)
-        }
-      }
-    } catch {
-      case t: QueryTimeout =>
-        // a deadline kill is the SERVER giving up, not a bad request
-        try respond(ex, 503, "text/plain", t.getMessage)
-        catch { case scala.util.control.NonFatal(_) => ex.close() }
-      case scala.util.control.NonFatal(e) =>
-        // if a streamed response already committed its status line the
-        // best we can do is drop the connection
-        try respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-        catch { case scala.util.control.NonFatal(_) => ex.close() }
-    }
+  /** A write's graph-result query (CONSTRUCT / DESCRIBE), parsed once. */
+  private def graphQuery(q: String, what: String): Algebra = {
+    val ast = Parser.parse(q)
+    require(isGraphResult(ast), s"$what requires CONSTRUCT or DESCRIBE")
+    ast
+  }
 
-  /** Execute query text `q` and render per the protocol knobs in `qp`
-    * (`format=`, `timestamp=`, `explain`) — shared by every dispatch
-    * arm that carries a query. */
-  private def execQuery(ex: HttpExchange, ns: String,
-                        qp: Map[String, Option[String]], q: String): Unit = {
-        // ?format=json|xml|csv|tsv|turtle|ntriples|jsonld overrides the
-        // Accept header (the reference's format= convenience for curl)
-        val accept = qp.get("format").flatten.map {
-          case "json" => "application/sparql-results+json"
-          case "xml" => "application/sparql-results+xml"
-          case "csv" => "text/csv"
-          case "tsv" => "text/tab-separated-values"
-          case "turtle" | "ttl" => "text/turtle"
-          case "ntriples" | "nt" => "application/n-triples"
-          case "jsonld" => "application/ld+json"
-          case other => sys.error(s"unknown format: $other")
-        }.getOrElse(Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse(""))
-        // ?timestamp=<version>: a read-only tx against that commit
-        // point (the reference's TxServlet/timestamp protocol knob).
-        // includeInferred=false (QueryServlet.java:140, default true)
-        // reads the ASSERTED statements — meaningful on a
-        // truth-maintenance namespace, identity elsewhere.
-        val inferred = qp.get("includeInferred").flatten
-          .forall(_.toBoolean)
-        val g = qp.get("timestamp").flatten match {
-          case Some(v) =>
-            if (inferred) tenant(ns).at(v.toLong)
-            else tenant(ns).assertedAt(v.toLong)
-          // ?tx=<id>: read inside an open transaction — start snapshot
-          // + own staged writes (read-your-writes)
-          case None => qp.get("tx").flatten match {
-            case Some(id) => txView(id, ns)
-            case None     =>
-              if (inferred) tenant(ns).current else tenant(ns).asserted
-          }
-        }
-        val ast = Parser.parse(q)
-        // SPARQL 1.1 Protocol §2.1.4: a protocol-supplied RDF dataset
-        // (repeatable default-graph-uri=/named-graph-uri=, query
-        // string or form body) takes precedence over the query's own
-        // FROM / FROM NAMED
-        val (dgs, ngs) = datasetParams(ex, "default-graph-uri", "named-graph-uri")
-        // compile with THIS namespace's journal answering bd:history
-        // (the built plan carries the segment scans; execution below
-        // needs no scope) — in-memory namespaces compile bare and a
-        // bd:history query there stays loud. A ?timestamp= read view
-        // caps the visible log at its snapshot version.
-        def build(): org.apache.spark.sql.DataFrame =
-          if (dgs.isEmpty && ngs.isEmpty) g.query(q)
-          else g.query(graft.sparql.ProtocolDataset.overrideIn(ast, dgs, ngs))
-        val df = tenant(ns).journal match {
-          case Some(j) =>
-            val cap = qp.get("timestamp").flatten.map(_.toLong)
-            graft.sparql.HistoryService.withJournal(j, cap)(build())
-          // PINNED journal-less scope: an in-memory tenant's bd:history
-          // must fail loud, never fall through to a process-global
-          // default registration (cross-namespace history exposure)
-          case None => graft.sparql.HistoryService.withoutJournal(build())
-        }
-        if (qp.contains("explain")) {
-          // the reference's ?explain: the query PLAN, not the results.
-          // maxBopLength clamps the rendered plan (the reference's
-          // StatusServlet/BigdataRDFContext parameter — a pathological
-          // plan must not produce an unbounded response body);
-          // 0 = unlimited, matching the reference's interpretation.
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          val cap = qp.get("maxBopLength").flatten.map(_.toInt).getOrElse(0)
-          val body =
-            if (cap > 0 && plan.length > cap)
-              plan.take(cap) + s"\n… [truncated at maxBopLength=$cap of ${plan.length} chars]"
-            else plan
-          respond(ex, 200, "text/plain", body)
-        } else inJobGroup(ns, q, queryTimeoutMs(ex, qp)) {
-          ast match {
-            case _: Ask =>
-              val b = df.collect().head.getBoolean(0)
-              val a = negotiate(accept, Seq("application/sparql-results+json",
-                "application/sparql-results+xml")).getOrElse(accept)
-              if (a.contains("xml"))
-                respond(ex, 200, "application/sparql-results+xml", Serializer.sparqlAskXml(b))
-              else respond(ex, 200, "application/sparql-results+json", Serializer.sparqlAskJson(b))
-            case _ if isGraphResult(ast) =>
-              // graph results negotiate the RDF format (the reference
-              // negotiates Rio writers the same way): Turtle and
-              // compacted JSON-LD on request, N-Triples default —
-              // all streamed; full media types honor RFC 7231 q-values
-              val a = negotiate(accept, Seq("application/n-triples",
-                "text/turtle", "application/ld+json")).getOrElse(accept)
-              if (a.contains("turtle"))
-                respondStream(ex, "text/turtle", Serializer.turtleHeader() + "\n",
-                  lines(Serializer.toTurtle(df)), "\n", "")
-              else if (a.contains("ld+json"))
-                respondStream(ex, "application/ld+json",
-                  "{\"@context\":" + Serializer.jsonLdContext() + ",\"@graph\":[",
-                  lines(Serializer.toJsonLdCompact(df)), ",", "]}")
-              else respondStream(ex, "application/n-triples", "",
-                lines(Serializer.toNTriples(df)), "\n", "")
-            case _ =>
-              val vars = df.columns.toSeq
-              val a = negotiate(accept, Seq("application/sparql-results+json",
-                "application/sparql-results+xml", "text/csv",
-                "text/tab-separated-values")).getOrElse(accept)
-              if (a.contains("csv"))
-                respondStream(ex, "text/csv", vars.mkString(",") + "\r\n",
-                  lines(Serializer.sparqlCsvRows(df)), "\r\n", "")
-              else if (a.contains("tab-separated"))
-                respondStream(ex, "text/tab-separated-values",
-                  vars.map("?" + _).mkString("\t") + "\n",
-                  lines(Serializer.sparqlTsvRows(df)), "\n", "")
-              else if (a.contains("xml"))
-                respondStream(ex, "application/sparql-results+xml",
-                  Serializer.sparqlXmlHead(vars),
-                  lines(Serializer.sparqlXmlResults(df)), "", Serializer.sparqlXmlFoot)
-              else
-                respondStream(ex, "application/sparql-results+json",
-                  Serializer.sparqlJsonHead(vars),
-                  lines(Serializer.sparqlJsonBindings(df)), ",", Serializer.sparqlJsonFoot)
-          }
-        }
+  private def handleQuery(r: Request, ns: String): Unit = r.method match {
+    case "HEAD" =>
+      // HEAD /sparql: endpoint liveness probe (generic clients and
+      // monitors send it; the reference's servlets inherit it from
+      // HttpServlet) — status + headers, NO body. The namespace must
+      // resolve FIRST: a monitor probing a deleted namespace must
+      // see the same 4xx a GET would, not a healthy 200
+      tenant(ns)
+      r.ex.getResponseHeaders.set("Content-Type", "application/n-triples")
+      r.ex.sendResponseHeaders(200, -1)
+      r.ex.close()
+    // QueryServlet.java:183: mint a UUID server-side as text/plain
+    // (RFC 4122 has no REST method, so the reference added one); GET
+    // and POST alike, checked before the content-type arms
+    case _ if r.flag("uuid") =>
+      respond(r, 200, "text/plain", java.util.UUID.randomUUID().toString)
+    case _ if r.flag("HASSTMT") => handleHasStmt(r, ns)
+    // UPDATE-with-query: atomic delete-described + insert-body
+    case "PUT" => handleUpdateWithQuery(r, ns)
+    // UPDATE via POST w/ multipart add/remove parts
+    case "POST" if r.flag("updatePost") => handleUpdateWithParts(r, ns)
+    // DELETE via POST w/ body (clients that cannot send a DELETE body
+    // — RESTServlet.java:275)
+    case "POST" if r.flag("delete") => handleDelete(r, ns)
+    // SPARQL 1.1 Service Description — the reference answers a bare
+    // GET on the endpoint with one (BigdataRDFServlet / VoID+SD
+    // document); N-Triples, one line per statement
+    case "GET" if r.bare => handleServiceDescription(r, ns)
+    case "GET" if r.flag("ESTCARD") => handleEstcard(r, ns)
+    case "GET" if r.flag("CONTEXTS") => handleContexts(r, ns)
+    case "GET" if r.flag("GETSTMTS") => handleGetStmts(r, ns)
+    case "DELETE" => handleDelete(r, ns)
+    // the reference dispatches update bodies from /sparql by content
+    // type (UpdateServlet via RESTServlet)
+    case "POST" if r.contentType.startsWith("application/sparql-update") => handleUpdate(r, ns)
+    case "POST" if rdfExtension(r.contentType).isDefined || r.flag("uri") => handleInsert(r, ns)
+    // the SPARQL 1.1 Protocol's URL-encoded POST binding, the
+    // reference's RESTServlet form dispatch: query= runs, else
+    // update= takes the update path, else a form with neither is not
+    // guessed at
+    case "POST" if r.isForm => r.param("query") match {
+      case Some(q) => execQuery(r, ns, q)
+      case None if r.param("update").isDefined => handleUpdate(r, ns)
+      case None => sys.error("no query or update in form")
+    }
+    // a DECLARED media type none of the arms above recognize → 415
+    // (sparql11-protocol: the direct-POST query binding is
+    // application/sparql-query). A POST with NO Content-Type stays the
+    // permissive query-text convenience.
+    case "POST" if r.contentType.nonEmpty &&
+                   !r.contentType.startsWith("application/sparql-query") =>
+      respond(r, 415, "text/plain", s"unsupported media type: ${r.contentType}")
+    case m =>
+      val q = if (m == "GET") r.param("query") else Some(r.text)
+      execQuery(r, ns, q.getOrElse(sys.error("no query in request")))
+  }
+
+  /** Execute query text `q` against the request's [[readView]] and
+    * render per its protocol knobs (`format=`, `explain`, the
+    * protocol dataset, the deadline) — shared by every dispatch arm
+    * that carries a query. */
+  private def execQuery(r: Request, ns: String, q: String): Unit = {
+    // ?format=json|xml|csv|tsv|turtle|ntriples|jsonld overrides the
+    // Accept header (the reference's format= convenience for curl)
+    val accept = r.param("format").fold(r.accept) { f =>
+      (bindingFormats ++ graphFormats).find(_.aliases.contains(f))
+        .getOrElse(sys.error(s"unknown format: $f")).mediaType
+    }
+    val g = readView(r, ns)
+    val ast = Parser.parse(q)
+    // SPARQL 1.1 Protocol §2.1.4: a protocol-supplied RDF dataset
+    // (repeatable default-graph-uri=/named-graph-uri=, query string or
+    // form body) takes precedence over the query's own FROM / FROM
+    // NAMED. IRIs intern like every other loader path.
+    val dgs = r.all("default-graph-uri").map(Lexicon.intern)
+    val ngs = r.all("named-graph-uri").map(Lexicon.intern)
+    val df = compiled(ns, r.param("timestamp").map(_.toLong)) {
+      g.query(
+        if (dgs.isEmpty && ngs.isEmpty) ast
+        else graft.sparql.ProtocolDataset.overrideIn(ast, dgs, ngs))
+    }
+    if (r.flag("explain")) {
+      // the reference's ?explain: the query PLAN, not the results.
+      // maxBopLength clamps the rendered plan (the reference's
+      // StatusServlet/BigdataRDFContext parameter — a pathological
+      // plan must not produce an unbounded response body);
+      // 0 = unlimited, matching the reference's interpretation.
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val cap = r.param("maxBopLength").map(_.toInt).getOrElse(0)
+      val body =
+        if (cap > 0 && plan.length > cap)
+          plan.take(cap) + s"\n… [truncated at maxBopLength=$cap of ${plan.length} chars]"
+        else plan
+      respond(r, 200, "text/plain", body)
+    } else inJobGroup(ns, q, queryTimeoutMs(r)) {
+      ast match {
+        case _: Ask =>
+          val f = pick(accept, askFormats)
+          respond(r, 200, f.mediaType, f.ask.get(df.collect().head.getBoolean(0)))
+        case _ if isGraphResult(ast) => stream(r, pick(accept, graphFormats), df)
+        case _ => stream(r, pick(accept, bindingFormats), df)
+      }
+    }
   }
 
   /** SPARQL 1.1 Service Description (§3): what this endpoint speaks,
     * as N-Triples over the `sd:` vocabulary. */
-  private def handleServiceDescription(ex: HttpExchange, ns: String): Unit = {
+  private def handleServiceDescription(r: Request, ns: String): Unit = {
     val sd = "http://www.w3.org/ns/sparql-service-description#"
-    val ep = s"$address/namespace/$ns/sparql"
+    val formats = "http://www.w3.org/ns/formats/"
     val b = "_:svc"
     val lines = Seq(
       s"""$b <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <${sd}Service> .""",
-      s"""$b <${sd}endpoint> <$ep> .""",
+      s"""$b <${sd}endpoint> <$address/namespace/$ns/sparql> .""",
       s"""$b <${sd}supportedLanguage> <${sd}SPARQL11Query> .""",
       s"""$b <${sd}supportedLanguage> <${sd}SPARQL11Update> .""",
       s"""$b <${sd}feature> <${sd}UnionDefaultGraph> .""",
-      s"""$b <${sd}feature> <${sd}BasicFederatedQuery> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/SPARQL_Results_JSON> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/SPARQL_Results_XML> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/SPARQL_Results_CSV> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/SPARQL_Results_TSV> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/N-Triples> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/Turtle> .""",
-      s"""$b <${sd}resultFormat> <http://www.w3.org/ns/formats/JSON-LD> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/Turtle> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/N-Triples> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/N-Quads> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/TriG> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/RDF_XML> .""",
-      s"""$b <${sd}inputFormat> <http://www.w3.org/ns/formats/JSON-LD> .""")
-    respond(ex, 200, "application/n-triples", lines.mkString("\n"))
+      s"""$b <${sd}feature> <${sd}BasicFederatedQuery> .""") ++
+      (bindingFormats ++ graphFormats).map(f =>
+        s"""$b <${sd}resultFormat> <$formats${f.w3cName}> .""") ++
+      rdfContentTypes.values.flatMap(w3cInputNames.get).toSeq.distinct.sorted.map(n =>
+        s"""$b <${sd}inputFormat> <$formats$n> .""")
+    respond(r, 200, "application/n-triples", lines.mkString("\n"))
   }
 
   /** `POST /sparql` with an RDF document body (InsertServlet.java:61:
     * POST-with-body; content-type picks the parser, `context-uri`
     * the target graph), or `?uri=<document-url>` (InsertServlet's
     * POST-with-URIs form, `file:` scheme — a cluster ingests from
-    * shared storage, not by tunneling bytes through the coordinator). */
-  private def handleInsert(ex: HttpExchange, ns: String): Unit = {
-    val qp = params(rawQuery(ex))
-    val graph = qp.get("context-uri").flatten.orElse(qp.get("graph").flatten)
-      .map(Lexicon.intern)
+    * shared storage, not by tunneling bytes through the coordinator).
+    * Under `?tx=` the statements stage instead of committing. */
+  private def handleInsert(r: Request, ns: String): Unit = {
+    val graph = r.param("context-uri").orElse(r.param("graph")).map(Lexicon.intern)
     val t = tenant(ns)
-    val (quads, spill) = qp.get("uri").flatten match {
-      case Some(uri) =>
-        require(uri.startsWith("file:"), s"only file: ingest URIs are supported, got $uri")
-        (Update.loadOpQuads(spark, uri, graph, t.current.defaultGraph), None)
-      case None =>
-        val ext = rdfExtension(contentType(ex)).getOrElse(
-          sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
-        val (q, tmp) = bodyQuads(ex, ext, graph, t.current.defaultGraph)
-        (q, Some(tmp))
-    }
-    qp.get("tx").flatten match {
+    def land(quads: DataFrame): Unit = r.param("tx") match {
       case Some(id) =>
         // materialize before the spill file drops, then stage
-        val staged =
-          try inJobGroup(ns, "data-POST (staged)") { quads.localCheckpoint() }
-          finally spill.foreach(dropSpill)
+        val staged = inJobGroup(ns, "data-POST (staged)") { quads.localCheckpoint() }
         stageTx(id, ns, Right(staged))
-        respond(ex, 200, "application/xml",
-          s"""<?xml version="1.0"?><data modified="${staged.count()}" staged="true"/>""")
+        data(r, "modified" -> staged.count(), "staged" -> true)
       case None =>
-        val suppress = qp.get("suppressTruthMaintenance").flatten
-          .exists(_.toBoolean)
-        val n =
-          try inJobGroup(ns, "data-POST") {
-            t.ingest(quads, suppress)
-          }
-          finally spill.foreach(dropSpill)
-        respond(ex, 200, "application/xml",
-          s"""<?xml version="1.0"?><data modified="$n"/>""")
+        data(r, "modified" -> inJobGroup(ns, "data-POST") { t.ingest(quads, suppress(r)) })
+    }
+    r.param("uri") match {
+      case Some(uri) =>
+        require(uri.startsWith("file:"), s"only file: ingest URIs are supported, got $uri")
+        land(Update.loadOpQuads(spark, uri, graph, t.current.defaultGraph))
+      case None => withDocument(r.contentType, r.body, graph, t.current.defaultGraph)(land)
     }
   }
 
@@ -1412,57 +1341,40 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * statements inserted as ONE commit; `<data modified="removed+
     * inserted"/>`. The curl-script shape for "replace what this query
     * describes with this document". */
-  private def handleUpdateWithQuery(ex: HttpExchange, ns: String): Unit = {
-    val qp = params(rawQuery(ex))
+  private def handleUpdateWithQuery(r: Request, ns: String): Unit = {
     val t = tenant(ns)
-    val q = qp.get("query").flatten
-      .getOrElse(sys.error("PUT update needs ?query=<CONSTRUCT|DESCRIBE>"))
-    require(isGraphResult(Parser.parse(q)),
-      "PUT update requires CONSTRUCT or DESCRIBE")
-    val ext = rdfExtension(contentType(ex)).getOrElse(
-      sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
-    val (adds, spill) = bodyQuads(ex, ext, None, t.current.defaultGraph)
-    val suppress = qp.get("suppressTruthMaintenance").flatten.exists(_.toBoolean)
-    val n =
-      try inJobGroup(ns, "PUT update-with-query") {
-        t.updateWithBody(t.current.query(q).select("s", "p", "o"), adds, suppress)
-      } finally dropSpill(spill)
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    val ast = graphQuery(
+      r.param("query").getOrElse(sys.error("PUT update needs ?query=<CONSTRUCT|DESCRIBE>")),
+      "PUT update")
+    withDocument(r.contentType, r.body, None, t.current.defaultGraph) { adds =>
+      data(r, "modified" -> inJobGroup(ns, "PUT update-with-query") {
+        t.updateWithBody(t.current.query(ast).select("s", "p", "o"), adds, suppress(r))
+      })
+    }
   }
 
   /** `POST /sparql?updatePost` with a multipart body carrying RDF
     * document parts named `remove` and `add` (UpdateServlet.java:817
     * `doUpdateWithBody`): atomic remove+insert in one request; each
     * part's own Content-Type picks its parser. */
-  private def handleUpdateWithParts(ex: HttpExchange, ns: String): Unit = {
-    val qp = params(rawQuery(ex))
+  private def handleUpdateWithParts(r: Request, ns: String): Unit = {
     val t = tenant(ns)
-    val ct = contentType(ex)
-    require(ct.toLowerCase.startsWith("multipart/"),
-      s"updatePost needs a multipart body, got '$ct'")
-    val parts = multipartParts(ex.getRequestBody.readAllBytes(), ct)
-    def quadsOf(name: String): Option[(DataFrame, Path)] = parts.get(name).map {
-      case (pct, bytes) =>
-        val ext = rdfExtension(pct).getOrElse(
-          sys.error(s"part '$name' has an unsupported RDF content type: '$pct'"))
-        bytesQuads(bytes, ext, None, t.current.defaultGraph)
-    }
+    require(r.contentType.toLowerCase.startsWith("multipart/"),
+      s"updatePost needs a multipart body, got '${r.contentType}'")
+    val parts = multipartParts(r.body, r.contentType)
     require(parts.contains("add") || parts.contains("remove"),
       "updatePost needs an 'add' and/or 'remove' part")
-    val remove = quadsOf("remove")
-    val add = quadsOf("add")
-    val suppress = qp.get("suppressTruthMaintenance").flatten.exists(_.toBoolean)
-    val n =
-      try inJobGroup(ns, "updatePost") {
-        t.updateWithBody(
-          remove.map(_._1.select("s", "p", "o"))
-            .getOrElse(emptyQuads.select("s", "p", "o")),
-          add.map(_._1).getOrElse(emptyQuads),
-          suppress)
-      } finally (remove.toSeq ++ add.toSeq).foreach(p => dropSpill(p._2))
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    def part(name: String)(use: DataFrame => Unit): Unit = parts.get(name) match {
+      case Some((ct, bytes)) => withDocument(ct, bytes, None, t.current.defaultGraph)(use)
+      case None              => use(emptyQuads)
+    }
+    part("remove") { remove =>
+      part("add") { add =>
+        data(r, "modified" -> inJobGroup(ns, "updatePost") {
+          t.updateWithBody(remove.select("s", "p", "o"), add, suppress(r))
+        })
+      }
+    }
   }
 
   /** `DELETE /sparql?query=<CONSTRUCT…>` or DELETE-with-body
@@ -1470,14 +1382,15 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * with a body (RESTServlet.java:275 — the arm for clients that
     * cannot send DELETE with a body): removes the described
     * statements from every graph they appear in. */
-  private def handleDelete(ex: HttpExchange, ns: String): Unit = {
+  private def handleDelete(r: Request, ns: String): Unit = {
     val t = tenant(ns)
-    val qp = params(rawQuery(ex))
     // the delete query comes from the QUERY STRING (never the body —
     // under POST ?delete the body IS the RDF document to remove)
-    val delQuery = qp.get("query").flatten
-    val apBound = Seq("s", "p", "o", "c").exists(k => qp.get(k).flatten.isDefined)
-    if (delQuery.isEmpty && rdfExtension(contentType(ex)).isEmpty && apBound) {
+    val delQuery = r.param("query")
+    def remove(spo: => DataFrame): Unit =
+      data(r, "modified" -> inJobGroup(ns, "data-DELETE") { t.remove(spo, suppress(r)) })
+    if (delQuery.isEmpty && rdfExtension(r.contentType).isEmpty &&
+        Seq("s", "p", "o", "c").exists(k => r.param(k).isDefined))
       // DELETE-by-access-path (DeleteServlet.java:106
       // doDeleteWithAccessPath): NT-encoded s/p/o/c terms choose the
       // doomed quads exactly like ESTCARD/GETSTMTS; `c=` scopes the
@@ -1485,84 +1398,52 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       // below — the reference wipes the namespace on an empty access
       // path, a foot-gun this server keeps behind the explicit update
       // path (DROP ALL).
-      val suppressAp = qp.get("suppressTruthMaintenance").flatten
-        .exists(_.toBoolean)
-      val n = inJobGroup(ns, "data-DELETE (access path)") {
-        val doomed = accessPath(t.current, qp)
-        t.removeQuads(doomed, suppressAp)
-      }
-      respond(ex, 200, "application/xml",
-        s"""<?xml version="1.0"?><data modified="$n"/>""")
-      return
-    }
-    val (spo, spill) = delQuery match {
+      data(r, "modified" -> inJobGroup(ns, "data-DELETE (access path)") {
+        t.removeQuads(accessPath(t.current, r), suppress(r))
+      })
+    else delQuery match {
       case Some(q) =>
-        val ast = Parser.parse(q)
-        require(isGraphResult(ast),
-          "DELETE with query requires CONSTRUCT or DESCRIBE")
-        (t.current.query(q).select("s", "p", "o"), None)
-      case None =>
-        val ext = rdfExtension(contentType(ex)).getOrElse(
-          sys.error(s"DELETE needs ?query=… or an RDF body; got content type '${contentType(ex)}'"))
-        val (q, tmp) = bodyQuads(ex, ext, None, t.current.defaultGraph)
-        (q.select("s", "p", "o"), Some(tmp))
-    }
-    val suppress = params(rawQuery(ex)).get("suppressTruthMaintenance")
-      .flatten.exists(_.toBoolean)
-    val n =
-      try inJobGroup(ns, "data-DELETE") {
-        t.remove(spo, suppress)
+        val ast = graphQuery(q, "DELETE with query")
+        remove(t.current.query(ast).select("s", "p", "o"))
+      case None => withDocument(r.contentType, r.body, None, t.current.defaultGraph) { q =>
+        remove(q.select("s", "p", "o"))
       }
-      finally spill.foreach(dropSpill)
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data modified="$n"/>""")
+    }
   }
 
   /** `GET /sparql?HASSTMT&s=&p=&o=&c=` (QueryServlet.java:159) —
-    * boolean statement-existence probe over the chosen access path;
-    * honors `?timestamp=` like the reference's HasStmtTask. Answers
-    * `<data result="…" milliseconds="…"/>`, the
+    * boolean statement-existence probe over the chosen access path of
+    * the request's [[readView]], like the reference's HasStmtTask.
+    * Answers `<data result="…" milliseconds="…"/>`, the
     * buildAndCommitBooleanResponse document
     * (BigdataRDFServlet.java:530). The probe is a `LIMIT 1` existence
     * job over the pruned access path — never a count. */
-  private def handleHasStmt(ex: HttpExchange, ns: String): Unit = {
+  private def handleHasStmt(r: Request, ns: String): Unit = {
     val t0 = System.currentTimeMillis()
-    val qp = params(rawQuery(ex))
-    val inferred = qp.get("includeInferred").flatten.forall(_.toBoolean)
-    val g = qp.get("timestamp").flatten match {
-      case Some(v) =>
-        if (inferred) tenant(ns).at(v.toLong) else tenant(ns).assertedAt(v.toLong)
-      case None =>
-        if (inferred) tenant(ns).current else tenant(ns).asserted
-    }
-    val found = inJobGroup(ns, "HASSTMT") { !accessPath(g, qp).isEmpty }
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data result="$found" milliseconds="${System.currentTimeMillis() - t0}"/>""")
+    val g = readView(r, ns)
+    val found = inJobGroup(ns, "HASSTMT") { !accessPath(g, r).isEmpty }
+    data(r, "result" -> found, "milliseconds" -> (System.currentTimeMillis() - t0))
   }
 
   /** `GET /sparql?ESTCARD&…` — the reference's fast range count
-    * (QueryServlet.java:152: ESTCARD over the chosen access path).
-    * The reference answers from B+Tree page metadata; here an unbound
-    * or graph-only-bound count over a DURABLE, fully-compacted head is
-    * answered from parquet FOOTERS (graph-partitioned segments scope
-    * the `c=` term to one partition directory) — no Spark job, no data
-    * read; the response carries `fastpath="metadata"` so callers (and
-    * tests) can tell. Bound s/p/o terms run an exact count over the
-    * pruned access path. */
-  private def handleEstcard(ex: HttpExchange, ns: String): Unit = {
+    * (QueryServlet.java:152: ESTCARD over the chosen access path of
+    * the request's [[readView]]). The reference answers from B+Tree
+    * page metadata; here an unbound or graph-only-bound count of the
+    * full head view over a DURABLE, fully-compacted head is answered
+    * from parquet FOOTERS (graph-partitioned segments scope the `c=`
+    * term to one partition directory) — no Spark job, no data read;
+    * the response carries `fastpath="metadata"` so callers (and
+    * tests) can tell. Every other count runs exactly over the pruned
+    * access path. */
+  private def handleEstcard(r: Request, ns: String): Unit = {
     val t0 = System.currentTimeMillis()
-    val qp = params(rawQuery(ex))
-    val spoBound = Seq("s", "p", "o").exists(k => qp.get(k).flatten.isDefined)
-    val graph = qp.get("c").flatten.map(Lexicon.fromToken)
-    val fast = if (spoBound) None else tenant(ns).metadataCount(graph)
-    val (n, attrs) = fast match {
-      case Some(m) => (m, s""" fastpath="metadata"""")
-      case None => (inJobGroup(ns, "ESTCARD") {
-        accessPath(tenant(ns).current, qp).count()
-      }, "")
-    }
-    respond(ex, 200, "application/xml",
-      s"""<?xml version="1.0"?><data rangeCount="$n" milliseconds="${System.currentTimeMillis() - t0}"$attrs/>""")
+    val head = inferred(r) && r.param("timestamp").isEmpty && r.param("tx").isEmpty
+    val fast =
+      if (!head || Seq("s", "p", "o").exists(k => r.param(k).isDefined)) None
+      else tenant(ns).metadataCount(r.param("c").map(Lexicon.fromToken))
+    val n = fast.getOrElse(inJobGroup(ns, "ESTCARD") { accessPath(readView(r, ns), r).count() })
+    data(r, Seq("rangeCount" -> n, "milliseconds" -> (System.currentTimeMillis() - t0)) ++
+      fast.map(_ => "fastpath" -> "metadata"): _*)
   }
 
   /** `POST /dataloader` (namespace-scoped: `/namespace/<ns>/dataloader`)
@@ -1574,53 +1455,39 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * whole batch lands as ONE commit through the tenant's own journal
     * (single-pass: segment write + footer count). Non-`file:` schemes
     * are refused loudly, like `?uri=` ingest. */
-  private def handleDataLoader(ex: HttpExchange, ns: String): Unit =
-    try {
-      require(ex.getRequestMethod == "POST", "dataloader requires POST")
-      val qp = params(rawQuery(ex))
-      val graph = qp.get("graph").flatten.map(Lexicon.intern)
-      val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      val paths = body.split('\n').map(_.trim)
-        .filter(p => p.nonEmpty && !p.startsWith("#")).toSeq
-      require(paths.nonEmpty, "no input paths in body")
-      paths.foreach { p =>
-        require(!p.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*") || p.startsWith("file:"),
-          s"only file: ingest paths are supported, got $p")
-      }
-      val (v, n) = inJobGroup(ns, "BULK-LOAD") {
-        tenant(ns).bulkLoad(paths, graph, compact = !qp.contains("no-compact"))
-      }
-      respond(ex, 200, "application/xml",
-        s"""<?xml version="1.0"?><data modified="$n" version="$v"/>""")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+  private def handleDataLoader(r: Request, ns: String): Unit = {
+    require(r.method == "POST", "dataloader requires POST")
+    val graph = r.param("graph").map(Lexicon.intern)
+    val paths = r.text.split('\n').map(_.trim)
+      .filter(p => p.nonEmpty && !p.startsWith("#")).toSeq
+    require(paths.nonEmpty, "no input paths in body")
+    paths.foreach { p =>
+      require(!p.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*") || p.startsWith("file:"),
+        s"only file: ingest paths are supported, got $p")
     }
+    val (v, n) = inJobGroup(ns, "BULK-LOAD") {
+      tenant(ns).bulkLoad(paths, graph, compact = !r.flag("no-compact"))
+    }
+    data(r, "modified" -> n, "version" -> v)
+  }
 
   /** `GET /sparql?CONTEXTS` — the named graphs (QueryServlet CONTEXTS
     * op), as the reference's contexts XML document. */
-  private def handleContexts(ex: HttpExchange, ns: String): Unit = {
+  private def handleContexts(r: Request, ns: String): Unit = {
     val gs = inJobGroup(ns, "CONTEXTS") {
       tenant(ns).current.store.graphs.collect().map(_.getString(0)).sorted
     }
-    def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;").replace("\"", "&quot;")
     val body = gs.map(g => s"""<context uri="${esc(Lexicon.iri(g))}"/>""").mkString
-    respond(ex, 200, "application/xml",
+    respond(r, 200, "application/xml",
       s"""<?xml version="1.0"?><contexts>$body</contexts>""")
   }
 
-  /** `GET /sparql?GETSTMTS&…` — the matching statements, streamed as
-    * N-Quads (QueryServlet GETSTMTS / ExportServlet analog). */
-  private def handleGetStmts(ex: HttpExchange, ns: String): Unit =
-    inJobGroup(ns, "GETSTMTS") {
-      val qp = params(rawQuery(ex))
-      // BLZG-1207: getStatements must honor includeInferred
-      val inferred = qp.get("includeInferred").flatten.forall(_.toBoolean)
-      val g = if (inferred) tenant(ns).current else tenant(ns).asserted
-      val df = accessPath(g, qp)
-      respondStream(ex, "application/n-quads", "",
-        lines(Serializer.toNQuads(df)), "\n", "")
-    }
+  /** `GET /sparql?GETSTMTS&…` — the matching statements of the
+    * request's [[readView]] (BLZG-1207: getStatements honors
+    * includeInferred), streamed as N-Quads (QueryServlet GETSTMTS /
+    * ExportServlet analog). */
+  private def handleGetStmts(r: Request, ns: String): Unit =
+    inJobGroup(ns, "GETSTMTS") { stream(r, NQuads, accessPath(readView(r, ns), r)) }
 
   /** SPARQL 1.1 Graph Store Protocol (`/rdf-graphs?graph=<iri>` or
     * `?default`): GET streams the graph as N-Triples, PUT replaces it
@@ -1629,88 +1496,59 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * empty graph is a 404 per the spec. The reference exposes the
     * same operations through its Insert/Delete servlets; GSP adds the
     * standard URL shapes a generic client library expects. */
-  private def handleGraphStore(ex: HttpExchange, ns: String): Unit =
-    try {
-      val qp = params(rawQuery(ex))
-      val t = tenant(ns)
-      val g =
-        if (qp.contains("default")) t.current.defaultGraph
-        else Lexicon.intern(qp.get("graph").flatten.getOrElse(
-          sys.error("graph store request needs ?graph=<iri> or ?default")))
-      def graphRows = t.current.store.graph(g)
-      ex.getRequestMethod match {
-        case "GET" => inJobGroup(ns, s"GSP GET $g") {
-          if (graphRows.isEmpty) respond(ex, 404, "text/plain", s"no graph: $g")
-          else respondStream(ex, "application/n-triples", "",
-            lines(Serializer.toNTriples(graphRows)), "\n", "")
-        }
-        case "PUT" =>
-          val ext = rdfExtension(contentType(ex)).getOrElse(
-            sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
-          val (quads, spill) = bodyQuads(ex, ext, Some(g), g)
-          try inJobGroup(ns, s"GSP PUT $g") { t.putGraph(g, quads) }
-          finally dropSpill(spill)
-          respond(ex, 204, "text/plain", "")
-        case "POST" =>
-          val ext = rdfExtension(contentType(ex)).getOrElse(
-            sys.error(s"unsupported RDF content type: ${contentType(ex)}"))
-          val (quads, spill) = bodyQuads(ex, ext, Some(g), g)
-          val n =
-            try inJobGroup(ns, s"GSP POST $g") { t.ingest(quads) }
-            finally dropSpill(spill)
-          respond(ex, 200, "application/xml",
-            s"""<?xml version="1.0"?><data modified="$n"/>""")
-        case "DELETE" => inJobGroup(ns, s"GSP DELETE $g") {
-          if (graphRows.isEmpty) respond(ex, 404, "text/plain", s"no graph: $g")
-          else { t.dropGraph(g); respond(ex, 204, "text/plain", "") }
-        }
-        case other => respond(ex, 405, "text/plain", s"method not allowed: $other")
+  private def handleGraphStore(r: Request, ns: String): Unit = {
+    val t = tenant(ns)
+    val g =
+      if (r.flag("default")) t.current.defaultGraph
+      else Lexicon.intern(r.param("graph").getOrElse(
+        sys.error("graph store request needs ?graph=<iri> or ?default")))
+    def graphRows = t.current.store.graph(g)
+    r.method match {
+      case "GET" => inJobGroup(ns, s"GSP GET $g") {
+        if (graphRows.isEmpty) respond(r, 404, "text/plain", s"no graph: $g")
+        else stream(r, NTriples, graphRows)
       }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        try respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-        catch { case scala.util.control.NonFatal(_) => ex.close() }
+      case "PUT" => withDocument(r.contentType, r.body, Some(g), g) { quads =>
+        inJobGroup(ns, s"GSP PUT $g") { t.putGraph(g, quads) }
+        respond(r, 204, "text/plain", "")
+      }
+      case "POST" => withDocument(r.contentType, r.body, Some(g), g) { quads =>
+        data(r, "modified" -> inJobGroup(ns, s"GSP POST $g") { t.ingest(quads) })
+      }
+      case "DELETE" => inJobGroup(ns, s"GSP DELETE $g") {
+        if (graphRows.isEmpty) respond(r, 404, "text/plain", s"no graph: $g")
+        else { t.dropGraph(g); respond(r, 204, "text/plain", "") }
+      }
+      case other => respond(r, 405, "text/plain", s"method not allowed: $other")
     }
+  }
 
-  private def handleUpdate(ex: HttpExchange, ns: String): Unit =
-    try {
-      val ct = contentType(ex)
-      val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      val isForm = ct.startsWith("application/x-www-form-urlencoded")
-      val text =
-        if (isForm) formParam(body, "update").getOrElse(sys.error("no update in form"))
-        else body // application/sparql-update
-      // protocol update dataset (§2.2.3) — query string or form body;
-      // the stash must be set HERE (this handler reads the body
-      // itself, a pooled thread may carry a previous request's form)
-      formBody.set(if (isForm) Some(body) else None)
-      val (ugs, ungs) =
-        datasetParams(ex, "using-graph-uri", "using-named-graph-uri")
-      params(rawQuery(ex)).get("tx").flatten match {
-        case Some(id) =>
-          require(ugs.isEmpty && ungs.isEmpty,
-            "using-graph-uri/using-named-graph-uri are not supported on " +
-              "staged (?tx=) updates — put USING in the update text")
-          stageTx(id, ns, Left(text))  // staged, not committed
-        case None =>
-          val ops = Parser.parseUpdates(text)
-          val rewritten =
-            if (ugs.isEmpty && ungs.isEmpty) ops
-            else graft.sparql.ProtocolDataset.usingIn(ops, ugs, ungs)
-          // suppressTruthMaintenance=true (query string or form): skip
-          // closure maintenance for THIS request (no-op on non-TM
-          // namespaces) — QueryServlet.java:132's knob
-          val suppress = params(rawQuery(ex))
-            .get("suppressTruthMaintenance").flatten
-            .orElse(if (isForm) formParam(body, "suppressTruthMaintenance") else None)
-            .exists(_.toBoolean)
-          tenant(ns).updateOps(rewritten, suppress)
-      }
-      respond(ex, 204, "text/plain", "")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+  /** `/sparql/update` and every form or body update: the ONE update
+    * path. A `?tx=<id>` request stages its text in that transaction;
+    * otherwise the request applies at once, under the protocol update
+    * dataset (§2.2.3 `using-graph-uri` / `using-named-graph-uri`) and
+    * [[suppress]]. */
+  private def handleUpdate(r: Request, ns: String): Unit = {
+    val text =
+      if (r.isForm) r.param("update").getOrElse(sys.error("no update in form"))
+      else r.text // application/sparql-update
+    val ugs = r.all("using-graph-uri").map(Lexicon.intern)
+    val ungs = r.all("using-named-graph-uri").map(Lexicon.intern)
+    r.param("tx") match {
+      case Some(id) =>
+        require(ugs.isEmpty && ungs.isEmpty,
+          "using-graph-uri/using-named-graph-uri are not supported on " +
+            "staged (?tx=) updates — put USING in the update text")
+        stageTx(id, ns, Left(text))  // staged, not committed
+      case None =>
+        val ops = Parser.parseUpdates(text)
+        tenant(ns).updateOps(
+          if (ugs.isEmpty && ungs.isEmpty) ops
+          else graft.sparql.ProtocolDataset.usingIn(ops, ugs, ungs),
+          suppress(r))
     }
+    respond(r, 204, "text/plain", "")
+  }
 
   /** `GET/POST /whitelist` — the SERVICE-endpoint whitelist config
     * (ast/service/ServiceRegistry.java:354-381's
@@ -1719,83 +1557,65 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * `enabled=true|false` + repeated `uri=`; GET reads the current
     * policy back. The registry is process-global, exactly like the
     * reference's singleton — one policy per JVM, all namespaces. */
-  private object WhitelistHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        import graft.sparql.ServiceRegistry
-        ex.getRequestMethod match {
-          case "GET" =>
-            val uris = ServiceRegistry.whitelisted
-              .map(u => s"<uri>${esc(u)}</uri>").mkString
-            respond(ex, 200, "application/xml",
-              s"""<?xml version="1.0"?><whitelist enabled="${ServiceRegistry.isWhitelistEnabled}">$uris</whitelist>""")
-          case "POST" =>
-            // management-plane guard: the whitelist defends against
-            // untrusted QUERIERS, so those same clients must not be
-            // able to switch it off over HTTP. With
-            // -Dgraft.whitelist.readonly=true (or a whitelist.readonly
-            // marker beside the journals) the endpoint is read-only —
-            // policy changes then happen only via config/filesystem,
-            // the reference's config-file-fed registry posture.
-            val readOnly =
-              sys.props.get("graft.whitelist.readonly").exists(_.toBoolean) ||
-                journalDir.exists(d =>
-                  Files.exists(Paths.get(d).resolve("whitelist.readonly")))
-            if (readOnly) {
-              respond(ex, 403, "text/plain",
-                "whitelist endpoint is read-only (graft.whitelist.readonly)")
-              return
-            }
-            val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-            val sources = Seq(body, rawQuery(ex))
-            val enabled = sources.flatMap(formParam(_, "enabled")).headOption
-              .getOrElse(sys.error("no enabled= in request")).toBoolean
-            val uris = sources.flatMap(multiParams(_, "uri"))
-            ServiceRegistry.setWhitelist(enabled, uris)
-            // durable servers persist the policy beside the journals;
-            // startup re-applies it (the reference's singleton registry
-            // is config-file-fed the same way)
-            journalDir.foreach(d => Files.writeString(
-              Paths.get(d).resolve("whitelist.conf"),
-              (enabled.toString +: uris).mkString("\n")))
-            respond(ex, 200, "text/plain",
-              s"whitelist: enabled=$enabled uris=${uris.size}")
-          case other => respond(ex, 405, "text/plain", s"method not allowed: $other")
+  private def handleWhitelist(r: Request): Unit = {
+    import graft.sparql.ServiceRegistry
+    r.method match {
+      case "GET" =>
+        val uris = ServiceRegistry.whitelisted
+          .map(u => s"<uri>${esc(u)}</uri>").mkString
+        respond(r, 200, "application/xml",
+          s"""<?xml version="1.0"?><whitelist enabled="${ServiceRegistry.isWhitelistEnabled}">$uris</whitelist>""")
+      case "POST" =>
+        // management-plane guard: the whitelist defends against
+        // untrusted QUERIERS, so those same clients must not be
+        // able to switch it off over HTTP. With
+        // -Dgraft.whitelist.readonly=true (or a whitelist.readonly
+        // marker beside the journals) the endpoint is read-only —
+        // policy changes then happen only via config/filesystem,
+        // the reference's config-file-fed registry posture.
+        val readOnly =
+          sys.props.get("graft.whitelist.readonly").exists(_.toBoolean) ||
+            journalDir.exists(d =>
+              Files.exists(Paths.get(d).resolve("whitelist.readonly")))
+        if (readOnly)
+          respond(r, 403, "text/plain",
+            "whitelist endpoint is read-only (graft.whitelist.readonly)")
+        else {
+          val enabled = r.param("enabled")
+            .getOrElse(sys.error("no enabled= in request")).toBoolean
+          val uris = r.all("uri")
+          ServiceRegistry.setWhitelist(enabled, uris)
+          // durable servers persist the policy beside the journals;
+          // startup re-applies it (the reference's singleton registry
+          // is config-file-fed the same way)
+          journalDir.foreach(d => Files.writeString(
+            Paths.get(d).resolve("whitelist.conf"),
+            (enabled.toString +: uris).mkString("\n")))
+          respond(r, 200, "text/plain",
+            s"whitelist: enabled=$enabled uris=${uris.size}")
         }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-      }
+      case other => respond(r, 405, "text/plain", s"method not allowed: $other")
+    }
   }
 
-  private object StatusHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val qp = params(rawQuery(ex))
-        if (qp.contains("cancelQuery")) {
-          val id = qp.get("queryId").flatten.getOrElse(sys.error("no queryId"))
-          if (running.containsKey(id)) {
-            spark.sparkContext.cancelJobGroup(id)
-            respond(ex, 200, "text/plain", s"cancelled: $id")
-          } else respond(ex, 404, "text/plain", s"no such query: $id")
-        } else {
-          val now = System.currentTimeMillis()
-          // maxBopLength: the reference's StatusServlet detail clamp —
-          // how much of each running operation's text is rendered
-          val cap = qp.get("maxBopLength").flatten.map(_.toInt)
-            .filter(_ > 0).getOrElse(120)
-          val rows = running.values.asScala.toSeq.sortBy(_.startedMs).map { r =>
-            val q1 = r.query.replace('\n', ' ').take(cap)
-            s"${r.id}\t${r.ns}\t${now - r.startedMs}ms\t$q1"
-          }
-          respond(ex, 200, "text/plain",
-            (s"running: ${rows.size} served: ${served.get()}" +: rows).mkString("\n"))
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+  private def handleStatus(r: Request): Unit =
+    if (r.flag("cancelQuery")) {
+      val id = r.param("queryId").getOrElse(sys.error("no queryId"))
+      if (running.containsKey(id)) {
+        spark.sparkContext.cancelJobGroup(id)
+        respond(r, 200, "text/plain", s"cancelled: $id")
+      } else respond(r, 404, "text/plain", s"no such query: $id")
+    } else {
+      val now = System.currentTimeMillis()
+      // maxBopLength: the reference's StatusServlet detail clamp —
+      // how much of each running operation's text is rendered
+      val cap = r.param("maxBopLength").map(_.toInt).filter(_ > 0).getOrElse(120)
+      val rows = running.values.asScala.toSeq.sortBy(_.startedMs).map { q =>
+        s"${q.id}\t${q.ns}\t${now - q.startedMs}ms\t${q.query.replace('\n', ' ').take(cap)}"
       }
-  }
+      respond(r, 200, "text/plain",
+        (s"running: ${rows.size} served: ${served.get()}" +: rows).mkString("\n"))
+    }
 
   /** `POST /backup?target=<dir>` (bare + namespace-scoped) — online
     * journal snapshot (BackupServlet.java:62 analog): copies the
@@ -1804,45 +1624,32 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * mid-copy), so the copy is itself an openable journal
     * (`Repository.open`/`SparqlServer.durable` reattach it as-is).
     * Durable namespaces only; non-file targets refused. */
-  private def handleBackup(ex: HttpExchange, ns: String): Unit =
-    try {
-      require(ex.getRequestMethod == "POST", "backup requires POST")
-      val target = params(rawQuery(ex)).get("target").flatten
-        .getOrElse(sys.error("backup needs ?target=<server-visible-dir>"))
-      require(!target.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*") || target.startsWith("file:"),
-        s"only file: backup targets are supported, got $target")
-      val v = tenant(ns).backup(Paths.get(target.stripPrefix("file://")))
-      respond(ex, 200, "application/xml",
-        s"""<?xml version="1.0"?><data backup="${target.replace("&", "&amp;").replace("\"", "&quot;")}" version="$v"/>""")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-    }
+  private def handleBackup(r: Request, ns: String): Unit = {
+    require(r.method == "POST", "backup requires POST")
+    val target = r.param("target")
+      .getOrElse(sys.error("backup needs ?target=<server-visible-dir>"))
+    require(!target.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*") || target.startsWith("file:"),
+      s"only file: backup targets are supported, got $target")
+    val v = tenant(ns).backup(Paths.get(target.stripPrefix("file://")))
+    data(r, "backup" -> target, "version" -> v)
+  }
 
   /** `GET /counters` — performance-counters document (CountersServlet
     * analog-lite): served/running totals plus per-namespace
     * aggregates and the recent-operation history ring. Deep
     * executor/shuffle/IO metrics are deliberately NOT re-implemented
     * — that is the Spark UI's job (the declared non-goal split). */
-  private object CountersHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
-          .replace(">", "&gt;").replace("\"", "&quot;")
-        val h = history.iterator().asScala.toSeq
-        val byNs = h.groupBy(_.ns).toSeq.sortBy(_._1).map { case (n, ds) =>
-          val avg = ds.map(_.elapsedMs).sum / ds.size
-          s"""<namespace name="${esc(n)}" ops="${ds.size}" avgMs="$avg" maxMs="${ds.map(_.elapsedMs).max}"/>"""
-        }.mkString
-        val recent = h.take(20).map { d =>
-          s"""<op ns="${esc(d.ns)}" ms="${d.elapsedMs}">${esc(d.op)}</op>"""
-        }.mkString
-        respond(ex, 200, "application/xml",
-          s"""<?xml version="1.0"?><counters served="${served.get()}" running="${running.size}">$byNs<recent>$recent</recent></counters>""")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-      }
+  private def handleCounters(r: Request): Unit = {
+    val h = history.iterator().asScala.toSeq
+    val byNs = h.groupBy(_.ns).toSeq.sortBy(_._1).map { case (n, ds) =>
+      val avg = ds.map(_.elapsedMs).sum / ds.size
+      s"""<namespace name="${esc(n)}" ops="${ds.size}" avgMs="$avg" maxMs="${ds.map(_.elapsedMs).max}"/>"""
+    }.mkString
+    val recent = h.take(20).map { d =>
+      s"""<op ns="${esc(d.ns)}" ms="${d.elapsedMs}">${esc(d.op)}</op>"""
+    }.mkString
+    respond(r, 200, "application/xml",
+      s"""<?xml version="1.0"?><counters served="${served.get()}" running="${running.size}">$byNs<recent>$recent</recent></counters>""")
   }
 
   /** Multi-request write transactions, minimal form (TxServlet.java:71
@@ -1857,80 +1664,63 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * while other connections never see staged state until commit:
     * the reference's full read/write-tx isolation. `?timestamp=`
     * remains the read-only commit-point knob. */
-  private object TxHandler extends HttpHandler {
-    private def commitTx(ex: HttpExchange, id: String): Unit = {
+  private def handleTx(r: Request): Unit = {
+    def commitTx(id: String): Unit = {
       val tx = txs.remove(id)
-      if (tx == null) respond(ex, 404, "text/plain", s"no such transaction: $id")
-      else
-        try {
-          val v = inJobGroup(tx.ns, s"TX-COMMIT $id") {
-            tenant(tx.ns).commitStaged(tx.items.synchronized(tx.items.toSeq),
-              tx.startVersion)
-          }
-          respond(ex, 200, "application/xml",
-            s"""<?xml version="1.0"?><tx txId="$id" committed="$v"/>""")
-        } catch {
-          case e: TxConflict => respond(ex, 409, "text/plain", e.getMessage)
+      if (tx == null) respond(r, 404, "text/plain", s"no such transaction: $id")
+      else {
+        val v = inJobGroup(tx.ns, s"TX-COMMIT $id") {
+          tenant(tx.ns).commitStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
         }
-    }
-    private def abortTx(ex: HttpExchange, id: String): Unit =
-      if (txs.remove(id) == null)
-        respond(ex, 404, "text/plain", s"no such transaction: $id")
-      else respond(ex, 200, "application/xml",
-        s"""<?xml version="1.0"?><tx txId="$id" aborted="true"/>""")
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val rest = ex.getRequestURI.getPath.stripPrefix("/tx").stripPrefix("/")
-        val parts = if (rest.isEmpty) Nil else rest.split("/").toList
-        (parts, ex.getRequestMethod) match {
-          case (Nil, "POST") =>
-            val ns = params(rawQuery(ex)).get("ns").flatten.getOrElse(defaultNamespace)
-            val t = tenant(ns)
-            val id = java.util.UUID.randomUUID().toString
-            txs.put(id, Tx(id, ns, t.version, t.current,
-              scala.collection.mutable.Buffer.empty, System.currentTimeMillis()))
-            respond(ex, 201, "application/xml",
-              s"""<?xml version="1.0"?><tx txId="$id" namespace="$ns" readsOnCommitTime="${t.version}"/>""")
-          case (Nil, "GET") =>
-            val rows = txs.values.asScala.toSeq.sortBy(_.startedMs).map { t =>
-              s"""<tx txId="${t.id}" namespace="${t.ns}" staged="${t.items.size}"/>"""
-            }
-            respond(ex, 200, "application/xml",
-              s"""<?xml version="1.0"?><txs>${rows.mkString}</txs>""")
-          case (List(id, "commit"), "POST") => commitTx(ex, id)
-          case (List(id, "abort"), "POST")  => abortTx(ex, id)
-          // the reference's verb shape (TxServlet.java:82-94):
-          // POST /tx/<id>?COMMIT|ABORT|PREPARE — param-dispatched
-          case (List(id), "POST") =>
-            val qp = params(rawQuery(ex))
-            if (qp.contains("COMMIT")) commitTx(ex, id)
-            else if (qp.contains("ABORT")) abortTx(ex, id)
-            else if (qp.contains("PREPARE")) {
-              // validate-without-commit; advisory (no lock is held
-              // between prepare and commit — the reference's
-              // single-writer semantics make the same caveat)
-              val tx = txs.get(id)
-              if (tx == null)
-                respond(ex, 404, "text/plain", s"no such transaction: $id")
-              else
-                try {
-                  inJobGroup(tx.ns, s"TX-PREPARE $id") {
-                    tenant(tx.ns).prepareStaged(
-                      tx.items.synchronized(tx.items.toSeq), tx.startVersion)
-                  }
-                  respond(ex, 200, "application/xml",
-                    s"""<?xml version="1.0"?><tx txId="$id" prepared="true"/>""")
-                } catch {
-                  case e: TxConflict => respond(ex, 409, "text/plain", e.getMessage)
-                }
-            } else respond(ex, 405, "text/plain",
-              "unsupported tx operation (COMMIT | ABORT | PREPARE)")
-          case _ => respond(ex, 405, "text/plain", "unsupported tx operation")
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+        respond(r, 200, "application/xml",
+          s"""<?xml version="1.0"?><tx txId="$id" committed="$v"/>""")
       }
+    }
+    def abortTx(id: String): Unit =
+      if (txs.remove(id) == null) respond(r, 404, "text/plain", s"no such transaction: $id")
+      else respond(r, 200, "application/xml",
+        s"""<?xml version="1.0"?><tx txId="$id" aborted="true"/>""")
+    // validate-without-commit; advisory (no lock is held between
+    // prepare and commit — the reference's single-writer semantics
+    // make the same caveat)
+    def prepareTx(id: String): Unit = {
+      val tx = txs.get(id)
+      if (tx == null) respond(r, 404, "text/plain", s"no such transaction: $id")
+      else {
+        inJobGroup(tx.ns, s"TX-PREPARE $id") {
+          tenant(tx.ns).prepareStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
+        }
+        respond(r, 200, "application/xml",
+          s"""<?xml version="1.0"?><tx txId="$id" prepared="true"/>""")
+      }
+    }
+    val rest = r.path.stripPrefix("/tx").stripPrefix("/")
+    (if (rest.isEmpty) Nil else rest.split("/").toList, r.method) match {
+      case (Nil, "POST") =>
+        val ns = r.param("ns").getOrElse(defaultNamespace)
+        val t = tenant(ns)
+        val id = java.util.UUID.randomUUID().toString
+        txs.put(id, Tx(id, ns, t.version, t.current,
+          scala.collection.mutable.Buffer.empty, System.currentTimeMillis()))
+        respond(r, 201, "application/xml",
+          s"""<?xml version="1.0"?><tx txId="$id" namespace="$ns" readsOnCommitTime="${t.version}"/>""")
+      case (Nil, "GET") =>
+        val rows = txs.values.asScala.toSeq.sortBy(_.startedMs).map { t =>
+          s"""<tx txId="${t.id}" namespace="${t.ns}" staged="${t.items.size}"/>"""
+        }
+        respond(r, 200, "application/xml",
+          s"""<?xml version="1.0"?><txs>${rows.mkString}</txs>""")
+      case (List(id, "commit"), "POST") => commitTx(id)
+      case (List(id, "abort"), "POST")  => abortTx(id)
+      // the reference's verb shape (TxServlet.java:82-94):
+      // POST /tx/<id>?COMMIT|ABORT|PREPARE — param-dispatched
+      case (List(id), "POST") if r.flag("COMMIT")  => commitTx(id)
+      case (List(id), "POST") if r.flag("ABORT")   => abortTx(id)
+      case (List(id), "POST") if r.flag("PREPARE") => prepareTx(id)
+      case (List(_), "POST") =>
+        respond(r, 405, "text/plain", "unsupported tx operation (COMMIT | ABORT | PREPARE)")
+      case _ => respond(r, 405, "text/plain", "unsupported tx operation")
+    }
   }
 
   /** Blueprints REST binding (BlueprintsServletProxy.java:41 analog):
@@ -1946,60 +1736,45 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * GET `?vertex=<id>` streams the vertex's statements as N-Triples
     * (mutate → traverse round-trip for a remote property-graph
     * client). */
-  private def handleBlueprints(ex: HttpExchange, ns: String): Unit =
-    try {
-      if (ex.getRequestMethod == "GET") {
-        val id = params(rawQuery(ex)).get("vertex").flatten
-          .getOrElse(sys.error("GET needs ?vertex=<id>"))
-        import org.apache.spark.sql.functions.col
-        val df = tenant(ns).current.store.quads
-          .filter(col("s") === id).select("s", "p", "o").distinct()
-        inJobGroup(ns, s"BLUEPRINTS GET $id") {
-          respondStream(ex, "application/n-triples", "",
-            lines(Serializer.toNTriples(df)), "\n", "")
-        }
-      } else {
-        require(ex.getRequestMethod == "POST", "blueprints requires GET or POST")
-        val form = params(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
-        def p(k: String) = form.get(k).flatten.getOrElse(sys.error(s"missing param $k"))
-        // ids render as IRIs (the parser interns them back to the
-        // terms MutableGraph uses)
-        def iri(x: String) = {
-          require(x.matches("[^\\s<>\"{}|^`]+"), s"bad term: $x")
-          "<" + Lexicon.iri(x) + ">"
-        }
-        def strLit(x: String) = "\"" + Lexicon.escape(x) + "\""
-        val text = p("op") match {
-          case "addVertex" =>
-            s"INSERT DATA { ${iri(p("id"))} ${iri("type")} ${iri(form.get("label").flatten.getOrElse("Vertex"))} }"
-          case "addEdge" =>
-            s"INSERT DATA { ${iri(p("out"))} ${iri(p("label"))} ${iri(p("in"))} }"
-          case "setProperty" =>
-            s"DELETE { ${iri(p("id"))} ${iri(p("key"))} ?o } WHERE { ${iri(p("id"))} ${iri(p("key"))} ?o } ; " +
-              s"INSERT DATA { ${iri(p("id"))} ${iri(p("key"))} ${strLit(p("value"))} }"
-          case "removeProperty" =>
-            s"DELETE { ${iri(p("id"))} ${iri(p("key"))} ?o } WHERE { ${iri(p("id"))} ${iri(p("key"))} ?o }"
-          case "removeEdge" =>
-            s"DELETE DATA { ${iri(p("out"))} ${iri(p("label"))} ${iri(p("in"))} }"
-          case "removeVertex" =>
-            s"DELETE { ${iri(p("id"))} ?p ?o } WHERE { ${iri(p("id"))} ?p ?o } ; " +
-              s"DELETE { ?s ?p ${iri(p("id"))} } WHERE { ?s ?p ${iri(p("id"))} }"
-          case other => sys.error(s"unknown blueprints op: $other")
-        }
-        inJobGroup(ns, s"BLUEPRINTS ${p("op")}") { tenant(ns).update(text) }
-        respond(ex, 204, "text/plain", "")
+  private def handleBlueprints(r: Request, ns: String): Unit =
+    if (r.method == "GET") {
+      val id = r.param("vertex").getOrElse(sys.error("GET needs ?vertex=<id>"))
+      val df = tenant(ns).current.store.quads
+        .filter(col("s") === id).select("s", "p", "o").distinct()
+      inJobGroup(ns, s"BLUEPRINTS GET $id") { stream(r, NTriples, df) }
+    } else {
+      require(r.method == "POST", "blueprints requires GET or POST")
+      def p(k: String) = r.param(k).getOrElse(sys.error(s"missing param $k"))
+      // ids render as IRIs (the parser interns them back to the
+      // terms MutableGraph uses)
+      def iri(x: String) = {
+        require(x.matches("[^\\s<>\"{}|^`]+"), s"bad term: $x")
+        "<" + Lexicon.iri(x) + ">"
       }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+      def strLit(x: String) = "\"" + Lexicon.escape(x) + "\""
+      val text = p("op") match {
+        case "addVertex" =>
+          s"INSERT DATA { ${iri(p("id"))} ${iri("type")} ${iri(r.param("label").getOrElse("Vertex"))} }"
+        case "addEdge" =>
+          s"INSERT DATA { ${iri(p("out"))} ${iri(p("label"))} ${iri(p("in"))} }"
+        case "setProperty" =>
+          s"DELETE { ${iri(p("id"))} ${iri(p("key"))} ?o } WHERE { ${iri(p("id"))} ${iri(p("key"))} ?o } ; " +
+            s"INSERT DATA { ${iri(p("id"))} ${iri(p("key"))} ${strLit(p("value"))} }"
+        case "removeProperty" =>
+          s"DELETE { ${iri(p("id"))} ${iri(p("key"))} ?o } WHERE { ${iri(p("id"))} ${iri(p("key"))} ?o }"
+        case "removeEdge" =>
+          s"DELETE DATA { ${iri(p("out"))} ${iri(p("label"))} ${iri(p("in"))} }"
+        case "removeVertex" =>
+          s"DELETE { ${iri(p("id"))} ?p ?o } WHERE { ${iri(p("id"))} ?p ?o } ; " +
+            s"DELETE { ?s ?p ${iri(p("id"))} } WHERE { ?s ?p ${iri(p("id"))} }"
+        case other => sys.error(s"unknown blueprints op: $other")
+      }
+      inJobGroup(ns, s"BLUEPRINTS ${p("op")}") { tenant(ns).update(text) }
+      respond(r, 204, "text/plain", "")
     }
 
-  /** Minimal workbench landing page (the spirit of
-    * WorkbenchServlet.java:45, not the full browser workbench): each
-    * namespace's endpoints plus a query form wired to the protocol's
-    * own GET binding. */
   /** The workbench query form: a namespace switcher + textarea whose
-    * POST renders an HTML bindings table ([[WorkbenchHandler]]). */
+    * POST renders an HTML bindings table ([[handleWorkbench]]). */
   private def workbenchForm(selectedNs: String,
                             queryText: String =
                               "SELECT ?s ?p ?o WHERE { ?s ?p ?o } LIMIT 10"): String = {
@@ -2024,6 +1799,10 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
        |</form>""".stripMargin
   }
 
+  private def workbenchPage(body: String): String =
+    s"""<!DOCTYPE html><html><head><title>graft workbench</title></head><body>
+       |<h1>graft workbench</h1>$body</body></html>""".stripMargin
+
   /** Browser result rendering beyond the landing page
     * (WorkbenchServlet.java:45 / bigdata-war-html's query view, the
     * migration-comfort slice): the workbench form POSTs here and the
@@ -2031,68 +1810,41 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * switcher re-targets it). Row cap 500 keeps the page bounded —
     * the protocol endpoints stream full results; ASK renders its
     * boolean as a one-cell table through the same path. */
-  private object WorkbenchHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        if (ex.getRequestMethod == "GET")
-          respond(ex, 200, "text/html; charset=utf-8",
-            s"""<!DOCTYPE html><html><head><title>graft workbench</title></head>
-               |<body><h1>graft workbench</h1>${workbenchForm(defaultNamespace)}</body></html>""".stripMargin)
-        else if (ex.getRequestMethod == "POST" &&
-                 params(rawQuery(ex)).contains("convert")) {
-          // WorkbenchServlet.java:63 ATTR_CONVERT: POST an RDF
-          // document; the Content-Type picks the parser, the Accept
-          // header the output serialization — format conversion as a
-          // service (no store touched)
-          val ext = rdfExtension(contentType(ex)).getOrElse(
-            sys.error(s"Content-Type not recognized as RDF: ${contentType(ex)}"))
-          val (quads, spill) = bodyQuads(ex, ext, None, "g:default")
-          try {
-            val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-            val triples = quads.select("s", "p", "o")
-            val (ct, df) =
-              if (accept.contains("turtle"))
-                ("text/turtle", Serializer.toTurtle(triples))
-              else if (accept.contains("ld+json"))
-                ("application/ld+json", Serializer.toJsonLdCompact(triples))
-              else if (accept.contains("n-quads"))
-                ("application/n-quads", Serializer.toNQuads(quads))
-              else
-                ("application/n-triples", Serializer.toNTriples(triples))
-            respond(ex, 200, ct,
-              df.collect().map(_.getString(0)).mkString("\n"))
-          } finally dropSpill(spill)
-        } else {
-          require(ex.getRequestMethod == "POST", "workbench requires GET or POST")
-          val form = params(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
-          val ns = form.get("ns").flatten.getOrElse(defaultNamespace)
-          if (!namespaces.containsKey(ns)) sys.error(s"no namespace: $ns")
-          val upd = form.get("update").flatten.filter(_.trim.nonEmpty)
-          if (upd.isDefined) {
-            // browser update form: apply through the namespace's own
-            // write path, confirm with the workbench page
-            inJobGroup(ns, s"WORKBENCH-UPDATE ${upd.get}") { tenant(ns).update(upd.get) }
-            respond(ex, 200, "text/html; charset=utf-8",
-              s"""<!DOCTYPE html><html><head><title>graft workbench</title></head><body>
-                 |<h1>graft workbench</h1><p>update applied to <code>${esc(ns)}</code></p>
-                 |${workbenchForm(ns)}</body></html>""".stripMargin)
-          } else {
-          val q = form.get("query").flatten.getOrElse(sys.error("no query or update in form"))
+  private def handleWorkbench(r: Request): Unit = r.method match {
+    case "GET" =>
+      respond(r, 200, "text/html; charset=utf-8", workbenchPage(workbenchForm(defaultNamespace)))
+    // WorkbenchServlet.java:63 ATTR_CONVERT: POST an RDF document; the
+    // Content-Type picks the parser, the Accept header the streamed
+    // output serialization — format conversion as a service (no store
+    // touched)
+    case "POST" if r.flag("convert") =>
+      withDocument(r.contentType, r.body, None, "g:default") { quads =>
+        val f = pick(r.accept, graphFormats :+ NQuads)
+        stream(r, f, if (f eq NQuads) quads else quads.select("s", "p", "o"))
+      }
+    case "POST" =>
+      val ns = r.param("ns").getOrElse(defaultNamespace)
+      if (!namespaces.containsKey(ns)) sys.error(s"no namespace: $ns")
+      r.param("update").filter(_.trim.nonEmpty) match {
+        case Some(upd) =>
+          // browser update form: apply through the namespace's own
+          // write path, confirm with the workbench page
+          inJobGroup(ns, s"WORKBENCH-UPDATE $upd") { tenant(ns).update(upd) }
+          respond(r, 200, "text/html; charset=utf-8", workbenchPage(
+            s"<p>update applied to <code>${esc(ns)}</code></p>\n${workbenchForm(ns)}"))
+        case None =>
+          val q = r.param("query").getOrElse(sys.error("no query or update in form"))
           // the workbench compiles with the namespace's journal in
           // scope too — bd:history works from the form like /sparql
-          val t = tenant(ns)
-          val df = t.journal match {
-            case Some(j) => graft.sparql.HistoryService.withJournal(j)(t.current.query(q))
-            case None    => t.current.query(q)
-          }
+          val df = compiled(ns, None) { tenant(ns).current.query(q) }
           val (vars, rows) = inJobGroup(ns, s"WORKBENCH $q") {
             (df.columns.toSeq, df.limit(501).collect())
           }
           val shown = rows.take(500)
           val thead = vars.map(v => s"<th>${esc(v)}</th>").mkString
-          val trs = shown.map { r =>
+          val trs = shown.map { row =>
             vars.indices.map { i =>
-              val v = if (r.isNullAt(i)) "" else String.valueOf(r.get(i))
+              val v = if (row.isNullAt(i)) "" else String.valueOf(row.get(i))
               s"<td>${esc(v)}</td>"
             }.mkString("<tr>", "", "</tr>")
           }.mkString
@@ -2100,238 +1852,203 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
             if (rows.length > 500)
               "<p>(first 500 rows shown — the protocol endpoint streams full results)</p>"
             else ""
-          respond(ex, 200, "text/html; charset=utf-8",
-            s"""<!DOCTYPE html><html><head><title>graft workbench</title></head><body>
-               |<h1>graft workbench</h1>${workbenchForm(ns, q)}
+          respond(r, 200, "text/html; charset=utf-8", workbenchPage(
+            s"""${workbenchForm(ns, q)}
                |<p>${shown.length} row(s) · namespace <code>${esc(ns)}</code></p>
                |<table border="1"><thead><tr>$thead</tr></thead><tbody>$trs</tbody></table>
-               |$note</body></html>""".stripMargin)
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
+               |$note""".stripMargin))
       }
+    case _ => sys.error("workbench requires GET or POST")
   }
 
-  private object IndexHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        if (ex.getRequestURI.getPath != "/")
-          respond(ex, 404, "text/plain",
-            s"no such resource: ${ex.getRequestURI.getPath}")
+  /** Minimal workbench landing page (the spirit of
+    * WorkbenchServlet.java:45, not the full browser workbench): each
+    * namespace's endpoints plus a query form wired to the protocol's
+    * own GET binding. */
+  private def handleIndex(r: Request): Unit =
+    if (r.path != "/") respond(r, 404, "text/plain", s"no such resource: ${r.path}")
+    else {
+      val nss = namespaces.keys.asScala.toSeq.sorted.map { ns =>
+        s"""<li><b>$ns</b> — <a href="/namespace/$ns/sparql">sparql</a> · """ +
+          s"""<a href="/namespace/$ns/properties">properties</a></li>"""
+      }.mkString
+      respond(r, 200, "text/html; charset=utf-8",
+        s"""<!DOCTYPE html><html><head><title>graft</title></head><body>
+           |<h1>graft SPARQL server</h1>
+           |<p><a href="/status">status</a> · default namespace: <code>$defaultNamespace</code></p>
+           |<h2>Namespaces</h2><ul>$nss</ul>
+           |<h2>Query</h2>
+           |${workbenchForm(defaultNamespace)}
+           |</body></html>""".stripMargin)
+    }
+
+  /** MultiTenancyServlet's properties document, as the reference's
+    * java.util.Properties XML format. */
+  private def handleProperties(r: Request, ns: String): Unit = {
+    val t = tenant(ns)
+    val isTm = t.isInstanceOf[TmTenant]
+    val props = Seq(
+      "com.bigdata.rdf.sail.namespace" -> ns,
+      "graft.quads" -> (!isTm).toString,
+      "graft.durable" -> journalDir.isDefined.toString) ++
+      (if (isTm) Seq("graft.truthMaintenance" -> "true") else Nil) ++
+      journalDir.map(d => "graft.journal" -> s"$d/$ns") ++
+      t.current.analyzerName.map("graft.analyzer" -> _) ++
+      (if (t.current.textIndex.isDefined) Seq("graft.textIndex" -> "true") else Nil) ++
+      (if (t.current.ospHash.isDefined) Seq("graft.ospIndex" -> "current") else Nil)
+    val entries = props.map { case (k, v) => s"""<entry key="$k">$v</entry>""" }.mkString
+    respond(r, 200, "application/xml",
+      s"""<?xml version="1.0"?><!DOCTYPE properties SYSTEM "http://java.sun.com/dtd/properties.dtd"><properties>$entries</properties>""")
+  }
+
+  /** `POST /namespace` with `name=…` (and the creation options):
+    * creates a namespace — 409 if it exists. */
+  private def createNamespace(r: Request): Unit = {
+    val name = r.param("name").getOrElse(sys.error("no name in request"))
+    require(name.matches("[A-Za-z0-9_-]+"), s"bad namespace name: $name")
+    def option(k: String) = r.param(k).exists(_.toBoolean)
+    // optional per-namespace analyzer (bds:search default); persisted
+    // beside a durable journal, restart reattaches it
+    val analyzer = r.param("analyzer").filter(_.nonEmpty)
+    // plain names are id-shaped; pattern:<regex> and
+    // termcompletion:<subword>[:<soft>] carry their regexes verbatim
+    // (any chars except newlines — the conf file is one line)
+    analyzer.foreach(a => require(
+      a.matches("[A-Za-z0-9_-]+") ||
+        ((a.toLowerCase.startsWith("pattern:") ||
+          a.toLowerCase.startsWith("termcompletion:")) &&
+          !a.exists(c => c == '\n' || c == '\r')),
+      s"bad analyzer name: $a"))
+    // textIndex=true: create the namespace with a MAINTAINED persisted
+    // literal text index (the reference's
+    // AbstractTripleStore.Options.TEXT_INDEX namespace property) —
+    // journal-backed namespaces only; it lives beside the journal and
+    // syncs on every commit
+    val wantTextIndex = option("textIndex")
+    require(!wantTextIndex || journalDir.isDefined,
+      "textIndex=true needs a journal-backed namespace " +
+        "(start the server with a journal directory)")
+    // ospIndex=true: every auto-compaction also lays down the
+    // object-hash twin segment, so searchInSearch hit→subject joins
+    // prune to the hits' buckets (the reference keeps its OSP index
+    // beside SPO/POS the same way)
+    val wantOspIndex = option("ospIndex")
+    require(!wantOspIndex || journalDir.isDefined,
+      "ospIndex=true needs a journal-backed namespace " +
+        "(start the server with a journal directory)")
+    // truthMaintenance=true: an INFERENCING namespace — the
+    // reference's truth-maintenance namespace option (TM wired into
+    // the commit path; suppressTruthMaintenance honored per update
+    // request). Durable only: the maintained closure IS a pair of
+    // journals.
+    val wantTm = option("truthMaintenance")
+    require(!wantTm || journalDir.isDefined,
+      "truthMaintenance=true needs a journal-backed namespace " +
+        "(start the server with a journal directory)")
+    // analyzer/textIndex compose with TM (the index maintains over the
+    // CLOSED journal); the OSP twin is tied to the Repository
+    // compaction machinery and stays refused
+    require(!wantTm || !wantOspIndex,
+      "truthMaintenance namespaces do not support ospIndex " +
+        "(the object-hash twin is a Repository compaction feature)")
+    // computeIfAbsent decides the winner BEFORE any disk state is made
+    // — no check-then-create window where a racing loser leaks a
+    // freshly created journal directory; a journal dir already on disk
+    // (but unattached) surfaces as Journal.create's "already exists" →
+    // 409 below
+    val createdNew = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      namespaces.computeIfAbsent(name, { _ =>
+        val t: Tenant = journalDir match {
+          case None => new MemTenant(new AtomicReference(
+            Graft.empty(spark).copy(analyzerName = analyzer)))
+          case Some(d) if wantTm =>
+            val sub = Paths.get(d).resolve(name)
+            Files.createDirectories(sub)
+            val tmStore = graft.inference.MaintainedClosure
+              .createDynamic(spark, sub.resolve("tm").toString)
+            analyzer.foreach(a => Files.writeString(sub.resolve("analyzer.conf"), a))
+            if (wantTextIndex)
+              graft.rdf.TextIndexMaintenance.create(spark,
+                sub.resolve("textindex").toString, tmStore.journals._2,
+                analyzer.getOrElse("latin"))
+            new TmTenant(tmStore, sub)
+          case Some(d) =>
+            val sub = Paths.get(d).resolve(name)
+            val repo = Repository.create(spark, sub.toString)
+            analyzer.foreach(a => Files.writeString(sub.resolve("analyzer.conf"), a))
+            if (wantTextIndex)
+              graft.rdf.TextIndexMaintenance.create(spark,
+                sub.resolve("textindex").toString, repo.journal,
+                analyzer.getOrElse("latin"))
+            if (wantOspIndex)
+              Files.writeString(sub.resolve("ospindex"), "true")
+            new DurableTenant(repo, sub)
+        }
+        createdNew.set(true)
+        t
+      })
+      if (createdNew.get) respond(r, 201, "text/plain", s"created: $name")
+      else respond(r, 409, "text/plain", s"namespace exists: $name")
+    } catch {
+      case e: IllegalArgumentException
+        if e.getMessage != null && e.getMessage.contains("already exists") =>
+        respond(r, 409, "text/plain", s"namespace exists: $name")
+    }
+  }
+
+  /** THE ROUTE TABLE of a namespace's resources: `/namespace/<ns>/<tail>`
+    * for every tail, and the bare `/<tail>` default-namespace alias for
+    * every tail but `properties`. */
+  private val routes: Map[String, (Request, String) => Unit] = Map(
+    "sparql" -> (handleQuery _), "sparql/update" -> (handleUpdate _),
+    "rdf-graphs" -> (handleGraphStore _), "dataloader" -> (handleDataLoader _),
+    "blueprints" -> (handleBlueprints _), "backup" -> (handleBackup _),
+    "properties" -> (handleProperties _))
+
+  private def handleNamespace(r: Request): Unit = {
+    val rest = r.path.stripPrefix("/namespace").stripPrefix("/")
+    (if (rest.isEmpty) Nil else rest.split("/").toList, r.method) match {
+      case (Nil, "GET") =>
+        // one description line per namespace, like the reference's
+        // RDF answer (title + its scoped protocol endpoint)
+        val lines = namespaces.keys.asScala.toSeq.sorted.map { ns =>
+          s"""<$address/namespace/$ns/sparql> <http://purl.org/dc/terms/title> "$ns" ."""
+        }
+        respond(r, 200, "application/n-triples", lines.mkString("\n"))
+      case (Nil, "POST") => createNamespace(r)
+      case (List(ns), "DELETE") =>
+        // the default namespace backs the bare /sparql alias — the
+        // reference's MultiTenancyServlet protects its default KB the
+        // same way
+        if (ns == defaultNamespace)
+          respond(r, 403, "text/plain", s"cannot delete the default namespace: $ns")
         else {
-          val nss = namespaces.keys.asScala.toSeq.sorted.map { ns =>
-            s"""<li><b>$ns</b> — <a href="/namespace/$ns/sparql">sparql</a> · """ +
-              s"""<a href="/namespace/$ns/properties">properties</a></li>"""
-          }.mkString
-          val html =
-            s"""<!DOCTYPE html><html><head><title>graft</title></head><body>
-               |<h1>graft SPARQL server</h1>
-               |<p><a href="/status">status</a> · default namespace: <code>$defaultNamespace</code></p>
-               |<h2>Namespaces</h2><ul>$nss</ul>
-               |<h2>Query</h2>
-               |${workbenchForm(defaultNamespace)}
-               |</body></html>""".stripMargin
-          respond(ex, 200, "text/html; charset=utf-8", html)
+          val t = namespaces.remove(ns)
+          if (t != null) { t.destroy(); respond(r, 200, "text/plain", s"deleted: $ns") }
+          else respond(r, 404, "text/plain", s"no namespace: $ns")
         }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-      }
-  }
-
-  private object NamespaceHandler extends HttpHandler {
-    def handle(ex: HttpExchange): Unit =
-      try {
-        val rest = ex.getRequestURI.getPath.stripPrefix("/namespace").stripPrefix("/")
-        val parts = if (rest.isEmpty) Nil else rest.split("/").toList
-        (parts, ex.getRequestMethod) match {
-          case (Nil, "GET") =>
-            // one description line per namespace, like the reference's
-            // RDF answer (title + its scoped protocol endpoint)
-            val lines = namespaces.keys.asScala.toSeq.sorted.map { ns =>
-              s"""<$address/namespace/$ns/sparql> <http://purl.org/dc/terms/title> "$ns" ."""
-            }
-            respond(ex, 200, "application/n-triples", lines.mkString("\n"))
-          case (Nil, "POST") =>
-            val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-            val name = formParam(body, "name")
-              .orElse(formParam(rawQuery(ex), "name"))
-              .getOrElse(sys.error("no name in request"))
-            require(name.matches("[A-Za-z0-9_-]+"), s"bad namespace name: $name")
-            // computeIfAbsent decides the winner BEFORE any disk state
-            // is made — no check-then-create window where a racing
-            // loser leaks a freshly created journal directory; a
-            // journal dir already on disk (but unattached) surfaces as
-            // Journal.create's "already exists" → 409 below
-            val createdNew = new java.util.concurrent.atomic.AtomicBoolean(false)
-            // optional per-namespace analyzer (bds:search default);
-            // persisted beside a durable journal, restart reattaches it
-            val analyzer = formParam(body, "analyzer")
-              .orElse(formParam(rawQuery(ex), "analyzer"))
-              .filter(_.nonEmpty)
-            // plain names are id-shaped; pattern:<regex> and
-            // termcompletion:<subword>[:<soft>] carry their regexes
-            // verbatim (any chars except newlines — the conf file is
-            // one line)
-            analyzer.foreach(a => require(
-              a.matches("[A-Za-z0-9_-]+") ||
-                ((a.toLowerCase.startsWith("pattern:") ||
-                  a.toLowerCase.startsWith("termcompletion:")) &&
-                  !a.exists(c => c == '\n' || c == '\r')),
-              s"bad analyzer name: $a"))
-            // textIndex=true: create the namespace with a MAINTAINED
-            // persisted literal text index (the reference's
-            // AbstractTripleStore.Options.TEXT_INDEX namespace
-            // property) — journal-backed namespaces only; it lives
-            // beside the journal and syncs on every commit
-            val wantTextIndex = formParam(body, "textIndex")
-              .orElse(formParam(rawQuery(ex), "textIndex"))
-              .exists(_.toBoolean)
-            require(!wantTextIndex || journalDir.isDefined,
-              "textIndex=true needs a journal-backed namespace " +
-                "(start the server with a journal directory)")
-            // ospIndex=true: every auto-compaction also lays down the
-            // object-hash twin segment, so searchInSearch hit→subject
-            // joins prune to the hits' buckets (the reference keeps
-            // its OSP index beside SPO/POS the same way)
-            val wantOspIndex = formParam(body, "ospIndex")
-              .orElse(formParam(rawQuery(ex), "ospIndex"))
-              .exists(_.toBoolean)
-            require(!wantOspIndex || journalDir.isDefined,
-              "ospIndex=true needs a journal-backed namespace " +
-                "(start the server with a journal directory)")
-            // truthMaintenance=true: an INFERENCING namespace — the
-            // reference's truth-maintenance namespace option (TM wired
-            // into the commit path; suppressTruthMaintenance honored
-            // per update request). Durable only: the maintained
-            // closure IS a pair of journals.
-            val wantTm = formParam(body, "truthMaintenance")
-              .orElse(formParam(rawQuery(ex), "truthMaintenance"))
-              .exists(_.toBoolean)
-            require(!wantTm || journalDir.isDefined,
-              "truthMaintenance=true needs a journal-backed namespace " +
-                "(start the server with a journal directory)")
-            // analyzer/textIndex compose with TM (the index maintains
-            // over the CLOSED journal); the OSP twin is tied to the
-            // Repository compaction machinery and stays refused
-            require(!wantTm || !wantOspIndex,
-              "truthMaintenance namespaces do not support ospIndex " +
-                "(the object-hash twin is a Repository compaction feature)")
-            try {
-              namespaces.computeIfAbsent(name, { _ =>
-                val t: Tenant = journalDir match {
-                  case None => new MemTenant(new AtomicReference(
-                    Graft.empty(spark).copy(analyzerName = analyzer)))
-                  case Some(d) if wantTm =>
-                    val sub = Paths.get(d).resolve(name)
-                    Files.createDirectories(sub)
-                    val tmStore = graft.inference.MaintainedClosure
-                      .createDynamic(spark, sub.resolve("tm").toString)
-                    analyzer.foreach(a =>
-                      Files.writeString(sub.resolve("analyzer.conf"), a))
-                    if (wantTextIndex)
-                      graft.rdf.TextIndexMaintenance.create(spark,
-                        sub.resolve("textindex").toString, tmStore.journals._2,
-                        analyzer.getOrElse("latin"))
-                    new TmTenant(tmStore, sub)
-                  case Some(d) =>
-                    val sub = Paths.get(d).resolve(name)
-                    val repo = Repository.create(spark, sub.toString)
-                    analyzer.foreach(a => Files.writeString(sub.resolve("analyzer.conf"), a))
-                    if (wantTextIndex)
-                      graft.rdf.TextIndexMaintenance.create(spark,
-                        sub.resolve("textindex").toString, repo.journal,
-                        analyzer.getOrElse("latin"))
-                    if (wantOspIndex)
-                      Files.writeString(sub.resolve("ospindex"), "true")
-                    new DurableTenant(repo, sub)
-                }
-                createdNew.set(true)
-                t
-              })
-              if (createdNew.get) respond(ex, 201, "text/plain", s"created: $name")
-              else respond(ex, 409, "text/plain", s"namespace exists: $name")
-            } catch {
-              case e: IllegalArgumentException
-                if e.getMessage != null && e.getMessage.contains("already exists") =>
-                respond(ex, 409, "text/plain", s"namespace exists: $name")
-            }
-          case (List(ns), "DELETE") =>
-            // the default namespace backs the bare /sparql alias — the
-            // reference's MultiTenancyServlet protects its default KB
-            // the same way
-            if (ns == defaultNamespace)
-              respond(ex, 403, "text/plain", s"cannot delete the default namespace: $ns")
-            else {
-              val t = namespaces.remove(ns)
-              if (t != null) { t.destroy(); respond(ex, 200, "text/plain", s"deleted: $ns") }
-              else respond(ex, 404, "text/plain", s"no namespace: $ns")
-            }
-          case (ns :: tail, _) =>
-            if (!namespaces.containsKey(ns))
-              respond(ex, 404, "text/plain", s"no namespace: $ns")
-            else tail match {
-              case List("sparql")           => handleQuery(ex, ns)
-              case List("sparql", "update") => handleUpdate(ex, ns)
-              case List("rdf-graphs")       => handleGraphStore(ex, ns)
-              case List("dataloader")       => handleDataLoader(ex, ns)
-              case List("blueprints")       => handleBlueprints(ex, ns)
-              case List("backup")           => handleBackup(ex, ns)
-              case List("properties")       =>
-                // MultiTenancyServlet's properties document, as the
-                // reference's java.util.Properties XML format
-                val durable = journalDir.isDefined
-                val isTm = tenant(ns).isInstanceOf[TmTenant]
-                val props = Seq(
-                  "com.bigdata.rdf.sail.namespace" -> ns,
-                  "graft.quads" -> (!isTm).toString,
-                  "graft.durable" -> durable.toString) ++
-                  (if (isTm) Seq("graft.truthMaintenance" -> "true") else Nil) ++
-                  journalDir.map(d => "graft.journal" -> s"$d/$ns") ++
-                  tenant(ns).current.analyzerName.map("graft.analyzer" -> _) ++
-                  (if (tenant(ns).current.textIndex.isDefined)
-                     Seq("graft.textIndex" -> "true")
-                   else Nil) ++
-                  (if (tenant(ns).current.ospHash.isDefined)
-                     Seq("graft.ospIndex" -> "current")
-                   else Nil)
-                val entries = props.map { case (k, v) =>
-                  s"""<entry key="$k">$v</entry>""" }.mkString
-                respond(ex, 200, "application/xml",
-                  s"""<?xml version="1.0"?><!DOCTYPE properties SYSTEM "http://java.sun.com/dtd/properties.dtd"><properties>$entries</properties>""")
-              case _ => respond(ex, 404, "text/plain", s"no such resource: $rest")
-            }
-          case _ => respond(ex, 405, "text/plain", "method not allowed")
+      case (ns :: tail, _) =>
+        if (!namespaces.containsKey(ns)) respond(r, 404, "text/plain", s"no namespace: $ns")
+        else routes.get(tail.mkString("/")) match {
+          case Some(handle) => handle(r, ns)
+          case None => respond(r, 404, "text/plain", s"no such resource: $rest")
         }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 400, "text/plain", s"bad request: ${e.getMessage}")
-      }
+      case _ => respond(r, 405, "text/plain", "method not allowed")
+    }
   }
 
   // the bare paths resolve the DEFAULT namespace per request — they
   // alias /namespace/<default>/… exactly, never a captured handle
-  server.createContext("/sparql/update",
-    (ex: HttpExchange) => handleUpdate(ex, defaultNamespace))
-  server.createContext("/sparql",
-    (ex: HttpExchange) => handleQuery(ex, defaultNamespace))
-  server.createContext("/rdf-graphs",
-    (ex: HttpExchange) => handleGraphStore(ex, defaultNamespace))
-  server.createContext("/dataloader",
-    (ex: HttpExchange) => handleDataLoader(ex, defaultNamespace))
-  server.createContext("/blueprints",
-    (ex: HttpExchange) => handleBlueprints(ex, defaultNamespace))
-  server.createContext("/backup",
-    (ex: HttpExchange) => handleBackup(ex, defaultNamespace))
-  server.createContext("/namespace", NamespaceHandler)
-  server.createContext("/status", StatusHandler)
-  server.createContext("/whitelist", WhitelistHandler)
-  server.createContext("/counters", CountersHandler)
-  server.createContext("/tx", TxHandler)
-  server.createContext("/workbench", WorkbenchHandler)
-  server.createContext("/", IndexHandler)
+  Seq("sparql/update", "sparql", "rdf-graphs", "dataloader", "blueprints", "backup")
+    .foreach(tail => server.createContext("/" + tail, serve(routes(tail)(_, defaultNamespace))))
+  server.createContext("/namespace", serve(handleNamespace))
+  server.createContext("/status", serve(handleStatus))
+  server.createContext("/whitelist", serve(handleWhitelist))
+  server.createContext("/counters", serve(handleCounters))
+  server.createContext("/tx", serve(handleTx))
+  server.createContext("/workbench", serve(handleWorkbench))
+  server.createContext("/", serve(handleIndex))
 
   def start(): this.type = { server.start(); this }
   /** Stop serving and free what the server holds: the handler and
@@ -2361,4 +2078,46 @@ object SparqlServer {
               autoCompactEvery: Int = 64): SparqlServer =
     new SparqlServer(initial, host, port, defaultNamespace, Some(journalDir),
       autoCompactEvery)
+
+  /** One HTTP exchange, read once — THE request reader: nothing else
+    * reads an exchange's query string or body. Its parameters are one
+    * ordered multimap, servlet `getParameter` style: the query
+    * string's pairs, then — for an `application/x-www-form-urlencoded`
+    * body — the form's. [[param]] takes the first value, [[all]] every
+    * value in order, [[flag]] tests presence (`?ESTCARD`, `?explain`).
+    * The body is read at most once, so a form's parameters and its
+    * bytes never race for it. */
+  private[graft] final class Request(val ex: HttpExchange) {
+    val method: String = ex.getRequestMethod
+    val path: String = ex.getRequestURI.getPath
+    def header(name: String): Option[String] = Option(ex.getRequestHeaders.getFirst(name))
+    val contentType: String = header("Content-Type").getOrElse("")
+    val accept: String = header("Accept").getOrElse("")
+    def isForm: Boolean = contentType.startsWith("application/x-www-form-urlencoded")
+    lazy val body: Array[Byte] = ex.getRequestBody.readAllBytes()
+    def text: String = new String(body, StandardCharsets.UTF_8)
+    private lazy val params: Seq[(String, Option[String])] =
+      Request.pairs(Option(ex.getRequestURI.getRawQuery).getOrElse("")) ++
+        (if (isForm) Request.pairs(text) else Nil)
+    def param(k: String): Option[String] = params.collectFirst { case (`k`, Some(v)) => v }
+    def all(k: String): Seq[String] = params.collect { case (`k`, Some(v)) => v }
+    def flag(k: String): Boolean = params.exists(_._1 == k)
+    /** No parameters at all (a bare `GET /sparql`). */
+    def bare: Boolean = params.isEmpty
+  }
+
+  private[graft] object Request {
+    /** The one URL decoder (`%XX` and `+`). */
+    def decode(s: String): String = URLDecoder.decode(s, StandardCharsets.UTF_8)
+
+    /** `k=v&flag&…` → (key, decoded value) pairs in order; a bare key
+      * has no value. */
+    private def pairs(raw: String): Seq[(String, Option[String])] =
+      raw.split('&').toSeq.filter(_.nonEmpty).map { kv =>
+        kv.split("=", 2) match {
+          case Array(k)    => k -> None
+          case Array(k, v) => k -> Some(decode(v))
+        }
+      }
+  }
 }

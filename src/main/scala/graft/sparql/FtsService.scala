@@ -1,6 +1,6 @@
 package graft.sparql
 
-import java.net.{URLDecoder, URLEncoder}
+import java.net.URLEncoder
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -158,7 +158,7 @@ object FtsService {
       kv.split("=") match {
         case Array(k, v) if k.nonEmpty && !k.equals("wt") =>
           // an undecodable value is skipped, the reference's leniency
-          try Some(s"${enc(k)}=${enc(URLDecoder.decode(v, "UTF-8"))}")
+          try Some(s"${enc(k)}=${enc(graft.server.SparqlServer.Request.decode(v))}")
           catch { case _: Exception => None }
         case _ => None
       }

@@ -42,7 +42,7 @@ object FedBench {
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/sparql", new com.sun.net.httpserver.HttpHandler {
       def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        val q = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        val q = new graft.server.SparqlServer.Request(ex).text
         val sols = graft.sparql.Compiler.compile(graft.sparql.Parser.parse(q), remoteSrc)
         val lines = graft.rdf.Serializer.sparqlJsonBindings(sols)
           .collect().map(_.getString(0))

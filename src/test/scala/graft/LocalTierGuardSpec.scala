@@ -7,7 +7,7 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps four mechanisms ONE each. No `src/main` file other than
+/** Keeps five mechanisms ONE each. No `src/main` file other than
   * `graft/plans/LocalTier.scala` may read a `*.localBound` conf key or
   * declare its own `Local*Bound` constant — a new driver-side replay
   * takes its budget and probe from [[graft.plans.LocalTier]]. No
@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * on [[graft.plans.Fixpoint]]. And no `src/main` file other than
   * `graft/rdf/Lexicon.scala` may spell the global-IRI schemes or strip
   * the engine base by hand — a new term rendering or interning calls
-  * [[graft.rdf.Lexicon]]. */
+  * [[graft.rdf.Lexicon]]. And no `src/main` code outside the server's
+  * `Request` reads an HTTP exchange's query string or body, or
+  * URL-decodes — a new handler takes its parameters from the one
+  * request reader. */
 class LocalTierGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): List[Path] = {
@@ -157,6 +160,46 @@ class LocalTierGuardSpec extends AnyFunSuite {
     assert(!leaks("val Base = Lexicon.Base"))
     val root = Paths.get("src", "main", "scala")
     val found = offenders(scalaFiles(root), root.resolve("graft/rdf/Lexicon.scala"), lexiconRules: _*)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** Reads of an exchange's query string or body, and URL decodes, in
+    * `src` outside any `class Request` / `object Request` body, as
+    * "line: code". */
+  private def exchangeReads(src: String): List[String] = {
+    val code = blank(src)
+    val owners = """\b(class|object)\s+Request\b""".r.findAllMatchIn(code).toList.map { m =>
+      val open = code.indexOf('{', m.end)
+      (open, closing(code, open))
+    }
+    val lines = src.split("\n", -1)
+    """\bgetRequestBody\b|\bgetRawQuery\b|\bURLDecoder\s*\.\s*decode\b""".r
+      .findAllMatchIn(code).toList
+      .filterNot(m => owners.exists { case (a, b) => a < m.start && m.start < b })
+      .map { m =>
+        val line = code.substring(0, m.start).count(_ == '\n')
+        s"${line + 1}: ${lines(line).trim}"
+      }
+  }
+
+  test("only the request reader reads the exchange") {
+    // the detector itself: the reads it must catch, and the reader and
+    // its callers it must let pass
+    assert(exchangeReads("""val q = new String(ex.getRequestBody.readAllBytes(), "UTF-8")""").nonEmpty)
+    assert(exchangeReads("def params(ex: HttpExchange) = ex.getRequestURI.getRawQuery").nonEmpty)
+    assert(exchangeReads("""Some(java.net.URLDecoder.decode(v, "UTF-8"))""").nonEmpty)
+    assert(exchangeReads(
+      "final class Request(val ex: HttpExchange) {\n  lazy val body = ex.getRequestBody.readAllBytes()\n}\n" +
+        "object Request { def decode(s: String) = URLDecoder.decode(s, UTF_8) }").isEmpty)
+    assert(exchangeReads(
+      "val q = r.param(\"query\") // not ex.getRawQuery\nval t = \"getRequestBody\"; Request.decode(v)").isEmpty)
+    val root = Paths.get("src", "main", "scala")
+    val files = scalaFiles(root)
+    assert(files.contains(root.resolve("graft/server/SparqlServer.scala")))
+    val found = for {
+      f <- files
+      read <- exchangeReads(new String(Files.readAllBytes(f), "UTF-8"))
+    } yield s"$f:$read"
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -1923,4 +1923,120 @@ class ServerSpec extends AnyFunSuite {
       assert(bad.body().contains("connection-scoped"), bad.body())
     } finally dsrv.stop()
   }
+
+  test("a form update on /sparql takes the update path: ?tx= stages it") {
+    val srv = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    try {
+      val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+      val b = post(srv.address + "/tx", "", "text/plain")
+      val tx = "txId=\"([0-9a-f-]+)\"".r.findFirstMatchIn(b.body()).get.group(1)
+      def count() = graft.sparql.RemoteService.parseJsonResults(spark,
+        post(srv.address + "/sparql", "SELECT ?s WHERE { ?s note ?o }",
+          "application/sparql-query").body()).count()
+      assert(post(srv.address + s"/sparql?tx=$tx",
+        "update=" + enc("""INSERT DATA { x:f1 note "staged" }"""),
+        "application/x-www-form-urlencoded").statusCode() == 204)
+      // the tx parameter may ride in the form body too
+      assert(post(srv.address + "/sparql",
+        s"tx=$tx&update=" + enc("""INSERT DATA { x:f2 note "staged" }"""),
+        "application/x-www-form-urlencoded").statusCode() == 204)
+      assert(count() == 0, "a staged form update must stay invisible before commit")
+      assert(post(srv.address + s"/tx/$tx/commit", "", "text/plain").statusCode() == 200)
+      assert(count() == 2)
+    } finally srv.stop()
+  }
+
+  test("a form update on /sparql honors suppressTruthMaintenance on a TM namespace") {
+    val srv = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    def typesOf(id: String) = graft.sparql.RemoteService.parseJsonResults(spark,
+      post(srv.address + "/namespace/inf/sparql", s"SELECT ?t WHERE { $id type ?t }",
+        "application/sparql-query").body()).collect().map(_.getString(0)).toSet
+    try {
+      assert(post(srv.address + "/namespace", "name=inf&truthMaintenance=true",
+        "application/x-www-form-urlencoded").statusCode() == 201)
+      assert(post(srv.address + "/namespace/inf/sparql/update",
+        """INSERT DATA { Employee subClassOf Agent }""",
+        "application/sparql-update").statusCode() == 204)
+      // suppressed in the query string, then in the form body: both
+      // land verbatim, unclosed
+      assert(post(srv.address + "/namespace/inf/sparql?suppressTruthMaintenance=true",
+        "update=" + enc("INSERT DATA { e:1 type Employee }"),
+        "application/x-www-form-urlencoded").statusCode() == 204)
+      assert(post(srv.address + "/namespace/inf/sparql",
+        "suppressTruthMaintenance=true&update=" + enc("INSERT DATA { e:2 type Employee }"),
+        "application/x-www-form-urlencoded").statusCode() == 204)
+      assert(typesOf("e:1") == Set("Employee"))
+      assert(typesOf("e:2") == Set("Employee"))
+      // unsuppressed, the same form closes
+      assert(post(srv.address + "/namespace/inf/sparql",
+        "update=" + enc("INSERT DATA { e:3 type Employee }"),
+        "application/x-www-form-urlencoded").statusCode() == 204)
+      assert(typesOf("e:3") == Set("Employee", "Agent"))
+    } finally srv.stop()
+  }
+
+  /** A durable server whose truth-maintenance namespace `inf` holds
+    * v1 `Employee subClassOf Agent . e:1 type Employee` and v2
+    * `e:2 type Employee`; `body` gets GET-with-query-string and
+    * query-with-path-suffix helpers on it. */
+  private def tmVersions(body: (String => String, String => Long) => Unit): Unit = {
+    val srv = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    def get(args: String) =
+      send(req(srv.address + s"/namespace/inf/sparql?$args").GET()).body()
+    def sparqlCount(args: String) = graft.sparql.RemoteService.parseJsonResults(spark,
+      post(srv.address + s"/namespace/inf/sparql$args", "SELECT * WHERE { ?s ?p ?o }",
+        "application/sparql-query").body()).count()
+    try {
+      assert(post(srv.address + "/namespace", "name=inf&truthMaintenance=true",
+        "application/x-www-form-urlencoded").statusCode() == 201)
+      assert(post(srv.address + "/namespace/inf/sparql/update",
+        """INSERT DATA { Employee subClassOf Agent . e:1 type Employee }""",
+        "application/sparql-update").statusCode() == 204)                    // v1
+      assert(post(srv.address + "/namespace/inf/sparql/update",
+        """INSERT DATA { e:2 type Employee }""",
+        "application/sparql-update").statusCode() == 204)                    // v2
+      body(get, sparqlCount)
+    } finally srv.stop()
+  }
+
+  private val e2 = "&s=" + java.net.URLEncoder.encode("<urn:graft:e:2>", "UTF-8")
+
+  test("GETSTMTS reads the one read view: timestamp and includeInferred") {
+    tmVersions { (get, _) =>
+      def stmts(args: String) = get(s"GETSTMTS$args").split("\n").count(_.nonEmpty)
+      assert(stmts(e2) == 2) // Employee, and the entailed Agent
+      assert(stmts(e2 + "&includeInferred=false") == 1)
+      // e:2 arrived at v2: the v1 view has none of it
+      assert(stmts(e2 + "&timestamp=1") == 0)
+    }
+  }
+
+  test("ESTCARD reads the one read view: includeInferred=false and timestamp") {
+    tmVersions { (get, sparqlCount) =>
+      def estcard(args: String) =
+        "rangeCount=\"(\\d+)\"".r.findFirstMatchIn(get(s"ESTCARD$args")).get.group(1).toLong
+      // ESTCARD counts the view a query with the same knobs reads
+      val head = estcard("")
+      assert(head == sparqlCount(""))
+      val asserted = estcard("&includeInferred=false")
+      assert(asserted == 3 && asserted == sparqlCount("?includeInferred=false"))
+      val past = estcard("&timestamp=1")
+      assert(past == sparqlCount("?timestamp=1") && past < head)
+      assert(estcard("&timestamp=1&includeInferred=false") == 2)
+      assert(estcard(e2 + "&timestamp=1") == 0)
+    }
+  }
+
+  test("a repeated parameter takes its first value, as servlet getParameter does") {
+    val g0 = Graft.empty(spark).update("""INSERT DATA { x:1 label "gear" }""")
+    val srv = new SparqlServer(g0).start()
+    try {
+      val q = java.net.URLEncoder.encode("SELECT ?l WHERE { x:1 label ?l }", "UTF-8")
+      val r = send(req(srv.address + s"/sparql?query=$q&format=csv&format=json").GET())
+      assert(r.statusCode() == 200 &&
+        r.headers().firstValue("Content-Type").get().startsWith("text/csv"), r.body())
+      assert(r.body() == "l\r\ngear")
+    } finally srv.stop()
+  }
 }
