@@ -57,8 +57,10 @@ object Harness {
     * that ran it (a broadcast or an adaptive query stage runs on a pool
     * thread), else that of its result stage. A SQL action reports the
     * job description in place of its call site, so a
-    * [[graft.plans.Fixpoint]] round's jobs read "gas.bfs round 3". */
-  final case class Job(id: Int, stages: Int, tasks: Int, ms: Long, callSite: String)
+    * [[graft.plans.Fixpoint]] round's jobs read "gas.bfs round 3".
+    * `group` is the job group it ran in ([[graft.plans.Jobs]]), if any. */
+  final case class Job(id: Int, stages: Int, tasks: Int, ms: Long, callSite: String,
+                       group: Option[String])
 
   /** Records every job of `spark`'s context; [[Recorder.record]] returns
     * the jobs one block ran. */
@@ -73,7 +75,8 @@ object Harness {
     private val pending = new ConcurrentHashMap[String, CountDownLatch]()
     private val done = ArrayBuffer.empty[Job] // guarded by itself
     // the rest is touched only by the listener thread
-    private final class Open(val start: Long, val stageIds: Seq[Int], val callSite: String) {
+    private final class Open(val start: Long, val stageIds: Seq[Int], val callSite: String,
+                             val group: Option[String]) {
       var stages = 0
       var tasks = 0
     }
@@ -113,7 +116,7 @@ object Harness {
           js.stageIds.foreach(s => if (!stageJob.contains(s)) stageJob(s) = js.jobId)
           val site = prop("spark.sql.execution.id").flatMap(executions.get)
             .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
-          open(js.jobId) = new Open(js.time, js.stageIds, site)
+          open(js.jobId) = new Open(js.time, js.stageIds, site, prop("spark.jobGroup.id"))
       }
     }
 
@@ -134,7 +137,7 @@ object Harness {
       open.remove(je.jobId).foreach { o =>
         o.stageIds.foreach(s => if (stageJob.get(s).contains(je.jobId)) stageJob -= s)
         done.synchronized {
-          done += Job(je.jobId, o.stages, o.tasks, je.time - o.start, o.callSite)
+          done += Job(je.jobId, o.stages, o.tasks, je.time - o.start, o.callSite, o.group)
         }
       }
     }

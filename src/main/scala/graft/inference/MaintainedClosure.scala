@@ -271,9 +271,9 @@ final class MaintainedClosure private (spark: SparkSession,
     // commit skips its write-side dedup shuffle (commitDistinct)
     // the two materializations are INDEPENDENT (different journals) —
     // overlap them (guide §2.6): the closed-head read's job back-fills
-    // the idle cores of the program derivation's single-job stretches
-    val curF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      stripG(closedJ.snapshot()).localCheckpoint())
+    // the idle cores of the program derivation's single-job stretches.
+    // It runs in the caller's job group, so a cancel reaches it too
+    val cur = graft.plans.Jobs.fork(stripG(closedJ.snapshot()).localCheckpoint())
     // resolve the base snapshot ONCE: the program derivation reads it
     // from 4+ places (vocabulary extraction, sameAs probes, the rule
     // strata) and each consumer re-ran the journal's segment-union +
@@ -282,10 +282,10 @@ final class MaintainedClosure private (spark: SparkSession,
     // cost envelope at every scale and deletes the repeats.
     val b = stripG(baseJ.snapshot()).localCheckpoint()
     val target = program(b).localCheckpoint()
-    val cur = curF.join()
+    val closed = cur()
     closedJ.commitDistinct(
-      adds = withG(target.join(cur, Seq("s", "p", "o"), "left_anti")),
-      dels = withG(cur.join(target, Seq("s", "p", "o"), "left_anti")))
+      adds = withG(target.join(closed, Seq("s", "p", "o"), "left_anti")),
+      dels = withG(closed.join(target, Seq("s", "p", "o"), "left_anti")))
   }
 
   /** Assert a statement batch: the delta's closure (exact — the RDFS

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{count, lit, when}
 
 /** The one round loop of every distributed iteration (GAS and Pregel
@@ -31,17 +31,15 @@ object Fixpoint {
   /** Runs `round(1)`, `round(2)`, … until a round returns false or
     * `cap` rounds have run; returns the rounds run and whether the body
     * stopped the loop. Round i's Spark jobs carry the job description
-    * "<label> round <i>"; the caller's description is restored after
-    * each round, and its job group (so its cancellation) is untouched. */
+    * "<label> round <i>" ([[Jobs.span]]): the caller's description is
+    * restored after each round, and its job group (so its
+    * cancellation) is untouched. */
   def loop(label: String, cap: Int)(round: Int => Boolean): (Int, Boolean) = {
-    val sc = SparkSession.active.sparkContext
-    val outer = sc.getLocalProperty("spark.job.description")
     var i = 0
     var going = true
     while (going && i < cap) {
       i += 1
-      sc.setJobDescription(s"$label round $i")
-      try going = round(i) finally sc.setJobDescription(outer)
+      going = Jobs.span(s"$label round $i")(round(i))
     }
     (i, !going)
   }

@@ -106,42 +106,21 @@ object SparqlQueries {
     * queries measure the query against a standing index (production's
     * build-once-query-many shape; the store itself is pre-staged the
     * same way at derived scales). Idempotent: the stageIx maps make
-    * later in-query lookups hit the same instance. */
-  def stageSearchIndexes(s: SparkSession, dir: String): Unit = {
-    // the four standing structures are INDEPENDENT builds over
-    // different inputs — overlap them from a small thread pool (guide
-    // §2.6): each build has long single-job stretches that leave most
-    // cores idle, and the scheduler back-fills them with the other
-    // builds' stages (FIFO = exactly the back-fill behavior wanted).
-    // Threads only drive job submission; the stage maps are
-    // ConcurrentHashMaps and every build owns its temp dir.
-    // setJobDescription is thread-local, so the UI stays labeled.
-    val tasks: Seq[(String, () => Unit)] = Seq(
+    * later in-query lookups hit the same instance. The four builds are
+    * INDEPENDENT (different inputs, each its own temp dir), so they
+    * overlap (guide §2.6): each has long single-job stretches that
+    * leave most cores idle, and the FIFO scheduler back-fills them with
+    * the other builds' stages. The first failure cancels the other
+    * builds instead of waiting for them, so none is left submitting
+    * jobs into the bench's timed queries (Bench's NonFatal catch
+    * records index_stage_failed). */
+  def stageSearchIndexes(s: SparkSession, dir: String): Unit =
+    graft.plans.Jobs.concurrently(Seq(
       "literal-index" -> (() => { literalIxFor(s, dir); () }),
       "docs-index" -> (() => { docIxFor(s, dir); () }),
       "journal-index" -> (() => { journalIxFor(s, dir); () }),
-      "osp-twin" -> (() => { ospTwinFor(s, dir); () }))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    try {
-      val futs = tasks.map { case (tag, f) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            s.sparkContext.setJobDescription(s"stage search index: $tag")
-            f()
-          }
-        })
-      }
-      // collect EVERY future's outcome before returning: a failure in
-      // one build must not leave the others submitting Spark jobs in
-      // the background (they'd contaminate the bench's timed queries),
-      // and a failure in a LATER task must surface even when earlier
-      // ones are still running. Quiesce the pool by awaiting all, then
-      // rethrow the first error (wrapped — Bench's NonFatal catch
-      // records index_stage_failed either way).
-      val outcomes = futs.map(f => scala.util.Try(f.get()))
-      outcomes.collectFirst { case scala.util.Failure(e) => throw e }
-    } finally pool.shutdown()
-  }
+      "osp-twin" -> (() => { ospTwinFor(s, dir); () })
+    ).map { case (tag, f) => s"stage search index: $tag" -> f })
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> ((s, dir) => {

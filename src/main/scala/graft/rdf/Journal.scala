@@ -199,18 +199,15 @@ final class Journal private (spark: SparkSession, dir: Path) {
       if (graft.plans.LocalTier.provablyEmpty(rows0)) return false
       val rows = if (dedup) rows0.distinct() else rows0
       val p = dir.resolve("segments").resolve(s"c$next-$suffix.parquet")
-      // a crash between a previous attempt's segment write and its
-      // record publish leaves an ORPHAN directory at this path that
-      // `errorifexists` would wedge on forever — `next` is unpublished
-      // by construction (single-writer contract), so any existing file
-      // here is unreachable garbage: clear it and retry once
-      try writeSegment(rows, next, suffix)
-      catch {
-        case _: Throwable if Files.exists(p) &&
-            !records.exists(_.version == next) =>
-          Journal.deleteRecursively(p)
-          writeSegment(rows, next, suffix)
-      }
+      // a crash or a cancelled write between an earlier attempt's
+      // segment write and its record publish leaves an ORPHAN directory
+      // at this path that `errorifexists` would wedge on forever —
+      // `next` is unpublished by construction (single-writer contract),
+      // so anything here is unreachable garbage: clear it first. A
+      // failed write fails its commit and is not re-run: a cancelled
+      // one must not start its whole write again
+      if (Files.exists(p) && !records.exists(_.version == next)) Journal.deleteRecursively(p)
+      writeSegment(rows, next, suffix)
       if (Journal.parquetRowCount(p) > 0L) true
       else { Journal.deleteRecursively(p); false }
     }

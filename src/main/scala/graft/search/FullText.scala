@@ -86,9 +86,10 @@ object FullText {
     *    `stringValue().contains(query)`); one candidate-sized join
     *    back to the corpus text.
     * The reference's searchTimeout has no per-operator analog here —
-    * evaluation is a Spark job and cancellation is owned by the
-    * server's job-group seam (SparqlServer.inJobGroup); callers
-    * consume-and-ignore it, documented. */
+    * evaluation is a Spark job, and cancellation and the query
+    * deadline belong to the job group the server's reply seam opens for
+    * every exchange ([[graft.plans.Jobs]]); callers consume-and-ignore
+    * it, documented. */
   def search(docs: DataFrame, queryIn: Seq[String], k: Int = 20,
              prefixMatch: Boolean = false, matchAll: Boolean = false,
              regex: Option[String] = None,

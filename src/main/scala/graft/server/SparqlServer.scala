@@ -2,6 +2,7 @@ package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.Graft
+import graft.plans.Jobs
 import graft.rdf.{Lexicon, QuadStore, Repository, Serializer}
 import graft.sparql.{Algebra, Ask, Parser, Update}
 import java.net.{InetSocketAddress, URLDecoder}
@@ -55,11 +56,13 @@ import scala.util.control.NonFatal
   *     as streamed N-Quads. Term parameters are N-Triples-encoded
   *     (`<iri>`, `"lit"`, `"lit"@lang`, `"lit"^^<dt>`).
   *
-  * STATUS + CANCEL (StatusServlet.java:165-240): every query runs in
-  * its own Spark job group keyed by UUID; `GET /status` lists running
-  * queries, `…?cancelQuery&queryId=<uuid>` cancels the group
-  * (`SparkContext.cancelJobGroup` — the cluster-wide kill the
-  * reference implements by hand).
+  * STATUS + CANCEL + COUNTERS (StatusServlet.java:165-240,
+  * CountersServlet): every exchange — query, update, ingest, backup,
+  * namespace management, workbench — runs as ONE operation in its own
+  * Spark job group keyed by UUID, opened by the reply seam; `GET
+  * /status` lists the running ones, `…?cancelQuery&queryId=<uuid>`
+  * cancels the group (the cluster-wide kill the reference implements
+  * by hand), and `GET /counters` records each when it ends.
   *
   * MULTI-TENANCY (MultiTenancyServlet — one server, many isolated
   * knowledge bases):
@@ -703,9 +706,12 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       }
   }
 
+  /** THE NAMESPACE RESOLVER: the exchange's operation records the
+    * namespace it resolves. */
   private def tenant(ns: String): Tenant = {
     val t = namespaces.get(ns)
     require(t != null, s"no namespace $ns")
+    ongoing.foreach(_.ns = Some(ns))
     t
   }
 
@@ -757,20 +763,48 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     ()
   }
 
-  // ---- running-query registry (StatusServlet analog) ---------------
+  // ---- operations (StatusServlet + CountersServlet analog) --------
 
-  private final case class Running(id: String, ns: String, query: String,
-                                   startedMs: Long)
-  private val running = new ConcurrentHashMap[String, Running]()
+  /** ONE OPERATION PER EXCHANGE, opened by the reply seam ([[serve]])
+    * for every exchange but the `/status` and `/counters` reads. Every
+    * Spark job the exchange starts — compile-time jobs, writes, the
+    * streamed reply — runs in its cancellable job group `id`, so
+    * `/status` lists it while it runs, `cancelQuery` and the query
+    * deadline interrupt it cluster-wide, and `/counters` records it
+    * when it ends. `label` is its query or update text, else its method
+    * and path; `ns` the namespace it resolved ([[tenant]]). */
+  private final class Operation(val label: String) {
+    val id: String = java.util.UUID.randomUUID().toString
+    val startedMs: Long = System.currentTimeMillis()
+    @volatile var ns: Option[String] = None
+    /** The deadline in ms, once it fired. */
+    @volatile var timedOut: Option[Long] = None
+    @volatile private var deadline: Option[java.util.concurrent.ScheduledFuture[_]] = None
+
+    /** Arm the query deadline (`ms` ≤ 0: none): when it fires, the
+      * group's running jobs are interrupted and its later ones fail —
+      * the reference's query-timeout contract
+      * (BigdataRDFContext.newQuery setTimeout); driver-side planning
+      * between jobs is not interruptible. */
+    def arm(ms: Long): Unit = if (ms > 0) deadline = Some(deadlines.schedule(new Runnable {
+      def run(): Unit = { timedOut = Some(ms); Jobs.cancel(id) }
+    }, ms, java.util.concurrent.TimeUnit.MILLISECONDS))
+    def disarm(): Unit = deadline.foreach(_.cancel(false))
+  }
+  private val running = new ConcurrentHashMap[String, Operation]()
   private val served = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The operation of the exchange this thread serves, if any: the one
+    * its job group names. */
+  private def ongoing: Option[Operation] =
+    Jobs.current.flatMap(id => Option(running.get(id)))
 
   /** Completed-operation stats ring (CountersServlet analog-lite):
     * the last [[HistoryCap]] operations with their wall times, the
     * per-query history document `/counters` serves. Deeper metrics
     * (task/shuffle/IO) are the Spark UI's job — deliberately not
     * re-implemented here. */
-  private final case class Done(ns: String, op: String, elapsedMs: Long,
-                                endedMs: Long)
+  private final case class Done(ns: Option[String], op: String, elapsedMs: Long)
   private val HistoryCap = 200
   private val history = new java.util.concurrent.ConcurrentLinkedDeque[Done]()
 
@@ -783,36 +817,22 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val t = new Thread(r, "graft-query-deadline"); t.setDaemon(true); t
     })
 
-  /** Run `body`'s Spark jobs inside a cancellable job group: a
-    * `cancelQuery` on the UUID interrupts them cluster-wide, and a
-    * positive `timeoutMs` arms a deadline that does the same (the
-    * reference's query-timeout contract — the timeout interrupts the
-    * engine's running work, BigdataRDFContext.newQuery setTimeout;
-    * driver-side planning between jobs is not interruptible). */
-  private def inJobGroup[T](ns: String, q: String, timeoutMs: Long = 0L)(body: => T): T = {
-    val id = java.util.UUID.randomUUID().toString
-    val t0 = System.currentTimeMillis()
-    running.put(id, Running(id, ns, q, t0))
-    spark.sparkContext.setJobGroup(id, s"sparql:$ns", interruptOnCancel = true)
-    val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val deadline =
-      if (timeoutMs <= 0) None
-      else Some(deadlines.schedule(new Runnable {
-        def run(): Unit = {
-          timedOut.set(true)
-          // AndFutureJobs: the deadline may fire between a query's
-          // jobs — later job submissions in the group must die too
-          spark.sparkContext.cancelJobGroupAndFutureJobs(id)
-        }
-      }, timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-    try body
+  /** Run `body` as exchange `r`'s one [[Operation]]: listed while it
+    * runs, recorded and counted when it ends, its failure after a
+    * fired deadline a [[QueryTimeout]]. */
+  private def runOperation(r: Request)(body: => Unit): Unit = {
+    val op = new Operation(
+      r.param("query").orElse(r.param("update"))
+        .orElse(Some(r.text).filter(_ => r.contentType.startsWith("application/sparql-")))
+        .filter(_.trim.nonEmpty).getOrElse(s"${r.method} ${r.path}"))
+    running.put(op.id, op)
+    try Jobs.group(op.id)(body)
     catch {
-      case e: Throwable if timedOut.get() => throw new QueryTimeout(timeoutMs)
+      case _: Throwable if op.timedOut.isDefined => throw new QueryTimeout(op.timedOut.get)
     } finally {
-      deadline.foreach(_.cancel(false))
-      spark.sparkContext.clearJobGroup(); running.remove(id); served.incrementAndGet()
-      val now = System.currentTimeMillis()
-      history.addFirst(Done(ns, q.replace('\n', ' ').take(120), now - t0, now))
+      op.disarm(); running.remove(op.id); served.incrementAndGet()
+      history.addFirst(Done(op.ns, op.label.replace('\n', ' ').take(120),
+        System.currentTimeMillis() - op.startedMs))
       while (history.size > HistoryCap) history.pollLast()
     }
   }
@@ -850,14 +870,15 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     r.header("Accept-Encoding").exists(_.contains("gzip"))
 
   /** THE REPLY SEAM: every handler runs on its exchange's one
-    * [[Request]], and every failure answers here — a query deadline
-    * kill is the server giving up (503), a lost first-committer-wins
-    * validation a conflict (409), anything else the client's bad
-    * request (400). An exchange whose status line a stream already
-    * sent can only be dropped. */
-  private def serve(handle: Request => Unit): HttpHandler = ex => {
+    * [[Request]] and — but for the `introspection` reads — inside its
+    * one [[Operation]], and every failure answers here, once the
+    * operation has ended: a query deadline kill is the server giving
+    * up (503), a lost first-committer-wins validation a conflict
+    * (409), anything else the client's bad request (400). An exchange
+    * whose status line a stream already sent can only be dropped. */
+  private def serve(handle: Request => Unit, introspection: Boolean = false): HttpHandler = ex => {
     val r = new Request(ex)
-    try handle(r)
+    try if (introspection) handle(r) else runOperation(r)(handle(r))
     catch {
       case NonFatal(e) =>
         val (status, msg) = e match {
@@ -1251,6 +1272,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       (bindingFormats ++ graphFormats).find(_.aliases.contains(f))
         .getOrElse(sys.error(s"unknown format: $f")).mediaType
     }
+    // the deadline covers compile-time jobs too (ASK's existence
+    // probe, the first read's merge view)
+    ongoing.foreach(_.arm(queryTimeoutMs(r)))
     val g = readView(r, ns)
     val ast = Parser.parse(q)
     // SPARQL 1.1 Protocol §2.1.4: a protocol-supplied RDF dataset
@@ -1278,14 +1302,12 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           plan.take(cap) + s"\n… [truncated at maxBopLength=$cap of ${plan.length} chars]"
         else plan
       respond(r, 200, "text/plain", body)
-    } else inJobGroup(ns, q, queryTimeoutMs(r)) {
-      ast match {
-        case _: Ask =>
-          val f = pick(accept, askFormats)
-          respond(r, 200, f.mediaType, f.ask.get(df.collect().head.getBoolean(0)))
-        case _ if isGraphResult(ast) => stream(r, pick(accept, graphFormats), df)
-        case _ => stream(r, pick(accept, bindingFormats), df)
-      }
+    } else ast match {
+      case _: Ask =>
+        val f = pick(accept, askFormats)
+        respond(r, 200, f.mediaType, f.ask.get(df.collect().head.getBoolean(0)))
+      case _ if isGraphResult(ast) => stream(r, pick(accept, graphFormats), df)
+      case _ => stream(r, pick(accept, bindingFormats), df)
     }
   }
 
@@ -1321,11 +1343,11 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     def land(quads: DataFrame): Unit = r.param("tx") match {
       case Some(id) =>
         // materialize before the spill file drops, then stage
-        val staged = inJobGroup(ns, "data-POST (staged)") { quads.localCheckpoint() }
+        val staged = quads.localCheckpoint()
         stageTx(id, ns, Right(staged))
         data(r, "modified" -> staged.count(), "staged" -> true)
       case None =>
-        data(r, "modified" -> inJobGroup(ns, "data-POST") { t.ingest(quads, suppress(r)) })
+        data(r, "modified" -> t.ingest(quads, suppress(r)))
     }
     r.param("uri") match {
       case Some(uri) =>
@@ -1347,9 +1369,8 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       r.param("query").getOrElse(sys.error("PUT update needs ?query=<CONSTRUCT|DESCRIBE>")),
       "PUT update")
     withDocument(r.contentType, r.body, None, t.current.defaultGraph) { adds =>
-      data(r, "modified" -> inJobGroup(ns, "PUT update-with-query") {
-        t.updateWithBody(t.current.query(ast).select("s", "p", "o"), adds, suppress(r))
-      })
+      data(r, "modified" ->
+        t.updateWithBody(t.current.query(ast).select("s", "p", "o"), adds, suppress(r)))
     }
   }
 
@@ -1370,9 +1391,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     }
     part("remove") { remove =>
       part("add") { add =>
-        data(r, "modified" -> inJobGroup(ns, "updatePost") {
-          t.updateWithBody(remove.select("s", "p", "o"), add, suppress(r))
-        })
+        data(r, "modified" -> t.updateWithBody(remove.select("s", "p", "o"), add, suppress(r)))
       }
     }
   }
@@ -1387,8 +1406,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     // the delete query comes from the QUERY STRING (never the body —
     // under POST ?delete the body IS the RDF document to remove)
     val delQuery = r.param("query")
-    def remove(spo: => DataFrame): Unit =
-      data(r, "modified" -> inJobGroup(ns, "data-DELETE") { t.remove(spo, suppress(r)) })
+    def remove(spo: DataFrame): Unit = data(r, "modified" -> t.remove(spo, suppress(r)))
     if (delQuery.isEmpty && rdfExtension(r.contentType).isEmpty &&
         Seq("s", "p", "o", "c").exists(k => r.param(k).isDefined))
       // DELETE-by-access-path (DeleteServlet.java:106
@@ -1398,9 +1416,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       // below — the reference wipes the namespace on an empty access
       // path, a foot-gun this server keeps behind the explicit update
       // path (DROP ALL).
-      data(r, "modified" -> inJobGroup(ns, "data-DELETE (access path)") {
-        t.removeQuads(accessPath(t.current, r), suppress(r))
-      })
+      data(r, "modified" -> t.removeQuads(accessPath(t.current, r), suppress(r)))
     else delQuery match {
       case Some(q) =>
         val ast = graphQuery(q, "DELETE with query")
@@ -1421,7 +1437,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   private def handleHasStmt(r: Request, ns: String): Unit = {
     val t0 = System.currentTimeMillis()
     val g = readView(r, ns)
-    val found = inJobGroup(ns, "HASSTMT") { !accessPath(g, r).isEmpty }
+    val found = !accessPath(g, r).isEmpty
     data(r, "result" -> found, "milliseconds" -> (System.currentTimeMillis() - t0))
   }
 
@@ -1441,7 +1457,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     val fast =
       if (!head || Seq("s", "p", "o").exists(k => r.param(k).isDefined)) None
       else tenant(ns).metadataCount(r.param("c").map(Lexicon.fromToken))
-    val n = fast.getOrElse(inJobGroup(ns, "ESTCARD") { accessPath(readView(r, ns), r).count() })
+    val n = fast.getOrElse(accessPath(readView(r, ns), r).count())
     data(r, Seq("rangeCount" -> n, "milliseconds" -> (System.currentTimeMillis() - t0)) ++
       fast.map(_ => "fastpath" -> "metadata"): _*)
   }
@@ -1465,18 +1481,14 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       require(!p.matches("^[A-Za-z][A-Za-z0-9+.-]*:.*") || p.startsWith("file:"),
         s"only file: ingest paths are supported, got $p")
     }
-    val (v, n) = inJobGroup(ns, "BULK-LOAD") {
-      tenant(ns).bulkLoad(paths, graph, compact = !r.flag("no-compact"))
-    }
+    val (v, n) = tenant(ns).bulkLoad(paths, graph, compact = !r.flag("no-compact"))
     data(r, "modified" -> n, "version" -> v)
   }
 
   /** `GET /sparql?CONTEXTS` — the named graphs (QueryServlet CONTEXTS
     * op), as the reference's contexts XML document. */
   private def handleContexts(r: Request, ns: String): Unit = {
-    val gs = inJobGroup(ns, "CONTEXTS") {
-      tenant(ns).current.store.graphs.collect().map(_.getString(0)).sorted
-    }
+    val gs = tenant(ns).current.store.graphs.collect().map(_.getString(0)).sorted
     val body = gs.map(g => s"""<context uri="${esc(Lexicon.iri(g))}"/>""").mkString
     respond(r, 200, "application/xml",
       s"""<?xml version="1.0"?><contexts>$body</contexts>""")
@@ -1487,7 +1499,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     * includeInferred), streamed as N-Quads (QueryServlet GETSTMTS /
     * ExportServlet analog). */
   private def handleGetStmts(r: Request, ns: String): Unit =
-    inJobGroup(ns, "GETSTMTS") { stream(r, NQuads, accessPath(readView(r, ns), r)) }
+    stream(r, NQuads, accessPath(readView(r, ns), r))
 
   /** SPARQL 1.1 Graph Store Protocol (`/rdf-graphs?graph=<iri>` or
     * `?default`): GET streams the graph as N-Triples, PUT replaces it
@@ -1504,21 +1516,19 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         sys.error("graph store request needs ?graph=<iri> or ?default")))
     def graphRows = t.current.store.graph(g)
     r.method match {
-      case "GET" => inJobGroup(ns, s"GSP GET $g") {
+      case "GET" =>
         if (graphRows.isEmpty) respond(r, 404, "text/plain", s"no graph: $g")
         else stream(r, NTriples, graphRows)
-      }
       case "PUT" => withDocument(r.contentType, r.body, Some(g), g) { quads =>
-        inJobGroup(ns, s"GSP PUT $g") { t.putGraph(g, quads) }
+        t.putGraph(g, quads)
         respond(r, 204, "text/plain", "")
       }
       case "POST" => withDocument(r.contentType, r.body, Some(g), g) { quads =>
-        data(r, "modified" -> inJobGroup(ns, s"GSP POST $g") { t.ingest(quads) })
+        data(r, "modified" -> t.ingest(quads))
       }
-      case "DELETE" => inJobGroup(ns, s"GSP DELETE $g") {
+      case "DELETE" =>
         if (graphRows.isEmpty) respond(r, 404, "text/plain", s"no graph: $g")
         else { t.dropGraph(g); respond(r, 204, "text/plain", "") }
-      }
       case other => respond(r, 405, "text/plain", s"method not allowed: $other")
     }
   }
@@ -1598,11 +1608,17 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
     }
   }
 
+  /** `GET /status` (StatusServlet analog) — one line per running
+    * [[Operation]]: every exchange in flight except the `/status` and
+    * `/counters` reads themselves, as `id`, namespace (`-` before or
+    * without one), age and text, under a `running: n served: m` head.
+    * `?cancelQuery&queryId=<id>` cancels that operation's job group
+    * (404 when none runs under that id). */
   private def handleStatus(r: Request): Unit =
     if (r.flag("cancelQuery")) {
       val id = r.param("queryId").getOrElse(sys.error("no queryId"))
       if (running.containsKey(id)) {
-        spark.sparkContext.cancelJobGroup(id)
+        Jobs.cancel(id)
         respond(r, 200, "text/plain", s"cancelled: $id")
       } else respond(r, 404, "text/plain", s"no such query: $id")
     } else {
@@ -1610,8 +1626,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       // maxBopLength: the reference's StatusServlet detail clamp —
       // how much of each running operation's text is rendered
       val cap = r.param("maxBopLength").map(_.toInt).filter(_ > 0).getOrElse(120)
-      val rows = running.values.asScala.toSeq.sortBy(_.startedMs).map { q =>
-        s"${q.id}\t${q.ns}\t${now - q.startedMs}ms\t${q.query.replace('\n', ' ').take(cap)}"
+      val rows = running.values.asScala.toSeq.sortBy(_.startedMs).map { op =>
+        s"${op.id}\t${op.ns.getOrElse("-")}\t${now - op.startedMs}ms\t" +
+          op.label.replace('\n', ' ').take(cap)
       }
       respond(r, 200, "text/plain",
         (s"running: ${rows.size} served: ${served.get()}" +: rows).mkString("\n"))
@@ -1635,18 +1652,22 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   }
 
   /** `GET /counters` — performance-counters document (CountersServlet
-    * analog-lite): served/running totals plus per-namespace
-    * aggregates and the recent-operation history ring. Deep
-    * executor/shuffle/IO metrics are deliberately NOT re-implemented
-    * — that is the Spark UI's job (the declared non-goal split). */
+    * analog-lite): served/running totals over every [[Operation]] (each
+    * exchange except the `/status` and `/counters` reads), aggregates
+    * per namespace of the operations that resolved one, and the
+    * recent-operation history ring. Deep executor/shuffle/IO metrics
+    * are deliberately NOT re-implemented — that is the Spark UI's job
+    * (the declared non-goal split). */
   private def handleCounters(r: Request): Unit = {
     val h = history.iterator().asScala.toSeq
-    val byNs = h.groupBy(_.ns).toSeq.sortBy(_._1).map { case (n, ds) =>
-      val avg = ds.map(_.elapsedMs).sum / ds.size
-      s"""<namespace name="${esc(n)}" ops="${ds.size}" avgMs="$avg" maxMs="${ds.map(_.elapsedMs).max}"/>"""
+    val byNs = h.flatMap(d => d.ns.map(_ -> d)).groupMap(_._1)(_._2).toSeq.sortBy(_._1).map {
+      case (n, ds) =>
+        val avg = ds.map(_.elapsedMs).sum / ds.size
+        s"""<namespace name="${esc(n)}" ops="${ds.size}" avgMs="$avg" maxMs="${ds.map(_.elapsedMs).max}"/>"""
     }.mkString
     val recent = h.take(20).map { d =>
-      s"""<op ns="${esc(d.ns)}" ms="${d.elapsedMs}">${esc(d.op)}</op>"""
+      val ns = d.ns.fold("")(n => s""" ns="${esc(n)}"""")
+      s"""<op$ns ms="${d.elapsedMs}">${esc(d.op)}</op>"""
     }.mkString
     respond(r, 200, "application/xml",
       s"""<?xml version="1.0"?><counters served="${served.get()}" running="${running.size}">$byNs<recent>$recent</recent></counters>""")
@@ -1669,9 +1690,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val tx = txs.remove(id)
       if (tx == null) respond(r, 404, "text/plain", s"no such transaction: $id")
       else {
-        val v = inJobGroup(tx.ns, s"TX-COMMIT $id") {
-          tenant(tx.ns).commitStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
-        }
+        val v = tenant(tx.ns).commitStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
         respond(r, 200, "application/xml",
           s"""<?xml version="1.0"?><tx txId="$id" committed="$v"/>""")
       }
@@ -1687,9 +1706,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
       val tx = txs.get(id)
       if (tx == null) respond(r, 404, "text/plain", s"no such transaction: $id")
       else {
-        inJobGroup(tx.ns, s"TX-PREPARE $id") {
-          tenant(tx.ns).prepareStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
-        }
+        tenant(tx.ns).prepareStaged(tx.items.synchronized(tx.items.toSeq), tx.startVersion)
         respond(r, 200, "application/xml",
           s"""<?xml version="1.0"?><tx txId="$id" prepared="true"/>""")
       }
@@ -1739,9 +1756,8 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   private def handleBlueprints(r: Request, ns: String): Unit =
     if (r.method == "GET") {
       val id = r.param("vertex").getOrElse(sys.error("GET needs ?vertex=<id>"))
-      val df = tenant(ns).current.store.quads
-        .filter(col("s") === id).select("s", "p", "o").distinct()
-      inJobGroup(ns, s"BLUEPRINTS GET $id") { stream(r, NTriples, df) }
+      stream(r, NTriples, tenant(ns).current.store.quads
+        .filter(col("s") === id).select("s", "p", "o").distinct())
     } else {
       require(r.method == "POST", "blueprints requires GET or POST")
       def p(k: String) = r.param(k).getOrElse(sys.error(s"missing param $k"))
@@ -1769,7 +1785,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
             s"DELETE { ?s ?p ${iri(p("id"))} } WHERE { ?s ?p ${iri(p("id"))} }"
         case other => sys.error(s"unknown blueprints op: $other")
       }
-      inJobGroup(ns, s"BLUEPRINTS ${p("op")}") { tenant(ns).update(text) }
+      tenant(ns).update(text)
       respond(r, 204, "text/plain", "")
     }
 
@@ -1829,7 +1845,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
         case Some(upd) =>
           // browser update form: apply through the namespace's own
           // write path, confirm with the workbench page
-          inJobGroup(ns, s"WORKBENCH-UPDATE $upd") { tenant(ns).update(upd) }
+          tenant(ns).update(upd)
           respond(r, 200, "text/html; charset=utf-8", workbenchPage(
             s"<p>update applied to <code>${esc(ns)}</code></p>\n${workbenchForm(ns)}"))
         case None =>
@@ -1837,9 +1853,7 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
           // the workbench compiles with the namespace's journal in
           // scope too — bd:history works from the form like /sparql
           val df = compiled(ns, None) { tenant(ns).current.query(q) }
-          val (vars, rows) = inJobGroup(ns, s"WORKBENCH $q") {
-            (df.columns.toSeq, df.limit(501).collect())
-          }
+          val (vars, rows) = (df.columns.toSeq, df.limit(501).collect())
           val shown = rows.take(500)
           val thead = vars.map(v => s"<th>${esc(v)}</th>").mkString
           val trs = shown.map { row =>
@@ -2043,9 +2057,9 @@ final class SparqlServer private (initial: Graft, host: String, port: Int,
   Seq("sparql/update", "sparql", "rdf-graphs", "dataloader", "blueprints", "backup")
     .foreach(tail => server.createContext("/" + tail, serve(routes(tail)(_, defaultNamespace))))
   server.createContext("/namespace", serve(handleNamespace))
-  server.createContext("/status", serve(handleStatus))
+  server.createContext("/status", serve(handleStatus, introspection = true))
   server.createContext("/whitelist", serve(handleWhitelist))
-  server.createContext("/counters", serve(handleCounters))
+  server.createContext("/counters", serve(handleCounters, introspection = true))
   server.createContext("/tx", serve(handleTx))
   server.createContext("/workbench", serve(handleWorkbench))
   server.createContext("/", serve(handleIndex))

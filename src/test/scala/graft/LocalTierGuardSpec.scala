@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.rdf.Lexicon]]. And no `src/main` code outside the server's
   * `Request` reads an HTTP exchange's query string or body, or
   * URL-decodes — a new handler takes its parameters from the one
-  * request reader. */
+  * request reader. And no `src/main` file other than
+  * `graft/plans/Jobs.scala` sets, clears or cancels a Spark job group
+  * or description — a new scope labels its jobs, or makes them
+  * cancellable, through [[graft.plans.Jobs]]. */
 class LocalTierGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): List[Path] = {
@@ -172,14 +175,18 @@ class LocalTierGuardSpec extends AnyFunSuite {
       val open = code.indexOf('{', m.end)
       (open, closing(code, open))
     }
-    val lines = src.split("\n", -1)
-    """\bgetRequestBody\b|\bgetRawQuery\b|\bURLDecoder\s*\.\s*decode\b""".r
+    located(src, code, """\bgetRequestBody\b|\bgetRawQuery\b|\bURLDecoder\s*\.\s*decode\b""".r
       .findAllMatchIn(code).toList
-      .filterNot(m => owners.exists { case (a, b) => a < m.start && m.start < b })
-      .map { m =>
-        val line = code.substring(0, m.start).count(_ == '\n')
-        s"${line + 1}: ${lines(line).trim}"
-      }
+      .filterNot(m => owners.exists { case (a, b) => a < m.start && m.start < b }))
+  }
+
+  /** `matches` in `code` (`src` blanked) as "line: source line". */
+  private def located(src: String, code: String, matches: List[Regex.Match]): List[String] = {
+    val lines = src.split("\n", -1)
+    matches.map { m =>
+      val line = code.substring(0, m.start).count(_ == '\n')
+      s"${line + 1}: ${lines(line).trim}"
+    }
   }
 
   test("only the request reader reads the exchange") {
@@ -200,6 +207,35 @@ class LocalTierGuardSpec extends AnyFunSuite {
       f <- files
       read <- exchangeReads(new String(Files.readAllBytes(f), "UTF-8"))
     } yield s"$f:$read"
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** Calls in `src` that set, clear or cancel a Spark job group or
+    * description, as "line: code". */
+  private def jobPropertySets(src: String): List[String] = {
+    val code = blank(src)
+    located(src, code, ("""\b(setJobGroup|clearJobGroup|setJobDescription|cancelJobGroup\w*|""" +
+      """setInterruptOnCancel)\b""").r.findAllMatchIn(code).toList)
+  }
+
+  test("only the operation seam sets Spark job properties") {
+    // the detector itself: the calls it must catch, and the comments,
+    // strings and scope calls it must let pass
+    assert(jobPropertySets("sc.setJobGroup(id, s\"sparql:$ns\", interruptOnCancel = true)").nonEmpty)
+    assert(jobPropertySets("try body finally spark.sparkContext.clearJobGroup()").nonEmpty)
+    assert(jobPropertySets("s.sparkContext.setJobDescription(s\"stage: $tag\")").nonEmpty)
+    assert(jobPropertySets("sc.cancelJobGroup(id)\nsc.cancelJobGroupAndFutureJobs(id)").size == 2)
+    assert(jobPropertySets("sc.setInterruptOnCancel(true)").nonEmpty)
+    assert(jobPropertySets(
+      "// not sc.setJobGroup(id, d)\nval s = \"clearJobGroup\"; Jobs.group(id)(Jobs.span(l)(b))").isEmpty)
+    val root = Paths.get("src", "main", "scala")
+    val owner = root.resolve("graft/plans/Jobs.scala")
+    val files = scalaFiles(root)
+    assert(files.contains(owner))
+    val found = for {
+      f <- files if f != owner
+      set <- jobPropertySets(new String(Files.readAllBytes(f), "UTF-8"))
+    } yield s"$f:$set"
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -292,4 +292,20 @@ class MaintainedClosureSpec extends AnyFunSuite {
     assert(sameSet(tm2.closure(), programOf(tm2.base())))
     assert(rowsOf(tm2.closure()).contains(("a", "within", "c")))
   }
+
+  test("a re-derive runs every job in the caller's job group") {
+    val tm = MaintainedClosure.createDynamic(spark, tmp())
+    tm.assertTriples(Seq(("x", "type", "A")).toDF("s", "p", "o"))
+    val recorder = Harness.recorder(spark)
+    try {
+      // a TBox edge re-derives the program; the closed head is read on
+      // a second thread meanwhile
+      val (_, jobs) = recorder.record(graft.plans.Jobs.group("spec.rederive") {
+        tm.assertTriples(Seq(("A", "subClassOf", "B")).toDF("s", "p", "o"))
+      })
+      assert(jobs.nonEmpty && jobs.forall(_.group.contains("spec.rederive")),
+        jobs.filterNot(_.group.contains("spec.rederive")))
+      assert(rowsOf(tm.closure()).contains(("x", "type", "B")))
+    } finally spark.sparkContext.removeSparkListener(recorder)
+  }
 }

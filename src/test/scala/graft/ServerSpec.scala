@@ -396,20 +396,41 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  /** `body` with `<http://slow.test/sparql>` registered: a SERVICE
+    * whose solution DataFrame sleeps 5 s per row inside its Spark tasks
+    * (8 rows, 8 partitions), so only a job-group cancel ends it early. */
+  private def withSlowEndpoint[A](body: => A): A = {
+    graft.sparql.ServiceRegistry.registerRemote("http://slow.test/sparql", { _ =>
+      import TestSpark.spark.implicits._
+      TestSpark.spark.range(0, 8, 1, 8)
+        .map { i => Thread.sleep(5000); i }
+        .toDF("n").selectExpr("CAST(n AS STRING) AS s", "'p' AS p", "'o' AS o")
+    })
+    try body finally graft.sparql.ServiceRegistry.unregisterRemote("http://slow.test/sparql")
+  }
+
+  /** The first `/status` line (id, namespace, age, text) of a running
+    * operation on namespace `ns` whose text contains `marker`, polled
+    * for up to 10 s. */
+  private def listed(srv: SparqlServer, marker: String, ns: String): Option[Array[String]] = {
+    val deadline = System.currentTimeMillis() + 10000
+    var found = Option.empty[Array[String]]
+    while (found.isEmpty && System.currentTimeMillis() < deadline) {
+      found = send(req(srv.address + "/status").GET()).body().split("\n").drop(1)
+        .map(_.split("\t")).find(l => l(1) == ns && l.last.contains(marker))
+      if (found.isEmpty) Thread.sleep(50)
+    }
+    found
+  }
+
   test("status lists running queries; cancelQuery kills one cluster-wide") {
     val g0 = Graft.empty(spark).update("""INSERT DATA { x:1 label "gear" }""")
     val srv = new SparqlServer(g0).start()
-    try {
-      // a deliberately slow query: a SERVICE whose solution DataFrame
-      // sleeps inside its Spark tasks, so only a job-group cancel can
-      // end it early
+    // a deliberately slow query: a SERVICE whose solution DataFrame
+    // sleeps inside its Spark tasks, so only a job-group cancel can
+    // end it early
+    try withSlowEndpoint {
       val slow = "SELECT ?s WHERE { SERVICE <http://slow.test/sparql> { ?s ?p ?o } }"
-      graft.sparql.ServiceRegistry.registerRemote("http://slow.test/sparql", { _ =>
-        import TestSpark.spark.implicits._
-        TestSpark.spark.range(0, 8, 1, 8)
-          .map { i => Thread.sleep(5000); i }
-          .toDF("n").selectExpr("CAST(n AS STRING) AS s", "'p' AS p", "'o' AS o")
-      })
       val fut = scala.concurrent.Future {
         post(srv.address + "/sparql", slow, "application/sparql-query")
       }(scala.concurrent.ExecutionContext.global)
@@ -434,10 +455,152 @@ class ServerSpec extends AnyFunSuite {
       // cancelling an unknown id is a 404
       assert(send(req(srv.address + "/status?cancelQuery&queryId=nope").GET())
         .statusCode() == 404)
+    } finally srv.stop()
+  }
+
+  private val slowUpdate =
+    """INSERT { ?s x:p "v" } WHERE { SERVICE <http://slow.test/sparql> { ?s ?p ?o } }"""
+
+  private def async[A](body: => A): scala.concurrent.Future[A] =
+    scala.concurrent.Future(body)(scala.concurrent.ExecutionContext.global)
+
+  private def await[A](f: scala.concurrent.Future[A]): A =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(90, "s"))
+
+  test("an UPDATE is listed in /status while it runs") {
+    val srv = new SparqlServer(Graft.empty(spark)).start()
+    try withSlowEndpoint {
+      val fut = async(post(srv.address + "/sparql/update", slowUpdate, "application/sparql-update"))
+      val line = listed(srv, "SERVICE <http://slow.test/sparql>", "kb")
+      assert(line.nonEmpty, "a running UPDATE never appeared in /status")
+      line.foreach(l => send(req(srv.address + s"/status?cancelQuery&queryId=${l(0)}").GET()))
+      await(fut)
+    } finally srv.stop()
+  }
+
+  test("cancelQuery stops a durable UPDATE: the namespace keeps its version and takes the next write") {
+    val srv = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    def version(): Long = "readsOnCommitTime=\"(\\d+)\"".r
+      .findFirstMatchIn(post(srv.address + "/tx", "", "text/plain").body()).get.group(1).toLong
+    def labels(): Set[String] = graft.sparql.RemoteService.parseJsonResults(spark,
+      post(srv.address + "/sparql", "SELECT ?s ?o WHERE { ?s ?p ?o }",
+        "application/sparql-query").body()).collect().map(r => s"${r.get(0)} ${r.get(1)}").toSet
+    try withSlowEndpoint {
+      assert(post(srv.address + "/sparql/update", """INSERT DATA { x:1 label "gear" }""",
+        "application/sparql-update").statusCode() == 204)
+      val (v0, before) = (version(), labels())
+      val fut = async(post(srv.address + "/sparql/update", slowUpdate, "application/sparql-update"))
+      val id = listed(srv, "SERVICE <http://slow.test/sparql>", "kb").map(_(0))
+      assert(id.nonEmpty, "a running UPDATE never appeared in /status")
+      val t0 = System.currentTimeMillis()
+      assert(send(req(srv.address + s"/status?cancelQuery&queryId=${id.get}").GET())
+        .statusCode() == 200)
+      // the 8 five-second tasks on 4 cores would take 10 s
+      assert(await(fut).statusCode() == 400)
+      assert(System.currentTimeMillis() - t0 < 8000)
+      assert(version() == v0 && labels() == before)
+      assert(post(srv.address + "/sparql/update", """INSERT DATA { x:2 label "cog" }""",
+        "application/sparql-update").statusCode() == 204)
+      assert(version() == v0 + 1 && labels() == before + "x:2 cog")
+    } finally srv.stop()
+  }
+
+  test("one operation per exchange: each exchange's every job runs in the group /status lists") {
+    val srv = SparqlServer.durable(Graft.empty(spark), tmp()).start()
+    val recorder = Harness.recorder(spark)
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    val nt = "application/n-triples"
+    val upd = "application/sparql-update"
+    def triple(s: String) = s"""<urn:graft:x:$s> <urn:graft:label> "$s" ."""
+    try {
+      assert(post(srv.address + "/namespace", "name=inf&truthMaintenance=true",
+        "application/x-www-form-urlencoded").statusCode() == 201)
+      assert(post(srv.address + "/namespace/inf/sparql/update",
+        "INSERT DATA { e:1 type Employee }", upd).statusCode() == 204)
+      val tx = "txId=\"([0-9a-f-]+)\"".r
+        .findFirstMatchIn(post(srv.address + "/tx", "", "text/plain").body()).get.group(1)
+      // (kind, namespace, exchange); the ASK is the first read after a
+      // write, so it builds the merge view, then runs ASK's existence
+      // probe — both while compiling
+      val exchanges: Seq[(String, String, () => java.net.http.HttpResponse[String])] = Seq(
+        ("REST insert", "kb", () => post(srv.address + "/sparql", triple("1"), nt)),
+        ("ASK", "kb", () => post(srv.address + "/sparql", "ASK { x:1 label ?o }",
+          "application/sparql-query")),
+        ("SELECT", "kb", () => post(srv.address + "/sparql", "SELECT ?o WHERE { x:1 label ?o }",
+          "application/sparql-query")),
+        ("SPARQL UPDATE", "kb", () => post(srv.address + "/sparql/update",
+          """INSERT DATA { x:2 label "2" }""", upd)),
+        ("staged insert", "kb", () => post(srv.address + s"/sparql?tx=$tx", triple("3"), nt)),
+        ("GSP PUT", "kb", () => send(req(srv.address + "/rdf-graphs?graph=" + enc("urn:graft:g:1"))
+          .header("Content-Type", nt)
+          .PUT(java.net.http.HttpRequest.BodyPublishers.ofString(triple("4"))))),
+        ("GETSTMTS", "kb", () => send(req(srv.address + "/sparql?GETSTMTS").GET())),
+        ("convert", "-", () => post(srv.address + "/workbench?convert", triple("5"), nt)),
+        // a TBox insert: truth maintenance re-derives the closure
+        ("TM insert", "inf", () => post(srv.address + "/namespace/inf/sparql/update",
+          "INSERT DATA { Employee subClassOf Agent }", upd)))
+      val cores = spark.sparkContext.defaultParallelism
+      exchanges.foreach { case (kind, ns, exchange) =>
+        ServerSpec.hold = new java.util.concurrent.CountDownLatch(1)
+        ServerSpec.holding = new java.util.concurrent.CountDownLatch(cores)
+        val (id, jobs) = recorder.record {
+          // every core held, the exchange's first job waits for one:
+          // /status is read while the exchange surely runs
+          val holder = async(graft.plans.Jobs.group("spec.hold") {
+            spark.sparkContext.parallelize(0 until cores, cores).foreach(_ => ServerSpec.holdCore())
+          })
+          assert(ServerSpec.holding.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          val resp = async(exchange())
+          // the namespace shows once the exchange has resolved it
+          def resolved(ls: Array[String]) = ls.length == 1 && ls.head.split("\t")(1) == ns
+          val lines = try {
+            val deadline = System.currentTimeMillis() + 10000
+            var ls = Array.empty[String]
+            while (!resolved(ls) && System.currentTimeMillis() < deadline) {
+              ls = send(req(srv.address + "/status").GET()).body().split("\n").drop(1)
+              if (!resolved(ls)) Thread.sleep(20)
+            }
+            ls
+          } finally ServerSpec.hold.countDown()
+          await(holder)
+          val code = await(resp).statusCode()
+          assert(code >= 200 && code < 300, s"$kind answered $code")
+          assert(lines.length == 1, s"$kind: /status listed ${lines.mkString("; ")}")
+          val Array(id, listedNs, _, _) = lines.head.split("\t", 4)
+          assert(listedNs == ns, s"$kind ran on $listedNs")
+          id
+        }
+        val own = jobs.filterNot(_.group.contains("spec.hold"))
+        assert(own.nonEmpty && own.forall(_.group.contains(id)),
+          s"$kind: jobs outside its group $id: ${own.filterNot(_.group.contains(id))}")
+        if (kind == "ASK") {
+          val sites = own.map(_.callSite)
+          assert(sites.exists(_.startsWith("localCheckpoint at Graft.scala")), sites)
+          assert(sites.exists(_.startsWith("isEmpty at Compiler.scala")), sites)
+        }
+      }
     } finally {
-      graft.sparql.ServiceRegistry.unregisterRemote("urn:graft:slow")
+      ServerSpec.hold.countDown()
+      spark.sparkContext.removeSparkListener(recorder)
       srv.stop()
     }
+  }
+
+  test("/counters records an UPDATE") {
+    val srv = new SparqlServer(Graft.empty(spark)).start()
+    try {
+      assert(post(srv.address + "/sparql/update", """INSERT DATA { x:1 label "gear" }""",
+        "application/sparql-update").statusCode() == 204)
+      // the record lands as the exchange ends, just after its reply
+      val deadline = System.currentTimeMillis() + 10000
+      def counters() = send(req(srv.address + "/counters").GET()).body()
+      var c = counters()
+      while (!c.contains("INSERT DATA") && System.currentTimeMillis() < deadline) {
+        Thread.sleep(50); c = counters()
+      }
+      assert(c.contains("""served="1"""") && c.contains("""<namespace name="kb" ops="1"""") &&
+        c.contains("""<op ns="kb"""") && c.contains("INSERT DATA { x:1 label"), c)
+    } finally srv.stop()
   }
 
   test("durable namespaces: restart reattaches state; default KB is protected") {
@@ -2038,5 +2201,20 @@ class ServerSpec extends AnyFunSuite {
         r.headers().firstValue("Content-Type").get().startsWith("text/csv"), r.body())
       assert(r.body() == "l\r\ngear")
     } finally srv.stop()
+  }
+}
+
+object ServerSpec {
+  /** Released to free the cores [[holdCore]] holds. */
+  @volatile var hold = new java.util.concurrent.CountDownLatch(0)
+  /** Counts down once per task that holds a core. */
+  @volatile var holding = new java.util.concurrent.CountDownLatch(0)
+
+  /** A task body that holds its core until [[hold]] is released (60 s
+    * at most). Tasks run in the test JVM, so they see these latches. */
+  def holdCore(): Unit = {
+    holding.countDown()
+    hold.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    ()
   }
 }
